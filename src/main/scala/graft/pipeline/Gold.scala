@@ -249,12 +249,13 @@ object Gold {
     s"${lake.root}/_gold_cursors/$mart"
 
   /** Continuous face of one mart:
-    * [[graft.streaming.Streams.goldRefreshStream]] wired with this mart's
+    * [[graft.streaming.Streams.feedRefreshStream]] wired with this mart's
     * feed deps. Each micro-batch rebuilds the dep list, so the per-dep
     * frontier caps re-read the CURRENT silver feed cursors — the streaming
     * analog of [[refreshFromChangeFeeds]]' "gold never outruns silver"
-    * discipline (run the silver refresh continuously too, or the gold
-    * stream stalls at the standing silver frontier). Caller starts the
+    * discipline. [[graft.streaming.Streams.silverRefreshStream]] advances
+    * those cursors, so run it on the mart's silver inputs too, or the gold
+    * stream stalls at the standing silver frontier. Caller starts the
     * returned writer with a checkpoint dir; AvailableNow drains-and-stops.
     * ONE driver per mart cursor tree — same contract as the batch ticks
     * (Job's refresh lease serializes the batch side; don't run this
@@ -269,7 +270,7 @@ object Gold {
         feedCursorRoot(lake, mart))
     }
     val triggerSource = martDeps(lake, _ => None)(mart)._2.source
-    graft.streaming.Streams.goldRefreshStream(lake, mart, triggerSource, () => tick())
+    graft.streaming.Streams.feedRefreshStream(lake, mart, triggerSource, () => tick())
   }
 
   /** Reset the channel summary's feed state after a channel-identity

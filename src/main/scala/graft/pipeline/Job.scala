@@ -33,16 +33,11 @@ object Job {
 
   /** Execute one full run. `now` is injectable for deterministic tests.
     *
-    * `incremental = true` refreshes the latest-wins silver models, the
-    * SCD2 metadata model, silver_videos, and the channel fact by MERGING
-    * only bronze partitions newer than the previous run's snapshot
-    * (partition-pruned scan — refresh cost scales with new data, the
-    * reference's `CREATE OR REFRESH` promise); the remaining models (the
-    * dims and dim_date — all small) recompute. Falls back to a full
-    * refresh on the first run.
+    * Silver has two refresh paths. The default recomputes every model
+    * from bronze ([[Silver.refreshParallel]]).
     *
-    * `cdfRefresh = true` upgrades EVERY silver model from snapshot-driven
-    * refresh to CHANGE-FEED consumption (the Lakeflow-"Enzyme" analog):
+    * `cdfRefresh = true` upgrades EVERY silver model from full recompute
+    * to CHANGE-FEED consumption (the Lakeflow-"Enzyme" analog):
     * the six latest-wins models ([[Silver.refreshFromChangeFeed]]), the
     * SCD2 pair + silver_videos (one composite cursor,
     * [[Silver.refreshVideoModelsFromChangeFeed]]), the channel fact
@@ -50,17 +45,18 @@ object Job {
     * observed-value dims ([[Silver.refreshDimFromChangeFeed]]), and the
     * calendar dim ([[Silver.dimDateFeedTick]] + assemble). Each consumer
     * keeps a durable cursor under `<root>/_silver_cursors/…`, a run's
-    * refresh cost tracks the rows changed since the last drain (not whole
-    * snapshot partitions), and bronze DELETEs fold as retractions instead
-    * of being invisible until a full refresh. First drains bootstrap from
+    * refresh cost tracks the rows changed since the last drain, and
+    * bronze DELETEs fold as retractions. First drains bootstrap from
     * the source SNAPSHOT (works on a mature lake whose early manifests
-    * are pruned); safe to mix with `incremental` runs (latest-wins makes
-    * a re-folded overlap idempotent). On an unchanged lake the whole
-    * silver stage costs cursor reads only — no model rewrites. NOTE: the
-    * cursors HOLD log + vacuum retention on their bronze sources from the
-    * moment they register — a deployment that abandons cdfRefresh must
-    * call [[decommissionFeedCursors]] or the held versions accumulate
-    * forever. */
+    * are pruned). On an unchanged lake the whole silver stage costs
+    * cursor reads only — no model rewrites. The continuous face of the
+    * same ticks is [[graft.streaming.Streams.silverRefreshStream]], which
+    * drains the SAME cursor dirs: run either the stream or cdfRefresh
+    * runs against one lake, never both (one driver per cursor tree).
+    * NOTE: the cursors HOLD log + vacuum retention on their bronze
+    * sources from the moment they register — a deployment that abandons
+    * cdfRefresh must call [[decommissionFeedCursors]] or the held
+    * versions accumulate forever. */
   def run(
       lake: Lakehouse,
       dataClient: DataApiIngest.DataApiClient,
@@ -68,7 +64,6 @@ object Job {
       startDate: String = "auto",
       endDate: String = "auto",
       lookbackDays: Int = 7,
-      incremental: Boolean = false,
       cdfRefresh: Boolean = false,
       optimize: Boolean = true,
       gates: Seq[Maintenance.GateDirs] = Seq.empty,
@@ -78,25 +73,6 @@ object Job {
     val today = now.toLocalDateTime.toLocalDate
     val snapshot = Date.valueOf(today)
     val ctx = Bronze.RunContext(runId, UUID.randomUUID().toString, snapshot, now)
-
-    // Previous SUCCESSFUL run's snapshot (for incremental pruning), read
-    // BEFORE this run logs. Failed runs don't advance the merge frontier:
-    // they may have landed bronze without ever refreshing silver, and
-    // skipping past them would lose that data forever. The merge itself is
-    // INCLUSIVE of this snapshot (>=), so a same-day re-run or data landed
-    // alongside the last success is re-merged — latest-wins makes the
-    // overlap idempotent. Incremental additionally requires every
-    // latest-wins silver table to exist (else fall back to full).
-    val prevSnapshot: Option[Date] =
-      if (!incremental || !lake.exists("bronze", "run_context_log")
-          || !Silver.incrementalModels.forall(lake.exists("silver", _))) None
-      else {
-        import org.apache.spark.sql.functions.{col, max}
-        lake.table("bronze", "run_context_log")
-          .filter(col("run_id") =!= runId && col("run_status") === "success")
-          .agg(max(col("snapshot_date"))).collect()
-          .headOption.flatMap(r => Option(r.getDate(0)))
-      }
 
     // ABANDONED-CONSUMER guard: a run that leaves cdfRefresh OFF while
     // live feed cursors exist lets every one of them pin log + vacuum
@@ -146,8 +122,7 @@ object Job {
 
       // stage: silver MV refresh (level-order parallel — the reference runs
       // dbt with 4 threads; identity with sequential refresh is spec-pinned)
-      // then gold marts. Incremental mode merges only new bronze partitions
-      // into the latest-wins models and recomputes the rest.
+      // then gold marts.
       // change-feed mode covers EVERY silver model — no snapshot path runs:
       //   level 0: the six latest-wins models drain their bronze change
       //            feeds through durable cursors (cost ∝ changed rows,
@@ -232,27 +207,10 @@ object Job {
             Silver.assembleDimDate(lake)
           Silver.models.map(_.name).toSet
         }
-      prevSnapshot match {
-        case Some(since) =>
-          (Silver.latestWinsSpecs.keySet -- feedModels)
-            .foreach(n => Silver.refreshIncremental(lake, n, since))
-          // SCD2 before silver_videos (current-flag FK); the channel fact
-          // after silver_channels (its top-1 cross-join input, merged above)
-          // dims last: the observed-value dims merge from fresh bronze; the
-          // calendar dim unions dates observed in the fresh partitions
-          Seq("silver_video_metadata_scd2", "silver_videos",
-              "fact_channel_daily_metrics",
-              "dim_traffic_source", "dim_device", "dim_country", "dim_date")
-            .filterNot(feedModels.contains)
-            .foreach(n => Silver.refreshIncremental(lake, n, since))
-          Silver.refreshParallel(lake,
-            Some(Silver.models.map(_.name).toSet -- Silver.incrementalModels -- feedModels))
-        case None =>
-          // Some(all-names) when feedModels is empty ≡ None — one path;
-          // full-coverage change-feed mode leaves this set EMPTY
-          Silver.refreshParallel(lake,
-            Some(Silver.models.map(_.name).toSet -- feedModels))
-      }
+      // Some(all-names) when feedModels is empty ≡ None — one path;
+      // full-coverage change-feed mode leaves this set EMPTY
+      Silver.refreshParallel(lake,
+        Some(Silver.models.map(_.name).toSet -- feedModels))
       // stage: gold marts. Change-feed mode rebuilds only the grains the
       // bronze feeds name (Gold.refreshFromChangeFeeds), each dep capped at
       // the version its SILVER consumer folded this run — gold never
@@ -337,7 +295,8 @@ object Job {
     * back to contend for the fresh create. The low-level tick functions
     * (`Silver.refreshFromChangeFeed`, `Gold.starFeedTick`, …) do NOT take
     * this lease themselves: their documented contract is one driver per
-    * cursor dir, and [[run]] is that driver. */
+    * cursor dir, and [[run]] is that driver (or the silver and gold
+    * streams, which take no lease — never both against one lake). */
   private[pipeline] def acquireRefreshLease(lake: Lakehouse, runId: String,
       staleMillis: Long = 30L * 60 * 1000,
       waitMillis: Long = 15L * 60 * 1000): java.nio.file.Path = {

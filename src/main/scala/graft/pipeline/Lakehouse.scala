@@ -1798,11 +1798,8 @@ final class Lakehouse(val spark: SparkSession, val root: String,
     * purges it. The copy-on-write alternative ([[deleteBronzeWhere]])
     * remains for callers that must not leave vectors behind.
     *
-    * Commits under op `DELETE RUN` (not plain `DELETE`): the streaming
-    * refresh gate ([[graft.streaming.Streams.silverRefreshStream]])
-    * ALLOWS run-aligned re-ingest deletes — the paired re-append
-    * re-delivers the run's rows and latest-wins converges — while plain
-    * deletes fail the stream fast by default. */
+    * Commits under op `DELETE RUN` (not plain `DELETE`), so [[history]]
+    * tells a run-aligned re-ingest delete from an ad-hoc one. */
   def deleteByRunId(name: String, runId: String): Unit =
     deleteBronzeWhereDv(name, org.apache.spark.sql.functions.col("run_id").equalTo(runId),
       Seq(ManifestStats.StatEq("run_id", runId)), opLabel = "DELETE RUN")
@@ -1824,8 +1821,7 @@ final class Lakehouse(val spark: SparkSession, val root: String,
     * mapping: (scan schema to pin on the file source, logical-view
     * projector to apply per micro-batch). Without a mapping this is the
     * plain log schema and identity. A rename AFTER the stream pinned its
-    * schema invalidates it — the streaming gate fails those ops fast so
-    * the caller restarts and re-pins. */
+    * schema invalidates the pin: restart the stream to re-pin. */
   def streamReadSupport(name: String)
       : (org.apache.spark.sql.types.StructType, DataFrame => DataFrame) = {
     val base = dir("bronze", name)
@@ -1837,27 +1833,12 @@ final class Lakehouse(val spark: SparkSession, val root: String,
     }
   }
 
-  /** Live manifest entries carrying a DELETION VECTOR — the streaming
-    * gate's fresh-start check (a file stream reads parquet directly, so a
-    * vectored table would deliver vector-deleted ghost rows; OPTIMIZE
-    * purges vectors). One log resolve, never a scan. */
+  /** Live manifest entries carrying a DELETION VECTOR (a raw parquet
+    * read would deliver vector-deleted ghost rows; OPTIMIZE purges
+    * vectors). One log resolve, never a scan. */
   def deletionVectorCount(name: String): Int =
     readFilesManifest(dir("bronze", name))
       .map(_.entries.count(e => ManifestStats.dvRef(e).isDefined)).getOrElse(0)
-
-  /** (version, operation) of every RETAINED log record with version >
-    * `afterVersion`, ascending — header-only reads, the cheap source the
-    * streaming visibility gate polls per micro-batch ([[history]] builds
-    * a full DataFrame with per-record add/remove counts; this does not).
-    * Retention caveat: records below the pruning floor are gone — callers
-    * must check contiguity against [[tableVersions]] before trusting an
-    * empty answer across a long-down window. */
-  def opsSince(name: String, afterVersion: Int): Seq[(Int, String)] = {
-    val base = dir("bronze", name)
-    bronzeVersions(base).filter(_ > afterVersion).map(v =>
-      v -> readRecordHeader(base.resolve(s"_files_v$v"))
-        .flatMap(_.op).getOrElse("UNKNOWN"))
-  }
 
   // ───── CHECK constraints (Delta `ALTER TABLE ADD CONSTRAINT` parity) ──
 
@@ -3668,15 +3649,15 @@ final class Lakehouse(val spark: SparkSession, val root: String,
     * VISIBILITY CAVEAT: append dirs are written BEFORE the manifest CAS,
     * so a raw file stream over this glob sees at-least-once, possibly
     * UNCOMMITTED files (a writer that crashed before winning its commit).
-    * Consumers must filter each micro-batch against
-    * [[committedBronzeRelPaths]] — [[graft.streaming.Streams.silverRefreshStream]]
-    * does exactly that (uncommitted files park in a pending set and fold in
-    * once their commit lands, the Delta streaming-source committed-add-files
-    * contract) — or pair the raw glob with an idempotent sink AND accept
-    * crash debris. Consumers must ALSO skip files under [[nodataDirs]]:
-    * OPTIMIZE repacks land as new `_a*` dirs the glob matches, but their
-    * rows were already delivered (Delta streams skip dataChange=false adds
-    * the same way). */
+    * A consumer of the rows must filter each micro-batch against
+    * [[committedBronzeRelPaths]], or pair the raw glob with an idempotent
+    * sink AND accept crash debris. It must ALSO skip files under
+    * [[nodataDirs]]: OPTIMIZE repacks land as new `_a*` dirs the glob
+    * matches, but their rows were already delivered (Delta streams skip
+    * dataChange=false adds the same way). The feed streams
+    * ([[graft.streaming.Streams.feedRefreshStream]]) use the glob only as
+    * a wake-up signal and read committed changes from the log, so neither
+    * caveat applies to them. */
   def streamSourcePath(layer: String, name: String): String = {
     val base = dir(layer, name)
     if (readFilesManifest(base).nonEmpty) s"$base/_a*"
@@ -3951,8 +3932,8 @@ final class Lakehouse(val spark: SparkSession, val root: String,
   /** OPTIMIZE bin-packing for the VERSIONED materialized layout
     * (silver/gold) — the reference OPTIMIZEs all of bronze+silver+gold
     * every run (`job_tasks/ops/optimize_tables.py:17-52`). Full refreshes
-    * rewrite these tables whole, but INCREMENTAL merges
-    * (`Silver.refreshIncremental` / `transactMerge`) re-commit the live
+    * rewrite these tables whole, but change-feed merges
+    * (`Silver.latestWinsFeedTick` / `transactMerge`) re-commit the live
     * version at whatever file count the merge plan produced — typically
     * `shuffle.partitions` small files per commit — so a merge-maintained
     * table fragments exactly like bronze does.
@@ -4165,9 +4146,9 @@ object Lakehouse {
   }
 
   /** Default file-stats columns for bronze logs: `snapshot_date` (the
-    * incremental-refresh prune key — file skipping replaces hive
-    * partition pruning) and `run_id` (bounds idempotent re-ingest deletes
-    * to the files a run actually touched). */
+    * date-bounded scan's prune key, [[tableWhere]] — file skipping
+    * replaces hive partition pruning) and `run_id` (bounds idempotent
+    * re-ingest deletes to the files a run actually touched). */
   val BronzeStatsCols: Seq[String] = Seq("snapshot_date", "run_id")
 
   /** Default bronze checkpoint cadence (see `bronzeCheckpointInterval`):

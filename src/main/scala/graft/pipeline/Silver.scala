@@ -84,10 +84,10 @@ object Silver {
       .otherwise(col("snapshot_date")).as("date")
 
   /** A latest-wins model factored as (bronze table, typed projection, grain):
-    * the shape that supports INCREMENTAL refresh, because latest-wins is an
-    * idempotent, commutative merge on its grain — `latestWins(existing ∪
-    * typed(newPartitions))` equals a full recompute (each key's global max
-    * survives any grouping of the inputs). */
+    * the shape the change-feed fold ([[latestWinsFeedTick]]) maintains,
+    * because latest-wins is an idempotent, commutative merge on its grain —
+    * `latestWins(existing ∪ typed(changedRows))` equals a full recompute
+    * (each key's global max survives any grouping of the inputs). */
   final case class LatestWinsSpec(
       bronzeTable: String,
       grain: Seq[String],
@@ -150,9 +150,10 @@ object Silver {
       .filter(col("video_id").isNotNull && col("date").isNotNull
         && col(dimCol).isNotNull && col(dimCol) =!= "")
 
-  /** The models refreshable incrementally (their rows depend only on their
-    * own bronze table — no cross-table "current" state like the channel
-    * fact's top-1 cross join, and no cross-row history like SCD2). */
+  /** The models [[refreshFromChangeFeed]] folds directly (their rows
+    * depend only on their own bronze table — no cross-table "current"
+    * state like the channel fact's top-1 cross join, and no cross-row
+    * history like SCD2). */
   val latestWinsSpecs: Map[String, LatestWinsSpec] = Map(
     "silver_channels" -> LatestWinsSpec(
       "channels_raw", Seq("channel_id"), channelsTyped),
@@ -171,56 +172,18 @@ object Silver {
       "analytics_video_device_daily_raw", Seq("video_id", "date", "device_type"),
       dimensionalTyped("deviceType", "device_type")))
 
-  /** Incremental refresh: merge bronze partitions at-or-after
-    * `sinceSnapshot` (INCLUSIVE — re-merging the boundary snapshot is
-    * idempotent under latest-wins, and inclusivity means a same-day re-run
-    * or late data landed alongside the last merged snapshot is never
-    * skipped) into the existing materialization. The snapshot_date
-    * predicate partition-prunes the bronze scan (bronze is partitioned on
-    * it), so refresh cost scales with NEW data, not table history — the
-    * difference between a nightly refresh reading one day and reading 100 TB.
-    * Requires the model to have been fully refreshed at least once. */
-  /** Bronze scan bounded to snapshots ≥ `since`: the bronze log's per-file
-    * snapshot_date stats prune whole files before Spark lists them
-    * ([[Lakehouse.tableWhere]]), and the exact row filter stays on top —
-    * refresh cost scales with the new snapshots, not bronze history. */
-  def bronzeSince(lake: Lakehouse, tbl: String, since: java.sql.Date): DataFrame =
-    lake.tableWhere("bronze", tbl, Seq(ManifestStats.StatGte("snapshot_date", since)))
-      .filter(col("snapshot_date") >= lit(since))
-
-  def refreshIncremental(lake: Lakehouse, name: String, sinceSnapshot: java.sql.Date): Unit =
-    name match {
-      case "silver_video_metadata_scd2"  => refreshScd2Incremental(lake, sinceSnapshot)
-      case "silver_videos"               => refreshVideosIncremental(lake, sinceSnapshot)
-      case "fact_channel_daily_metrics"  => refreshChannelFactIncremental(lake, sinceSnapshot)
-      case "dim_traffic_source" | "dim_device" | "dim_country" | "dim_date" =>
-        refreshDimIncremental(lake, name, sinceSnapshot)
-      case _ =>
-        val spec = latestWinsSpecs(name)
-        // OCC transaction: the standing table is the conflict-checked
-        // read-set; bronze (append-only) is re-pruned on every attempt
-        lake.transactMerge("silver", name) { existing =>
-          val fresh = spec.typed(bronzeSince(lake, spec.bronzeTable, sinceSnapshot))
-          latestWins(existing.unionByName(fresh), spec.grain, spec.order)
-        }
-        ()
-    }
-
   /** CDF-DRIVEN incremental refresh of a latest-wins MV (the Lakeflow
     * "Enzyme" analog): one tick drains the bronze source's change feed
     * since a durable cursor and folds it into the standing silver table,
-    * so refresh cost tracks CHANGED ROWS — not changed partitions
-    * ([[refreshIncremental]]'s snapshot-date bound re-merges whole
-    * snapshots) and never table history. Covers every
-    * [[latestWinsSpecs]] model; returns the `(from, to]` range folded,
-    * or None when caught up.
+    * so refresh cost tracks CHANGED ROWS, never table history. Covers
+    * every [[latestWinsSpecs]] model; returns the `(from, to]` range
+    * folded, or None when caught up.
     *
-    * Delete handling [[refreshIncremental]] cannot express: a
-    * `delete`/`update_preimage` row names a grain whose standing winner
-    * may have been retracted — the tick re-derives those grains from the
-    * source's visible rows AS OF the tick's end version (the correct new
-    * winner can be an OLDER source row absent from the tick), a
-    * key-restricted scan. After any tick the MV is exactly
+    * Deletes fold as retractions: a `delete`/`update_preimage` row names a
+    * grain whose standing winner may have been retracted — the tick
+    * re-derives those grains from the source's visible rows AS OF the
+    * tick's end version (the correct new winner can be an OLDER source row
+    * absent from the tick), a key-restricted scan. After any tick the MV is exactly
     * latest-wins(source@frontier) — a consistent view of one source
     * version, even under capped drains or concurrent writers.
     * Everything else is churn-sized: the merge windows only affected
@@ -484,8 +447,7 @@ object Silver {
     * folds it into the observation log + segmented model
     * ([[scd2ApplyRange]]); a FRESH cursor bootstraps both from the source
     * snapshot and jumps to the head ([[scd2SnapshotRebuild]] — never a
-    * version-0 history drain). Unlike the snapshot-window path
-    * ([[refreshScd2Incremental]]), source DELETES fold as retractions: the
+    * version-0 history drain). Source DELETES fold as retractions: the
     * affected ids re-segment from their post-retraction history. */
   def scd2FeedTick(lake: Lakehouse, layer: String, target: String,
       obsTable: String, source: String, idCols: Seq[String],
@@ -570,132 +532,17 @@ object Silver {
     Some((from, to))
   }
 
-  /** Every model [[refreshIncremental]] can merge (vs full recompute).
-    * silver_videos depends on the SCD2 table's current flags and the
-    * channel fact on silver_channels' top-1, so merge those dependencies
-    * first (Job does). */
-  val incrementalModels: Set[String] =
-    latestWinsSpecs.keySet ++
-      Set("silver_video_metadata_scd2", "silver_videos", "fact_channel_daily_metrics",
-        "dim_traffic_source", "dim_device", "dim_country", "dim_date")
-
   /** The SCD2 observation log: every (video, ingest) observation with its
     * metadata fields, change hash, and envelope — `scd2Typed(videos_raw)`
     * materialized with `video_id`/`metadata_hash` as first-class parquet
-    * columns. It exists so incremental refresh can re-read any id's FULL
-    * observation history (late data can re-segment the middle of a
-    * version chain) without re-parsing bronze JSON: at scale the log is
-    * read with a video_id predicate over columnar data while bronze would
-    * need a full-history parse of every payload. Invariant: the log holds
-    * every observation in bronze partitions ≤ its max snapshot_date
-    * (snapshot dates are monotone per run; a manual bronze backfill BELOW
-    * that frontier requires deleting the log to force a rebuild). */
+    * columns. It exists so the feed fold ([[scd2ApplyRange]]) can re-read
+    * any id's FULL observation history (late data can re-segment the
+    * middle of a version chain) without re-parsing bronze JSON: at scale
+    * the log is read with a video_id predicate over columnar data while
+    * bronze would need a full-history parse of every payload. Invariant:
+    * after a tick the log holds exactly the observations of the source
+    * version the tick's cursor names. */
   val scd2ObsTable = "silver_video_metadata_obs"
-
-  /** Incremental SCD2 refresh — Lakeflow-refresh parity for the
-    * reference's richest MV (`bronze_to_silver_pipeline.sql:132-297`):
-    *
-    *   1. parse ONLY bronze partitions ≥ `sinceSnapshot` (partition-pruned;
-    *      widened to the observation log's own frontier when a full refresh
-    *      ran in between and left the log behind);
-    *   2. merge them into the observation log (exact-duplicate re-merges
-    *      collapse on the (video_id, observed_at, request_id) key —
-    *      inclusive boundaries stay idempotent);
-    *   3. re-segment ONLY the ids observed in the new slice, from their
-    *      complete log history — so A→B→A reversions and late-arriving
-    *      observations that split an existing version are handled exactly
-    *      like a full recompute;
-    *   4. keep every other id's version rows untouched (anti-join).
-    *
-    * Cost scales with new data + affected-id history, never with table
-    * history. Bootstraps the log from full bronze on first use. */
-  def refreshScd2Incremental(lake: Lakehouse, sinceSnapshot: java.sql.Date): Unit = {
-    val bronze = lake.table("bronze", "videos_raw")
-    val haveLog = lake.exists("silver", scd2ObsTable)
-    // widen the merge window to the log frontier: a full model refresh
-    // between incremental runs advances silver without advancing the log,
-    // and those snapshots must not be skipped
-    val since: java.sql.Date =
-      if (!haveLog) sinceSnapshot
-      else lake.table("silver", scd2ObsTable)
-        .agg(max(col("snapshot_date")).as("m")).collect().headOption
-        .flatMap(r => Option(r.getDate(0)))
-        .map(m => if (m.before(sinceSnapshot)) m else sinceSnapshot)
-        .getOrElse(sinceSnapshot)
-    val freshObs = scd2Typed(bronzeSince(lake, "videos_raw", since))
-    val baseObs = if (haveLog) lake.table("silver", scd2ObsTable) else scd2Typed(bronze)
-    val mergedObs = baseObs.unionByName(freshObs)
-      .dropDuplicates("video_id", "observed_at_utc", "request_id")
-    // log first: if the refresh dies between the two writes, a re-run
-    // re-merges from a complete log (the reverse order would leave the log
-    // missing this batch's observations under an already-advanced silver)
-    if (haveLog)
-      lake.transactMerge("silver", scd2ObsTable) { base =>
-        base.unionByName(freshObs)
-          .dropDuplicates("video_id", "observed_at_utc", "request_id")
-      }
-    else lake.materialize("silver", scd2ObsTable, mergedObs)
-    // bronze is untouched by the log swap, so the pruned parse is reusable
-    val affected = freshObs.select(col("video_id")).distinct()
-    // OCC on the target table: a concurrent writer's commit between this
-    // read and our publish forces a re-read + re-merge (transactMerge)
-    lake.transactMerge("silver", "silver_video_metadata_scd2") { existing =>
-      val untouched = existing.join(affected, Seq("video_id"), "left_anti")
-      val rebuilt = scd2Segment(
-        lake.table("silver", scd2ObsTable).join(affected, Seq("video_id"), "left_semi"))
-      // the USING joins float video_id to the front; restore the canonical
-      // column order so merge and recompute produce byte-identical tables
-      untouched.unionByName(rebuilt).select(existing.columns.map(col).toSeq: _*)
-    }
-    ()
-  }
-
-  /** SCD2 merge of an ALREADY-SLICED raw frame — the micro-batch face of
-    * [[refreshScd2Incremental]] for the streaming refresh
-    * ([[graft.streaming.Streams.silverRefreshStream]]): the stream hands
-    * the committed new bronze rows directly, so no snapshot-date window or
-    * bronze re-scan is needed. Same algebra, same write order (observation
-    * log first), same OCC discipline; idempotent under foreachBatch
-    * replays (obs re-merge collapses on its key; re-segmenting an id from
-    * its complete log history is deterministic). Bootstraps the log from
-    * full bronze on first use, exactly like the batch path. */
-  def refreshScd2FromRaw(lake: Lakehouse, raw: DataFrame): Unit = {
-    val freshObs = scd2Typed(raw)
-    val haveLog = lake.exists("silver", scd2ObsTable)
-    if (freshObs.isEmpty && haveLog) return
-    if (haveLog)
-      lake.transactMerge("silver", scd2ObsTable) { base =>
-        base.unionByName(freshObs)
-          .dropDuplicates("video_id", "observed_at_utc", "request_id")
-      }
-    else lake.materialize("silver", scd2ObsTable,
-      scd2Typed(lake.table("bronze", "videos_raw")).unionByName(freshObs)
-        .dropDuplicates("video_id", "observed_at_utc", "request_id"))
-    val affected = freshObs.select(col("video_id")).distinct()
-    lake.transactMerge("silver", "silver_video_metadata_scd2") { existing =>
-      val untouched = existing.join(affected, Seq("video_id"), "left_anti")
-      val rebuilt = scd2Segment(
-        lake.table("silver", scd2ObsTable).join(affected, Seq("video_id"), "left_semi"))
-      untouched.unionByName(rebuilt).select(existing.columns.map(col).toSeq: _*)
-    }
-    ()
-  }
-
-  /** Incremental silver_videos refresh: latest-wins merge of the new slim
-    * snapshots into the standing table (same merge algebra as the
-    * latest-wins specs), then re-attach the current SCD2 surrogate key —
-    * the FK re-join is over silver-sized frames only; bronze history is
-    * never re-parsed. Run [[refreshScd2Incremental]] first so the current
-    * flags are fresh. */
-  def refreshVideosIncremental(lake: Lakehouse, sinceSnapshot: java.sql.Date): Unit = {
-    val fresh = videosSlimTyped(bronzeSince(lake, "videos_raw", sinceSnapshot))
-    lake.transactMerge("silver", "silver_videos") { existing0 =>
-      val existing = existing0.drop("current_video_meta_sk")
-      val merged = latestWins(existing.unionByName(fresh), Seq("video_id"))
-      videosAttachSk(merged, lake)
-    }
-    ()
-  }
 
   // ---------------------------------------------------------------- models
 
@@ -733,8 +580,8 @@ object Silver {
     * per (video, ingest) observation with the 19 metadata fields, the
     * change-detection hash, and the envelope. This is the frame the
     * OBSERVATION LOG (`silver_video_metadata_obs`) materializes — the
-    * compact per-id history that lets [[refreshScd2Incremental]] re-segment
-    * only affected ids without ever re-parsing bronze JSON. */
+    * compact per-id history that lets [[scd2ApplyRange]] re-segment only
+    * affected ids without ever re-parsing bronze JSON. */
   private def scd2Typed(raw: DataFrame): DataFrame = {
     val typed = parseItems(raw, Schemas.videoMetadataPayloadDdl)
       .select(
@@ -770,7 +617,7 @@ object Silver {
     * hash changes vs the per-id predecessor (lag), validity windows via
     * lead (next − 1µs, open-ended sentinel), surrogate key
     * sha2(video_id||valid_from). Pure function of the observation set —
-    * full refresh runs it over all of bronze, incremental refresh over the
+    * full refresh runs it over all of bronze, the feed fold over the
     * affected ids' observation-log slice; both segment identically. */
   private def scd2Segment(hashed: DataFrame): DataFrame = {
     // version starts: first observation or hash change vs the predecessor
@@ -881,33 +728,6 @@ object Silver {
           lake.table("bronze", "analytics_channel_daily_raw"), currentChannelFrame(lake)),
         Seq("channel_id", "date")))
 
-  /** Incremental channel-fact refresh: latest-wins merge of the new bronze
-    * partitions, PROVIDED the current channel id still matches the standing
-    * rows — the cross-joined id is "current at refresh time" state, so a
-    * channel change means a full recompute re-stamps history (matching the
-    * reference MV's semantics) while a stable channel (the overwhelmingly
-    * common case — the API serves one `mine=true` channel) merges at
-    * new-data cost. Refresh silver_channels first (Job does). */
-  def refreshChannelFactIncremental(lake: Lakehouse, sinceSnapshot: java.sql.Date): Unit = {
-    val current = currentChannelFrame(lake)
-    val existing = lake.table("silver", "fact_channel_daily_metrics")
-    val currentId = current.collect().headOption.map(_.getString(0))
-    val standingIds = existing.select(col("channel_id")).distinct()
-      .collect().map(_.getString(0)).toSeq // 1 row in practice — the single-channel grain
-    if (standingIds.forall(currentId.contains)) {
-      val fresh = channelDailyTyped(
-        bronzeSince(lake, "analytics_channel_daily_raw", sinceSnapshot), current)
-      lake.transactMerge("silver", "fact_channel_daily_metrics") { standing =>
-        latestWins(standing.unionByName(fresh), Seq("channel_id", "date"))
-      }
-      ()
-    } else {
-      // channel changed: merge would freeze the stale id on old rows
-      lake.materialize("silver", "fact_channel_daily_metrics",
-        factChannelDailyMetrics.build(lake))
-    }
-  }
-
   /** Whether the CURRENT silver channel id no longer matches the standing
     * channel-fact rows — the single-channel identity changed, so both the
     * channel fact and the calendar dim's channel-source counts were
@@ -955,72 +775,14 @@ object Silver {
         raw => channelDailyTyped(raw, current), cursorDir, maxVersions)
   }
 
-  /** Incremental dim refresh. The observed-value dims are latest-wins on
-    * the dim value, so they merge exactly like the latest-wins facts
-    * (projection commutes with latest-wins because the recency-order
-    * columns survive it, and latestWins(latestWins(A) ∪ fresh) ==
-    * latestWins(A ∪ fresh)). dim_date only ever GAINS dates (latest-wins
-    * never drops a grain group), and every fact date descends from some
-    * bronze row — so the standing calendar unions with the dates observed
-    * in the new bronze partitions. Refresh cost scales with new data; the
-    * standing tables are read but never recomputed. */
-  def refreshDimIncremental(lake: Lakehouse, name: String,
-      sinceSnapshot: java.sql.Date): Unit = {
-    def freshBronze(tbl: String): DataFrame =
-      bronzeSince(lake, tbl, sinceSnapshot)
-    name match {
-      case "dim_traffic_source" =>
-        lake.transactMerge("silver", name) { existing =>
-          val fresh = observedDimTyped(freshBronze("analytics_video_traffic_source_daily_raw"),
-              "insightTrafficSourceType", "source_id")
-            .select(col("source_id") +: col("source_id").as("source_name") +:
-              envelopeCols.map(col): _*)
-          latestWins(existing.unionByName(fresh), Seq("source_id"))
-        }
-      case "dim_device" =>
-        lake.transactMerge("silver", name) { existing =>
-          val fresh = observedDimTyped(freshBronze("analytics_video_device_daily_raw"),
-              "deviceType", "device_type")
-            .select(col("device_type") +: col("device_type").as("device_name") +:
-              envelopeCols.map(col): _*)
-          latestWins(existing.unionByName(fresh), Seq("device_type"))
-        }
-      case "dim_country" =>
-        lake.transactMerge("silver", name) { existing =>
-          val fresh = countryEnrich(
-            latestWins(observedDimTyped(freshBronze("analytics_video_country_daily_raw"),
-              "country", "country_code"), Seq("country_code")), lake)
-          latestWins(existing.unionByName(fresh), Seq("country_code"))
-        }
-      case "dim_date" =>
-        lake.transactMerge("silver", "dim_date") { existing =>
-          val videoDates = Seq("fact_video_daily_metrics", "fact_video_traffic_source_metrics",
-              "fact_video_country_metrics", "fact_video_device_metrics")
-            .map { f =>
-              val spec = latestWinsSpecs(f)
-              spec.typed(freshBronze(spec.bronzeTable)).select(col("date"))
-            }
-          val channelDates = channelDailyTyped(
-              freshBronze("analytics_channel_daily_raw"), currentChannelFrame(lake))
-            .select(col("date"))
-          val freshDates = (videoDates :+ channelDates).reduce(_ union _)
-            .filter(col("date").isNotNull).distinct()
-          existing.unionByName(dateAttrs(freshDates)).distinct()
-        }
-      case other =>
-        throw new IllegalArgumentException(s"not an incrementally-refreshable dim: $other")
-    }
-    ()
-  }
-
   /** CDF-driven refresh of the three observed-value dims: each is
     * latest-wins on the dim value itself, so [[latestWinsFeedTick]] applies
-    * directly — and unlike the snapshot path, a bronze DELETE retracting
-    * the last row carrying a value drops the value, exactly like the
-    * from-scratch model. dim_country's ISO enrich runs inside `typed`
-    * (per-row, keyed on the grain, recency columns preserved — it commutes
-    * with latest-wins, so enrich-then-dedup ≡ the model's dedup-then-
-    * enrich); dim_country_reference must be materialized first. */
+    * directly — a bronze DELETE retracting the last row carrying a value
+    * drops the value, exactly like the from-scratch model. dim_country's
+    * ISO enrich runs inside `typed` (per-row, keyed on the grain, recency
+    * columns preserved — it commutes with latest-wins, so
+    * enrich-then-dedup ≡ the model's dedup-then-enrich);
+    * dim_country_reference must be materialized first. */
   def refreshDimFromChangeFeed(lake: Lakehouse, name: String, cursorDir: String,
       maxVersions: Int = Int.MaxValue): Option[(Int, Int)] = name match {
     case "dim_traffic_source" =>
@@ -1069,9 +831,8 @@ object Silver {
   /** Drain every fact source's change feed into its per-source date-count
     * state ([[graft.streaming.Streams.cdfAggregateSink]] with the date
     * extraction as the typed projection): a date's count tracks the
-    * source's visible rows carrying it, so retractions can DROP a date —
-    * something the grows-only snapshot path cannot express. Fresh cursors
-    * snapshot-bootstrap (never a version-0 drain). One state table per
+    * source's visible rows carrying it, so retractions can DROP a date.
+    * Fresh cursors snapshot-bootstrap (never a version-0 drain). One state table per
     * source (the bootstrap contract) under cursors `<cursorRoot>/<source>`.
     * Returns true when any tick folded changes. */
   def dimDateFeedTick(lake: Lakehouse, cursorRoot: String,
@@ -1171,7 +932,7 @@ object Silver {
       .select(col("source_id") +: col("source_id").as("source_name") +: envelopeCols.map(col): _*))
 
   /** ISO-reference enrich shared by the full dim_country build and its
-    * incremental merge (broadcast — 249 rows). */
+    * feed fold (broadcast — 249 rows). */
   private def countryEnrich(observed: DataFrame, lake: Lakehouse): DataFrame = {
     val ref = lake.table("silver", "dim_country_reference")
       .select(col("country_code"), col("country_name").as("ref_country_name"))

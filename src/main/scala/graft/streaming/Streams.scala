@@ -731,9 +731,8 @@ object Streams {
     * data feed: the target bronze table holds `keys ++ (cnt, sum_<c>…)`
     * for the source's visible rows, and one tick folds every change since
     * the cursor into it — `insert` rows add (+1, +value), `delete` rows
-    * RETRACT (−1, −value) — something the latest-wins silver refresh
-    * cannot express (it never retracts; its delete contract fails fast
-    * instead, [[silverRefreshStream]]).
+    * RETRACT (−1, −value). The latest-wins silver fold retracts by
+    * re-deriving each retraction-hit grain instead (`Silver.latestWinsFeedTick`).
     *
     * Per-tick cost ∝ CHURN, never table size: the deltas are one groupBy
     * over the tick's changes, the current values for affected keys come
@@ -1061,107 +1060,62 @@ object Streams {
     completeReportIndexVersions(indexDir).lastOption
 
   /** CONTINUOUS silver maintenance — the Lakeflow streaming-MV refresh
-    * shape: a file stream over a latest-wins model's bronze directory;
-    * each micro-batch OCC-merges only the NEW files' typed rows into the
-    * standing silver table (`Lakehouse.transactMerge`, so a concurrent
-    * batch refresh is a detected conflict, not a lost update). The merge
-    * is the same latest-wins algebra as `Silver.refreshIncremental` —
-    * batch-driven by arrival instead of snapshot-date-driven, and
-    * idempotent under replays (re-merging rows is a latest-wins no-op),
-    * which is exactly the at-least-once + idempotent-sink pairing file
-    * streams need. Cost per micro-batch scales with the new files, never
-    * with bronze history — the 100 TB continuous-ingest shape.
+    * shape, built on the same change-feed tick `Job.run(cdfRefresh = true)`
+    * runs, on the same cursor dir (`Job.feedCursorDir`):
+    *   - a latest-wins spec model → `Silver.refreshFromChangeFeed`;
+    *   - `silver_video_metadata_scd2` or `silver_videos` →
+    *     `Silver.refreshVideoModelsFromChangeFeed` on the `video_models`
+    *     cursor (one composite cursor maintains both, so stream one of
+    *     the two names, not both).
+    * The file stream over the source's `_a*` dirs is only the wake-up
+    * signal ([[feedRefreshStream]]). Each micro-batch, plus one drain at
+    * construction, runs the tick until it converges. Visibility therefore
+    * comes from the log: uncommitted crash debris never reaches silver,
+    * OPTIMIZE repacks fold nothing, and bronze deletes fold as
+    * retractions. A fresh cursor bootstraps from the source snapshot, so
+    * no prior full refresh is needed.
     *
-    * COMMITTED-ONLY VISIBILITY: the raw `_a*` glob the file source monitors
-    * is written BEFORE the bronze manifest CAS, so a micro-batch can carry
-    * rows of files the log never committed (a writer that crashed pre-commit
-    * — debris `vacuumBronze` will delete) or whose commit has not landed
-    * YET. Each batch therefore splits its files against the committed
-    * manifest ([[graft.pipeline.Lakehouse.committedBronzeRelPaths]]):
-    * committed files merge; uncommitted files are EXCLUDED and parked in an
-    * on-disk pending set (the file source never re-delivers a seen path, so
-    * forgetting them would lose a commit that lands one instant after the
-    * listing). Every batch re-probes the pending set — files whose commit
-    * has since landed are read back and folded in; files that vanished
-    * while still uncommitted (vacuumed debris) drop out. Net effect: silver
-    * receives exactly the committed bronze rows, the Delta
-    * streaming-source committed-add-files contract.
-    *
-    * Models: every latest-wins spec AND the SCD2 model
-    * (`silver_video_metadata_scd2`), whose per-batch merge goes through the
-    * observation log + affected-id re-segmentation
-    * ([[graft.pipeline.Silver.refreshScd2FromRaw]]) — so all
-    * incrementally-refreshable single-source MVs have a continuous face.
-    *
-    * DELETE / VISIBILITY CONTRACT (`ignoreDeletes`, default false — the
-    * Delta streaming-source rule): a file stream delivers each file's
-    * physical rows ONCE, so any commit that RETRACTS visibility of rows
-    * already delivered (plain DELETE — copy-on-write or deletion-vector —
-    * RESTORE, FSCK) cannot propagate to the insert-only latest-wins
-    * silver table. By default the stream FAILS FAST when such a commit
-    * lands (gated per micro-batch and at construction against the log's
-    * op history), and a FRESH stream refuses a table whose live entries
-    * carry deletion vectors (the raw parquet read would deliver
-    * vector-deleted ghost rows; OPTIMIZE purges vectors first).
-    * Run-aligned re-ingest deletes (`deleteByRunId`, op `DELETE RUN`) are
-    * ALLOWED: the paired re-append re-delivers the run's rows and
-    * latest-wins converges — the idempotent re-ingest contract.
-    * `ignoreDeletes = true` opts into proceeding past all of it, with the
-    * documented consequence that silver never retracts: rows deleted from
-    * bronze after delivery simply remain in silver.
-    *
-    * Requires the model to have been fully refreshed once (the standing
-    * table is the merge base). Returns the writer; caller starts it with
-    * a checkpoint dir (AvailableNow for drain-and-stop catch-up runs). */
-  def silverRefreshStream(lake: graft.pipeline.Lakehouse, model: String,
-      ignoreDeletes: Boolean = false)
+    * ONE driver per cursor tree: do not run this stream together with
+    * `cdfRefresh` job runs on the same lake. Silver cursors are the
+    * frontier caps of `Gold.refreshStream`, so running both streams keeps
+    * the marts current. Returns the writer; caller starts it with a
+    * checkpoint dir (AvailableNow for drain-and-stop catch-up runs). */
+  def silverRefreshStream(lake: graft.pipeline.Lakehouse, model: String)
       : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
-    val (bronzeTable, _) = streamModel(lake, model)
-    require(lake.exists("silver", model),
-      s"$model must be fully refreshed once before streaming maintenance")
-    gateStreamVisibility(lake, model, bronzeTable, ignoreDeletes, atConstruction = true)
-    // log-managed bronze: monitor the `_a*` append-dir glob (each commit
-    // lands a new matched dir); plain layout: the live data dir
-    val dir = lake.streamSourcePath("bronze", bronzeTable)
-    // schema pinned from the log (streams never infer) — the COLUMN-MAPPING
-    // scan schema, so files written before a rename still deliver their
-    // data (the per-batch logical view coalesces the chains; a rename
-    // AFTER pinning fails the gate → restart re-pins)
-    val (pinned, _) = lake.streamReadSupport(bronzeTable)
-    // resolve parked files whose commit landed while the stream was down —
-    // a quiet catch-up run may deliver NO new files, so the per-batch sweep
-    // alone would never re-probe them
-    sweepPendingCommits(lake, model)
-    lake.spark.readStream.schema(pinned).parquet(dir)
-      .writeStream.outputMode(OutputMode.Update).foreachBatch {
-        (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
-          refreshSilverBatch(lake, model, batch.toDF, ignoreDeletes)
-      }
+    import graft.pipeline.{Job, Silver}
+    val (source, tick) = model match {
+      case "silver_video_metadata_scd2" | "silver_videos" =>
+        ("videos_raw", () => Silver.refreshVideoModelsFromChangeFeed(
+          lake, Job.feedCursorDir(lake, "video_models")))
+      case m =>
+        val spec = Silver.latestWinsSpecs.getOrElse(m,
+          throw new IllegalArgumentException(s"$m has no change-feed tick to stream"))
+        (spec.bronzeTable,
+          () => Silver.refreshFromChangeFeed(lake, m, Job.feedCursorDir(lake, m)))
+    }
+    feedRefreshStream(lake, model, source, tick)
   }
 
-  /** Continuous face of a CDF-maintained gold star mart: a Structured
-    * Streaming wrapper that drives one grain-routed fold
-    * ([[graft.pipeline.Gold.starFeedTick]], via the caller-supplied `tick`
-    * thunk) to convergence per micro-batch.
+  /** Continuous face of a cursor-driven feed tick (a silver model's
+    * [[silverRefreshStream]], a gold mart's `Gold.refreshStream`): a
+    * Structured Streaming wrapper that drives `tick` to convergence per
+    * micro-batch.
     *
-    * Unlike [[silverRefreshStream]] — where the file-source ROWS are the
-    * data, so visibility retractions cannot propagate and must gate — the
-    * gold fold reads the change feed through its durable cursors: the file
-    * stream is only the WAKE-UP signal (its rows are discarded), so DV
-    * deletes and re-ingest retractions fold exactly like the batch tick,
-    * and exactly-once comes from the cursor/txn machinery, not the stream
-    * checkpoint (a foreachBatch replay re-drives an idempotent, already-
-    * caught-up tick). Watches the FACT dep's append dirs; a lookup-dep-only
-    * change drains on the next fact-side trigger or a batch tick — the
-    * same convergence contract as Job's run ordering. `tick` is a thunk so
-    * per-batch state (the silver frontier caps) re-reads every batch.
+    * The file stream over `triggerSource`'s append dirs is only the
+    * WAKE-UP signal (its rows are discarded): the tick reads the change
+    * feed through its durable cursors, so DV deletes and re-ingest
+    * retractions fold exactly like the batch tick, and exactly-once comes
+    * from the cursor/txn machinery, not the stream checkpoint (a
+    * foreachBatch replay re-drives an idempotent, already-caught-up
+    * tick). `tick` is a thunk so per-batch state (gold's silver frontier
+    * caps) re-reads every batch.
     *
-    * The tick also runs once at CONSTRUCTION (the [[sweepPendingCommits]]
-    * discipline): the file source marks trigger files seen even when the
-    * tick was frontier-capped and folded nothing, so a catch-up run after
-    * the cap lifted may deliver NO new files — without the construction
-    * drain it would never fold the now-unblocked range. */
-  def goldRefreshStream(lake: graft.pipeline.Lakehouse, mart: String,
+    * The tick also runs once at CONSTRUCTION: the file source marks
+    * trigger files seen even when the tick folded nothing (a frontier-
+    * capped gold tick, a crashed append adopted later), so a catch-up run
+    * may deliver NO new files — without the construction drain it would
+    * never fold the now-visible range. */
+  def feedRefreshStream(lake: graft.pipeline.Lakehouse, consumer: String,
       triggerSource: String, tick: () => Option[(Int, Int)])
       : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
     def drain(): Unit = {
@@ -1169,7 +1123,7 @@ object Streams {
       while (tick().isDefined) {
         guard += 1
         require(guard <= 100000,
-          s"gold stream drain failed to converge on $mart")
+          s"feed stream drain failed to converge on $consumer")
       }
     }
     drain() // catch-up: consumed triggers don't re-fire
@@ -1181,88 +1135,8 @@ object Streams {
       }
   }
 
-  /** The [[silverRefreshStream]] delete/visibility gate. Default mode
-    * fails fast when (a) a FRESH stream (no gate marker yet) starts over a
-    * table whose live entries carry deletion vectors, or (b) any log
-    * record since the last gated version carries a visibility-retracting
-    * op (`DELETE`, `RESTORE`, `FSCK` — `DELETE RUN` is the allowed
-    * re-ingest delete), or (c) the log's retention pruned records inside
-    * the gate window (a long-down stream can no longer prove no delete
-    * landed). `ignoreDeletes` skips the checks but still advances the
-    * marker, so switching back to the default later does not re-fail on
-    * already-acknowledged deletes. The marker is the table-dir file
-    * `_stream_gate_<model>` (NOT inside the pending set — sweeps list
-    * that dir as parked-file markers). */
-  private[graft] def gateStreamVisibility(lake: graft.pipeline.Lakehouse,
-      model: String, bronzeTable: String, ignoreDeletes: Boolean,
-      atConstruction: Boolean = false): Unit = {
-    import java.nio.file.Files
-    val versions = lake.tableVersions("bronze", bronzeTable)
-    if (versions.isEmpty) return // plain layout / never written: nothing to gate
-    val head = versions.max
-    val marker = lake.tableDir("bronze", bronzeTable)
-      .resolve(s"_stream_gate_$model")
-    val last: Option[Int] =
-      if (Files.exists(marker)) {
-        val raw = new String(Files.readAllBytes(marker),
-          java.nio.charset.StandardCharsets.UTF_8).trim
-        require(raw.nonEmpty && raw.forall(_.isDigit),
-          s"stream gate marker $marker is corrupt ('$raw') — delete it and " +
-            "restart the stream (construction re-pins the gate); markers are " +
-            "written atomically from this build on, so this is a pre-fix relic")
-        Some(raw.toInt)
-      } else None
-    // schema-CHANGING ops invalidate the PINNED scan schema regardless of
-    // ignoreDeletes: the running stream would read new-named files as all
-    // nulls. The check runs per micro-batch only — at construction the pin
-    // is fresh (streamReadSupport read the current mapping), so the remedy
-    // is exactly a restart and restarts must pass.
-    if (!atConstruction) last.foreach { from =>
-      val schemaOps = lake.opsSince(bronzeTable, from).collect {
-        case (v, op) if op == "RENAME COLUMN" || op == "DROP COLUMN" ||
-          op == "WIDEN COLUMN" => s"v$v=$op"
-      }
-      require(schemaOps.isEmpty,
-        s"bronze.$bronzeTable changed its column mapping " +
-          s"(${schemaOps.mkString(", ")}) after this stream pinned its scan " +
-          "schema: restart the stream (construction re-pins the mapping)")
-    }
-    if (!ignoreDeletes) {
-      last match {
-        case None =>
-          require(lake.deletionVectorCount(bronzeTable) == 0,
-            s"bronze.$bronzeTable carries deletion vectors: a file stream would " +
-              "deliver vector-deleted ghost rows. Run OPTIMIZE (Maintenance) to " +
-              "purge the vectors, or pass ignoreDeletes=true to accept that " +
-              s"silver.$model never retracts")
-        case Some(from) =>
-          require(from >= versions.min - 1,
-            s"bronze.$bronzeTable pruned log records inside the stream's gate " +
-              s"window (gated at v$from, oldest retained v${versions.min}): cannot " +
-              "prove no delete landed while the stream was down. Re-run the full " +
-              s"refresh of $model, or pass ignoreDeletes=true")
-          val bad = lake.opsSince(bronzeTable, from).collect {
-            case (v, op) if op == "DELETE" || op == "RESTORE" || op == "FSCK" =>
-              s"v$v=$op"
-          }
-          require(bad.isEmpty,
-            s"bronze.$bronzeTable committed visibility-retracting operation(s) " +
-              s"${bad.mkString(", ")} since the stream last ran: already-delivered " +
-              s"rows were deleted and insert-only silver.$model cannot retract " +
-              "them. Re-run the full refresh, or pass ignoreDeletes=true to " +
-              "proceed without retraction (deleteByRunId re-ingest deletes are " +
-              "allowed and do not trip this gate)")
-      }
-    }
-    Files.createDirectories(marker.getParent)
-    // atomic replace: a crash mid-write must never leave an empty or
-    // truncated marker — the read side parses it and a torn marker would
-    // brick every future construction of this stream
-    atomicWriteString(marker, head.toString)
-  }
-
   /** Write-tmp-then-ATOMIC_MOVE replace: the ONE copy of the
-    * last-writer-wins marker write (gate markers, compaction watermarks).
+    * last-writer-wins marker write (compaction watermarks).
     * Readers see the old content or the new, never a torn file; crash-
     * leaked `.tmp` siblings share one naming convention. */
   private def atomicWriteString(target: java.nio.file.Path, content: String): Unit = {
@@ -1273,101 +1147,6 @@ object Streams {
     java.nio.file.Files.move(tmp, target,
       java.nio.file.StandardCopyOption.ATOMIC_MOVE,
       java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-  }
-
-  /** One [[silverRefreshStream]] micro-batch: committed-only filter →
-    * latest-wins OCC merge → pending-set maintenance. Idempotent under
-    * foreachBatch replays (re-merging rows is a latest-wins no-op; marker
-    * create/delete are idempotent), so any crash point converges. */
-  private[graft] def refreshSilverBatch(lake: graft.pipeline.Lakehouse,
-      model: String, batch: DataFrame, ignoreDeletes: Boolean = false): Unit = {
-    val (bronzeTable, merge) = streamModel(lake, model)
-    gateStreamVisibility(lake, model, bronzeTable, ignoreDeletes)
-    val rows = lake.committedBronzeRelPaths(bronzeTable) match {
-      case None => batch // plain layout: every file on disk is live
-      case Some(live) =>
-        val pendingDir = lake.tableDir("bronze", bronzeTable)
-          .resolve(s"_stream_pending_$model")
-        // relPath of each row's source file, matching manifest entries
-        // ("_aN_uid/part-*.parquet")
-        val withRel = batch.withColumn("__rel", concat_ws("/",
-          element_at(split(input_file_name(), "/"), -2),
-          element_at(split(input_file_name(), "/"), -1)))
-        // distinct files in this batch: bounded by the trigger's file cap,
-        // never by table size
-        val batchFiles = withRel.select("__rel").distinct()
-          .collect().map(_.getString(0)).toSet
-        // dataChange=false files (an OPTIMIZE repack of rows this stream
-        // already delivered) are SKIPPED outright — not merged, not parked
-        // (the Delta streaming-source rule of ignoring non-dataChange
-        // adds). Checked before the live filter: a repack committed
-        // between the two manifest reads is nodata either way.
-        val nodata = lake.nodataDirs("bronze", bronzeTable)
-        val repacked = batchFiles.filter(r => nodata(r.takeWhile(_ != '/')))
-        val uncommitted = (batchFiles -- repacked).filterNot(live)
-        // park uncommitted files: their commit may land AFTER this listing,
-        // and the file source will never re-deliver the path
-        uncommitted.foreach(r => writePendingMarker(pendingDir, r))
-        val excluded = repacked ++ uncommitted
-        (if (excluded.isEmpty) withRel
-         else withRel.filter(!col("__rel").isInCollection(excluded))).drop("__rel")
-    }
-    // project the column-mapping logical view (identity without a mapping)
-    merge(lake.streamReadSupport(bronzeTable)._2(rows))
-    // then re-probe the pending set: commits that landed since park time
-    // fold in, vacuumed debris drops out
-    sweepPendingCommits(lake, model)
-  }
-
-  /** (bronze source table, per-slice merge) for a model the streaming
-    * refresh can maintain: any latest-wins spec, plus the SCD2 model via
-    * its observation-log merge — together the continuous face of every
-    * incrementally-refreshable single-source MV. */
-  private def streamModel(lake: graft.pipeline.Lakehouse, model: String)
-      : (String, DataFrame => Unit) = model match {
-    case "silver_video_metadata_scd2" =>
-      ("videos_raw", raw => graft.pipeline.Silver.refreshScd2FromRaw(lake, raw))
-    case m =>
-      val spec = graft.pipeline.Silver.latestWinsSpecs(m)
-      (spec.bronzeTable, raw => mergeLatestWins(lake, m, raw))
-  }
-
-  /** Fold into silver every PARKED bronze file whose commit has landed
-    * since it was seen, and drop markers of vacuumed debris (file gone,
-    * still uncommitted). Runs at stream construction — so a catch-up run
-    * resolves parked commits even when no new files arrive and foreachBatch
-    * never fires — and after every data-bearing micro-batch. Idempotent:
-    * markers clear only after the merge commits; a crash in between
-    * re-merges (a latest-wins no-op). */
-  private[graft] def sweepPendingCommits(lake: graft.pipeline.Lakehouse,
-      model: String): Unit = {
-    val (bronzeTable, merge) = streamModel(lake, model)
-    lake.committedBronzeRelPaths(bronzeTable).foreach { live =>
-      val base = lake.tableDir("bronze", bronzeTable)
-      val pendingDir = base.resolve(s"_stream_pending_$model")
-      var pending = listPendingMarkers(pendingDir)
-      if (pending.nonEmpty) {
-        // a parked file whose dir turned out to be an OPTIMIZE repack
-        // (listed between the rewrite's dir-write and its commit) carries
-        // no new rows — drop its marker without merging
-        val nodata = lake.nodataDirs("bronze", bronzeTable)
-        val repacked = pending.filter(r => nodata(r.takeWhile(_ != '/')))
-        repacked.foreach(r => deletePendingMarker(pendingDir, r))
-        pending = pending -- repacked
-      }
-      if (pending.nonEmpty) {
-        val ready = pending.filter(live).toSeq.sorted
-        (pending -- ready.toSet)
-          .filterNot(r => java.nio.file.Files.exists(base.resolve(r)))
-          .foreach(r => deletePendingMarker(pendingDir, r))
-        if (ready.nonEmpty) {
-          val (scanSchema, view) = lake.streamReadSupport(bronzeTable)
-          merge(view(lake.spark.read.schema(scanSchema)
-            .parquet(ready.map(r => base.resolve(r).toString): _*)))
-          ready.foreach(r => deletePendingMarker(pendingDir, r))
-        }
-      }
-    }
   }
 
   /** CONTINUOUS ANN-index maintenance — the streaming face of
@@ -1399,47 +1178,4 @@ object Streams {
     if (batchId > compactedWatermark(assignDir))
       writeBatchDir(graft.operators.Clustering.assignCells(
         batch, "id", "embedding", cells), assignDir, batchId)
-
-  /** OCC latest-wins merge of raw bronze rows into a silver model (no-op
-    * on an empty projection). */
-  private def mergeLatestWins(lake: graft.pipeline.Lakehouse, model: String,
-      raw: DataFrame): Unit = {
-    import graft.pipeline.Silver
-    val spec = Silver.latestWinsSpecs(model)
-    val fresh = spec.typed(raw)
-    if (!fresh.isEmpty) {
-      lake.transactMerge("silver", model) { existing =>
-        Silver.latestWins(existing.unionByName(fresh), spec.grain, spec.order)
-      }
-      ()
-    }
-  }
-
-  private def markerName(rel: String): String =
-    java.net.URLEncoder.encode(rel, java.nio.charset.StandardCharsets.UTF_8)
-
-  private def writePendingMarker(dir: java.nio.file.Path, rel: String): Unit = {
-    java.nio.file.Files.createDirectories(dir)
-    java.nio.file.Files.write(dir.resolve(markerName(rel)), Array.emptyByteArray)
-  }
-
-  private def listPendingMarkers(dir: java.nio.file.Path): Set[String] =
-    if (!java.nio.file.Files.isDirectory(dir)) Set.empty
-    else {
-      // close the directory stream: this runs once per micro-batch plus a
-      // sweep, and an unclosed Files.list leaks one fd per call for the
-      // life of a long-running refresh stream
-      val s = java.nio.file.Files.list(dir)
-      try s.toArray.map(_.asInstanceOf[java.nio.file.Path])
-        .map(p => java.net.URLDecoder.decode(p.getFileName.toString,
-          java.nio.charset.StandardCharsets.UTF_8))
-        // a real pending marker encodes an `_aN_uid/part-*` relPath — the
-        // '/' filter keeps the gate marker (`_gate_version`, no slash)
-        // from being swept as a vanished pending file
-        .filter(_.contains('/')).toSet
-      finally s.close()
-    }
-
-  private def deletePendingMarker(dir: java.nio.file.Path, rel: String): Unit =
-    java.nio.file.Files.deleteIfExists(dir.resolve(markerName(rel)))
 }

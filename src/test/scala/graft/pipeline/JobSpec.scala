@@ -91,42 +91,6 @@ class JobSpec extends SparkSpec {
     }
   }
 
-  test("day-2 incremental run equals a full recompute over the same bronze") {
-    // two lakes fed identical two-day ingests: one runs day 2 incremental,
-    // the other full — silver facts must be identical
-    val incLake = new Lakehouse(spark, Files.createTempDirectory("graft-job-inc").toString)
-    val fullLake = new Lakehouse(spark, Files.createTempDirectory("graft-job-full").toString)
-    Seq(incLake, fullLake).foreach { lake =>
-      val r1 = Job.run(lake, DataClient, AnalyticsClient,
-        startDate = "2025-05-30", endDate = "2025-06-01",
-        now = Timestamp.valueOf("2025-06-02 09:00:00"), runId = "day1")
-      assert(r1.status == "success", r1.toString)
-    }
-    // day 2: new snapshot re-reports 05-31 (latest-wins) via the same client
-    val r2inc = Job.run(incLake, DataClient, AnalyticsClient,
-      startDate = "2025-05-31", endDate = "2025-06-02", incremental = true,
-      now = Timestamp.valueOf("2025-06-03 09:00:00"), runId = "day2")
-    val r2full = Job.run(fullLake, DataClient, AnalyticsClient,
-      startDate = "2025-05-31", endDate = "2025-06-02", incremental = false,
-      now = Timestamp.valueOf("2025-06-03 09:00:00"), runId = "day2")
-    assert(r2inc.status == "success", r2inc.toString)
-    assert(r2full.status == "success", r2full.toString)
-    Silver.models.map(_.name).foreach { m =>
-      // request_id is a fresh UUID per ingest call, so it naturally differs
-      // between the two independently-fed lakes — excluded from comparison
-      def rows(lake: Lakehouse) = {
-        val t = lake.table("silver", m)
-        t.drop("request_id").collect().map(_.toString).sorted.toSeq
-      }
-      assert(rows(incLake) == rows(fullLake),
-        s"$m differs between incremental and full day-2 refresh")
-    }
-    // both days logged and finalized
-    val log = incLake.table("bronze", "run_context_log")
-    assert(log.count() == 2)
-    assert(log.filter(col("run_status") === "success").count() == 2)
-  }
-
   test("day-2 change-feed run equals a full recompute over the same bronze") {
     // the cdfRefresh mode: the six latest-wins models drain the bronze
     // change feed through durable cursors instead of snapshot-pruned merges
@@ -510,31 +474,30 @@ class JobSpec extends SparkSpec {
 
   test("incremental merge does not skip bronze landed by a FAILED run") {
     // day 1 success; day 2 lands Data-API bronze then fails in analytics
-    // (silver never refreshed); day 3 incremental must still merge day 2's
-    // landed rows — the merge frontier advances only on success, and the
-    // boundary is inclusive
+    // (silver never drained); day 3 must still fold day 2's landed rows —
+    // the silver cursors advance only when a drain commits
     object FailingAnalytics extends AnalyticsIngest.AnalyticsApiClient {
       def queryReports(params: Map[String, String]): Either[JVal, JObj] =
         throw new RuntimeException("analytics outage")
     }
-    val lake = new Lakehouse(spark, Files.createTempDirectory("graft-job-failinc").toString)
+    val lake = new Lakehouse(spark, Files.createTempDirectory("graft-job-failcdf").toString)
     val r1 = Job.run(lake, DataClient, AnalyticsClient,
-      startDate = "2025-05-30", endDate = "2025-06-01",
+      startDate = "2025-05-30", endDate = "2025-06-01", cdfRefresh = true,
       now = Timestamp.valueOf("2025-06-02 09:00:00"), runId = "ok1")
     assert(r1.status == "success", r1.toString)
     val r2 = Job.run(lake, DataClient, FailingAnalytics,
-      startDate = "2025-05-30", endDate = "2025-06-02",
+      startDate = "2025-05-30", endDate = "2025-06-02", cdfRefresh = true,
       now = Timestamp.valueOf("2025-06-03 09:00:00"), runId = "boom")
     assert(r2.status == "failed")
     val r3 = Job.run(lake, DataClient, AnalyticsClient,
-      startDate = "2025-05-30", endDate = "2025-06-03", incremental = true,
+      startDate = "2025-05-30", endDate = "2025-06-03", cdfRefresh = true,
       now = Timestamp.valueOf("2025-06-04 09:00:00"), runId = "ok2")
     assert(r3.status == "success", r3.toString)
     // the failed run's video stats observation (snapshot 2025-06-03) made it
     // into silver: one snapshot per video per run that landed videos_raw
     val snaps = lake.table("silver", "silver_video_stats_snapshot")
       .select(col("run_id")).distinct().collect().map(_.getString(0)).toSet
-    assert(snaps == Set("ok1", "boom", "ok2"), s"merged runs: $snaps")
+    assert(snaps == Set("ok1", "boom", "ok2"), s"folded runs: $snaps")
   }
 
   test("a failing stage still finalizes the run log with status failed (ALL_DONE)") {

@@ -655,7 +655,7 @@ class LakehouseSpec extends SparkSpec {
         if (r.isNullAt(5)) -1L else r.getLong(5)))
     assert(h.map(_._1).toSeq == lake.tableVersions("bronze", "t"))
     // v1-3 appends (v1 = first commit → checkpoint), v4 run-aligned delete
-    // (op DELETE RUN — the streaming gate's allowed re-ingest delete),
+    // (op DELETE RUN, from deleteByRunId),
     // v5 OPTIMIZE
     assert(h.map(_._2).toSeq ==
       Seq("APPEND", "APPEND", "APPEND", "DELETE RUN", "OPTIMIZE"), h.mkString(","))

@@ -569,6 +569,15 @@ class StreamsSpec extends SparkSpec {
     } finally q.stop()
   }
 
+  /** Start `writer` with AvailableNow on `ckpt` and wait for it to stop. */
+  private def drainOnce(writer: org.apache.spark.sql.streaming.DataStreamWriter[
+      org.apache.spark.sql.Row], ckpt: String): Unit = {
+    val q = writer.option("checkpointLocation", ckpt)
+      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
+    q.awaitTermination(120000)
+    ()
+  }
+
   test("silverRefreshStream: continuous latest-wins maintenance equals full recompute") {
     import java.nio.file.Files
     import graft.pipeline.{Bronze, Lakehouse, Silver}
@@ -579,26 +588,21 @@ class StreamsSpec extends SparkSpec {
       Bronze.ingest(lake, Bronze.RunContext(run, s"req-$run", d(snap), graft.pipeline.Fixtures.ts(at)), _ => Map(
         "channels_raw" -> Seq(channelPayload("UC_1", title, views, 10))))
     land("r1", "2025-06-01", "2025-06-01 10:00:00", "Chan A", 100)
-    Silver.refresh(lake, Some(Set("silver_channels")))
     val ckpt = Files.createTempDirectory("graft-stream-ckpt").toString
-    // catch-up 1: nothing new — the stream consumes the initial files but
-    // latest-wins re-merge is a no-op
-    def drain(): Unit = {
-      val q = Streams.silverRefreshStream(lake, "silver_channels")
-        .option("checkpointLocation", ckpt)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
-      q.awaitTermination(120000)
-    }
+    def drain(): Unit = drainOnce(Streams.silverRefreshStream(lake, "silver_channels"), ckpt)
+    // catch-up 1: no prior full refresh — the construction drain
+    // bootstraps silver from the bronze snapshot
     drain()
-    val afterNoop = lake.table("silver", "silver_channels")
+    val afterBootstrap = lake.table("silver", "silver_channels")
       .collect().map(_.toString).sorted.toSeq
-    // two updates land while the stream is down; catch-up 2 merges both
+    assert(afterBootstrap.size == 1)
+    // two updates land while the stream is down; catch-up 2 folds both
     land("r2", "2025-06-02", "2025-06-02 10:00:00", "Chan B", 150)
     land("r3", "2025-06-03", "2025-06-03 10:00:00", "Chan C", 160)
     drain()
     val streamed = lake.table("silver", "silver_channels")
       .collect().map(_.toString).sorted.toSeq
-    assert(streamed != afterNoop, "merge must pick up the new bronze files")
+    assert(streamed != afterBootstrap, "the fold must pick up the new bronze commits")
     // equals a full recompute over all bronze history
     Silver.refresh(lake, Some(Set("silver_channels")))
     val full = lake.table("silver", "silver_channels")
@@ -608,115 +612,71 @@ class StreamsSpec extends SparkSpec {
       .filter(col("channel_title") === "Chan C").count() == 1)
   }
 
-  test("silverRefreshStream delete contract: plain deletes fail fast; ignoreDeletes proceeds without retraction; re-ingest deletes pass") {
+  test("silverRefreshStream folds a deletion-vector delete of a delivered run as a retraction") {
     import java.nio.file.Files
     import graft.pipeline.{Bronze, Lakehouse, Silver}
     import graft.pipeline.Fixtures.{channelPayload, d}
     import org.apache.spark.sql.functions.col
-    val lake = new Lakehouse(spark, Files.createTempDirectory("graft-streamgate").toString)
+    val lake = new Lakehouse(spark, Files.createTempDirectory("graft-streamdel").toString)
     def land(run: String, snap: String, at: String, title: String, views: Long): Unit =
       Bronze.ingest(lake, Bronze.RunContext(run, s"req-$run", d(snap),
         graft.pipeline.Fixtures.ts(at)), _ => Map(
         "channels_raw" -> Seq(channelPayload("UC_1", title, views, 10))))
-    land("r1", "2025-06-01", "2025-06-01 10:00:00", "Chan A", 100)
-    Silver.refresh(lake, Some(Set("silver_channels")))
-    val ckpt = Files.createTempDirectory("graft-gate-ckpt").toString
-    def drain(ignoreDeletes: Boolean = false): Unit = {
-      val q = Streams.silverRefreshStream(lake, "silver_channels", ignoreDeletes)
-        .option("checkpointLocation", ckpt)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
-      q.awaitTermination(120000)
+    val ckpt = Files.createTempDirectory("graft-streamdel-ckpt").toString
+    def drain(): Unit = drainOnce(Streams.silverRefreshStream(lake, "silver_channels"), ckpt)
+    def rows() = lake.table("silver", "silver_channels").collect().map(_.toString).sorted.toSeq
+    def recomputed() = {
+      Silver.refresh(lake, Some(Set("silver_channels")))
+      rows()
     }
-    drain() // establishes the gate marker at the current head
-
-    // run-aligned RE-INGEST (internal deleteByRunId → op DELETE RUN) is
-    // the allowed delete: the paired re-append converges latest-wins
-    land("r1", "2025-06-01", "2025-06-01 11:00:00", "Chan A2", 110)
-    drain()
-    assert(lake.table("silver", "silver_channels")
-      .filter(col("channel_title") === "Chan A2").count() == 1)
-
-    // a PLAIN delete retracts visibility of delivered rows: default fails
-    // fast at construction with the remedy, ignoreDeletes proceeds and
-    // silver (insert-only) keeps the row
+    land("r1", "2025-06-01", "2025-06-01 10:00:00", "Chan A", 100)
     land("r2", "2025-06-02", "2025-06-02 10:00:00", "Chan B", 150)
     drain()
-    lake.deleteBronzeWhereDv("channels_raw", col("run_id") === "r2")
-    val ex = intercept[IllegalArgumentException](drain())
-    assert(ex.getMessage.contains("visibility-retracting"), ex.getMessage)
-    drain(ignoreDeletes = true)
-    assert(lake.table("bronze", "channels_raw")
-      .filter(col("run_id") === "r2").count() == 0, "bronze delete applied")
-    assert(lake.table("silver", "silver_channels").count() == 1,
-      "latest-wins silver keeps exactly the current channel row")
-    // ignore mode advanced the marker: default mode works again
-    land("r3", "2025-06-03", "2025-06-03 10:00:00", "Chan C", 160)
-    drain()
     assert(lake.table("silver", "silver_channels")
-      .filter(col("channel_title") === "Chan C").count() == 1)
+      .filter(col("channel_title") === "Chan B").count() == 1)
+    // a run-aligned re-ingest (delete + re-append of r1) converges
+    land("r1", "2025-06-01", "2025-06-01 11:00:00", "Chan A2", 110)
+    drain()
+    assert(rows() == recomputed(), "re-ingest fold != recompute")
+    // a PLAIN vector delete of the delivered winner: the tick reads it from
+    // the change feed and the grain falls back to the older r1 row
+    lake.deleteBronzeWhereDv("channels_raw", col("run_id") === "r2")
+    drain()
+    val streamed = rows()
+    val ch = lake.table("silver", "silver_channels").collect()
+    assert(ch.length == 1 && ch.head.getAs[String]("channel_title") == "Chan A2",
+      s"winner did not fall back to r1: ${ch.toSeq}")
+    assert(streamed == recomputed(), "retraction fold != recompute")
+  }
 
-    // FRESH stream over a table with live deletion vectors: refused
-    // (a file stream would deliver vector-deleted ghost rows)
-    val lake2 = new Lakehouse(spark, Files.createTempDirectory("graft-streamgate2").toString)
+  test("silverRefreshStream starts fresh over a table with live deletion vectors") {
+    import java.nio.file.Files
+    import graft.pipeline.{Bronze, Lakehouse, Silver}
+    import graft.pipeline.Fixtures.{channelPayload, d}
+    import org.apache.spark.sql.functions.col
+    val lake = new Lakehouse(spark, Files.createTempDirectory("graft-streamdv").toString)
     // both rows in ONE file, so a one-row delete writes a real vector
-    lake2.appendBronze("channels_raw", Bronze.envelopeDf(spark, Seq(
+    lake.appendBronze("channels_raw", Bronze.envelopeDf(spark, Seq(
       Bronze.Envelope(d("2025-06-01"), graft.pipeline.Fixtures.ts("2025-06-01 10:00:00"),
         "yt", "req-r1", "1", "r1", channelPayload("UC_A", "A", 10, 1)),
       Bronze.Envelope(d("2025-06-01"), graft.pipeline.Fixtures.ts("2025-06-01 10:00:00"),
         "yt", "req-r1", "1", "r1", channelPayload("UC_B", "B", 20, 2))))
       .repartition(1))
-    // partial in-file delete -> a real vector on a live file
-    lake2.deleteBronzeWhereDv("channels_raw",
+    lake.deleteBronzeWhereDv("channels_raw",
       org.apache.spark.sql.functions.get_json_object(
         col("payload"), "$.items[0].id") === "UC_A")
-    assert(lake2.deletionVectorCount("channels_raw") > 0, "expected a live vector")
-    Silver.refresh(lake2, Some(Set("silver_channels")))
-    val ex2 = intercept[IllegalArgumentException](
-      Streams.silverRefreshStream(lake2, "silver_channels"))
-    assert(ex2.getMessage.contains("deletion vectors"), ex2.getMessage)
-    // opt-in constructs (ghost rows accepted by contract)
-    Streams.silverRefreshStream(lake2, "silver_channels", ignoreDeletes = true)
-  }
-
-  test("stream gate: a column rename after pinning fails per-batch; a restart re-pins and passes") {
-    import java.nio.file.Files
-    import graft.pipeline.{Bronze, Lakehouse, Silver}
-    import graft.pipeline.Fixtures.{channelPayload, d}
-    val lake = new Lakehouse(spark, Files.createTempDirectory("graft-gaterename").toString)
-    Bronze.ingest(lake, Bronze.RunContext("r1", "req-r1", d("2025-06-01"),
-      graft.pipeline.Fixtures.ts("2025-06-01 10:00:00")), _ => Map(
-      "channels_raw" -> Seq(channelPayload("UC_1", "A", 10, 1))))
+    assert(lake.deletionVectorCount("channels_raw") > 0, "expected a live vector")
+    val ckpt = Files.createTempDirectory("graft-streamdv-ckpt").toString
+    // the file stream delivers the vector-deleted row as a raw parquet row,
+    // but it is only the wake-up: silver bootstraps from the visible rows
+    drainOnce(Streams.silverRefreshStream(lake, "silver_channels"), ckpt)
+    val streamed = lake.table("silver", "silver_channels").collect().map(_.toString).sorted.toSeq
+    assert(lake.table("silver", "silver_channels")
+      .select("channel_id").collect().map(_.getString(0)).toSeq == Seq("UC_B"),
+      "a vector-deleted row reached silver")
     Silver.refresh(lake, Some(Set("silver_channels")))
-    val ckpt = Files.createTempDirectory("graft-gaterename-ckpt").toString
-    val q = Streams.silverRefreshStream(lake, "silver_channels")
-      .option("checkpointLocation", ckpt)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
-    q.awaitTermination(120000) // pins the scan schema + gate marker
-    lake.renameBronzeColumn("channels_raw", "request_id", "req_id")
-    // mid-stream (per-batch) gate: the pinned schema is stale — fail fast
-    val ex = intercept[IllegalArgumentException](
-      Streams.gateStreamVisibility(lake, "silver_channels", "channels_raw",
-        ignoreDeletes = false))
-    assert(ex.getMessage.contains("restart"), ex.getMessage)
-    // ...even in ignoreDeletes mode (schema staleness is not a delete)
-    intercept[IllegalArgumentException](
-      Streams.gateStreamVisibility(lake, "silver_channels", "channels_raw",
-        ignoreDeletes = true))
-    // a RESTART re-pins at construction: the gate passes and advances, so
-    // subsequent per-batch checks are clean again
-    Streams.gateStreamVisibility(lake, "silver_channels", "channels_raw",
-      ignoreDeletes = false, atConstruction = true)
-    Streams.gateStreamVisibility(lake, "silver_channels", "channels_raw",
-      ignoreDeletes = false)
-    // a torn/empty marker (pre-atomic-write relic) fails with a NAMED
-    // remedy, not a bare NumberFormatException
-    val marker = lake.tableDir("bronze", "channels_raw")
-      .resolve("_stream_gate_silver_channels")
-    Files.write(marker, Array.emptyByteArray)
-    val torn = intercept[IllegalArgumentException](
-      Streams.gateStreamVisibility(lake, "silver_channels", "channels_raw",
-        ignoreDeletes = false))
-    assert(torn.getMessage.contains("corrupt"), torn.getMessage)
+    assert(streamed == lake.table("silver", "silver_channels")
+      .collect().map(_.toString).sorted.toSeq, "streamed silver != Silver.refresh")
   }
 
   test("silverRefreshStream maintains SCD2: streamed == batch recompute across A→B→A and late-arrival micro-batch orderings") {
@@ -732,20 +692,16 @@ class StreamsSpec extends SparkSpec {
           videoItem("V1", "UC_1", title, views),
           videoItem("V2", "UC_1", "Stable", views)))))
     land("r1", "2025-06-01", "2025-06-01 10:00:00", "Title A", 10)
-    Silver.refresh(lake, Some(Set("silver_video_metadata_scd2")))
     val ckpt = Files.createTempDirectory("graft-scd2stream-ckpt").toString
-    def drain(): Unit = {
-      val q = Streams.silverRefreshStream(lake, "silver_video_metadata_scd2")
-        .option("checkpointLocation", ckpt)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
-      q.awaitTermination(120000)
-    }
-    def scd2Rows() = lake.table("silver", "silver_video_metadata_scd2")
-      .collect().map(_.toString).sorted.toSeq
+    def drain(): Unit =
+      drainOnce(Streams.silverRefreshStream(lake, "silver_video_metadata_scd2"), ckpt)
+    val models = Set("silver_video_metadata_scd2", "silver_videos")
+    def rows() = models.toSeq.sorted.map(m =>
+      lake.table("silver", m).collect().map(_.toString).sorted.toSeq)
     def v1Titles() = lake.table("silver", "silver_video_metadata_scd2")
       .filter(col("video_id") === "V1").orderBy("valid_from_utc")
       .collect().map(_.getAs[String]("video_title")).toSeq
-    drain() // consumes the initial file; bootstraps the observation log
+    drain() // bootstraps the SCD2 pair and silver_videos from the snapshot
     // an A→B→A reversion lands across micro-batches while the stream is down
     land("r2", "2025-06-02", "2025-06-02 10:00:00", "Title B", 20)
     land("r3", "2025-06-03", "2025-06-03 10:00:00", "Title A", 30)
@@ -754,38 +710,32 @@ class StreamsSpec extends SparkSpec {
       s"A→B→A reversion missegmented: ${v1Titles()}")
     assert(lake.table("silver", "silver_video_metadata_scd2")
       .filter(col("video_id") === "V2").count() == 1, "unchanged video must stay at 1 version")
-    val streamed = scd2Rows()
-    Silver.refresh(lake, Some(Set("silver_video_metadata_scd2")))
-    assert(streamed == scd2Rows(), "streamed SCD2 != full recompute")
+    val streamed = rows()
+    Silver.refresh(lake, Some(models))
+    assert(streamed == rows(), "streamed SCD2 pair != full recompute")
     // LATE ARRIVAL: lands in snapshot 06-04 but observed between r1 and r2 —
-    // the streamed merge must re-segment the MIDDLE of V1's version chain
+    // the streamed fold must re-segment the MIDDLE of V1's version chain
     land("r4", "2025-06-04", "2025-06-01 18:00:00", "Title C", 15)
     drain()
     assert(v1Titles() == Seq("Title A", "Title C", "Title B", "Title A"),
       s"late arrival missegmented: ${v1Titles()}")
-    val streamed2 = scd2Rows()
-    Silver.refresh(lake, Some(Set("silver_video_metadata_scd2")))
-    assert(streamed2 == scd2Rows(), "streamed SCD2 after late arrival != full recompute")
+    val streamed2 = rows()
+    Silver.refresh(lake, Some(models))
+    assert(streamed2 == rows(), "streamed SCD2 pair after late arrival != full recompute")
   }
 
   test("silverRefreshStream is committed-only: crash debris never reaches silver; a late commit still folds in") {
     import java.nio.file.Files
     import graft.pipeline.{Bronze, Lakehouse, Silver}
     import graft.pipeline.Fixtures.{channelPayload, d}
-    import org.apache.spark.sql.functions.{col, lit}
+    import org.apache.spark.sql.functions.lit
     val lake = new Lakehouse(spark, Files.createTempDirectory("graft-committed-only").toString)
     Bronze.ingest(lake, Bronze.RunContext("r1", "req-r1", d("2025-06-01"),
       graft.pipeline.Fixtures.ts("2025-06-01 10:00:00")), _ => Map(
       "channels_raw" -> Seq(channelPayload("UC_1", "Chan A", 100, 10))))
-    Silver.refresh(lake, Some(Set("silver_channels")))
     val ckpt = Files.createTempDirectory("graft-co-ckpt").toString
-    def drain(): Unit = {
-      val q = Streams.silverRefreshStream(lake, "silver_channels")
-        .option("checkpointLocation", ckpt)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
-      q.awaitTermination(120000)
-    }
-    drain() // consume the initial committed file
+    def drain(): Unit = drainOnce(Streams.silverRefreshStream(lake, "silver_channels"), ckpt)
+    drain() // bootstrap from the initial commit
     def silverRows() = lake.table("silver", "silver_channels")
       .collect().map(_.toString).sorted.toSeq
     def recomputed() = {
@@ -816,18 +766,14 @@ class StreamsSpec extends SparkSpec {
     lake.vacuumBronze("channels_raw", retainMillis = 0L)
     assert(!Files.exists(base.resolve("_a8_gone")), "vacuum left uncommitted debris")
     assert(Files.exists(base.resolve("_a9_late")), "vacuum deleted committed files")
-    // the stream already consumed both paths — the pending set must fold the
-    // now-committed file in and drop the vacuumed one
+    // the stream already consumed both paths, so no new file wakes it —
+    // the construction drain folds the adoption commit from the log
     drain()
     val after = silverRows()
     assert(after.exists(_.contains("Chan LATE")),
       "late-committed file never reached silver (lost by the seen-files filter)")
     assert(!after.exists(_.contains("Chan GONE")))
     assert(after == recomputed(), "final silver != recompute from committed bronze")
-    // pending markers fully drained
-    val pendingDir = base.resolve("_stream_pending_silver_channels")
-    assert(!Files.isDirectory(pendingDir) ||
-      Files.list(pendingDir).toArray.isEmpty, "stale pending markers remain")
   }
 
   test("silverRefreshStream skips OPTIMIZE repacks: dataChange=false files are neither merged nor parked") {
@@ -840,15 +786,9 @@ class StreamsSpec extends SparkSpec {
         graft.pipeline.Fixtures.ts(s"$snap 10:00:00")), _ => Map(
         "channels_raw" -> Seq(channelPayload("UC_1", title, 100, 10))))
     (1 to 5).foreach(i => land(s"r$i", f"2025-06-${i}%02d", s"Chan v$i"))
-    Silver.refresh(lake, Some(Set("silver_channels")))
     val ckpt = Files.createTempDirectory("graft-nodata-ckpt").toString
-    def drain(): Unit = {
-      val q = Streams.silverRefreshStream(lake, "silver_channels")
-        .option("checkpointLocation", ckpt)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
-      q.awaitTermination(120000)
-    }
-    drain() // consume the initial committed files
+    def drain(): Unit = drainOnce(Streams.silverRefreshStream(lake, "silver_channels"), ckpt)
+    drain() // bootstrap from the initial committed files
     val rows0 = lake.table("silver", "silver_channels").collect().map(_.toString).sorted.toSeq
     val v0 = lake.tableVersion("silver", "silver_channels")
     // maintenance packs the 5 small ingest files into one new _a* dir — the
@@ -860,18 +800,66 @@ class StreamsSpec extends SparkSpec {
       "a repack-only catch-up run must not commit a silver merge at all")
     assert(lake.table("silver", "silver_channels")
       .collect().map(_.toString).sorted.toSeq == rows0)
-    // nothing parked: repacked files are skipped, not pended
-    val pendingDir = lake.tableDir("bronze", "channels_raw")
-      .resolve("_stream_pending_silver_channels")
-    assert(!Files.isDirectory(pendingDir) ||
-      Files.list(pendingDir).toArray.isEmpty, "repacked files were parked")
-    // the stream still works: a genuine append after the OPTIMIZE merges
+    // the stream still works: a genuine append after the OPTIMIZE folds
     land("r6", "2025-06-09", "Chan v6")
     drain()
-    assert(lake.table("silver", "silver_channels").collect().map(_.toString).sorted.toSeq
-      != rows0, "a real append after the OPTIMIZE must still merge")
+    val streamed = lake.table("silver", "silver_channels").collect().map(_.toString).sorted.toSeq
+    assert(streamed != rows0, "a real append after the OPTIMIZE must still fold")
     Silver.refresh(lake, Some(Set("silver_channels")))
-    assert(lake.table("silver", "silver_channels").count() == 1) // latest-wins grain
+    assert(lake.table("silver", "silver_channels")
+      .collect().map(_.toString).sorted.toSeq == streamed)
+  }
+
+  test("silver and gold streams compose: the streamed video mart equals Gold.refresh's mart") {
+    import java.nio.file.Files
+    import graft.pipeline.{Bronze, Gold, Lakehouse, Silver}
+    import graft.pipeline.Fixtures.{d, dim, met, report, videoItem, videosPayload}
+    val lake = new Lakehouse(spark, Files.createTempDirectory("graft-silvergold").toString)
+    val vidHeaders = Seq(dim("video"), dim("day"), met("views"), met("likes"),
+      met("comments"), met("estimatedMinutesWatched"), ("averageViewDuration", "METRIC", "FLOAT"))
+    def land(run: String, snap: String, channel: String, views: Long): Unit =
+      Bronze.ingest(lake, Bronze.RunContext(run, s"req-$run", d(snap),
+          graft.pipeline.Fixtures.ts(s"$snap 10:00:00")),
+        _ => Map(
+          "videos_raw" -> Seq(videosPayload(
+            videoItem("V1", channel, s"T$views", views),
+            videoItem("V2", "UC_1", "Stable", views))),
+          "analytics_video_daily_raw" -> Seq(report(vidHeaders, Seq(
+            Seq("V1", snap, views.toString, "1", "0", "3", "41.5"),
+            Seq("V2", snap, (views + 2).toString, "1", "0", "3", "40.0"),
+            Seq("V1", "2025-05-31", (views + 1).toString, "1", "0", "3", "42.0"))))))
+    val silverFacts = Files.createTempDirectory("graft-silvergold-f").toString
+    val silverVideos = Files.createTempDirectory("graft-silvergold-v").toString
+    val goldCkpt = Files.createTempDirectory("graft-silvergold-g").toString
+    def drainAll(): Unit = {
+      drainOnce(Streams.silverRefreshStream(lake, "fact_video_daily_metrics"), silverFacts)
+      drainOnce(Streams.silverRefreshStream(lake, "silver_videos"), silverVideos)
+      drainOnce(Gold.refreshStream(lake, "gold_video_daily_summary"), goldCkpt)
+    }
+    def rows(layer: String, t: String) =
+      lake.table(layer, t).collect().map(_.toString).sorted.toSeq
+    def check(label: String): Unit = {
+      Seq(Silver.factVideoDailyMetrics, Silver.silverVideoMetadataScd2, Silver.silverVideos)
+        .foreach { m =>
+          assert(rows("silver", m.name) == m.build(lake).collect().map(_.toString).sorted.toSeq,
+            s"${m.name} $label streamed != recompute")
+        }
+      assert(rows("gold", "gold_video_daily_summary") ==
+        Gold.videoDailySummary.build(lake).collect().map(_.toString).sorted.toSeq,
+        s"$label streamed mart != Gold.refresh's mart")
+    }
+    land("r1", "2025-06-01", "UC_1", 10)
+    drainAll()
+    check("bootstrap")
+    // new bronze lands while the streams are down: a re-reported date, a
+    // new date, and V1 moving channel (a lookup-side change for the mart)
+    land("r2", "2025-06-02", "UC_2", 20)
+    drainAll()
+    check("catch-up")
+    val v1 = lake.table("gold", "gold_video_daily_summary")
+      .filter(org.apache.spark.sql.functions.col("video_id") === "V1").collect()
+    assert(v1.length == 3 && v1.forall(_.getAs[String]("channel_id") == "UC_2"),
+      s"mart did not follow the new bronze: ${v1.toSeq}")
   }
 
   test("compactBatches folds only the contiguous prefix around a hole, and folds from the lowest id of an above-zero dir") {
@@ -1011,7 +999,7 @@ class StreamsSpec extends SparkSpec {
     assert(latest() == clean, "replay over an incomplete version diverged")
   }
 
-  test("goldRefreshStream: cursor-driven mart fold under churn and retraction " +
+  test("feedRefreshStream: cursor-driven mart fold under churn and retraction " +
       "equals the batch rebuild") {
     import java.nio.file.Files
     import graft.pipeline.{Gold, Lakehouse, Silver}
@@ -1029,16 +1017,10 @@ class StreamsSpec extends SparkSpec {
     val ckpt = Files.createTempDirectory("graft-goldstream-ckpt").toString
     // the stream is only the WAKE-UP: its rows are discarded and the tick
     // reads the change feed through the durable gold cursor — which is why
-    // DV retractions fold here while silverRefreshStream must gate on them
-    def drainStream(): Unit = {
-      val q = Streams.goldRefreshStream(lake, "mart", "fct",
-          () => Gold.starFeedTick(lake, "mart", Seq("k"), factDep, Seq.empty,
-            "sfact", build, goldCur))
-        .option("checkpointLocation", ckpt)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
-      q.awaitTermination(120000)
-      ()
-    }
+    // DV retractions fold here
+    def drainStream(): Unit = drainOnce(Streams.feedRefreshStream(lake, "mart", "fct",
+      () => Gold.starFeedTick(lake, "mart", Seq("k"), factDep, Seq.empty,
+        "sfact", build, goldCur)), ckpt)
     def expected = build(lake, lake.table("silver", "sfact"))
       .collect().map(_.toString).sorted.toSeq
     def actual = lake.table("gold", "mart").collect().map(_.toString).sorted.toSeq
@@ -1048,8 +1030,8 @@ class StreamsSpec extends SparkSpec {
     silverTick(); drainStream()
     assert(actual == expected, "bootstrap streamed mart != batch rebuild")
     // churn while the stream is down: a re-observation, a new key, then a
-    // DV RETRACTION of the re-observation (the case the silver file stream
-    // cannot express) — the catch-up drain must fold all three
+    // DV RETRACTION of the re-observation — the catch-up drain must fold
+    // all three
     lake.appendBronze("fct",
       Seq((1L, 11L, 2L), (3L, 30L, 1L)).toDF("k", "v", "seq").repartition(1))
     lake.deleteBronzeWhereDv("fct", col("k") === 1L && col("seq") === 2L, Nil)
@@ -1086,13 +1068,8 @@ class StreamsSpec extends SparkSpec {
         Job.feedCursorDir(lake, "fact_channel_daily_metrics")).isDefined) ()
     }
     val ckpt = Files.createTempDirectory("graft-goldstream2-ckpt").toString
-    def drainStream(): Unit = {
-      val q = Gold.refreshStream(lake, "gold_channel_daily_summary")
-        .option("checkpointLocation", ckpt)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
-      q.awaitTermination(120000)
-      ()
-    }
+    def drainStream(): Unit =
+      drainOnce(Gold.refreshStream(lake, "gold_channel_daily_summary"), ckpt)
     def expected = Gold.channelDailySummary.build(lake)
       .collect().map(_.toString).sorted.toSeq
     def actual = lake.table("gold", "gold_channel_daily_summary")
