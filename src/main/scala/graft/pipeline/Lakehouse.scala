@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import java.nio.file.{Files, Path, Paths}
 import java.util.Comparator
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
@@ -26,26 +26,22 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
   * `CREATE OR REFRESH MATERIALIZED VIEW` semantics — recompute is the
   * correctness baseline, incremental refresh an optimization on top).
   *
-  * Materialized tables carry a SINGLE-WRITER TRANSACTION LOG — the
-  * minimal slice of what Delta's `_delta_log` provides the reference:
-  * each refresh writes a fresh immutable `_v{N}` data directory, then
-  * commits by atomically renaming a `_VERSION` manifest (version number +
-  * live file list) over the previous one. Readers resolve the manifest
-  * first, so they observe either the old version or the new one — never
-  * a half-written directory — and a crash at ANY point of a refresh
-  * leaves the previous committed version live (the old
-  * delete-then-rename swap had a window where the table was briefly
-  * absent). The previously-committed data directory survives one more
-  * commit before GC, so in-flight readers of the just-replaced version
-  * finish their scan. Concurrency: full refreshes serialize via
-  * exclusive-create slot claims; incremental merges run read-set-checked
-  * OCC transactions ([[transactMerge]]) that retry on conflict instead
-  * of losing updates. Bronze appends/deletes go through their own
-  * file-granular log whose commit is put-if-absent creation of the
-  * versioned manifest itself (Delta's log-entry CAS): concurrent blind
-  * appends all land (losers re-commit their written files on the next
-  * version), deletes restart from the winner on a lost race, and
-  * unreferenced files are reclaimed by the explicit [[vacuumBronze]].
+  * ONE COMMIT PROTOCOL for every layer — the file log, the minimal slice
+  * of Delta's `_delta_log`: a write lands its files in a fresh immutable
+  * `_a{N}_{uid}` append directory, then commits by put-if-absent creation
+  * of the versioned `_files_v{N}` record (live file entries + per-file
+  * stats + the table schema). Readers resolve the newest record first, so
+  * they observe either the old version or the new one — never a
+  * half-written directory — and a crash at ANY point before the record
+  * link leaves the previous version live. Of any number of concurrent
+  * writers racing for version N exactly one wins: blind appends and full
+  * refreshes ([[materialize]]) re-commit their already-written files on
+  * the next version; read-modify-write commits ([[transactMerge]], DML
+  * deletes) restart from the winner. Bronze keeps every unreferenced file
+  * until the explicit [[vacuumBronze]]; a winning commit to any other
+  * layer deletes at once the committed append dirs that neither it nor
+  * its predecessor references, so a refreshed table holds two versions'
+  * bytes, no more.
   */
 final class Lakehouse(val spark: SparkSession, val root: String,
     schemaOverrides: Map[String, String] = Lakehouse.envSchemaOverrides(),
@@ -73,7 +69,9 @@ final class Lakehouse(val spark: SparkSession, val root: String,
   private def dir(layer: String, name: String): Path =
     Paths.get(root, physicalSchema(layer), name)
 
-  def exists(layer: String, name: String): Boolean = Files.exists(dir(layer, name))
+  /** Whether the table has a committed version (a log record) — a bare
+    * directory holding only crash debris does not count. */
+  def exists(layer: String, name: String): Boolean = bronzeVersions(dir(layer, name)).nonEmpty
 
   /** Table names under a layer (SHOW TABLES parity — every non-hidden
     * child directory of the layer's schema dir). */
@@ -89,50 +87,26 @@ final class Lakehouse(val spark: SparkSession, val root: String,
   }
 
   /** Number of LIVE data files backing a table — the OPTIMIZE trigger
-    * signal (file-count metadata only; no data is read). Log-managed
-    * bronze counts its manifest entries; versioned/plain tables count
-    * parquet files in the committed data dir. */
-  def liveFileCount(layer: String, name: String): Int = {
-    val base = dir(layer, name)
-    readFilesManifest(base) match {
-      case Some(snap) => snap.entries.size
-      case None =>
-        val d = currentDataDir(layer, name)
-        if (!Files.isDirectory(d)) 0
-        else listDir(d).count(_.getFileName.toString.endsWith(".parquet"))
-    }
-  }
+    * signal (the log's entry count; no data is read). 0 when the table
+    * has no committed version. */
+  def liveFileCount(layer: String, name: String): Int =
+    readFilesManifest(dir(layer, name)).fold(0)(_.entries.size)
 
-  private val ManifestName = "_VERSION"
-  private val versionDir = "_v(\\d+)".r
+  /** The committed snapshot of a table, or a fail-fast error naming it. */
+  private def headSnapshot(layer: String, name: String): BronzeSnapshot =
+    readFilesManifest(dir(layer, name)).getOrElse(throw noCommit(layer, name))
 
-  /** Committed version from the manifest; 0 = plain (pre-manifest) layout. */
-  private def currentVersion(base: Path): Int = {
-    val m = base.resolve(ManifestName)
-    if (!Files.exists(m)) 0
-    else new String(Files.readAllBytes(m), java.nio.charset.StandardCharsets.UTF_8)
-      .linesIterator.next().trim.toInt
-  }
+  private def noCommit(layer: String, name: String): IllegalArgumentException =
+    new IllegalArgumentException(
+      s"table $layer.$name has no committed version (no log record under ${dir(layer, name)})")
 
-  /** Directory holding the table's LIVE data files: the committed `_v{N}`
-    * when a manifest exists, the table dir itself for plain-layout tables
-    * (bronze, pre-upgrade materializations). */
-  def currentDataDir(layer: String, name: String): Path = {
-    val base = dir(layer, name)
-    val v = currentVersion(base)
-    if (v == 0) base else base.resolve(s"_v$v")
-  }
-
+  /** The table AS OF its newest version, read under the LOG's schema
+    * (older files yield null for later-added columns; renamed columns
+    * coalesce through their chain — see colMapOf). */
   def table(layer: String, name: String): DataFrame = {
     val base = dir(layer, name)
-    readFilesManifest(base) match {
-      case Some(snap) => // log-managed bronze: the LIVE file set, read under
-        // the LOG's schema (older files yield null for later-added columns;
-        // renamed columns coalesce through their chain — see colMapOf)
-        readEntriesWithDv(base, snap.schema, snap.entries, colMapOf(base))
-      case None =>
-        spark.read.parquet(currentDataDir(layer, name).toString)
-    }
+    val snap = headSnapshot(layer, name)
+    readEntriesWithDv(base, snap.schema, snap.entries, colMapOf(base))
   }
 
   /** Read a set of live entries applying DELETION VECTORS (merge-on-read —
@@ -200,41 +174,19 @@ final class Lakehouse(val spark: SparkSession, val root: String,
       sel)))
   }
 
-  /** Committed version number of a materialized table (0 = plain layout /
-    * never materialized under the manifest protocol). */
-  def tableVersion(layer: String, name: String): Int = currentVersion(dir(layer, name))
+  /** Newest committed version of a table (0 = no commit yet). */
+  def tableVersion(layer: String, name: String): Int =
+    bronzeVersions(dir(layer, name)).lastOption.getOrElse(0)
 
-  /** Versions still on disk, ascending. Retention is bounded: [[materialize]]
-    * GCs all but the committed version and its immediate predecessor, so
-    * this is at most two entries — enough for "what did the last refresh
-    * change" diffs without Delta's unbounded log. */
-  def tableVersions(layer: String, name: String): Seq[Int] = {
-    val base = dir(layer, name)
-    // log-managed bronze: the retention window is the history manifests the
-    // commit path keeps (committed + predecessor), whose files stay live
-    // until an explicit vacuum below that window
-    val bronzeVs = bronzeVersions(base)
-    if (bronzeVs.nonEmpty) return bronzeVs
-    val committed = currentVersion(base)
-    if (!Files.exists(base) || committed == 0) Seq.empty
-    else listDir(base).collect {
-      case p if {
-        val n = p.getFileName.toString
-        versionDir.pattern.matcher(n).matches() && {
-          val v = n.drop(2).toInt
-          // only the retention window counts as history: the committed
-          // version and its immediate predecessor. Anything else on disk
-          // (a claimed-then-crashed slot, an abandoned OCC loser) is
-          // debris awaiting GC, never time-travel-readable. _SUCCESS
-          // additionally excludes half-written directories.
-          (v == committed || v == committed - 1) &&
-            Files.exists(p.resolve("_SUCCESS"))
-        }
-      } => p.getFileName.toString.drop(2).toInt
-    }.sorted.toSeq
-  }
+  /** Versions whose log records are retained, ascending. Every commit
+    * keeps the records back to the newest checkpoint at-or-below its
+    * predecessor, so a table refreshed by full snapshots holds exactly the
+    * committed version and its predecessor — enough for "what did the
+    * last refresh change" diffs without Delta's unbounded log. */
+  def tableVersions(layer: String, name: String): Seq[Int] =
+    bronzeVersions(dir(layer, name))
 
-  /** `DESCRIBE HISTORY` parity for log-managed bronze: one row per
+  /** `DESCRIBE HISTORY` parity: one row per
     * RETAINED log record — (version, timestamp, operation, record kind,
     * files added/removed by that commit). The operation name is recorded
     * by the writer in the `#op` header (Delta's `commitInfo.operation`);
@@ -248,7 +200,7 @@ final class Lakehouse(val spark: SparkSession, val root: String,
     * materialize O(live files) entries, the very cost the header peek
     * exists to avoid. A version pruned by a concurrent commit between
     * the listing and the read is skipped, not an error. Empty DataFrame
-    * for tables that are not log-managed. */
+    * for a table with no committed version. */
   def history(layer: String, name: String): DataFrame = {
     import org.apache.spark.sql.Row
     import org.apache.spark.sql.types._
@@ -282,8 +234,7 @@ final class Lakehouse(val spark: SparkSession, val root: String,
     * from the log manifest and directory metadata alone — NEVER a data
     * scan (on a 100 TB table this is one log read). Fields mirror Delta's
     * where the concept exists:
-    *   - `format`: `bronze-log` (transaction-log managed), `materialized`
-    *     (versioned full-rewrite), or `plain` (bare parquet dir);
+    *   - `format`: `file-log`, the one table format;
     *   - `version` / `last_modified`: committed version and its commit
     *     (manifest file) time;
     *   - `num_files` / `size_bytes`: live file count and Σ `__size` stats
@@ -297,73 +248,31 @@ final class Lakehouse(val spark: SparkSession, val root: String,
     *     (what streaming readers skip);
     *   - `num_check_constraints`: active CHECK constraints
     *     ([[checkConstraints]] lists them).
-    * Non-log tables report what directory metadata offers (file count,
-    * bytes, mtime, and `num_rows` from parquet footer block metadata
-    * when the directory holds ≤ 256 files); their log-feature counters
-    * read a DEFINITIVE 0 — a versioned materialization has no vectors/
-    * constraints/mapping/identity/defaults/generated/txns by construction
-    * — and only `row_id_watermark` stays NULL (concept absent). */
+    * A table with no committed version fails fast, naming the table. */
   def describeDetail(layer: String, name: String): DataFrame = {
     import org.apache.spark.sql.Row
     import org.apache.spark.sql.types._
     val base = dir(layer, name)
-    val snap = readFilesManifest(base)
+    val s = headSnapshot(layer, name)
     def jl(v: Option[Long]): java.lang.Long = v.map(Long.box).orNull
-    val row = snap match {
-      case Some(s) =>
-        val v = s.version
-        val mtime = new java.sql.Timestamp(commitTimeMillis(base, v))
-        val sizes = s.entries.map(ManifestStats.sizeOf)
-        val dvs = s.entries.flatMap(ManifestStats.dvRef)
-        Row(layer, name, base.toString, "bronze-log", v: java.lang.Integer, mtime,
-          s.entries.size.toLong: java.lang.Long,
-          jl(if (sizes.forall(_.isDefined)) Some(sizes.flatten.sum) else None),
-          jl(rowCount(layer, name)),
-          dvs.size.toLong: java.lang.Long,
-          dvs.map(_._2).sum: java.lang.Long,
-          nodataDirs(layer, name).size.toLong: java.lang.Long,
-          constraintsOf(base).size.toLong: java.lang.Long,
-          liveChains(colMapOf(base)).size.toLong: java.lang.Long,
-          idcolsOf(base).size.toLong: java.lang.Long,
-          defaultsOf(base).size.toLong: java.lang.Long,
-          gencolsOf(base).size.toLong: java.lang.Long,
-          txnsOf(base).size.toLong: java.lang.Long,
-          jl(rowIdWmOf(base)))
-      case None =>
-        val committed = currentVersion(base)
-        val (fmt, dataDir) =
-          if (committed > 0) ("materialized", base.resolve(s"_v$committed"))
-          else ("plain", base)
-        val files =
-          if (Files.isDirectory(dataDir)) ManifestStats.listParquet(dataDir.toString)
-          else Seq.empty
-        val mtime =
-          if (Files.exists(dataDir))
-            new java.sql.Timestamp(Files.getLastModifiedTime(dataDir).toMillis)
-          else null
-        // num_rows from footer block metadata — O(files) header reads,
-        // bounded: a huge un-managed directory reports NULL instead of
-        // paying thousands of opens inside an interactive DESCRIBE
-        val rows: java.lang.Long =
-          if (files.isEmpty || files.size > 256) null
-          else {
-            val conf = spark.sessionState.newHadoopConf()
-            Long.box(files.map(f =>
-              ManifestStats.footerRowCount(dataDir.resolve(f).toString, conf)).sum)
-          }
-        // log-feature counters read 0, not NULL: a versioned
-        // materialization DEFINITIVELY has no vectors/constraints/
-        // mapping/identity/defaults/generated/txns (each full rewrite
-        // materializes plain rows) — NULL would claim "unknown". Only the
-        // row-id watermark stays NULL (the concept itself is absent).
-        val zero: java.lang.Long = Long.box(0L)
-        Row(layer, name, base.toString, fmt,
-          (if (committed > 0) Int.box(committed) else null): java.lang.Integer, mtime,
-          files.size.toLong: java.lang.Long,
-          files.map(f => dataDir.resolve(f).toFile.length).sum: java.lang.Long,
-          rows, zero, zero, zero, zero, zero, zero, zero, zero, zero,
-          null: java.lang.Long)
-    }
+    val v = s.version
+    val mtime = new java.sql.Timestamp(commitTimeMillis(base, v))
+    val sizes = s.entries.map(ManifestStats.sizeOf)
+    val dvs = s.entries.flatMap(ManifestStats.dvRef)
+    val row = Row(layer, name, base.toString, "file-log", v: java.lang.Integer, mtime,
+      s.entries.size.toLong: java.lang.Long,
+      jl(if (sizes.forall(_.isDefined)) Some(sizes.flatten.sum) else None),
+      jl(rowCount(layer, name)),
+      dvs.size.toLong: java.lang.Long,
+      dvs.map(_._2).sum: java.lang.Long,
+      nodataDirs(layer, name).size.toLong: java.lang.Long,
+      constraintsOf(base).size.toLong: java.lang.Long,
+      liveChains(colMapOf(base)).size.toLong: java.lang.Long,
+      idcolsOf(base).size.toLong: java.lang.Long,
+      defaultsOf(base).size.toLong: java.lang.Long,
+      gencolsOf(base).size.toLong: java.lang.Long,
+      txnsOf(base).size.toLong: java.lang.Long,
+      jl(rowIdWmOf(base)))
     val schema = StructType(Seq(
       StructField("layer", StringType, nullable = false),
       StructField("name", StringType, nullable = false),
@@ -396,27 +305,24 @@ final class Lakehouse(val spark: SparkSession, val root: String,
     require(avail.contains(version),
       s"version $version of $layer.$name is not on disk (available: ${avail.mkString(",")})")
     val base = dir(layer, name)
-    resolveSnapshot(base, version) match {
-      case Some(snap) => // log-managed bronze: that version's files AND schema
-        // the checkpoint chain can retain MORE versions than vacuumBronze's
-        // keepVersions protects data files for — fail fast with the remedy
-        // instead of an opaque FileNotFoundException mid-scan. Deletion
-        // vectors are part of a version's read set, so a vacuumed vector
-        // fails the same way (not as a resurrected-row silent wrong read)
-        val missing = (snap.entries.map(_.relPath) ++ dvRefPairs(snap.entries).map(_._2))
-          .filterNot(r => Files.exists(base.resolve(r)))
-        require(missing.isEmpty,
-          s"version $version of $layer.$name references ${missing.size} vacuumed file(s) " +
-            s"(e.g. ${missing.head}); keep vacuumBronze keepVersions >= " +
-            s"bronzeCheckpointInterval ($bronzeCheckpointInterval) — or rely on its " +
-            "wall-clock floor (retainMillis, default 168h: versions committed inside " +
-            "the window keep their files) — for full time travel")
-        // that version's OWN column mapping: AS-OF reads see the names the
-        // version had, including pre-rename ones
-        readEntriesWithDv(base, snap.schema, snap.entries, colMapAsOf(base, version))
-      case None =>
-        spark.read.parquet(base.resolve(s"_v$version").toString)
-    }
+    val snap = resolveSnapshot(base, version).getOrElse(throw new IllegalStateException(
+      s"version $version of $layer.$name did not resolve — log chain broken"))
+    // the checkpoint chain can retain MORE versions than vacuumBronze's
+    // keepVersions protects data files for — fail fast with the remedy
+    // instead of an opaque FileNotFoundException mid-scan. Deletion
+    // vectors are part of a version's read set, so a vacuumed vector
+    // fails the same way (not as a resurrected-row silent wrong read)
+    val missing = (snap.entries.map(_.relPath) ++ dvRefPairs(snap.entries).map(_._2))
+      .filterNot(r => Files.exists(base.resolve(r)))
+    require(missing.isEmpty,
+      s"version $version of $layer.$name references ${missing.size} vacuumed file(s) " +
+        s"(e.g. ${missing.head}); keep vacuumBronze keepVersions >= " +
+        s"bronzeCheckpointInterval ($bronzeCheckpointInterval) — or rely on its " +
+        "wall-clock floor (retainMillis, default 168h: versions committed inside " +
+        "the window keep their files) — for full time travel")
+    // that version's OWN column mapping: AS-OF reads see the names the
+    // version had, including pre-rename ones
+    readEntriesWithDv(base, snap.schema, snap.entries, colMapAsOf(base, version))
   }
 
   /** Resolve a wall-clock instant to a committed version — Delta's
@@ -435,10 +341,7 @@ final class Lakehouse(val spark: SparkSession, val root: String,
     * never a data scan. */
   def versionAtTimestamp(layer: String, name: String, ts: java.sql.Timestamp): Int = {
     val base = dir(layer, name)
-    val stamped = tableVersions(layer, name).map { v =>
-      if (Files.exists(base.resolve(s"_files_v$v"))) v -> commitTimeMillis(base, v)
-      else v -> Files.getLastModifiedTime(base.resolve(s"_v$v")).toMillis
-    }
+    val stamped = tableVersions(layer, name).map(v => v -> commitTimeMillis(base, v))
     require(stamped.nonEmpty, s"$layer.$name has no committed versions")
     val t = ts.getTime
     val (v0, t0) = stamped.head
@@ -668,11 +571,8 @@ final class Lakehouse(val spark: SparkSession, val root: String,
     math.min(head.toLong, from.toLong + maxVersions).toInt
   }
 
-  /** The newest committed version of a log-managed bronze table (0 = no
-    * commit yet) — the log's own version counter, distinct from
-    * [[tableVersion]]'s materialized-table counter. */
-  def committedBronzeVersion(name: String): Int =
-    bronzeVersions(dir("bronze", name)).lastOption.getOrElse(0)
+  /** The newest committed version of a bronze table (0 = no commit yet). */
+  def committedBronzeVersion(name: String): Int = tableVersion("bronze", name)
 
   /** Frontiers of REGISTERED change-feed cursors on a bronze table: the
     * `cursor\t<table>\t<dir>` markers under `<root>/_stream_state`
@@ -680,9 +580,10 @@ final class Lakehouse(val spark: SparkSession, val root: String,
     * registry the maintenance pass auto-discovers gates from). Markers
     * whose cursor dir vanished are ignored — a deleted consumer holds
     * nothing. */
-  private def registeredCursorFrontiers(name: String): Seq[Int] = {
+  private def registeredCursorFrontiers(base: Path): Seq[Int] = {
     val dirP = java.nio.file.Paths.get(root, "_stream_state")
-    if (!Files.isDirectory(dirP)) return Seq.empty
+    if (!isBronze(base) || !Files.isDirectory(dirP)) return Seq.empty
+    val name = base.getFileName.toString
     val s = Files.list(dirP)
     val lines = try {
       import scala.jdk.CollectionConverters._
@@ -731,13 +632,12 @@ final class Lakehouse(val spark: SparkSession, val root: String,
     } finally s.close()
   }
 
-  // ───── bronze transaction log ─────────────────────────────────────────
+  // ───── transaction log (every layer) ──────────────────────────────────
   //
-  // Bronze tables are APPEND+DELETE workloads, so their log tracks live
-  // FILES across immutable `_a{N}_{uid}` append directories instead of
-  // whole version directories: an append commits O(new files), a
-  // predicate delete rewrites only the files that contain matching rows
-  // (Delta's copy-on-write `add`/`remove` shape). The COMMIT is
+  // The log tracks live FILES across immutable `_a{N}_{uid}` append
+  // directories: a full refresh commits one new dir, an append commits
+  // O(new files), a predicate delete rewrites only the files that contain
+  // matching rows (Delta's copy-on-write `add`/`remove` shape). The COMMIT is
   // put-if-absent creation of the `_files_v{N}` manifest itself — a
   // fully-written tmp hard-LINKED into place (`Files.createLink` is
   // atomic and fails if the name exists), which is exactly Delta's
@@ -752,11 +652,12 @@ final class Lakehouse(val spark: SparkSession, val root: String,
   // for file-level data skipping; `snapshot_date` lives as a DATA column
   // (stats replace hive directory partitioning, the
   // Delta-without-partitioning layout), so pruning by snapshot range goes
-  // through [[tableWhere]]. Unreferenced data files are reclaimed by the
-  // EXPLICIT [[vacuumBronze]] (Delta VACUUM semantics: run it quiesced or
-  // with enough retained versions — inline cleanup could delete a racing
-  // writer's in-flight files); commits only prune history manifests below
-  // the retention window, which is always safe.
+  // through [[tableWhere]]. Unreferenced bronze data files are reclaimed
+  // by the EXPLICIT [[vacuumBronze]] (Delta VACUUM semantics: run it
+  // quiesced or with enough retained versions); commits prune history
+  // manifests below the retention window, which is always safe, and a
+  // non-bronze commit also drops the committed dirs no retained version
+  // references ([[dropUnreferencedDirs]] — never an in-flight writer's).
   //
   // COMMIT SCALING (Delta's log-entry + checkpoint design): a routine
   // commit writes a DELTA record — only the file entries it adds and the
@@ -812,6 +713,33 @@ final class Lakehouse(val spark: SparkSession, val root: String,
   private val DefaultsLine = "#defaults\t(.*)".r
   private val RowIdWmLine = "#rowidwm\t(-?\\d+)".r
   private val MergeKeysLine = "#mkeys\t(.*)".r
+
+  /** The `#schema` line's text: Spark DDL when it round-trips exactly
+    * (about a quarter of the JSON's bytes, and the line rides every
+    * retained record of every table), compact JSON otherwise — both are
+    * single-line and tab-free. */
+  private def schemaText(st: org.apache.spark.sql.types.StructType): String = {
+    val ddl = st.toDDL
+    val exact = ddl.nonEmpty && !ddl.exists(c => c == '\n' || c == '\t') &&
+      scala.util.Try(parseSchema(ddl)).toOption.contains(st)
+    if (exact) ddl else st.json
+  }
+
+  /** Parsed `#schema` texts: one parse per distinct schema, not one per
+    * header peek. URL-encoded JSON ('%' first) is the encoding earlier
+    * records carry; bronze logs written with it stay readable. */
+  private val parsedSchemas =
+    scala.collection.concurrent.TrieMap.empty[String, org.apache.spark.sql.types.StructType]
+
+  private def parseSchema(text: String): org.apache.spark.sql.types.StructType =
+    parsedSchemas.getOrElseUpdate(text, text.head match {
+      case '{' => org.apache.spark.sql.types.DataType.fromJson(text)
+        .asInstanceOf[org.apache.spark.sql.types.StructType]
+      case '%' => org.apache.spark.sql.types.DataType.fromJson(
+          java.net.URLDecoder.decode(text, java.nio.charset.StandardCharsets.UTF_8))
+        .asInstanceOf[org.apache.spark.sql.types.StructType]
+      case _ => org.apache.spark.sql.types.StructType.fromDDL(text)
+    })
 
   /** Header-only peek at a log record — version, delta/checkpoint kind, and
     * the parquet-twin reference — WITHOUT parsing the entry lines. The
@@ -944,10 +872,7 @@ final class Lakehouse(val spark: SparkSession, val root: String,
             case MergeKeysLine(enc) => mergeKeys = Some(
               enc.split(',').toSeq.filter(_.nonEmpty)
                 .map(java.net.URLDecoder.decode(_, java.nio.charset.StandardCharsets.UTF_8)))
-            case SchemaLine(enc) => schema = Some(
-              org.apache.spark.sql.types.DataType.fromJson(
-                java.net.URLDecoder.decode(enc, java.nio.charset.StandardCharsets.UTF_8))
-                .asInstanceOf[org.apache.spark.sql.types.StructType])
+            case SchemaLine(text) => schema = Some(parseSchema(text))
             case _ =>
           }
           line = in.readLine()
@@ -1041,11 +966,7 @@ final class Lakehouse(val spark: SparkSession, val root: String,
             enc.split(',').toSeq.filter(_.nonEmpty))
         case _ =>
       }
-      val schema = lines.tail.collectFirst { case SchemaLine(enc) =>
-        org.apache.spark.sql.types.DataType.fromJson(
-          java.net.URLDecoder.decode(enc, java.nio.charset.StandardCharsets.UTF_8))
-          .asInstanceOf[org.apache.spark.sql.types.StructType]
-      }
+      val schema = lines.tail.collectFirst { case SchemaLine(text) => parseSchema(text) }
       val removes = lines.tail.collect { case RemoveLine(enc) =>
         java.net.URLDecoder.decode(enc, java.nio.charset.StandardCharsets.UTF_8) }
       Some(LogRecord(lines.head.trim.toInt, lines.tail.contains("#delta"), schema,
@@ -1267,7 +1188,7 @@ final class Lakehouse(val spark: SparkSession, val root: String,
       case None => System.currentTimeMillis()
     }))
     val schemaLine = (("#op\t" + enc(op)) +:
-      schema.toSeq.map(st => "#schema\t" + enc(st.json))) ++
+      schema.toSeq.map(st => "#schema\t" + schemaText(st))) ++
       constraintsLine ++ colMapLine ++ txnLine ++ genLine ++ idLine ++
       defaultsLine ++ rowWmLine ++ mkeysLine ++ featuresLine ++ ctsLine
     val delta = prev.map { p =>
@@ -1350,7 +1271,7 @@ final class Lakehouse(val spark: SparkSession, val root: String,
       def newestCkptAtOrBelow(cap: Int): Option[Int] =
         bronzeVersions(base).filter(v => v <= cap &&
           readRecord(base.resolve(s"_files_v$v")).exists(!_.isDelta)).maxOption
-      val cursorMin = registeredCursorFrontiers(base.getFileName.toString).minOption
+      val cursorMin = registeredCursorFrontiers(base).minOption
       val floor = cursorMin match {
         case Some(c) if c < version - 1 =>
           newestCkptAtOrBelow(math.max(c, 1)).getOrElse(Int.MinValue)
@@ -1363,12 +1284,40 @@ final class Lakehouse(val spark: SparkSession, val root: String,
           .foreach(d => deleteRecursively(base.resolve(d)))
         Files.deleteIfExists(rec)
       }
+      if (!isBronze(base)) dropUnreferencedDirs(base, version)
     } else {
       // CAS loser: our never-referenced twin is debris — remove it now
       ckptDirName.foreach(d => deleteRecursively(base.resolve(d)))
     }
     won
   }
+
+  /** Whether `base` is a bronze table dir: the layer whose unreferenced
+    * files wait for the explicit [[vacuumBronze]] and whose change feed
+    * registered cursors read. */
+  private def isBronze(base: Path): Boolean =
+    base.getParent == Paths.get(root, physicalSchema("bronze"))
+
+  /** Retention outside bronze, run by a commit of `version` that WON:
+    * delete every committed append dir (`#dirs`, see
+    * [[committedDirNames]]) that no retained record references —
+    * retained is this version, its predecessor and any later commit. The
+    * candidates are read BEFORE the retained set, so a commit landing in
+    * between only adds protection; a concurrent writer's staged dir is in
+    * no `#dirs` line until it commits, so it is never touched. Crash
+    * debris is in no `#dirs` line either: it waits for [[vacuum]]. */
+  private def dropUnreferencedDirs(base: Path, version: Int): Unit =
+    try {
+      val candidates = committedDirNames(base)
+      val referenced = bronzeVersions(base).filter(_ >= version - 1)
+        .flatMap(v => resolveSnapshot(base, v).toSeq)
+        .flatMap(_.entries.map(_.relPath.takeWhile(_ != '/'))).toSet
+      (candidates -- referenced).foreach(d => deleteRecursively(base.resolve(d)))
+    } catch {
+      // a record pruned under us by a later commit: that commit's own
+      // pass owns the retention now, and skipping only leaves bytes
+      case _: java.nio.file.NoSuchFileException | _: IllegalStateException =>
+    }
 
   /** A fresh, collision-free append directory for a write targeting
     * `version` (the version tag is cosmetic/debugging — uniqueness comes
@@ -1381,7 +1330,7 @@ final class Lakehouse(val spark: SparkSession, val root: String,
     * UNION of two floors, so either alone protects a version's files:
     *
     *   - `keepVersions` newest versions (default: committed + predecessor,
-    *     the [[materialize]] retention window), and
+    *     the window a non-bronze commit keeps), and
     *   - every version COMMITTED within `retainMillis` of `now` — the
     *     Delta `VACUUM ... RETAIN n HOURS` wall-clock contract (default
     *     168 h, Delta's default). This is the floor that makes the
@@ -1411,7 +1360,16 @@ final class Lakehouse(val spark: SparkSession, val root: String,
   def vacuumBronze(name: String, keepVersions: Int = 2,
       retainMillis: Long = Lakehouse.DefaultVacuumRetainMillis,
       now: Long = System.currentTimeMillis()): Int =
-    vacuumCore(name, keepVersions, retainMillis, now, dryRun = false)._1
+    vacuum("bronze", name, keepVersions, retainMillis, now)
+
+  /** [[vacuumBronze]] for a table of any layer. Outside bronze a winning
+    * commit already drops the dirs older versions referenced, so what is
+    * left to reclaim is crash debris: staged dirs whose commit never
+    * landed. */
+  def vacuum(layer: String, name: String, keepVersions: Int = 2,
+      retainMillis: Long = Lakehouse.DefaultVacuumRetainMillis,
+      now: Long = System.currentTimeMillis()): Int =
+    vacuumCore(layer, name, keepVersions, retainMillis, now, dryRun = false)._1
 
   /** `VACUUM ... DRY RUN` parity: the table-relative paths a real vacuum
     * with the same parameters WOULD delete — computed with the identical
@@ -1420,12 +1378,12 @@ final class Lakehouse(val spark: SparkSession, val root: String,
   def vacuumBronzeDryRun(name: String, keepVersions: Int = 2,
       retainMillis: Long = Lakehouse.DefaultVacuumRetainMillis,
       now: Long = System.currentTimeMillis()): Seq[String] =
-    vacuumCore(name, keepVersions, retainMillis, now, dryRun = true)._2
+    vacuumCore("bronze", name, keepVersions, retainMillis, now, dryRun = true)._2
 
-  private def vacuumCore(name: String, keepVersions: Int,
+  private def vacuumCore(layer: String, name: String, keepVersions: Int,
       retainMillis: Long, now: Long, dryRun: Boolean): (Int, Seq[String]) = {
     require(retainMillis >= 0, s"retainMillis must be >= 0, got $retainMillis")
-    val base = dir("bronze", name)
+    val base = dir(layer, name)
     if (!Files.exists(base)) return (0, Seq.empty)
     val would = Seq.newBuilder[String]
     var floorRetained = 0 // unreferenced files kept ONLY by the wall-clock floor
@@ -1442,12 +1400,12 @@ final class Lakehouse(val spark: SparkSession, val root: String,
     // full re-sync (at 100 TB, the failure mode worth a guard). A consumer
     // that is gone (dir deleted) holds nothing; an abandoned-but-present
     // cursor is the operator's to delete.
-    val cursorFrontier = registeredCursorFrontiers(name).minOption
+    val cursorFrontier = registeredCursorFrontiers(base).minOption
     val cursorHeld = cursorFrontier.toSeq.flatMap(c => allVersions.filter(_ >= c))
     val cursorExtra =
       cursorHeld.toSet -- allVersions.takeRight(math.max(1, keepVersions)) -- youngEnough
     if (cursorExtra.nonEmpty && !dryRun)
-      System.err.println(s"[vacuum] bronze.$name: ${cursorExtra.size} version(s) " +
+      System.err.println(s"[vacuum] $layer.$name: ${cursorExtra.size} version(s) " +
         s"retained beyond the keepVersions/wall-clock floors for a registered " +
         s"change-feed cursor (slowest frontier ${cursorFrontier.get})")
     val retained =
@@ -1529,40 +1487,10 @@ final class Lakehouse(val spark: SparkSession, val root: String,
       }
     }
     if (floorRetained > 0 && !dryRun)
-      System.err.println(f"[vacuum] bronze.$name retained $floorRetained " +
+      System.err.println(f"[vacuum] $layer.$name retained $floorRetained " +
         f"unreferenced file(s) younger than the ${retainMillis / 3600000.0}%.1f h " +
         "wall-clock window (pass retainMillis=0 to reclaim immediately)")
     (floorRetained, would.result().sorted)
-  }
-
-  /** One-time migration of a pre-log bronze directory (hive-partitioned
-    * parquet, or the old empty-table single file) into the file-log
-    * protocol: rewrite the rows (snapshot_date becomes a data column)
-    * into an append dir and commit them as version 1. */
-  private def upgradeLegacyBronze(base: Path, statsCols: Seq[String]): Unit = {
-    if (readFilesManifest(base).nonEmpty || !Files.exists(base)) return
-    val legacy = listDir(base).filter { p =>
-      val n = p.getFileName.toString
-      !n.startsWith("_") && !n.startsWith(".")
-    }
-    if (legacy.isEmpty) return
-    val df = spark.read.parquet(base.toString)
-    // project partition columns back into the data files, original order
-    val ordered = graft.pipeline.Schemas.bronzeEnvelope.fieldNames.toSeq
-    val cols = if (df.columns.toSet == ordered.toSet) ordered else df.columns.toSeq
-    val dataDir = newAppendDir(base, 1)
-    df.select(cols.map(org.apache.spark.sql.functions.col): _*)
-      .write.mode(SaveMode.Overwrite).parquet(dataDir.toString)
-    val won = commitFilesManifest(base, 1, Some(df.select(
-        cols.map(org.apache.spark.sql.functions.col): _*).schema),
-      ManifestStats.collectStats(spark, dataDir.toString, statsCols,
-        dataDir.getFileName.toString), op = "UPGRADE")
-    // Only the CAS winner may delete the legacy files: a racing upgrader
-    // that lost may still be scanning them for its own (now abandoned)
-    // rewrite — deleting under it would fail that writer's append with
-    // FileNotFoundException. On a loss the winner's manifest is
-    // authoritative and our orphan append dir is vacuum debris.
-    if (won) legacy.foreach(deleteRecursively)
   }
 
   /** Append rows (bronze ingest) as a logged transaction: new files land
@@ -1588,7 +1516,6 @@ final class Lakehouse(val spark: SparkSession, val root: String,
       txn: Option[(String, Long)] = None): Boolean = {
     val base = dir("bronze", name)
     Files.createDirectories(base)
-    upgradeLegacyBronze(base, statsCols)
     // idempotent-writer fast path (Delta txnAppId/txnVersion): a replay of
     // an already-applied transaction skips BEFORE staging any files. The
     // authoritative check re-runs inside the commit CAS loop — this one
@@ -2067,9 +1994,6 @@ final class Lakehouse(val spark: SparkSession, val root: String,
     require(step != 0, "identity step must be non-zero")
     val base = dir("bronze", name)
     Files.createDirectories(base)
-    // a legacy (pre-log) bronze dir upgrades FIRST — committing an empty v1
-    // over unmanaged parquet would silently shadow its rows forever
-    upgradeLegacyBronze(base, Lakehouse.BronzeStatsCols)
     require(!idcolsOf(base).exists(_.col == colName),
       s"column $colName of bronze.$name is already an identity column")
     require(!gencolsOf(base).exists(_._1 == colName),
@@ -2872,7 +2796,6 @@ final class Lakehouse(val spark: SparkSession, val root: String,
     import org.apache.spark.sql.functions.input_file_name
     val base = dir("bronze", name)
     if (!Files.exists(base)) return
-    upgradeLegacyBronze(base, Lakehouse.BronzeStatsCols)
     var attempt = 0
     while (attempt < maxAttempts) {
       attempt += 1
@@ -2968,7 +2891,6 @@ final class Lakehouse(val spark: SparkSession, val root: String,
     import org.apache.spark.sql.graft.ColumnShim
     val base = dir("bronze", name)
     if (!Files.exists(base)) return
-    upgradeLegacyBronze(base, Lakehouse.BronzeStatsCols)
     var attempt = 0
     while (attempt < maxAttempts) {
       attempt += 1
@@ -3098,7 +3020,6 @@ final class Lakehouse(val spark: SparkSession, val root: String,
       s"merge source lacks key column $k"))
     val base = dir("bronze", name)
     Files.createDirectories(base)
-    upgradeLegacyBronze(base, Lakehouse.BronzeStatsCols)
     // idempotent-writer fast path (see [[appendBronze]]): a foreachBatch
     // upserter passing (queryId, batchId) as its txn replays micro-batches
     // safely after a sink crash — the authoritative re-check rides the
@@ -3384,8 +3305,7 @@ final class Lakehouse(val spark: SparkSession, val root: String,
     require(src != dst, "cannot clone a table onto itself")
     val sbase = dir("bronze", src)
     val dbase = dir("bronze", dst)
-    require(readFilesManifest(dbase).isEmpty && currentVersion(dbase) == 0,
-      s"bronze.$dst already exists")
+    require(!exists("bronze", dst), s"bronze.$dst already exists")
     val snap = version match {
       case Some(v) =>
         require(bronzeVersions(sbase).contains(v),
@@ -3513,12 +3433,10 @@ final class Lakehouse(val spark: SparkSession, val root: String,
 
   /** Live data files of a table after FILE-LEVEL DATA SKIPPING: entries
     * whose recorded min/max ranges cannot satisfy `preds` are pruned
-    * before Spark ever lists them. Works for both manifest species —
-    * bronze `_files_v{N}` logs and materialized `_VERSION` manifests (whose
-    * lines carry stats when the refresh recorded them). Plain-layout
-    * tables return their directory (no stats → no skipping). Large bronze
-    * logs resolve DISTRIBUTED through the checkpoint parquet twin
-    * ([[resolvePrunedDistributed]]); smaller ones in driver memory. */
+    * before Spark ever lists them (a file without stats for a column is
+    * never skipped on it). Large logs resolve DISTRIBUTED through the
+    * checkpoint parquet twin ([[resolvePrunedDistributed]]); smaller ones
+    * in driver memory. */
   def prunedFilePaths(layer: String, name: String,
       preds: Seq[ManifestStats.StatPred]): Seq[String] =
     prunedFilePathsMetered(layer, name, preds)._1.map(_._1)
@@ -3530,24 +3448,11 @@ final class Lakehouse(val spark: SparkSession, val root: String,
   private[pipeline] def prunedFilePathsMetered(layer: String, name: String,
       preds: Seq[ManifestStats.StatPred]): (Seq[(String, Option[String])], Int) = {
     val base = dir(layer, name)
-    bronzeVersions(base).lastOption match {
-      case Some(v) => prunedAtVersionMetered(base, v, preds)
-      case None =>
-        val dd = currentDataDir(layer, name)
-        // `_VERSION` manifests are always full snapshots (materialized
-        // tables rewrite whole versions — no delta records to resolve;
-        // the materialized layout never carries deletion vectors)
-        readRecord(base.resolve(ManifestName)) match {
-          case Some(rec) if rec.adds.nonEmpty =>
-            (rec.adds.filter(e => ManifestStats.mightMatch(e, preds))
-              .map(e => (dd.resolve(e.relPath).toString, Option.empty[String])),
-              rec.adds.size)
-          case _ => (Seq((dd.toString, Option.empty[String])), 0)
-        }
-    }
+    val v = bronzeVersions(base).lastOption.getOrElse(throw noCommit(layer, name))
+    prunedAtVersionMetered(base, v, preds)
   }
 
-  /** Stats-pruned file paths AS OF any retained bronze version: the twin
+  /** Stats-pruned file paths AS OF any retained version: the twin
     * read ([[resolvePrunedDistributed]]) works at every version, not just
     * the latest — the walk to the nearest checkpoint starts wherever the
     * caller points it — so an AS-OF probe holds O(matching + delta tail)
@@ -3589,10 +3494,6 @@ final class Lakehouse(val spark: SparkSession, val root: String,
     require(avail.contains(version),
       s"version $version of $layer.$name is not on disk (available: ${avail.mkString(",")})")
     val base = dir(layer, name)
-    if (bronzeVersions(base).isEmpty)
-      // materialized `_v{N}` layout: whole-version dirs carry no per-file
-      // stats — the AS-OF read is the version dir, no skipping to apply
-      return (spark.read.parquet(base.resolve(s"_v$version").toString), 0)
     val (paths, held) = prunedAtVersionMetered(base, version, preds)
     val missing = (paths.map(_._1) ++ paths.flatMap(_._2.map(r => base.resolve(r).toString)))
       .filterNot(p => Files.exists(Paths.get(p)))
@@ -3633,7 +3534,7 @@ final class Lakehouse(val spark: SparkSession, val root: String,
     // schema via header peeks — resolving the full snapshot here (even on
     // the no-match path) would re-materialize the very O(live-files) entry
     // list the distributed prune exists to avoid
-    val light = if (bronzeVersions(base).nonEmpty) logSchemaLight(base) else None
+    val light = logSchemaLight(base)
     if (pruned.isEmpty) {
       val schema = light.getOrElse(table(layer, name).schema)
       return spark.createDataFrame(
@@ -3643,8 +3544,7 @@ final class Lakehouse(val spark: SparkSession, val root: String,
   }
 
   /** Path a STREAMING source should monitor for this table: the `_a*`
-    * append-dir glob for log-managed bronze (appends land as new matched
-    * dirs), the live data dir otherwise.
+    * append-dir glob (appends land as new matched dirs).
     *
     * VISIBILITY CAVEAT: append dirs are written BEFORE the manifest CAS,
     * so a raw file stream over this glob sees at-least-once, possibly
@@ -3658,138 +3558,54 @@ final class Lakehouse(val spark: SparkSession, val root: String,
     * ([[graft.streaming.Streams.feedRefreshStream]]) use the glob only as
     * a wake-up signal and read committed changes from the log, so neither
     * caveat applies to them. */
-  def streamSourcePath(layer: String, name: String): String = {
-    val base = dir(layer, name)
-    if (readFilesManifest(base).nonEmpty) s"$base/_a*"
-    else currentDataDir(layer, name).toString
-  }
+  def streamSourcePath(layer: String, name: String): String = s"${dir(layer, name)}/_a*"
 
-  private val commitMarker = "_commit_v(\\d+)".r
-
-  /** Materialize one silver/gold model (MV refresh = full recompute).
+  /** Materialize one silver/gold model (MV refresh = full recompute):
+    * `df` lands in a fresh append dir, its footer stats (`__size`,
+    * `__rows`, plus min/max of `statsCols` for [[tableWhere]]) are read on
+    * the driver, and ONE full-snapshot record commits it under `df`'s
+    * schema — an overwrite replaces the schema, it never merges it. The
+    * standing version stays live throughout, so a refresh can read its
+    * own table.
     *
-    * Commit protocol (versioned ACID with slot-claim OCC): (1) CLAIM the
-    * next version slot by exclusively creating a `_commit_v{N}` marker —
-    * `Files.createFile` is atomic on POSIX, so of two concurrent writers
-    * exactly one owns a slot and the other retries on the following
-    * number (Delta's optimistic log-entry race, reduced to the
-    * filesystem); (2) execute the plan into the claimed immutable
-    * `_v{N}` directory — the previous version stays live throughout, so
-    * a refresh can read its own table; (3) atomically rename the
-    * `_VERSION` manifest (version + file list) into place — THE commit
-    * point for readers; (4) GC versions older than the immediately-
-    * previous one, plus pre-manifest legacy files and stale markers. A
-    * crash before (3) leaves the old version committed; after (3) the
-    * new one. Readers never see a partial or absent table.
-    *
-    * Concurrency contract: concurrent FULL refreshes of one table
-    * serialize cleanly (each claims its own version; last committed
-    * manifest wins — the correct semantics for recompute-from-upstream
-    * MVs, Delta's blind-overwrite equivalence). Concurrent INCREMENTAL
-    * merges must NOT use this entry point (a merge's read of the
-    * standing table is not conflict-checked here) — they go through
-    * [[transactMerge]], whose exact-successor slot claim turns the
-    * read-write race into a detected conflict + retry. */
+    * Concurrency contract: a lost CAS re-commits the same files on the
+    * next version — concurrent full refreshes are blind overwrites (the
+    * last commit wins, the correct semantics for recompute-from-upstream
+    * MVs and Delta's blind-overwrite equivalence). Read-modify-write
+    * refreshes must NOT use this entry point; [[transactMerge]] turns
+    * their read-write race into a detected conflict + retry. */
   def materialize(layer: String, name: String, df: DataFrame,
       statsCols: Seq[String] = Nil): Unit = {
     val base = dir(layer, name)
+    val entries = stageSnapshot(base, df, statsCols)._2
+    var attempts = 1
+    while (!commitFilesManifest(base, tableVersion(layer, name) + 1, Some(df.schema), entries)) {
+      require(attempts < 1000, s"materialize of $layer.$name lost 1000 consecutive CAS races")
+      attempts += 1
+    }
+  }
+
+  /** Write `df` into a fresh append dir and collect its file entries;
+    * nothing is committed here. */
+  private def stageSnapshot(base: Path, df: DataFrame,
+      statsCols: Seq[String]): (Path, Seq[ManifestStats.FileEntry]) = {
     Files.createDirectories(base)
-    // claim a version slot (OCC): first free number at-or-above current+1
-    var next = currentVersion(base) + 1
-    var claimed = false
-    var attempts = 0
-    while (!claimed) {
-      try {
-        Files.createFile(base.resolve(s"_commit_v$next"))
-        claimed = true
-      } catch {
-        case _: java.nio.file.FileAlreadyExistsException =>
-          attempts += 1
-          require(attempts < 1000, s"could not claim a commit slot for $layer.$name")
-          next += 1 // another writer (or a crashed attempt) owns that slot
-      }
-    }
-    writeVersion(base, next, df, statsCols)
-    publishIfMonotonic(base, next)
-    gcVersions(base)
-  }
-
-  /** Write the immutable `_v{next}` data directory and its manifest tmp
-    * (per-file min/max stats recorded for `statsCols` — the data-skipping
-    * read path of [[tableWhere]]). No commit happens here — the previous
-    * version stays live. */
-  private def writeVersion(base: Path, next: Int, df: DataFrame,
-      statsCols: Seq[String] = Nil): Unit = {
-    val dataDir = base.resolve(s"_v$next")
-    deleteRecursively(dataDir) // debris from a crashed earlier attempt
+    val dataDir = newAppendDir(base, bronzeVersions(base).lastOption.getOrElse(0) + 1)
     df.write.mode(SaveMode.Overwrite).parquet(dataDir.toString)
-    val entries =
-      if (statsCols.isEmpty)
-        ManifestStats.listParquet(dataDir.toString)
-          .map(f => ManifestStats.FileEntry(f, Map.empty))
-      else ManifestStats.collectStats(spark, dataDir.toString, statsCols, "")
-        .map(e => e.copy(relPath = e.relPath.stripPrefix("/")))
-    val tmp = base.resolve(s".$ManifestName.$next.tmp")
-    Files.write(tmp, (next.toString +: entries.map(_.render)).mkString("\n")
-      .getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    (dataDir, ManifestStats.collectStats(spark, dataDir.toString, statsCols,
+      dataDir.getFileName.toString))
   }
 
-  /** Atomically rename the manifest into place UNLESS a higher version
-    * already committed while we wrote — keeps the manifest monotonic when
-    * concurrent refreshes overlap (best-effort — the check-then-rename
-    * pair is not atomic, and a theoretical interleave can still publish
-    * the lower version: the result is then older-but-complete, never
-    * torn). When the publish is abandoned, the orphan data directory is
-    * removed immediately so an uncommitted version can never be mistaken
-    * for table history. Returns whether THIS version became the
-    * committed one. */
-  private def publishIfMonotonic(base: Path, next: Int): Boolean = {
-    val tmp = base.resolve(s".$ManifestName.$next.tmp")
-    if (currentVersion(base) < next) {
-      Files.move(tmp, base.resolve(ManifestName), StandardCopyOption.ATOMIC_MOVE) // commit
-      true
-    } else {
-      Files.delete(tmp)
-      deleteRecursively(base.resolve(s"_v$next"))
-      false
-    }
-  }
-
-  private def gcVersions(base: Path): Unit = {
-    // GC relative to the CURRENT manifest (a concurrent writer may have
-    // committed a higher version after ours): keep the committed version
-    // and one predecessor (in-flight readers of the just-replaced version
-    // finish their scan); drop older versions, their markers, stale
-    // manifest tmps, and any plain-layout legacy files now shadowed
-    val keepFrom = currentVersion(base) - 1
-    val manifestTmp = s"\\.$ManifestName\\.(\\d+)\\.tmp".r
-    listDir(base).foreach { p =>
-      p.getFileName.toString match {
-        case ManifestName =>
-        case versionDir(k) => if (k.toInt < keepFrom) deleteRecursively(p)
-        case commitMarker(k) => if (k.toInt < keepFrom) deleteRecursively(p)
-        // a concurrent writer's in-flight manifest tmp carries a version
-        // ≥ current — only stale (crashed) tmps below the keep window go
-        case manifestTmp(k) => if (k.toInt < keepFrom) deleteRecursively(p)
-        case _ => deleteRecursively(p)
-      }
-    }
-  }
-
-  /** Transactional (read-set-checked) refresh of one materialized table —
-    * the optimistic-concurrency semantics Delta gives the reference's
-    * incremental MERGEs, reduced to the manifest protocol:
+  /** Transactional (read-set-checked) refresh of one table — the
+    * optimistic-concurrency semantics Delta gives the reference's
+    * incremental MERGEs:
     *
-    *   1. READ: note the committed version, hand the live table to `plan`;
-    *   2. VALIDATE+CLAIM: the commit slot claimed is EXACTLY
-    *      `readVersion + 1` — if any other writer committed (or even
-    *      claimed) that slot since the read, the exclusive marker create
-    *      fails and the transaction retries from a fresh read, merging on
-    *      top of the winner instead of silently overwriting it (the
-    *      lost-update Delta raises `ConcurrentModificationException` for);
-    *   3. COMMIT: publish stays monotonic — if a full refresh claimed a
-    *      later slot and won the manifest race mid-write, this version is
-    *      abandoned (orphan dir removed) and the merge retries.
+    *   1. READ: note the head version v, hand the live table to `plan`;
+    *   2. COMMIT at EXACTLY v + 1 — if any other writer committed since
+    *      the read, the put-if-absent record link fails, the staged dir is
+    *      deleted and the transaction retries from a fresh read, merging
+    *      on top of the winner instead of silently overwriting it (the
+    *      lost update Delta raises `ConcurrentModificationException` for).
     *
     * The conflict-checked read-set is the TARGET table (the standing rows
     * a merge folds new data into — the read whose staleness loses
@@ -3798,11 +3614,15 @@ final class Lakehouse(val spark: SparkSession, val root: String,
     * number of attempts taken (1 = no contention). */
   def transactMerge(layer: String, name: String, maxAttempts: Int = 5)(
       plan: DataFrame => DataFrame): Int = {
+    val base = dir(layer, name)
     var attempt = 1
     while (true) {
       val readVersion = tableVersion(layer, name)
       val df = plan(table(layer, name))
-      if (materializeIfUnchanged(layer, name, readVersion, df)) return attempt
+      val (dataDir, entries) = stageSnapshot(base, df, Nil)
+      if (commitFilesManifest(base, readVersion + 1, Some(df.schema), entries, op = "MERGE"))
+        return attempt
+      deleteRecursively(dataDir)
       require(attempt < maxAttempts,
         s"transactMerge($layer.$name) lost $maxAttempts consecutive OCC races")
       attempt += 1
@@ -3810,44 +3630,14 @@ final class Lakehouse(val spark: SparkSession, val root: String,
     -1 // unreachable
   }
 
-  /** Conditional materialize: commit `df` as version `readVersion + 1`
-    * ONLY if `readVersion` is still the committed version — i.e. no other
-    * writer has touched the table since the caller read it. Returns false
-    * (leaving the table untouched and no debris in [[tableVersions]]) on
-    * any conflict; callers re-read and retry ([[transactMerge]]). */
-  def materializeIfUnchanged(
-      layer: String, name: String, readVersion: Int, df: DataFrame): Boolean = {
-    val base = dir(layer, name)
-    Files.createDirectories(base)
-    if (currentVersion(base) != readVersion) return false // committed past us
-    val next = readVersion + 1
-    val claimed =
-      try { Files.createFile(base.resolve(s"_commit_v$next")); true }
-      catch { case _: java.nio.file.FileAlreadyExistsException => false }
-    if (!claimed) return false // a competing writer owns the successor slot
-    writeVersion(base, next, df)
-    val committed = publishIfMonotonic(base, next)
-    gcVersions(base)
-    committed
-  }
-
   /** Compaction pass — the OPTIMIZE parity op
-    * (reference `job_tasks/ops/optimize_tables.py:116-132`): rewrite a
-    * table's files at a target partition count. Log-managed bronze tables
-    * compact WITHIN their log: all live files rewrite into one fresh
-    * `_a{N}` and the manifest swap commits, so readers never see a
-    * half-compacted table and stats are rebuilt for the new files. */
-  def compact(layer: String, name: String, numFiles: Int = 1): Unit = {
-    val base = dir(layer, name)
-    if (readFilesManifest(base).nonEmpty)
-      rewriteBronzeLive(base, name, _.repartition(numFiles), Lakehouse.BronzeStatsCols)
-    else materialize(layer, name, table(layer, name).repartition(numFiles))
-  }
-
-  /** Whether a table is managed by the bronze file log (vs the versioned
-    * `_v{N}` materialization layout or plain parquet). */
-  def isLogManaged(layer: String, name: String): Boolean =
-    bronzeVersions(dir(layer, name)).nonEmpty
+    * (reference `job_tasks/ops/optimize_tables.py:116-132`): all live
+    * files rewrite at `numFiles` into one fresh append dir and the log
+    * commits the swap, so readers never see a half-compacted table and
+    * stats are rebuilt for the new files. */
+  def compact(layer: String, name: String, numFiles: Int = 1): Unit =
+    rewriteLive(dir(layer, name), s"$layer.$name", _.repartition(numFiles),
+      Lakehouse.BronzeStatsCols)
 
   /** OPTIMIZE bin-packing — the INCREMENTAL semantics Delta's OPTIMIZE
     * actually has, which [[compact]]'s full rewrite lacks: only live
@@ -3871,8 +3661,8 @@ final class Lakehouse(val spark: SparkSession, val root: String,
     * manifests fall back to one filesystem stat each. Commits as a
     * remove+add DELTA through the normal CAS — a lost race (concurrent
     * append or delete) recomputes the candidate set from the winner's
-    * manifest; the orphaned rewrite dir is vacuum debris. Log-managed
-    * tables only (versioned materializations rewrite whole on refresh). */
+    * manifest; the orphaned rewrite dir is vacuum debris. No-op on a
+    * table with no committed version. */
   def compactSmall(layer: String, name: String,
       targetBytes: Long = Lakehouse.DefaultTargetFileBytes,
       minSmallFiles: Int = 4,
@@ -3929,51 +3719,11 @@ final class Lakehouse(val spark: SparkSession, val root: String,
       s"OPTIMIZE bin-packing of $name lost $maxAttempts consecutive CAS races")
   }
 
-  /** OPTIMIZE bin-packing for the VERSIONED materialized layout
-    * (silver/gold) — the reference OPTIMIZEs all of bronze+silver+gold
-    * every run (`job_tasks/ops/optimize_tables.py:17-52`). Full refreshes
-    * rewrite these tables whole, but change-feed merges
-    * (`Silver.latestWinsFeedTick` / `transactMerge`) re-commit the live
-    * version at whatever file count the merge plan produced — typically
-    * `shuffle.partitions` small files per commit — so a merge-maintained
-    * table fragments exactly like bronze does.
-    *
-    * The versioned layout has no partial commit (a `_v{N}` dir is
-    * immutable and replaced whole), so the rewrite IS the whole table —
-    * appropriate here because materialized tables are bounded current
-    * state, not unbounded history. Triggers only when the live version
-    * holds ≥ `minSmallFiles` files under `targetBytes / 2` AND packing
-    * would reduce the file count (the convergence guard: packed outputs
-    * average ≥ targetBytes/2, and a repack to the same count is skipped,
-    * so an every-run cadence costs one directory listing on a settled
-    * table). Commits through [[materializeIfUnchanged]]: a concurrent
-    * refresh wins the slot and the pack simply skips this pass — never a
-    * lost update. NOTE: like any full refresh, the rewrite does not
-    * preserve a clustered layout or per-file stats a custom
-    * materialization recorded; re-cluster on refresh where that matters. */
-  def compactSmallMaterialized(layer: String, name: String,
-      targetBytes: Long = Lakehouse.DefaultTargetFileBytes,
-      minSmallFiles: Int = 4): Boolean = {
-    require(targetBytes > 0 && minSmallFiles >= 2,
-      s"need targetBytes > 0 and minSmallFiles >= 2, got $targetBytes/$minSmallFiles")
-    val base = dir(layer, name)
-    val v = currentVersion(base)
-    if (v == 0) return false // plain layout (or absent): not version-managed
-    val dataDir = base.resolve(s"_v$v")
-    if (!Files.isDirectory(dataDir)) return false
-    val sizes = ManifestStats.listParquet(dataDir.toString)
-      .map(f => Files.size(dataDir.resolve(f)))
-    if (sizes.count(_ < targetBytes / 2) < minSmallFiles) return false
-    val outFiles = math.max(1, math.ceil(sizes.sum.toDouble / targetBytes).toInt)
-    if (outFiles >= sizes.size) return false // no reduction: already packed
-    materializeIfUnchanged(layer, name, v, table(layer, name).repartition(outFiles))
-  }
-
-  /** Full-rewrite commit over a bronze log's live file set (compaction,
+  /** Full-rewrite commit over a table's live file set (compaction,
     * clustering): transform → fresh append dir → CAS; a lost race restarts
     * from the winner's manifest so a concurrent append's files are never
     * dropped by the rewrite. */
-  private def rewriteBronzeLive(base: Path, name: String,
+  private def rewriteLive(base: Path, label: String,
       transform: DataFrame => DataFrame, statsCols: Seq[String],
       maxAttempts: Int = 5, op: String = "OPTIMIZE"): Unit = {
     var attempt = 0
@@ -4006,7 +3756,7 @@ final class Lakehouse(val spark: SparkSession, val root: String,
           dataChange = false)) return
     }
     throw new IllegalStateException(
-      s"bronze rewrite of $name lost $maxAttempts consecutive CAS races")
+      s"rewrite of $label lost $maxAttempts consecutive CAS races")
   }
 
   /** `OPTIMIZE ... ZORDER BY (x, y)` parity: rewrite the table clustered
@@ -4015,9 +3765,8 @@ final class Lakehouse(val spark: SparkSession, val root: String,
     * rectangle predicates skip whole files on EITHER dimension (and
     * parquet row-group pruning continues below file level). `curve`:
     * "hilbert" (default — tighter envelopes, see `operators/Layout`) or
-    * "zorder". Log-managed bronze clusters within its file log; the
-    * rewrite is a fresh committed version either way, readers never see
-    * a half-clustered table. */
+    * "zorder". The rewrite is a fresh committed version, readers never
+    * see a half-clustered table. */
   def compactClustered(layer: String, name: String, xCol: String, yCol: String,
       numFiles: Int, curve: String = "hilbert"): Unit = {
     import org.apache.spark.sql.functions.col
@@ -4028,12 +3777,8 @@ final class Lakehouse(val spark: SparkSession, val root: String,
         partitions = numFiles)
       case other => throw new IllegalArgumentException(s"unknown curve $other")
     }
-    val base = dir(layer, name)
-    if (readFilesManifest(base).nonEmpty)
-      rewriteBronzeLive(base, name, clustered,
-        (Lakehouse.BronzeStatsCols ++ Seq(xCol, yCol)).distinct, op = "OPTIMIZE ZORDER")
-    else materialize(layer, name, clustered(table(layer, name)),
-      statsCols = Seq(xCol, yCol))
+    rewriteLive(dir(layer, name), s"$layer.$name", clustered,
+      (Lakehouse.BronzeStatsCols ++ Seq(xCol, yCol)).distinct, op = "OPTIMIZE ZORDER")
   }
 
   /** `OPTIMIZE ... ZORDER BY (c1, …, cK)` for K ≥ 2 dimensions: rewrite
@@ -4049,12 +3794,8 @@ final class Lakehouse(val spark: SparkSession, val root: String,
     def clustered(df: DataFrame): DataFrame =
       graft.operators.Layout.zorderByN(df, clusterCols.map(col), bits,
         partitions = numFiles)
-    val base = dir(layer, name)
-    if (readFilesManifest(base).nonEmpty)
-      rewriteBronzeLive(base, name, clustered,
-        (Lakehouse.BronzeStatsCols ++ clusterCols).distinct, op = "OPTIMIZE ZORDER")
-    else materialize(layer, name, clustered(table(layer, name)),
-      statsCols = clusterCols)
+    rewriteLive(dir(layer, name), s"$layer.$name", clustered,
+      (Lakehouse.BronzeStatsCols ++ clusterCols).distinct, op = "OPTIMIZE ZORDER")
   }
 
   /** Materialize as a BUCKETED catalog table (`<layer>_<name>`): rows

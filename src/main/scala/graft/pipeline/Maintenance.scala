@@ -7,16 +7,13 @@ package graft.pipeline
   * only rewrites under-sized files and skips already-compact tables. This
   * pass keeps that contract for the graft engine:
   *
-  *   - **Log-managed bronze tables** fragment one append dir per ingest;
-  *     each runs [[Lakehouse.compactSmall]] — Delta's INCREMENTAL
-  *     bin-packing, rewriting only files under `targetBytes` when at
-  *     least `minSmallFiles` of them exist. Cost tracks the small-file
-  *     backlog, never the table: a well-compacted 100 TB table costs one
-  *     manifest read to skip, and a nightly append's small files rewrite
-  *     without touching settled data.
-  *   - **Versioned materializations** (silver/gold/curated) are replaced
-  *     whole by every refresh and do not fragment across runs; they are
-  *     skipped the way the reference skips views.
+  *   - **Every table** of every layer commits on the same file log and
+  *     runs [[Lakehouse.compactSmall]] — Delta's INCREMENTAL bin-packing,
+  *     rewriting only files under `targetBytes / 2` when at least
+  *     `minSmallFiles` of them exist. Cost tracks the small-file backlog,
+  *     never the table: a well-compacted 100 TB table costs one manifest
+  *     read to skip, a nightly append's small files rewrite without
+  *     touching settled data, and a refresh that commits few files skips.
   *   - **Streaming batch-dir state** (a [[graft.streaming.Streams.nearDupGate]]'s
   *     survivors + index halves) accumulates one `b{N}` dir per
   *     micro-batch; each registered gate folds to its committed frontier
@@ -45,14 +42,10 @@ object Maintenance {
 
   /** Run the pass. `layers` defaults to all three — the reference
     * OPTIMIZEs every bronze+silver+gold table each run
-    * (`optimize_tables.py:17-52`). Log-managed bronze bin-packs
-    * incrementally (`targetBytes`/`minSmallFiles`); versioned
-    * materializations bin-pack via [[Lakehouse.compactSmallMaterialized]]
-    * when incremental merges have fragmented the live version (full
-    * refreshes replace them whole, so a refresh-only table always skips
-    * at the cost of one directory listing); legacy plain-layout
-    * non-bronze tables keep the file-count-gated full rewrite
-    * (`maxLiveFiles`/`targetFiles`, also the gate segment file count). */
+    * (`optimize_tables.py:17-52`). Every table bin-packs incrementally
+    * (`targetBytes`/`minSmallFiles`); `targetFiles` is the gate segment
+    * file count. `vacuum` opts every table into [[Lakehouse.vacuum]] with
+    * the `vacuumRetainMillis` wall-clock floor. */
   def run(
       lake: Lakehouse,
       layers: Seq[String] = Seq("bronze", "silver", "gold"),
@@ -60,7 +53,6 @@ object Maintenance {
       batchDirs: Seq[String] = Seq.empty,
       targetBytes: Long = Lakehouse.DefaultTargetFileBytes,
       minSmallFiles: Int = 4,
-      maxLiveFiles: Int = 64,
       targetFiles: Int = 8,
       vacuum: Boolean = false,
       vacuumRetainMillis: Long = Lakehouse.DefaultVacuumRetainMillis): Report = {
@@ -84,26 +76,8 @@ object Maintenance {
     for (layer <- layers; name <- lake.tableNames(layer)) {
       val fqn = s"$layer.$name"
       try {
-        if (lake.isLogManaged(layer, name)) {
-          if (lake.compactSmall(layer, name, targetBytes, minSmallFiles))
-            optimized += fqn
-          else skipped += fqn
-        } else if (layer == "bronze") {
-          // a PLAIN-layout bronze table (legacy, pre-log) must NOT be
-          // compacted here: compact() would materialize it into the
-          // versioned `_v{N}` layout, and the next appendBronze's legacy
-          // upgrade skips '_'-prefixed children — the log would then be
-          // born holding only the append's files, hiding every earlier
-          // row. Its correct migration path is the upgrade that runs on
-          // its next append; until then it skips.
-          skipped += fqn
-        } else if (lake.compactSmallMaterialized(layer, name, targetBytes, minSmallFiles)) {
-          // a merge-fragmented materialized live version bin-packed
-          optimized += fqn
-        } else if (lake.liveFileCount(layer, name) > maxLiveFiles) {
-          lake.compact(layer, name, numFiles = targetFiles)
-          optimized += fqn
-        } else skipped += fqn
+        if (lake.compactSmall(layer, name, targetBytes, minSmallFiles)) optimized += fqn
+        else skipped += fqn
       } catch { case scala.util.control.NonFatal(t) =>
         failed += fqn -> t.toString }
       // opt-in scheduled VACUUM (the Delta cadence): safe on a live table
@@ -115,9 +89,9 @@ object Maintenance {
       // directory listings O(activity since maintenance), not O(table
       // lifetime). Separate try: a vacuum failure reports as
       // "<fqn> (vacuum)" and never doubles with the OPTIMIZE outcome.
-      if (vacuum && layer == "bronze" && lake.isLogManaged(layer, name)) {
+      if (vacuum && lake.exists(layer, name)) {
         try {
-          lake.vacuumBronze(name, retainMillis = vacuumRetainMillis)
+          lake.vacuum(layer, name, retainMillis = vacuumRetainMillis)
           vacuumed += fqn
         } catch { case scala.util.control.NonFatal(t) =>
           failed += s"$fqn (vacuum)" -> t.toString }

@@ -358,21 +358,6 @@ object ManifestStats {
 
   /** One file's footer statistics, restricted to `wanted` columns, plus
     * the [[SizeCol]] pseudo-stat. */
-  /** Physical row count of one parquet file from its footer's block
-    * metadata alone — the `__rows` number without the stats machinery
-    * (for metadata answers over tables that carry no manifest). */
-  def footerRowCount(file: String,
-      conf: org.apache.hadoop.conf.Configuration): Long = {
-    val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-      new org.apache.hadoop.fs.Path(file), conf)
-    val reader = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-    try {
-      var rows = 0L
-      reader.getFooter.getBlocks.forEach(b => rows += b.getRowCount)
-      rows
-    } finally reader.close()
-  }
-
   private def footerStats(file: String, wanted: Set[String],
       conf: org.apache.hadoop.conf.Configuration): Map[String, ColStats] = {
     val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(

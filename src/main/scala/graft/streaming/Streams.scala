@@ -772,15 +772,14 @@ object Streams {
       maxVersions, typed, snapshotBootstrap).map { case (from, to, _) => (from, to) }
 
   /** [[cdfAggregateSink]] plus a FOLDED signal: `Some((from, to, folded))`
-    * where `folded = false` means the tick only advanced the cursor —
-    * a pure-maintenance (dataChange=false) range or a legacy-frontier
-    * clamp — and the target was NOT rewritten. Callers that gate
-    * downstream re-materialization on "did anything change" (the
-    * calendar-dim assembly) must consume this signal, not mere tick
-    * presence: an OPTIMIZE-only range advancing a cursor is not a data
-    * change, and treating it as one re-materializes MVs on an unchanged
-    * lake — breaking the "maintenance ranges advance cursors WITHOUT
-    * rewriting MVs" contract. */
+    * where `folded = false` means the tick only advanced the cursor over
+    * a pure-maintenance (dataChange=false) range and the target was NOT
+    * rewritten. Callers that gate downstream re-materialization on "did
+    * anything change" (the calendar-dim assembly) must consume this
+    * signal, not mere tick presence: an OPTIMIZE-only range advancing a
+    * cursor is not a data change, and treating it as one re-materializes
+    * MVs on an unchanged lake — breaking the "maintenance ranges advance
+    * cursors WITHOUT rewriting MVs" contract. */
   def cdfAggregateSinkFolded(lake: graft.pipeline.Lakehouse, source: String,
       target: String, keys: Seq[String], sumCols: Seq[String],
       cursorDir: String, maxVersions: Int = Int.MaxValue,
@@ -795,14 +794,6 @@ object Streams {
         sumCols.map(c => sum(col(c) * col("__s")).as(s"sum_$c")))
       signed.groupBy(keys.map(col): _*).agg(aggs.head, aggs.tail: _*)
     }
-    // LEGACY-FRONTIER resolution happens BEFORE the range is read: a
-    // migrated cursor ([[migrateLegacyCdfAggCursor]]) records the end of an
-    // APPLIED prefix f, so a range ending at-or-below f skips wholesale —
-    // and a range SPANNING it (from < f < to, e.g. an append landed between
-    // the pre-upgrade crash and the post-upgrade replay under a large tick
-    // cap) must NOT fold whole: (from, f] is already applied and would
-    // double-count. Clamp the tick at f — no merge, cursor advances to f —
-    // and the next tick folds only the unapplied (f, to] suffix.
     val from0 = lake.changesCursor(cur)
     val to0 = lake.cappedChangesTo(source, from0, maxVersions)
     if (to0 <= from0) return None
@@ -823,13 +814,6 @@ object Streams {
         nullSafeKeys = true)
       lake.commitChangesCursor(cur, head)
       return Some((0, head, true))
-    }
-    legacyFrontier(cur).filter(_ > from0).foreach { f =>
-      val clampTo = math.min(f, to0.toLong).toInt
-      lake.commitChangesCursor(cur, clampTo)
-      // the clamped prefix was applied by the PRE-migration consumer —
-      // this tick itself rewrote nothing
-      return Some((from0, clampTo, false))
     }
     Some((lake.tableChanges(source, from0, to0), from0, to0)).map { case (changes0, from, to) =>
       // a range of pure OPTIMIZE/VACUUM commits (dataChange=false) carries
@@ -889,70 +873,13 @@ object Streams {
       // the txn appId carries the SOURCE too: two sources folding into one
       // target are independent writers — a shared appId would make the
       // second source's first merge look like a replay of the first's and
-      // silently drop it while its cursor still advanced. LEGACY UPGRADE:
-      // ticks applied by the pre-(source,target) binary recorded the bare
-      // "cdfagg:<target>" id, whose frontier is SOURCE-BLIND — whether a
-      // range at-or-below it was already folded is knowledge only the
-      // operator has (the old consumer's source vs a source added later),
-      // so the dedupe is gated on an EXPLICIT one-time migration marker
-      // ([[migrateLegacyCdfAggCursor]], run per pre-existing consumer at
-      // upgrade). The frontier is consumed ABOVE, before the range read:
-      // ranges at-or-below it skip, ranges spanning it clamp — by this
-      // point the whole range is past the applied prefix and always folds.
-      // Unmigrated (post-upgrade) consumers never consult the stale
-      // frontier and can't be swallowed by it.
+      // silently drop it while its cursor still advanced
       lake.mergeBronze(target, merged, keys,
         txn = Some((s"cdfagg:$source:$target", to.toLong)),
         nullSafeKeys = true)
       lake.commitChangesCursor(cur, to)
       (from, to, true)
     }
-  }
-
-  /** ONE-TIME migration of a [[cdfAggregateSink]] consumer that predates
-    * the (source, target)-scoped txn appId: records the target's bare
-    * legacy frontier in the consumer's cursor dir, so a crash-replayed
-    * in-flight tick from the old binary (merge committed under
-    * `cdfagg:<target>`, cursor not yet advanced) dedupes instead of
-    * double-applying — under any tick cap, since every range ending
-    * at-or-below the frontier is a subrange of the applied prefix. Run
-    * once per PRE-EXISTING consumer when upgrading; consumers created
-    * after the upgrade must NOT be migrated (the legacy frontier counts a
-    * DIFFERENT source's version sequence — migrating a new source would
-    * silently swallow its first ranges). Idempotent; a no-op when the
-    * target has no legacy record. */
-  def migrateLegacyCdfAggCursor(lake: graft.pipeline.Lakehouse, target: String,
-      cursorDir: String): Unit =
-    lake.txnVersion(target, s"cdfagg:$target").foreach { f =>
-      val dir = java.nio.file.Paths.get(cursorDir)
-      java.nio.file.Files.createDirectories(dir)
-      val tmp = dir.resolve(s".legacy_frontier_${java.util.UUID.randomUUID.toString.take(8)}.tmp")
-      java.nio.file.Files.write(tmp,
-        f.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      val dst = dir.resolve("_legacy_txn_frontier")
-      // hard link = atomic put-if-absent on POSIX; filesystems without link
-      // support (some network/object-store mounts) throw
-      // UnsupportedOperationException or a generic FileSystemException —
-      // fall back to an atomic rename (idempotent re-runs write the same
-      // frontier value, so a rename-over is harmless). tmp cleanup lives in
-      // a finally so no failure path leaks it.
-      try {
-        try java.nio.file.Files.createLink(dst, tmp)
-        catch {
-          case _: java.nio.file.FileAlreadyExistsException =>
-          case _: UnsupportedOperationException | _: java.nio.file.FileSystemException =>
-            java.nio.file.Files.move(tmp, dst,
-              java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-        }
-      } finally java.nio.file.Files.deleteIfExists(tmp)
-    }
-
-  /** The migrated legacy frontier of a cursor dir, if any. */
-  private def legacyFrontier(cursorDir: java.nio.file.Path): Option[Long] = {
-    val f = cursorDir.resolve("_legacy_txn_frontier")
-    if (!java.nio.file.Files.exists(f)) None
-    else new String(java.nio.file.Files.readAllBytes(f),
-      java.nio.charset.StandardCharsets.UTF_8).trim.toLongOption
   }
 
   /** The read face of a [[cdfAggregateSink]] target: visible aggregate

@@ -161,7 +161,7 @@ class LayoutSpec extends SparkSpec {
     import graft.pipeline.{Lakehouse, ManifestStats}
     import graft.pipeline.ManifestStats.{StatGte, StatLte}
     // the OPTIMIZE ZORDER + stats story end-to-end: a z-ordered refresh
-    // records per-file x/y min-max in its _VERSION manifest, and a
+    // records per-file x/y min-max in its log record, and a
     // rectangle query resolves the file list from the manifest BEFORE
     // Spark lists anything — file-level data skipping on both dimensions
     val lake = new Lakehouse(spark, java.nio.file.Files.createTempDirectory("graft-skip").toString)

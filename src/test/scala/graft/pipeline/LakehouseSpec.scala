@@ -17,8 +17,7 @@ class LakehouseSpec extends SparkSpec {
     // 40 tiny writes → a fragmented table (the small-files problem OPTIMIZE fixes)
     val df = (1 to 200).map(i => (i.toLong, s"v$i")).toDF("id", "v").repartition(40)
     lake.materialize("silver", "frag", df)
-    def partFiles = Files.list(lake.currentDataDir("silver", "frag")).toArray
-      .map(_.toString).count(_.endsWith(".parquet"))
+    def partFiles = lake.liveFileCount("silver", "frag")
     assert(partFiles > 10, s"fixture not fragmented: $partFiles files")
     val before = lake.table("silver", "frag").orderBy("id").collect().toSeq
     lake.compact("silver", "frag", numFiles = 2)
@@ -252,6 +251,23 @@ class LakehouseSpec extends SparkSpec {
     assert(lake.tableAt("bronze", "big", lake.tableVersions("bronze", "big").max).count() == 22)
   }
 
+  test("a record whose schema line is URL-encoded JSON, the earlier encoding, still reads") {
+    val lake = new Lakehouse(spark, Files.createTempDirectory("graft-schemaenc").toString)
+    lake.appendBronze("t", Seq((1L, d("2025-06-01"), "run1")).toDF("id", "snapshot_date", "run_id"))
+    val rec = Paths.get(lake.root, "bronze", "t", "_files_v1")
+    val lines = new String(Files.readAllBytes(rec), "UTF-8").split("\n", -1).toSeq
+    // new records carry the schema as DDL text
+    val logSchema = org.apache.spark.sql.types.StructType.fromDDL(
+      lines.find(_.startsWith("#schema\t")).get.stripPrefix("#schema\t"))
+    val before = lake.table("bronze", "t").schema
+    Files.write(rec, lines.map(l => if (!l.startsWith("#schema\t")) l
+      else "#schema\t" + java.net.URLEncoder.encode(logSchema.json, "UTF-8"))
+      .mkString("\n").getBytes("UTF-8"))
+    val back = new Lakehouse(spark, lake.root)
+    assert(back.table("bronze", "t").schema == before)
+    assert(back.table("bronze", "t").count() == 1)
+  }
+
   test("schema override re-points a logical layer at a different physical schema") {
     // dbt-style indirection (reference dbt/models/schema.yml): the same code
     // writes to silver_dev when the override is set, silver when it isn't —
@@ -275,24 +291,68 @@ class LakehouseSpec extends SparkSpec {
     lake.materialize("silver", "t", Seq((1L, "a"), (2L, "b")).toDF("id", "v"))
     val v1 = lake.table("silver", "t").orderBy("id").collect().toSeq
     assert(v1.size == 2)
-    // simulate a refresh that died mid-write: a half-written _v2 directory
-    // exists (invalid parquet debris) but the manifest was never renamed
     val base = Paths.get(lake.root, "silver", "t")
-    val crashed = base.resolve("_v2")
+    def liveDirs = lake.prunedFilePaths("silver", "t", Nil)
+      .map(p => Paths.get(p).getParent.getFileName.toString).toSet
+    val v1Dirs = liveDirs
+    // simulate a refresh that died mid-write: a half-written append dir
+    // exists (invalid parquet debris) but its log record was never linked
+    val crashed = base.resolve("_a2_crashed")
     Files.createDirectories(crashed)
     Files.write(crashed.resolve("part-00000.parquet"), Array[Byte](1, 2, 3))
     assert(lake.table("silver", "t").orderBy("id").collect().toSeq == v1,
       "reader saw the uncommitted version")
-    // a re-run of the refresh overwrites the debris and commits atomically
+    // a re-run of the refresh commits atomically past the debris
     lake.materialize("silver", "t", Seq((1L, "a2"), (3L, "c")).toDF("id", "v"))
     val v2 = lake.table("silver", "t").orderBy("id").collect().toSeq
     assert(v2.map(_.getString(1)) == Seq("a2", "c"))
-    // the predecessor data dir survives one commit (in-flight readers),
-    // older ones are GC'd on the next commit
-    assert(Files.exists(base.resolve("_v1")))
+    val v2Dirs = liveDirs
+    // the predecessor's data dir survives one commit (in-flight readers),
+    // older ones are dropped by the next winning commit
+    assert(v1Dirs.forall(d => Files.exists(base.resolve(d))))
     lake.materialize("silver", "t", Seq((9L, "z")).toDF("id", "v"))
-    assert(!Files.exists(base.resolve("_v1")) && Files.exists(base.resolve("_v2")))
+    assert(v1Dirs.forall(d => !Files.exists(base.resolve(d))) &&
+      v2Dirs.forall(d => Files.exists(base.resolve(d))))
     assert(lake.table("silver", "t").count() == 1)
+    // the debris is in no commit: it waits for vacuum, like bronze debris
+    assert(Files.exists(crashed))
+    lake.vacuum("silver", "t", retainMillis = 0L)
+    assert(!Files.exists(crashed))
+    assert(lake.table("silver", "t").count() == 1)
+  }
+
+  test("a materialize that crashed before its commit leaves no table; the next one commits version 1") {
+    val lake = new Lakehouse(spark, Files.createTempDirectory("graft-txn0").toString)
+    val base = Paths.get(lake.root, "silver", "t")
+    // the first refresh staged its append dir and died before the record link
+    Seq((99L, "debris")).toDF("id", "v").write.parquet(base.resolve("_a1_crashed").toString)
+    assert(!lake.exists("silver", "t"), "a directory of crash debris is not a table")
+    val e = intercept[IllegalArgumentException](lake.table("silver", "t"))
+    assert(e.getMessage.contains("silver.t"), e.getMessage)
+    val rows = Seq((1L, "a"), (2L, "b"))
+    lake.materialize("silver", "t", rows.toDF("id", "v"))
+    assert(lake.exists("silver", "t"))
+    assert(lake.tableVersion("silver", "t") == 1)
+    assert(lake.table("silver", "t").orderBy("id").as[(Long, String)].collect().toSeq == rows)
+  }
+
+  test("a materialized table gets the log's history, rowCount, stats pruning and retained versions") {
+    val lake = new Lakehouse(spark, Files.createTempDirectory("graft-mlog").toString)
+    def batch(lo: Long) = (lo until lo + 100).map(i => (i, s"v$i")).toDF("id", "v")
+      .repartitionByRange(4, col("id"))
+    lake.materialize("silver", "t", batch(0L), statsCols = Seq("id"))
+    lake.materialize("silver", "t", batch(1000L), statsCols = Seq("id"))
+    val h = lake.history("silver", "t").orderBy("version").collect()
+    assert(h.map(_.getInt(0)).toSeq == Seq(1, 2), h.mkString(","))
+    assert(h.forall(_.getString(2) == "WRITE"), h.mkString(","))
+    assert(lake.rowCount("silver", "t").contains(100L))
+    val probe = Seq(ManifestStats.StatGte("id", 1075L))
+    val all = lake.prunedFilePaths("silver", "t", Nil)
+    val hit = lake.tableWhere("silver", "t", probe)
+    assert(all.size >= 2 && hit.inputFiles.length < all.size,
+      s"stats did not prune: ${hit.inputFiles.length} of ${all.size} files read")
+    assert(hit.filter(col("id") >= 1075L).count() == 25)
+    assert(lake.tableVersions("silver", "t") == Seq(1, 2))
   }
 
   test("time travel: the predecessor version stays readable until GC'd; others fail fast") {
@@ -313,14 +373,17 @@ class LakehouseSpec extends SparkSpec {
   test("OCC slot claim: a foreign commit marker pushes the writer to the next version") {
     val lake = new Lakehouse(spark, Files.createTempDirectory("graft-occ").toString)
     lake.materialize("silver", "t", Seq((1L, "v1")).toDF("id", "v"))
-    // another writer (or a crashed attempt) already claimed slot 2
+    // another writer already committed version 2 (here: a re-commit of v1's
+    // files, the shape a blind-overwrite CAS loser lands)
     val base = Paths.get(lake.root, "silver", "t")
-    Files.createFile(base.resolve("_commit_v2"))
+    val v1Record = new String(Files.readAllBytes(base.resolve("_files_v1")), "UTF-8")
+    Files.write(base.resolve("_files_v2"),
+      ("2" + v1Record.dropWhile(_ != '\n')).getBytes("UTF-8"))
     lake.materialize("silver", "t", Seq((1L, "v-next")).toDF("id", "v"))
-    assert(lake.tableVersion("silver", "t") == 3, "writer must skip the claimed slot")
+    assert(lake.tableVersion("silver", "t") == 3, "writer must land past the foreign record")
     assert(lake.table("silver", "t").head().getString(1) == "v-next")
-    // debris of a claimed-but-never-committed slot is not a readable version
-    assert(!lake.tableVersions("silver", "t").contains(2))
+    assert(lake.tableVersions("silver", "t") == Seq(2, 3))
+    assert(lake.tableAt("silver", "t", 2).head().getString(1) == "v1")
   }
 
   test("OCC: concurrent full refreshes of one table serialize without corruption") {
@@ -338,50 +401,23 @@ class LakehouseSpec extends SparkSpec {
       }
     }
     Await.result(Future.sequence(writers), 120.seconds)
-    // the committed manifest points at ONE writer's ONE round — never a
-    // torn mix. (Not necessarily a FINAL round: materialize legitimately
-    // SKIPS when a competitor owns the successor slot, so under heavy
-    // contention a writer's last round may be the skipped one — the
-    // no-lost-update guarantee is about torn state, not last-write-wins.)
+    // the committed record points at ONE writer's ONE round — never a torn
+    // mix. Every CAS loser re-commits its files on the next version, so
+    // every round lands: the head is 1 + 2×3, and the last commit is some
+    // writer's final round
     val rows = lake.table("silver", "t").collect()
     assert(rows.length == 1)
     val v = rows.head.getString(1)
-    assert(v.matches("w[12]-r[123]"), s"torn or foreign final payload $v")
-    // several commits serialized past the seed
-    assert(lake.tableVersion("silver", "t") >= 2)
-  }
-
-  test("manifest upgrade: a plain-layout table re-materializes into versioned layout in place") {
-    val lake = new Lakehouse(spark, Files.createTempDirectory("graft-upgrade").toString)
-    val base = Paths.get(lake.root, "silver", "legacy")
-    // pre-manifest layout: parquet files directly under the table dir
-    Seq((1L, "old")).toDF("id", "v").write.parquet(base.toString)
-    assert(lake.table("silver", "legacy").count() == 1)
-    // a refresh that READS the plain table while replacing it — the
-    // incremental-merge shape — must both work and upgrade the layout
-    lake.materialize("silver", "legacy",
-      lake.table("silver", "legacy").unionByName(Seq((2L, "new")).toDF("id", "v")))
-    val rows = lake.table("silver", "legacy").orderBy("id").collect().map(_.getString(1)).toSeq
-    assert(rows == Seq("old", "new"))
-    assert(Files.exists(base.resolve("_VERSION")))
-    // legacy loose files were GC'd after the commit
-    assert(!Files.list(base).toArray.map(_.toString).exists(_.endsWith("_SUCCESS")))
+    assert(v.matches("w[12]-r3"), s"torn, foreign or stale final payload $v")
+    assert(lake.tableVersion("silver", "t") == 7)
   }
 
   test("transactMerge: a commit landing after the read is a detected conflict, then the retry merges on top of it") {
     val lake = new Lakehouse(spark, Files.createTempDirectory("graft-txm").toString)
     lake.materialize("silver", "t", Seq((1L, "base")).toDF("id", "v"))
-    // conditional materialize against a stale read loses cleanly: the
-    // competitor's slot-2 marker blocks the claim and nothing is written
-    val stale = lake.tableVersion("silver", "t")
-    lake.materialize("silver", "t", Seq((1L, "competitor")).toDF("id", "v"))
-    assert(!lake.materializeIfUnchanged("silver", "t", stale,
-      Seq((1L, "lost-update")).toDF("id", "v")))
-    assert(lake.table("silver", "t").head().getString(1) == "competitor")
-    assert(lake.tableVersions("silver", "t") == Seq(1, 2), "aborted txn left debris")
-    // the retry loop re-reads and folds the merge into the WINNING version:
-    // first attempt reads v2, a competitor commits v3 mid-transaction, the
-    // second attempt merges on top of the competitor's rows
+    // first attempt reads v1, a competitor commits v2 mid-transaction: the
+    // v2 commit of the merge loses, and the second attempt merges on top
+    // of the competitor's rows
     var calls = 0
     val attempts = lake.transactMerge("silver", "t") { existing =>
       calls += 1
@@ -394,6 +430,15 @@ class LakehouseSpec extends SparkSpec {
       .map(r => (r.getLong(0), r.getString(1))).toSeq
     assert(rows == Seq((2L, "interloper"), (9L, "merged")),
       s"merge must build on the interloper's commit, got $rows")
+    // the lost attempt committed nothing and deleted what it staged: the
+    // append dirs on disk are exactly those of the retained versions
+    assert(lake.tableVersions("silver", "t") == Seq(2, 3), "aborted txn left a version")
+    val base = Paths.get(lake.root, "silver", "t")
+    val onDisk = Files.list(base).toArray.map(_.asInstanceOf[java.nio.file.Path])
+      .map(_.getFileName.toString).filter(_.startsWith("_a")).toSet
+    val retained = Seq(2, 3).flatMap(v => lake.tableAt("silver", "t", v).inputFiles)
+      .map(p => Paths.get(new java.net.URI(p)).getParent.getFileName.toString).toSet
+    assert(onDisk == retained, s"aborted txn left debris: ${onDisk -- retained}")
   }
 
   test("transactMerge: uncontended merge commits in one attempt with normal retention") {
@@ -411,11 +456,12 @@ class LakehouseSpec extends SparkSpec {
     val lake = new Lakehouse(spark, Files.createTempDirectory("graft-ttd").toString)
     (1 to 3).foreach(i => lake.materialize("silver", "t", Seq((i.toLong, s"v$i")).toDF("id", "v")))
     val base = Paths.get(lake.root, "silver", "t")
-    // a complete-looking directory below the retention window (a crashed
-    // or abandoned writer whose GC never ran) must not read as history
-    Seq((99L, "debris")).toDF("id", "v").write.parquet(base.resolve("_v1").toString)
+    // a complete-looking append dir no record references (a crashed or
+    // abandoned writer) must not read as history
+    Seq((99L, "debris")).toDF("id", "v").write.parquet(base.resolve("_a1_debris").toString)
     assert(lake.tableVersions("silver", "t") == Seq(2, 3))
     intercept[IllegalArgumentException](lake.tableAt("silver", "t", 1))
+    assert(lake.table("silver", "t").collect().map(_.getString(1)).toSeq == Seq("v3"))
   }
 
   test("concurrent adopts of one crashed append dir commit its files exactly once") {
@@ -671,9 +717,11 @@ class LakehouseSpec extends SparkSpec {
     lake.compactClustered("bronze", "t", "id", "id", numFiles = 1)
     assert(lake.history("bronze", "t").orderBy(col("version").desc)
       .head().getString(2) == "OPTIMIZE ZORDER")
-    // non-log tables: empty history, never an error
+    // a materialized table commits on the same log: its refresh is history
     lake.materialize("silver", "m", Seq((1L, "a")).toDF("id", "v"))
-    assert(lake.history("silver", "m").isEmpty)
+    assert(lake.history("silver", "m").collect().map(_.getString(2)).toSeq == Seq("WRITE"))
+    // a table that was never written: empty history, never an error
+    assert(lake.history("gold", "nope").isEmpty)
   }
 
   test("describeDetail reports log-resolved metadata for each table format") {
@@ -686,7 +734,7 @@ class LakehouseSpec extends SparkSpec {
     // a partial DV delete: one vector, cardinality 1, rows 4 -> 3
     lake.deleteBronzeWhereDv("t", col("id") === 1L)
     val r = lake.describeDetail("bronze", "t").head()
-    assert(r.getAs[String]("format") == "bronze-log")
+    assert(r.getAs[String]("format") == "file-log")
     assert(r.getAs[Int]("version") == lake.tableVersions("bronze", "t").max)
     assert(r.getAs[Long]("num_files") == 2)
     assert(r.getAs[Long]("size_bytes") > 0)
@@ -723,23 +771,23 @@ class LakehouseSpec extends SparkSpec {
     val f2 = lake.describeDetail("bronze", "t2").head()
     assert(f2.getAs[Long]("num_identity_columns") == 1)
     assert(f2.getAs[Long]("num_generated_columns") == 1)
-    // materialized: version + directory metadata; log-feature counters are
-    // DEFINITIVE zeros (a full rewrite materializes plain rows), not NULL —
-    // only the row-id watermark stays NULL (the concept is absent)
+    // materialized: the same log-resolved metadata; its log-feature
+    // counters are zeros (a full rewrite commits plain rows) and the
+    // row-id watermark stays NULL (row tracking was never enabled)
     lake.materialize("silver", "m", Seq((1L, "a"), (2L, "b")).toDF("id", "v"))
     val m = lake.describeDetail("silver", "m").head()
-    assert(m.getAs[String]("format") == "materialized")
-    assert(m.getAs[Int]("version") >= 1 && m.getAs[Long]("num_files") > 0)
+    assert(m.getAs[String]("format") == "file-log")
+    assert(m.getAs[Int]("version") == 1 && m.getAs[Long]("num_files") > 0)
     assert(m.getAs[Long]("size_bytes") > 0)
-    assert(m.getAs[Long]("num_rows") == 2, "materialized num_rows from footers")
+    assert(m.getAs[Long]("num_rows") == 2, "materialized num_rows from the log")
     Seq("num_deletion_vectors", "dv_cardinality", "num_nodata_dirs",
       "num_check_constraints", "num_renamed_columns", "num_identity_columns",
       "num_column_defaults", "num_generated_columns", "num_txn_app_ids")
       .foreach(c => assert(m.getAs[Long](c) == 0L, s"$c should be a definitive 0"))
     assert(m.isNullAt(m.fieldIndex("row_id_watermark")))
-    // a table that was never written: plain, zero files, no error
-    val p = lake.describeDetail("gold", "nope").head()
-    assert(p.getAs[String]("format") == "plain" && p.getAs[Long]("num_files") == 0)
+    // a table that was never written fails fast, naming the table
+    val e = intercept[IllegalArgumentException](lake.describeDetail("gold", "nope"))
+    assert(e.getMessage.contains("gold.nope"), e.getMessage)
   }
 
   test("repairBronze drops entries for vanished files and missing vectors") {

@@ -220,23 +220,23 @@ class CdfAggregateSpec extends SparkSpec {
     assert(same(Streams.cdfAggregate(lake, "agg"), scratch(lake)))
   }
 
-  test("upgrade shim cannot swallow a later-added source whose versions sit below the legacy frontier") {
+  test("the txn appId is (source, target)-scoped: another writer's frontier on the target never swallows a source's ticks") {
     val lake = mkLake("cdfaggshim2")
     val cur2 = Files.createTempDirectory("graft-shim2-c2").toString
-    // the pre-upgrade binary folded an OLD source's history to version 5
-    // under the bare legacy appId — the frontier is in THAT source's
-    // version sequence
+    // another writer folded an OLD source's history to version 5 under an
+    // appId that names only the target — that frontier counts THAT
+    // source's version sequence
     lake.appendBronze("src1", rows("r1", Seq((1L, "a", 10L), (2L, "a", 5L))))
     val fold1 = Seq(("a", 2L, 15L)).toDF("grp", "cnt", "sum_val")
     lake.mergeBronze("agg", fold1, Seq("grp"), txn = Some(("cdfagg:agg", 5L)))
-    // a NEW source is added post-upgrade; its versions (1, 2, …) all sit
-    // below the stale frontier — every tick must still fold
+    // a NEW source's versions (1, 2, …) all sit below that frontier —
+    // every tick must still fold
     lake.appendBronze("src2", rows("s1", Seq((11L, "b", 100L))))
     assert(Streams.cdfAggregateSink(lake, "src2", "agg",
       Seq("grp"), Seq("val"), cur2).contains((0, 1)))
     val b1 = Streams.cdfAggregate(lake, "agg").filter(col("grp") === "b").collect()
     assert(b1.nonEmpty && b1.head.getAs[Long]("cnt") == 1L,
-      "new source's first tick was swallowed by the stale legacy frontier")
+      "new source's first tick was swallowed by another writer's txn frontier")
     lake.appendBronze("src2", rows("s2", Seq((12L, "b", 7L))))
     assert(Streams.cdfAggregateSink(lake, "src2", "agg",
       Seq("grp"), Seq("val"), cur2).contains((1, 2)))
@@ -279,82 +279,4 @@ class CdfAggregateSpec extends SparkSpec {
       s"NULL-key retraction wrong: ${n2.toSeq}")
     assert(same(Streams.cdfAggregate(lake, "agg"), scratch(lake)))
   }
-
-  test("legacy upgrade: a MIGRATED cursor dedupes the crash-replayed in-flight tick") {
-    val lake = mkLake("cdfagglegacy")
-    val cursor = Files.createTempDirectory("graft-cdfagglegacy-cur").toString
-    lake.appendBronze("src", rows("r1", Seq((1L, "a", 10L), (2L, "b", 5L)))) // v1
-    // simulate the PRE-upgrade binary having applied tick (0,1] and crashed
-    // before its cursor commit: the fold landed under the bare legacy appId
-    val preFold = Seq(("a", 1L, 10L), ("b", 1L, 5L)).toDF("grp", "cnt", "sum_val")
-    lake.mergeBronze("agg", preFold, Seq("grp"),
-      txn = Some(("cdfagg:agg", 1L)))
-    // the upgrade step records the legacy frontier on the existing consumer
-    Streams.migrateLegacyCdfAggCursor(lake, "agg", cursor)
-    // the upgraded binary replays the in-flight tick: it must DEDUPE against
-    // the recorded frontier (no double-count) and still advance the cursor
-    val t1 = Streams.cdfAggregateSink(lake, "src", "agg", Seq("grp"), Seq("val"), cursor)
-    assert(t1.contains((0, 1)))
-    assert(same(Streams.cdfAggregate(lake, "agg"), scratch(lake)),
-      "legacy-applied tick was re-applied (double count)")
-    // new ticks past the legacy frontier apply normally under the new appId
-    lake.appendBronze("src", rows("r2", Seq((3L, "a", 2L))))
-    assert(Streams.cdfAggregateSink(lake, "src", "agg",
-      Seq("grp"), Seq("val"), cursor).contains((1, 2)))
-    assert(same(Streams.cdfAggregate(lake, "agg"), scratch(lake)))
-  }
-
-  test("legacy upgrade: a tick SPANNING the frontier clamps instead of double-applying the prefix") {
-    val lake = mkLake("cdfaggspan")
-    val cursor = Files.createTempDirectory("graft-cdfaggspan-cur").toString
-    lake.appendBronze("src", rows("r1", Seq((1L, "a", 10L), (2L, "b", 5L)))) // v1
-    // pre-upgrade binary applied (0,1] and crashed before its cursor commit
-    val preFold = Seq(("a", 1L, 10L), ("b", 1L, 5L)).toDF("grp", "cnt", "sum_val")
-    lake.mergeBronze("agg", preFold, Seq("grp"), txn = Some(("cdfagg:agg", 1L)))
-    Streams.migrateLegacyCdfAggCursor(lake, "agg", cursor)
-    // an append lands AFTER migration but BEFORE the replay tick: the first
-    // (uncapped) replay range spans the frontier — from=0 < f=1 < to=2 —
-    // and folding it whole would re-apply the (0,1] prefix (double count)
-    lake.appendBronze("src", rows("r2", Seq((3L, "a", 2L)))) // v2
-    assert(Streams.cdfAggregateSink(lake, "src", "agg",
-      Seq("grp"), Seq("val"), cursor).contains((0, 1)),
-      "spanning tick did not clamp at the legacy frontier")
-    val a1 = Streams.cdfAggregate(lake, "agg").filter(col("grp") === "a").collect().head
-    assert(a1.getAs[Long]("cnt") == 1L &&
-      a1.getAs[Number]("sum_val").longValue() == 10L,
-      s"spanning tick double-applied the legacy prefix: $a1")
-    // the unapplied suffix folds on the next tick
-    assert(Streams.cdfAggregateSink(lake, "src", "agg",
-      Seq("grp"), Seq("val"), cursor).contains((1, 2)))
-    assert(same(Streams.cdfAggregate(lake, "agg"), scratch(lake)))
-    assert(Streams.cdfAggregateSink(lake, "src", "agg",
-      Seq("grp"), Seq("val"), cursor).isEmpty)
-  }
-
-  test("legacy upgrade: a migrated replay under a SMALLER tick cap still dedupes every subrange") {
-    val lake = mkLake("cdfaggcapped")
-    val cursor = Files.createTempDirectory("graft-cdfaggcapped-cur").toString
-    lake.appendBronze("src", rows("r1", Seq((1L, "a", 10L))))              // v1
-    lake.appendBronze("src", rows("r2", Seq((2L, "a", 5L), (3L, "b", 2L)))) // v2
-    // pre-upgrade binary folded the WHOLE (0,2] prefix in one tick and
-    // crashed before the cursor commit
-    val preFold = Seq(("a", 2L, 15L), ("b", 1L, 2L)).toDF("grp", "cnt", "sum_val")
-    lake.mergeBronze("agg", preFold, Seq("grp"), txn = Some(("cdfagg:agg", 2L)))
-    Streams.migrateLegacyCdfAggCursor(lake, "agg", cursor)
-    // the post-upgrade consumer replays with maxVersions=1: BOTH one-version
-    // subranges of the applied prefix must be skipped (an exact-frontier
-    // match would re-apply (0,1] — the capped-replay double count)
-    assert(Streams.cdfAggregateSink(lake, "src", "agg",
-      Seq("grp"), Seq("val"), cursor, maxVersions = 1).contains((0, 1)))
-    assert(Streams.cdfAggregateSink(lake, "src", "agg",
-      Seq("grp"), Seq("val"), cursor, maxVersions = 1).contains((1, 2)))
-    assert(same(Streams.cdfAggregate(lake, "agg"), scratch(lake)),
-      "capped replay double-applied a subrange of the legacy prefix")
-    // and fresh data past the frontier folds normally
-    lake.appendBronze("src", rows("r3", Seq((4L, "b", 7L))))
-    assert(Streams.cdfAggregateSink(lake, "src", "agg",
-      Seq("grp"), Seq("val"), cursor, maxVersions = 1).contains((2, 3)))
-    assert(same(Streams.cdfAggregate(lake, "agg"), scratch(lake)))
-  }
-
 }
