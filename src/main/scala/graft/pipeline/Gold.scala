@@ -95,8 +95,8 @@ object Gold {
     * cursor to its (capped) head — never a version-0 history drain.
     * Between ticks the mart reflects the CURRENT silver tables for its
     * consumed ranges; it is exactly the from-scratch star once the gold
-    * cursors align with the silver frontiers (Job runs gold drains right
-    * after the silver drains, so every run ends aligned). */
+    * cursors align with the silver frontiers (a drained [[refreshStream]]
+    * behind drained silver streams ends aligned). */
   def starFeedTick(lake: Lakehouse, mart: String, grain: Seq[String],
       factDep: FeedDep, lookupDeps: Seq[FeedDep],
       factTable: String,
@@ -178,7 +178,9 @@ object Gold {
     * and the dim name is a pure function of the value), so the fact dep's
     * grains already cover every dim-driven change. silver_videos is the
     * one real lookup dep — a video's channel_id can move with zero fact
-    * churn. `silverFrontier(source)` caps each dep at the version the
+    * churn. The dims themselves are read as standing silver tables, so
+    * they must be refreshed before the tick that folds a grain naming a
+    * new dim value. `silverFrontier(source)` caps each dep at the version the
     * silver consumers have folded (None = uncapped). */
   private def martDeps(lake: Lakehouse,
       silverFrontier: String => Option[Int]): Map[String, (Seq[String], FeedDep, Seq[FeedDep], String, (Lakehouse, DataFrame) => DataFrame)] = {
@@ -217,33 +219,6 @@ object Gold {
         "dim_traffic_source", "source_id", "source_name"))
   }
 
-  /** CDF-driven refresh of all five marts (the gold leg of the
-    * Lakeflow-"Enzyme" analog): each mart keeps durable cursors under
-    * `<root>/_gold_cursors/<mart>/<source>` and rebuilds only the grains
-    * its feeds name — a run on an unchanged lake costs cursor reads only.
-    * Marts drain level-parallel (disjoint targets; settled Trys with
-    * suppressed-failure aggregation, same discipline as the silver
-    * levels). Run AFTER the silver drains. */
-  def refreshFromChangeFeeds(lake: Lakehouse,
-      silverFrontier: String => Option[Int] = _ => None): Seq[String] = {
-    import scala.concurrent.{Await, ExecutionContext, Future}
-    import scala.concurrent.duration.Duration
-    implicit val ec: ExecutionContext = ExecutionContext.global
-    val deps = martDeps(lake, silverFrontier)
-    val settled = Await.result(
-      Future.sequence(models.map(_.name).map(m => Future(scala.util.Try {
-        val (grain, fact, lookups, factCur, build) = deps(m)
-        starFeedTick(lake, m, grain, fact, lookups, factCur, build,
-          feedCursorRoot(lake, m))
-      }))), Duration.Inf)
-    settled.collectFirst { case scala.util.Failure(t) =>
-      settled.collect { case scala.util.Failure(o) if o ne t => o }
-        .foreach(t.addSuppressed)
-      throw t
-    }
-    models.map(_.name)
-  }
-
   /** The durable cursor root a mart's feed consumers use. */
   def feedCursorRoot(lake: Lakehouse, mart: String): String =
     s"${lake.root}/_gold_cursors/$mart"
@@ -251,19 +226,28 @@ object Gold {
   /** Continuous face of one mart:
     * [[graft.streaming.Streams.feedRefreshStream]] wired with this mart's
     * feed deps. Each micro-batch rebuilds the dep list, so the per-dep
-    * frontier caps re-read the CURRENT silver feed cursors — the streaming
-    * analog of [[refreshFromChangeFeeds]]' "gold never outruns silver"
-    * discipline. [[graft.streaming.Streams.silverRefreshStream]] advances
-    * those cursors, so run it on the mart's silver inputs too, or the gold
-    * stream stalls at the standing silver frontier. Caller starts the
-    * returned writer with a checkpoint dir; AvailableNow drains-and-stops.
-    * ONE driver per mart cursor tree — same contract as the batch ticks
-    * (Job's refresh lease serializes the batch side; don't run this
-    * stream concurrently with cdfRefresh runs). */
+    * frontier caps re-read the CURRENT silver feed cursors: gold never
+    * outruns silver. [[graft.streaming.Streams.silverRefreshStream]]
+    * advances those cursors, so run it on the mart's silver inputs too, or
+    * the gold stream stalls at the standing silver frontier. The
+    * dimensional marts read their dims as standing silver tables with no
+    * feed dep (see [[martDeps]]), so refresh the dims with
+    * [[Silver.refresh]] BEFORE each gold tick that folds new fact ranges:
+    * a grain folded against a stale dim keeps a null dim name until that
+    * grain changes again. Caller starts the returned writer with
+    * a checkpoint dir; AvailableNow drains-and-stops. ONE driver per mart
+    * cursor tree.
+    *
+    * The channel mart resets before a tick whenever it holds a channel_id
+    * the silver fact no longer does ([[resetChannelSummaryFeed]]): after a
+    * channel-identity change the fact's new-id keys never name the dead
+    * id's mart rows, so a grain-routed merge would keep them forever. */
   def refreshStream(lake: Lakehouse, mart: String)
       : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
     require(models.exists(_.name == mart), s"unknown gold mart: $mart")
     def tick(): Option[(Int, Int)] = {
+      if (mart == channelDailySummary.name && channelMartOrphaned(lake))
+        resetChannelSummaryFeed(lake)
       val (grain, fact, lookups, factCur, build) =
         martDeps(lake, Job.silverFeedFrontier(lake, _))(mart)
       starFeedTick(lake, mart, grain, fact, lookups, factCur, build,
@@ -273,13 +257,25 @@ object Gold {
     graft.streaming.Streams.feedRefreshStream(lake, mart, triggerSource, () => tick())
   }
 
+  /** Whether the channel mart holds a channel_id the silver channel fact
+    * does not — the fact was re-stamped under a new channel identity. */
+  private def channelMartOrphaned(lake: Lakehouse): Boolean = {
+    val mart = channelDailySummary.name
+    val fact = "fact_channel_daily_metrics"
+    lake.exists("gold", mart) && lake.exists("silver", fact) &&
+      !lake.table("gold", mart).select(col("channel_id")).distinct()
+        .join(lake.table("silver", fact).select(col("channel_id")).distinct(),
+          Seq("channel_id"), "left_anti")
+        .isEmpty
+  }
+
   /** Reset the channel summary's feed state after a channel-identity
     * change: the silver fact was re-stamped wholesale, and a grain-level
     * merge could never retract the dead channel_id's mart rows — drop the
     * mart (next tick rebuilds from the re-stamped fact) and its cursors
     * (cursor first would leave a live cursor past a missing mart; mart
     * first is safe because a missing mart always full-rebuilds). */
-  def resetChannelSummaryFeed(lake: Lakehouse): Unit = {
+  private def resetChannelSummaryFeed(lake: Lakehouse): Unit = {
     val mart = "gold_channel_daily_summary"
     if (lake.exists("gold", mart)) lake.deleteRecursively(lake.tableDir("gold", mart))
     val root = java.nio.file.Paths.get(feedCursorRoot(lake, mart))

@@ -729,11 +729,10 @@ object Silver {
         Seq("channel_id", "date")))
 
   /** Whether the CURRENT silver channel id no longer matches the standing
-    * channel-fact rows — the single-channel identity changed, so both the
-    * channel fact and the calendar dim's channel-source counts were
-    * computed under the OLD id's cross-join and must rebuild, not merge.
-    * Read BEFORE any feed refresh fixes the fact (the evidence is the
-    * stale fact itself). */
+    * channel-fact rows — the single-channel identity changed, so the
+    * channel fact was computed under the OLD id's cross-join and must
+    * rebuild, not merge. Read BEFORE any feed refresh fixes the fact (the
+    * evidence is the stale fact itself). */
   def channelIdentityChanged(lake: Lakehouse): Boolean = {
     if (!lake.exists("silver", "fact_channel_daily_metrics")
         || !lake.exists("silver", "silver_channels")) return false
@@ -751,7 +750,7 @@ object Silver {
     * carry a dead channel_id at their grain and a grain-level merge could
     * never retract them — recompute wholesale, pinned at the source head,
     * and jump the cursor past everything the recompute covered. Refresh
-    * silver_channels first (Job's level ordering does). */
+    * silver_channels first (its stream, or [[refresh]] on it). */
   def refreshChannelFactFromChangeFeed(lake: Lakehouse, cursorDir: String,
       maxVersions: Int = Int.MaxValue): Option[(Int, Int)] = {
     val source = "analytics_channel_daily_raw"
@@ -773,120 +772,6 @@ object Silver {
       latestWinsFeedTick(lake, "silver", target, source,
         Seq("channel_id", "date"), recencyOrder,
         raw => channelDailyTyped(raw, current), cursorDir, maxVersions)
-  }
-
-  /** CDF-driven refresh of the three observed-value dims: each is
-    * latest-wins on the dim value itself, so [[latestWinsFeedTick]] applies
-    * directly — a bronze DELETE retracting the last row carrying a value
-    * drops the value, exactly like the from-scratch model. dim_country's
-    * ISO enrich runs inside `typed` (per-row, keyed on the grain, recency
-    * columns preserved — it commutes with latest-wins, so
-    * enrich-then-dedup ≡ the model's dedup-then-enrich);
-    * dim_country_reference must be materialized first. */
-  def refreshDimFromChangeFeed(lake: Lakehouse, name: String, cursorDir: String,
-      maxVersions: Int = Int.MaxValue): Option[(Int, Int)] = name match {
-    case "dim_traffic_source" =>
-      latestWinsFeedTick(lake, "silver", name,
-        "analytics_video_traffic_source_daily_raw", Seq("source_id"), recencyOrder,
-        raw => observedDimTyped(raw, "insightTrafficSourceType", "source_id")
-          .select(col("source_id") +: col("source_id").as("source_name") +:
-            envelopeCols.map(col): _*),
-        cursorDir, maxVersions)
-    case "dim_device" =>
-      latestWinsFeedTick(lake, "silver", name,
-        "analytics_video_device_daily_raw", Seq("device_type"), recencyOrder,
-        raw => observedDimTyped(raw, "deviceType", "device_type")
-          .select(col("device_type") +: col("device_type").as("device_name") +:
-            envelopeCols.map(col): _*),
-        cursorDir, maxVersions)
-    case "dim_country" =>
-      latestWinsFeedTick(lake, "silver", name,
-        "analytics_video_country_daily_raw", Seq("country_code"), recencyOrder,
-        raw => countryEnrich(observedDimTyped(raw, "country", "country_code"), lake),
-        cursorDir, maxVersions)
-    case other =>
-      throw new IllegalArgumentException(s"not a feed-refreshable dim: $other")
-  }
-
-  /** The five fact sources feeding the calendar dim, each with its date
-    * extraction — the MODEL's own date semantics (same typed projections,
-    * same null filters), so the counted date set equals the fact's date
-    * set: every typed row's date is part of its fact's latest-wins grain,
-    * and a grain's winner carries that date. */
-  private def dimDateSources(lake: Lakehouse): Seq[(String, DataFrame => DataFrame)] = {
-    val video = Seq("fact_video_daily_metrics", "fact_video_traffic_source_metrics",
-      "fact_video_country_metrics", "fact_video_device_metrics").map { f =>
-      val spec = latestWinsSpecs(f)
-      spec.bronzeTable -> ((raw: DataFrame) => spec.typed(raw).select(col("date")))
-    }
-    video :+ ("analytics_channel_daily_raw" ->
-      ((raw: DataFrame) =>
-        channelDailyTyped(raw, currentChannelFrame(lake)).select(col("date"))))
-  }
-
-  /** The per-source date-count state table maintained by [[dimDateFeedTick]]
-    * (bronze-layer, log-managed — the counts need the writer-txn dedupe). */
-  def dimDateCountsTable(source: String): String = s"dim_date_counts_$source"
-
-  /** Drain every fact source's change feed into its per-source date-count
-    * state ([[graft.streaming.Streams.cdfAggregateSink]] with the date
-    * extraction as the typed projection): a date's count tracks the
-    * source's visible rows carrying it, so retractions can DROP a date.
-    * Fresh cursors snapshot-bootstrap (never a version-0 drain). One state table per
-    * source (the bootstrap contract) under cursors `<cursorRoot>/<source>`.
-    * Returns true when any tick folded changes. */
-  def dimDateFeedTick(lake: Lakehouse, cursorRoot: String,
-      maxVersions: Int = Int.MaxValue): Boolean =
-    dimDateSources(lake).map { case (source, typedDates) =>
-      // `any` tracks REAL folds only: a pure-maintenance range advances
-      // the cursor with folded=false, and counting it as a tick would
-      // re-materialize dim_date on an unchanged lake — contradicting the
-      // "maintenance ranges advance cursors WITHOUT rewriting MVs" contract
-      var any = false
-      var guard = 0
-      var tick = graft.streaming.Streams.cdfAggregateSinkFolded(lake, source,
-        dimDateCountsTable(source), Seq("date"), Nil,
-        s"$cursorRoot/$source", maxVersions, typed = typedDates,
-        snapshotBootstrap = true)
-      while (tick.isDefined) {
-        any |= tick.exists(_._3)
-        guard += 1
-        require(guard <= 100000, s"dim_date feed drain failed to converge on $source")
-        tick = graft.streaming.Streams.cdfAggregateSinkFolded(lake, source,
-          dimDateCountsTable(source), Seq("date"), Nil,
-          s"$cursorRoot/$source", maxVersions, typed = typedDates,
-          snapshotBootstrap = true)
-      }
-      any
-    }.reduce(_ || _)
-
-  /** Assemble the calendar dim from the per-source date counts: a date is
-    * in the calendar iff some source still has a visible row carrying it
-    * (cnt > 0). Tiny output (calendar-sized) — a full materialize. */
-  def assembleDimDate(lake: Lakehouse): Unit = {
-    val dates = dimDateSources(lake).map { case (source, _) =>
-      val t = dimDateCountsTable(source)
-      if (lake.exists("bronze", t))
-        graft.streaming.Streams.cdfAggregate(lake, t).select(col("date"))
-      else lake.spark.emptyDataFrame.select(lit(null).cast("date").as("date"))
-    }.reduce(_ union _).filter(col("date").isNotNull).distinct()
-    lake.materialize("silver", "dim_date", dateAttrs(dates))
-  }
-
-  /** Reset the calendar dim's CHANNEL-source count state (table + cursor):
-    * its counts were folded under the OLD channel's cross-join and a
-    * changed identity re-stamps history — the next tick
-    * snapshot-bootstraps under the new identity. Cursor dir first: a crash
-    * between the two deletes then leaves (no cursor, stale table), which
-    * the bootstrap handles by dropping the stale table itself — the
-    * reverse order would leave a live cursor pointing past a missing
-    * table, a partial-rebuild trap. */
-  def resetDimDateChannelCounts(lake: Lakehouse, cursorRoot: String): Unit = {
-    val source = "analytics_channel_daily_raw"
-    val cur = java.nio.file.Paths.get(s"$cursorRoot/$source")
-    if (java.nio.file.Files.exists(cur)) lake.deleteRecursively(cur)
-    val t = dimDateCountsTable(source)
-    if (lake.exists("bronze", t)) lake.deleteRecursively(lake.tableDir("bronze", t))
   }
 
   /** reference `:445-512`. Grain: (video_id, date). */
@@ -915,38 +800,31 @@ object Silver {
 
   /** Shared shape of the observed-value dims (reference `:787-841,903-957`):
     * distinct uppercased dim values, latest-wins per value. */
-  private def observedDimTyped(raw: DataFrame, headerName: String, dimCol: String): DataFrame =
-    parseReport(raw)
-      .select(
-        upper(bind(headerName)).as(dimCol),
-        col("snapshot_date"), col("ingest_ts_utc"), col("request_id"), col("run_id"),
-        col("schema_version"))
-      .filter(col(dimCol).isNotNull && col(dimCol) =!= "")
-
   private def observedDim(rawTable: String, headerName: String, dimCol: String): Lakehouse => DataFrame =
     lake => latestWins(
-      observedDimTyped(lake.table("bronze", rawTable), headerName, dimCol), Seq(dimCol))
+      parseReport(lake.table("bronze", rawTable))
+        .select(
+          upper(bind(headerName)).as(dimCol),
+          col("snapshot_date"), col("ingest_ts_utc"), col("request_id"), col("run_id"),
+          col("schema_version"))
+        .filter(col(dimCol).isNotNull && col(dimCol) =!= ""),
+      Seq(dimCol))
 
   val dimTrafficSource: Model = Model("dim_traffic_source", Nil, lake =>
     observedDim("analytics_video_traffic_source_daily_raw", "insightTrafficSourceType", "source_id")(lake)
       .select(col("source_id") +: col("source_id").as("source_name") +: envelopeCols.map(col): _*))
 
-  /** ISO-reference enrich shared by the full dim_country build and its
-    * feed fold (broadcast — 249 rows). */
-  private def countryEnrich(observed: DataFrame, lake: Lakehouse): DataFrame = {
+  /** reference `:844-901`: observed countries enriched from the static ISO
+    * reference (broadcast — 249 rows). */
+  val dimCountry: Model = Model("dim_country", Seq("dim_country_reference"), lake => {
     val ref = lake.table("silver", "dim_country_reference")
       .select(col("country_code"), col("country_name").as("ref_country_name"))
-    observed.join(broadcast(ref), Seq("country_code"), "left")
+    observedDim("analytics_video_country_daily_raw", "country", "country_code")(lake)
+      .join(broadcast(ref), Seq("country_code"), "left")
       .select(col("country_code") +:
         coalesce(col("ref_country_name"), col("country_code")).as("country_name") +:
         envelopeCols.map(col): _*)
-  }
-
-  /** reference `:844-901`: observed countries enriched from the static ISO
-    * reference. */
-  val dimCountry: Model = Model("dim_country", Seq("dim_country_reference"), lake =>
-    countryEnrich(
-      observedDim("analytics_video_country_daily_raw", "country", "country_code")(lake), lake))
+  })
 
   val dimDevice: Model = Model("dim_device", Nil, lake =>
     observedDim("analytics_video_device_daily_raw", "deviceType", "device_type")(lake)
@@ -997,18 +875,16 @@ object Silver {
     * jobs across executors, so independent MVs stop serializing behind one
     * another's stragglers; results are identical to [[refresh]] because
     * models only ever read tables their *earlier level* wrote. */
-  def refreshParallel(lake: Lakehouse, subset: Option[Set[String]] = None): Seq[Seq[String]] = {
+  def refreshParallel(lake: Lakehouse): Seq[Seq[String]] = {
     import scala.concurrent.{Await, ExecutionContext, Future}
     import scala.concurrent.duration.Duration
     implicit val ec: ExecutionContext = ExecutionContext.global
-    val wanted = models.filter(m => subset.forall(_.contains(m.name)))
-    val names = wanted.map(_.name).toSet
-    // depth = longest dependency chain within the refresh set
+    val byName = models.map(m => m.name -> m).toMap
+    // depth = longest chain of silver dependencies (bronze deps don't count)
     val depth = scala.collection.mutable.Map.empty[String, Int]
     def depthOf(m: Model): Int = depth.getOrElseUpdate(m.name,
-      m.deps.filter(names.contains).map(d => depthOf(wanted.find(_.name == d).get))
-        .foldLeft(-1)(math.max) + 1)
-    val levels = topoSort(wanted).groupBy(depthOf).toSeq.sortBy(_._1).map(_._2)
+      m.deps.flatMap(byName.get).map(depthOf).foldLeft(-1)(math.max) + 1)
+    val levels = topoSort(models).groupBy(depthOf).toSeq.sortBy(_._1).map(_._2)
     levels.map { level =>
       Await.result(
         Future.sequence(level.map(m => Future {

@@ -819,7 +819,7 @@ object StorageQueries {
       ORDER BY o_orderkey, valid_from_seq"""))
 
   /** CDF-driven star-mart refresh ([[graft.pipeline.Gold.starFeedTick]] —
-    * the machinery under `Gold.refreshFromChangeFeeds`): a latest-wins
+    * the machinery under `Gold.refreshStream`): a latest-wins
     * fact MV (orders observations) and a latest-wins lookup MV (customer
     * observations) are maintained from their bronze feeds, and the MART —
     * fact LEFT JOIN lookup + a derived column — is maintained from the

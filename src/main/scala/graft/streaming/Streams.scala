@@ -749,137 +749,82 @@ object Streams {
     * only after the merge returns. A key whose count reaches zero keeps a
     * `cnt = 0` tombstone row (merge cannot delete-without-replacing);
     * READS must filter `cnt > 0` — [[cdfAggregate]] is that read face.
-    * Returns the `(from, to]` range folded, or None when caught up.
-    *
-    * `typed` projects each change class (insert-side and delete-side,
-    * meta columns stripped) before aggregation — so the keys/sums can be
-    * DERIVED values (a date parsed out of a payload), and a projection
-    * that explodes rows counts each produced row ±1. The count algebra
-    * stays linear because `typed` is applied to inserts and deletes
-    * symmetrically. `snapshotBootstrap = true` makes a FRESH cursor seed
-    * the target from ONE visible-rows scan pinned at the source head
-    * (valid on a mature lake whose early manifests are pruned — a
-    * version-0 history drain would fail fast forever) and jump the cursor
-    * to the head; requires a SINGLE-source target (the bootstrap replaces
-    * a stale pre-existing target wholesale, which would erase other
-    * sources' contributions). */
+    * Returns the `(from, to]` range folded, or None when caught up. */
   def cdfAggregateSink(lake: graft.pipeline.Lakehouse, source: String,
       target: String, keys: Seq[String], sumCols: Seq[String],
-      cursorDir: String, maxVersions: Int = Int.MaxValue,
-      typed: DataFrame => DataFrame = identity,
-      snapshotBootstrap: Boolean = false): Option[(Int, Int)] =
-    cdfAggregateSinkFolded(lake, source, target, keys, sumCols, cursorDir,
-      maxVersions, typed, snapshotBootstrap).map { case (from, to, _) => (from, to) }
-
-  /** [[cdfAggregateSink]] plus a FOLDED signal: `Some((from, to, folded))`
-    * where `folded = false` means the tick only advanced the cursor over
-    * a pure-maintenance (dataChange=false) range and the target was NOT
-    * rewritten. Callers that gate downstream re-materialization on "did
-    * anything change" (the calendar-dim assembly) must consume this
-    * signal, not mere tick presence: an OPTIMIZE-only range advancing a
-    * cursor is not a data change, and treating it as one re-materializes
-    * MVs on an unchanged lake — breaking the "maintenance ranges advance
-    * cursors WITHOUT rewriting MVs" contract. */
-  def cdfAggregateSinkFolded(lake: graft.pipeline.Lakehouse, source: String,
-      target: String, keys: Seq[String], sumCols: Seq[String],
-      cursorDir: String, maxVersions: Int = Int.MaxValue,
-      typed: DataFrame => DataFrame = identity,
-      snapshotBootstrap: Boolean = false): Option[(Int, Int, Boolean)] = {
+      cursorDir: String, maxVersions: Int = Int.MaxValue): Option[(Int, Int)] = {
     import org.apache.spark.sql.functions.{coalesce, col, lit, sum}
     require(keys.nonEmpty, "cdfAggregateSink needs at least one key column")
     registerCursor(lake.root, source, cursorDir)
     val cur = java.nio.file.Paths.get(cursorDir)
-    def fold(signed: DataFrame): DataFrame = {
-      val aggs = (sum(col("__s")).as("cnt") +:
-        sumCols.map(c => sum(col(c) * col("__s")).as(s"sum_$c")))
-      signed.groupBy(keys.map(col): _*).agg(aggs.head, aggs.tail: _*)
-    }
-    val from0 = lake.changesCursor(cur)
-    val to0 = lake.cappedChangesTo(source, from0, maxVersions)
-    if (to0 <= from0) return None
-    if (snapshotBootstrap && from0 == 0) {
-      // FRESH CURSOR → one pinned visible-rows scan, never a history
-      // drain. A stale target (the reset-for-rebuild idiom: cursor dir
-      // deleted, table left behind by a crash mid-reset) is dropped first
-      // — merging the snapshot into it would strand retired keys. The
-      // whole step is crash-safe: delete → re-bootstrap; merge-then-crash
-      // → the replay deletes the half-built target and redoes it.
-      val head = lake.committedBronzeVersion(source)
-      if (lake.exists("bronze", target))
-        lake.deleteRecursively(lake.tableDir("bronze", target))
-      val snap = fold(typed(lake.tableAt("bronze", source, head))
-        .withColumn("__s", lit(1L)))
-      lake.mergeBronze(target, snap, keys,
-        txn = Some((s"cdfagg:$source:$target", head.toLong)),
-        nullSafeKeys = true)
-      lake.commitChangesCursor(cur, head)
-      return Some((0, head, true))
-    }
-    Some((lake.tableChanges(source, from0, to0), from0, to0)).map { case (changes0, from, to) =>
-      // a range of pure OPTIMIZE/VACUUM commits (dataChange=false) carries
-      // no rows: advance past it without merging — an unchanged source's
-      // tick must cost a cursor read, not an empty-delta merge commit
-      if (lake.exists("bronze", target) && changes0.isEmpty) {
-        lake.commitChangesCursor(cur, to)
-        return Some((from, to, false))
-      }
-      // a CAPPED range can end before an ADD COLUMNS landed a column the
-      // typed projection (or the key/sum list) references: the feed's
-      // frames (self-consistent at the RANGE's head) then lack it, and
-      // referencing it would throw on every retry of the same capped
-      // range — a livelock. Fill every missing head-schema column with a
-      // typed NULL: exactly what a from-scratch read of those older files
-      // would see
-      lazy val headSchema = lake.table("bronze", source).schema
-      val changes = headSchema.fields
-        .filterNot(f => changes0.columns.contains(f.name))
-        .foldLeft(changes0)((d, f) =>
-          d.withColumn(f.name, lit(null).cast(f.dataType)))
-      val metaCols = Seq("_change_type", "_commit_version")
-      val signed = typed(changes
-          .filter(col("_change_type").isin("insert", "update_postimage"))
-          .drop(metaCols: _*)).withColumn("__s", lit(1L))
-        .unionByName(typed(changes
-          .filter(col("_change_type").isin("delete", "update_preimage"))
-          .drop(metaCols: _*)).withColumn("__s", lit(-1L)))
-      val deltas = fold(signed)
-      val merged =
-        if (!lake.exists("bronze", target)) deltas
-        else {
-          val prev = lake.table("bronze", target)
-          // additions widen DECIMAL precision — cast back to the delta
-          // schema's types so the target schema is IDENTICAL every tick
-          // (the log's schema evolution is ADD COLUMNS, never retype)
-          // BOTH sides need the null-default: a tick whose rows for a key
-          // all carry NULL in the summed column aggregates to a NULL delta,
-          // and 500 + NULL = NULL would wipe the key's accumulated sum
-          // (from-scratch SUM ignores NULLs — the fold must too)
-          val sumExprs = sumCols.map { c =>
-            (coalesce(prev.col(s"sum_$c"), lit(0))
-              + coalesce(deltas.col(s"sum_$c"), lit(0)))
-              .cast(deltas.schema(s"sum_$c").dataType).as(s"sum_$c")
-          }
-          // NULL-SAFE fold join: the capped-range missing-column fill above
-          // can hand a KEY column typed NULLs, and a plain equality join
-          // would miss the target's standing NULL-key row — the delta would
-          // then overwrite instead of fold (and the merge below, null-safe
-          // too, would otherwise strand a duplicate NULL-key row per tick)
-          deltas.join(prev,
-            keys.map(k => deltas(k) <=> prev(k)).reduce(_ && _), "left").select(
-            keys.map(deltas.col) ++
-              Seq((coalesce(prev.col("cnt"), lit(0L)) + deltas.col("cnt")).as("cnt")) ++
-              sumExprs: _*)
-        }
-      // the txn appId carries the SOURCE too: two sources folding into one
-      // target are independent writers — a shared appId would make the
-      // second source's first merge look like a replay of the first's and
-      // silently drop it while its cursor still advanced
-      lake.mergeBronze(target, merged, keys,
-        txn = Some((s"cdfagg:$source:$target", to.toLong)),
-        nullSafeKeys = true)
+    val from = lake.changesCursor(cur)
+    val to = lake.cappedChangesTo(source, from, maxVersions)
+    if (to <= from) return None
+    val changes0 = lake.tableChanges(source, from, to)
+    // a range of pure OPTIMIZE/VACUUM commits (dataChange=false) carries
+    // no rows: advance past it without merging — an unchanged source's
+    // tick must cost a cursor read, not an empty-delta merge commit
+    if (lake.exists("bronze", target) && changes0.isEmpty) {
       lake.commitChangesCursor(cur, to)
-      (from, to, true)
+      return Some((from, to))
     }
+    // a CAPPED range can end before an ADD COLUMNS landed a column the
+    // key/sum list references: the feed's frames (self-consistent at the
+    // RANGE's head) then lack it, and referencing it would throw on every
+    // retry of the same capped range — a livelock. Fill every missing
+    // head-schema column with a typed NULL: exactly what a from-scratch
+    // read of those older files would see
+    lazy val headSchema = lake.table("bronze", source).schema
+    val changes = headSchema.fields
+      .filterNot(f => changes0.columns.contains(f.name))
+      .foldLeft(changes0)((d, f) =>
+        d.withColumn(f.name, lit(null).cast(f.dataType)))
+    val metaCols = Seq("_change_type", "_commit_version")
+    val signed = changes
+        .filter(col("_change_type").isin("insert", "update_postimage"))
+        .drop(metaCols: _*).withColumn("__s", lit(1L))
+      .unionByName(changes
+        .filter(col("_change_type").isin("delete", "update_preimage"))
+        .drop(metaCols: _*).withColumn("__s", lit(-1L)))
+    val aggs = (sum(col("__s")).as("cnt") +:
+      sumCols.map(c => sum(col(c) * col("__s")).as(s"sum_$c")))
+    val deltas = signed.groupBy(keys.map(col): _*).agg(aggs.head, aggs.tail: _*)
+    val merged =
+      if (!lake.exists("bronze", target)) deltas
+      else {
+        val prev = lake.table("bronze", target)
+        // additions widen DECIMAL precision — cast back to the delta
+        // schema's types so the target schema is IDENTICAL every tick
+        // (the log's schema evolution is ADD COLUMNS, never retype)
+        // BOTH sides need the null-default: a tick whose rows for a key
+        // all carry NULL in the summed column aggregates to a NULL delta,
+        // and 500 + NULL = NULL would wipe the key's accumulated sum
+        // (from-scratch SUM ignores NULLs — the fold must too)
+        val sumExprs = sumCols.map { c =>
+          (coalesce(prev.col(s"sum_$c"), lit(0))
+            + coalesce(deltas.col(s"sum_$c"), lit(0)))
+            .cast(deltas.schema(s"sum_$c").dataType).as(s"sum_$c")
+        }
+        // NULL-SAFE fold join: the capped-range missing-column fill above
+        // can hand a KEY column typed NULLs, and a plain equality join
+        // would miss the target's standing NULL-key row — the delta would
+        // then overwrite instead of fold (and the merge below, null-safe
+        // too, would otherwise strand a duplicate NULL-key row per tick)
+        deltas.join(prev,
+          keys.map(k => deltas(k) <=> prev(k)).reduce(_ && _), "left").select(
+          keys.map(deltas.col) ++
+            Seq((coalesce(prev.col("cnt"), lit(0L)) + deltas.col("cnt")).as("cnt")) ++
+            sumExprs: _*)
+      }
+    // the txn appId carries the SOURCE too: two sources folding into one
+    // target are independent writers — a shared appId would make the
+    // second source's first merge look like a replay of the first's and
+    // silently drop it while its cursor still advanced
+    lake.mergeBronze(target, merged, keys,
+      txn = Some((s"cdfagg:$source:$target", to.toLong)),
+      nullSafeKeys = true)
+    lake.commitChangesCursor(cur, to)
+    Some((from, to))
   }
 
   /** The read face of a [[cdfAggregateSink]] target: visible aggregate
@@ -987,13 +932,16 @@ object Streams {
     completeReportIndexVersions(indexDir).lastOption
 
   /** CONTINUOUS silver maintenance — the Lakeflow streaming-MV refresh
-    * shape, built on the same change-feed tick `Job.run(cdfRefresh = true)`
-    * runs, on the same cursor dir (`Job.feedCursorDir`):
+    * shape, built on the change-feed ticks, each on its cursor dir
+    * (`Job.feedCursorDir`):
     *   - a latest-wins spec model → `Silver.refreshFromChangeFeed`;
     *   - `silver_video_metadata_scd2` or `silver_videos` →
     *     `Silver.refreshVideoModelsFromChangeFeed` on the `video_models`
     *     cursor (one composite cursor maintains both, so stream one of
-    *     the two names, not both).
+    *     the two names, not both);
+    *   - `fact_channel_daily_metrics` →
+    *     `Silver.refreshChannelFactFromChangeFeed` (it cross-joins the
+    *     current silver channel, so stream `silver_channels` first).
     * The file stream over the source's `_a*` dirs is only the wake-up
     * signal ([[feedRefreshStream]]). Each micro-batch, plus one drain at
     * construction, runs the tick until it converges. Visibility therefore
@@ -1002,11 +950,10 @@ object Streams {
     * retractions. A fresh cursor bootstraps from the source snapshot, so
     * no prior full refresh is needed.
     *
-    * ONE driver per cursor tree: do not run this stream together with
-    * `cdfRefresh` job runs on the same lake. Silver cursors are the
-    * frontier caps of `Gold.refreshStream`, so running both streams keeps
-    * the marts current. Returns the writer; caller starts it with a
-    * checkpoint dir (AvailableNow for drain-and-stop catch-up runs). */
+    * ONE driver per cursor tree. Silver cursors are the frontier caps of
+    * `Gold.refreshStream`, so running both streams keeps the marts
+    * current. Returns the writer; caller starts it with a checkpoint dir
+    * (AvailableNow for drain-and-stop catch-up runs). */
   def silverRefreshStream(lake: graft.pipeline.Lakehouse, model: String)
       : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
     import graft.pipeline.{Job, Silver}
@@ -1014,6 +961,9 @@ object Streams {
       case "silver_video_metadata_scd2" | "silver_videos" =>
         ("videos_raw", () => Silver.refreshVideoModelsFromChangeFeed(
           lake, Job.feedCursorDir(lake, "video_models")))
+      case "fact_channel_daily_metrics" =>
+        ("analytics_channel_daily_raw", () => Silver.refreshChannelFactFromChangeFeed(
+          lake, Job.feedCursorDir(lake, model)))
       case m =>
         val spec = Silver.latestWinsSpecs.getOrElse(m,
           throw new IllegalArgumentException(s"$m has no change-feed tick to stream"))

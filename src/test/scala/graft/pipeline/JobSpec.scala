@@ -91,117 +91,6 @@ class JobSpec extends SparkSpec {
     }
   }
 
-  test("day-2 change-feed run equals a full recompute over the same bronze") {
-    // the cdfRefresh mode: the six latest-wins models drain the bronze
-    // change feed through durable cursors instead of snapshot-pruned merges
-    val cdfLake = new Lakehouse(spark, Files.createTempDirectory("graft-job-cdf").toString)
-    val fullLake = new Lakehouse(spark, Files.createTempDirectory("graft-job-cfull").toString)
-    Seq(cdfLake, fullLake).foreach { lake =>
-      val r1 = Job.run(lake, DataClient, AnalyticsClient,
-        startDate = "2025-05-30", endDate = "2025-06-01",
-        cdfRefresh = lake eq cdfLake,
-        now = Timestamp.valueOf("2025-06-02 09:00:00"), runId = "day1")
-      assert(r1.status == "success", r1.toString)
-    }
-    val r2cdf = Job.run(cdfLake, DataClient, AnalyticsClient,
-      startDate = "2025-05-31", endDate = "2025-06-02", cdfRefresh = true,
-      now = Timestamp.valueOf("2025-06-03 09:00:00"), runId = "day2")
-    val r2full = Job.run(fullLake, DataClient, AnalyticsClient,
-      startDate = "2025-05-31", endDate = "2025-06-02",
-      now = Timestamp.valueOf("2025-06-03 09:00:00"), runId = "day2")
-    assert(r2cdf.status == "success", r2cdf.toString)
-    assert(r2full.status == "success", r2full.toString)
-    Silver.models.map(_.name).foreach { m =>
-      def rows(lake: Lakehouse) = lake.table("silver", m)
-        .drop("request_id").collect().map(_.toString).sorted.toSeq
-      assert(rows(cdfLake) == rows(fullLake),
-        s"$m differs between change-feed and full day-2 refresh")
-    }
-    // FULL COVERAGE: every silver consumer left a durable cursor — the
-    // six latest-wins models, the videos composite (SCD2 + silver_videos),
-    // the channel fact, the three observed dims, and the five calendar-dim
-    // count feeds — proving no model went through a snapshot path
-    val consumers = Silver.latestWinsSpecs.keys.toSeq ++
-      Seq("video_models", "fact_channel_daily_metrics",
-        "dim_traffic_source", "dim_device", "dim_country") ++
-      Seq("analytics_video_daily_raw", "analytics_video_traffic_source_daily_raw",
-        "analytics_video_country_daily_raw", "analytics_video_device_daily_raw",
-        "analytics_channel_daily_raw").map(s => s"dim_date/$s")
-    consumers.foreach { c =>
-      assert(java.nio.file.Files.isDirectory(
-        java.nio.file.Paths.get(Job.feedCursorDir(cdfLake, c))),
-        s"feed cursor missing for $c — a snapshot path must have run")
-    }
-    // …and the GOLD marts match the full recompute and left their own
-    // feed cursors (fact dep per mart; video/dimensional marts also watch
-    // videos_raw for channel_id moves)
-    Gold.models.map(_.name).foreach { m =>
-      def rows(lake: Lakehouse) = lake.table("gold", m)
-        .collect().map(_.toString).sorted.toSeq
-      assert(rows(cdfLake) == rows(fullLake),
-        s"$m differs between change-feed and full day-2 refresh")
-      assert(java.nio.file.Files.isDirectory(
-        java.nio.file.Paths.get(Gold.feedCursorRoot(cdfLake, m))),
-        s"gold feed cursors missing for $m")
-    }
-    // one more drain pass catches each cursor up past the maintenance
-    // commits (OPTIMIZE is dataChange=false — the ticks advance cursors
-    // WITHOUT rewriting any MV), then a second pass is all-caught-up and
-    // touches nothing: an unchanged lake costs cursor reads only
-    def drainAll(): Boolean = {
-      var any = false
-      Silver.latestWinsSpecs.keys.foreach { m =>
-        any |= Silver.refreshFromChangeFeed(cdfLake, m, Job.feedCursorDir(cdfLake, m)).isDefined
-      }
-      any |= Silver.refreshVideoModelsFromChangeFeed(
-        cdfLake, Job.feedCursorDir(cdfLake, "video_models")).isDefined
-      any |= Silver.refreshChannelFactFromChangeFeed(
-        cdfLake, Job.feedCursorDir(cdfLake, "fact_channel_daily_metrics")).isDefined
-      Seq("dim_traffic_source", "dim_device", "dim_country").foreach { d =>
-        any |= Silver.refreshDimFromChangeFeed(cdfLake, d, Job.feedCursorDir(cdfLake, d)).isDefined
-      }
-      any |= Silver.dimDateFeedTick(cdfLake, Job.feedCursorDir(cdfLake, "dim_date"))
-      Gold.refreshFromChangeFeeds(cdfLake)
-      any
-    }
-    def allVersions() =
-      Silver.models.map(m => m.name -> cdfLake.tableVersion("silver", m.name)) ++
-        Gold.models.map(m => m.name -> cdfLake.tableVersion("gold", m.name))
-    val versBefore = allVersions()
-    drainAll() // maintenance-commit catch-up: cursor advances, no rewrites
-    assert(!drainAll(), "second drain pass on an unchanged lake still ticked")
-    val versAfter = allVersions()
-    assert(versBefore == versAfter,
-      s"caught-up drains rewrote a model: before=$versBefore after=$versAfter")
-    Silver.latestWinsSpecs.foreach { case (m, spec) =>
-      val cur = java.nio.file.Paths.get(Job.feedCursorDir(cdfLake, m))
-      assert(cdfLake.changesCursor(cur) ==
-        cdfLake.committedBronzeVersion(spec.bronzeTable),
-        s"$m cursor not caught up")
-    }
-    // and the MVs are still the recompute after the catch-up ticks
-    Silver.models.map(_.name).foreach { m =>
-      def rows(lake: Lakehouse) = lake.table("silver", m)
-        .drop("request_id").collect().map(_.toString).sorted.toSeq
-      assert(rows(cdfLake) == rows(fullLake), s"$m diverged after catch-up")
-    }
-    // decommission releases the retention hold: cursor dirs gone, registry
-    // markers pointing at them are ignored from then on, and the calendar
-    // dim's count-state tables go with them
-    Job.decommissionFeedCursors(cdfLake)
-    consumers.foreach { c =>
-      assert(!java.nio.file.Files.exists(
-        java.nio.file.Paths.get(Job.feedCursorDir(cdfLake, c))))
-    }
-    assert(!cdfLake.tableNames("bronze").exists(_.startsWith("dim_date_counts_")),
-      "decommission left calendar-dim count state behind")
-    Gold.models.map(_.name).foreach { m =>
-      assert(!java.nio.file.Files.exists(
-        java.nio.file.Paths.get(Gold.feedCursorRoot(cdfLake, m))),
-        s"decommission left gold cursors for $m")
-    }
-  }
-
   /** Day-2 Data API persona: the account's channel id CHANGED. */
   private object NewChannelClient extends DataApiIngest.DataApiClient {
     def getJson(path: String, params: Map[String, String]): Json.JObj = path match {
@@ -218,97 +107,26 @@ class JobSpec extends SparkSpec {
     }
   }
 
-  test("channel-identity change under cdfRefresh: fact, calendar counts and gold summary all re-stamp") {
+  test("channel-identity change: after day 2 the channel fact and gold summary carry only the new id") {
     // day 1 runs under channel UC_9; day 2's Data API serves a NEW channel
-    // id — the cross-joined "current channel" state changed, so the
-    // channel fact recomputes wholesale (a grain merge could never retract
-    // the dead id), the calendar dim's channel-source counts reset and
-    // re-bootstrap under the new identity, and the gold channel summary's
-    // feed state resets — all while staying ≡ a full recompute
-    val DataClient2 = NewChannelClient
-    val cdfLake = new Lakehouse(spark, Files.createTempDirectory("graft-job-chch").toString)
-    val fullLake = new Lakehouse(spark, Files.createTempDirectory("graft-job-chfull").toString)
-    Seq(cdfLake, fullLake).foreach { lake =>
-      val r1 = Job.run(lake, DataClient, AnalyticsClient,
-        startDate = "2025-05-30", endDate = "2025-06-01",
-        cdfRefresh = lake eq cdfLake,
-        now = Timestamp.valueOf("2025-06-02 09:00:00"), runId = "day1")
-      assert(r1.status == "success", r1.toString)
-    }
-    assert(cdfLake.table("silver", "fact_channel_daily_metrics")
-      .select(col("channel_id")).distinct().collect().map(_.getString(0)).toSeq == Seq("UC_9"))
-    val r2cdf = Job.run(cdfLake, DataClient2, AnalyticsClient,
-      startDate = "2025-05-31", endDate = "2025-06-02", cdfRefresh = true,
-      now = Timestamp.valueOf("2025-06-03 09:00:00"), runId = "day2")
-    val r2full = Job.run(fullLake, DataClient2, AnalyticsClient,
-      startDate = "2025-05-31", endDate = "2025-06-02",
-      now = Timestamp.valueOf("2025-06-03 09:00:00"), runId = "day2")
-    assert(r2cdf.status == "success", r2cdf.toString)
-    assert(r2full.status == "success", r2full.toString)
-    // the new identity re-stamped HISTORY in the feed-refreshed lake too
-    val ids = cdfLake.table("silver", "fact_channel_daily_metrics")
-      .select(col("channel_id")).distinct().collect().map(_.getString(0)).toSeq
-    assert(ids == Seq("UC_NEW"), s"stale channel ids survived the change: $ids")
-    (Silver.models.map(_.name) ++ Gold.models.map(_.name)).foreach { m =>
-      val layer = if (m.startsWith("gold_")) "gold" else "silver"
-      def rows(lake: Lakehouse) = lake.table(layer, m)
-        .drop("request_id").collect().map(_.toString).sorted.toSeq
-      assert(rows(cdfLake) == rows(fullLake),
-        s"$m differs between change-feed and full refresh after the identity change")
-    }
-  }
-
-  test("two concurrent cdfRefresh runs serialize through the refresh lease to exactly-once") {
-    import scala.concurrent.{Await, ExecutionContext, Future}
-    import scala.concurrent.duration._
-    implicit val ec: ExecutionContext = ExecutionContext.global
-    val lake = new Lakehouse(spark, Files.createTempDirectory("graft-job-race").toString)
+    // id — the cross-joined "current channel" re-stamps the whole channel
+    // fact history, and the gold summary follows it
+    val lake = new Lakehouse(spark, Files.createTempDirectory("graft-job-chch").toString)
     val r1 = Job.run(lake, DataClient, AnalyticsClient,
-      startDate = "2025-05-30", endDate = "2025-06-01", cdfRefresh = true,
+      startDate = "2025-05-30", endDate = "2025-06-01",
       now = Timestamp.valueOf("2025-06-02 09:00:00"), runId = "day1")
     assert(r1.status == "success", r1.toString)
-    // two full day-2 jobs race over the SAME cursor tree: both ingest
-    // concurrently (writer-safe), the refresh phases serialize through the
-    // lease — the second drains whatever the first left (usually nothing)
-    val rs = Await.result(Future.sequence(Seq("day2a", "day2b").map(id => Future {
-      Job.run(lake, DataClient, AnalyticsClient,
-        startDate = "2025-05-31", endDate = "2025-06-02", cdfRefresh = true,
-        now = Timestamp.valueOf("2025-06-03 09:00:00"), runId = id)
-    })), 600.seconds)
-    rs.foreach(r => assert(r.status == "success", r.toString))
-    // every pending change is consumed: each run drains AFTER its own
-    // ingest, so whichever refresh ran last covered both ingests. Final
-    // exactly-once claim: every silver model and gold mart equals its
-    // from-scratch recompute over the SAME bronze (no double-fold, no
-    // stale-range overwrite, no lost update)
-    (Silver.models.map(m => ("silver", m.name, m.build)) ++
-      Gold.models.map(m => ("gold", m.name, m.build))).foreach {
-      case (layer, name, build) =>
-        val got = lake.table(layer, name).collect().map(_.toString).sorted.toSeq
-        val want = build(lake).collect().map(_.toString).sorted.toSeq
-        assert(got == want, s"$name != recompute after racing cdfRefresh runs")
-    }
-    // the lease is released
-    assert(!java.nio.file.Files.exists(Job.refreshLeasePath(lake)))
-  }
-
-  test("refresh lease: a fresh lease blocks until timeout; a stale lease is stolen") {
-    val lake = new Lakehouse(spark, Files.createTempDirectory("graft-job-lease").toString)
-    val lock = Job.refreshLeasePath(lake)
-    java.nio.file.Files.createDirectories(lock.getParent)
-    java.nio.file.Files.write(lock, "holder".getBytes)
-    // fresh lease: the contender waits, then fails loudly naming the lease
-    val err = intercept[IllegalArgumentException] {
-      Job.acquireRefreshLease(lake, "contender", staleMillis = 60000L, waitMillis = 500L)
-    }
-    assert(err.getMessage.contains("lease"), err.getMessage)
-    // stale lease (crashed holder): exactly one stealer wins and acquires
-    java.nio.file.Files.setLastModifiedTime(lock,
-      java.nio.file.attribute.FileTime.fromMillis(System.currentTimeMillis() - 3600000L))
-    val got = Job.acquireRefreshLease(lake, "stealer", staleMillis = 1000L, waitMillis = 500L)
-    assert(java.nio.file.Files.exists(got))
-    assert(new String(java.nio.file.Files.readAllBytes(got)) == "stealer")
-    java.nio.file.Files.delete(got)
+    def ids(layer: String, t: String) = lake.table(layer, t)
+      .select(col("channel_id")).distinct().collect().map(_.getString(0)).toSeq
+    assert(ids("silver", "fact_channel_daily_metrics") == Seq("UC_9"))
+    val r2 = Job.run(lake, NewChannelClient, AnalyticsClient,
+      startDate = "2025-05-31", endDate = "2025-06-02",
+      now = Timestamp.valueOf("2025-06-03 09:00:00"), runId = "day2")
+    assert(r2.status == "success", r2.toString)
+    Seq("silver" -> "fact_channel_daily_metrics", "gold" -> "gold_channel_daily_summary")
+      .foreach { case (layer, t) =>
+        assert(ids(layer, t) == Seq("UC_NEW"), s"stale channel ids survived in $t: ${ids(layer, t)}")
+      }
   }
 
   test("standing mart adopted into feed mode on a mature source bootstraps per-dep " +
@@ -349,148 +167,77 @@ class JobSpec extends SparkSpec {
     assert(actual == expected, "post-adoption incremental tick diverged")
   }
 
-  test("OPTIMIZE-only commits advance dim_date cursors without re-materializing the calendar dim") {
-    val lake = new Lakehouse(spark, Files.createTempDirectory("graft-job-dimmaint").toString)
+  test("feed cursors pin vacuum retention until decommissioned") {
+    val lake = new Lakehouse(spark, Files.createTempDirectory("graft-job-abandon").toString)
     val r1 = Job.run(lake, DataClient, AnalyticsClient,
-      startDate = "2025-05-30", endDate = "2025-06-01", cdfRefresh = true,
+      startDate = "2025-05-30", endDate = "2025-06-01",
       now = Timestamp.valueOf("2025-06-02 09:00:00"), runId = "day1")
     assert(r1.status == "success", r1.toString)
-    val root = Job.feedCursorDir(lake, "dim_date")
-    // catch up past the run's own post-refresh maintenance commits first
-    Silver.dimDateFeedTick(lake, root)
-    val v0 = lake.tableVersion("silver", "dim_date")
-    val src = "analytics_channel_daily_raw"
-    val curBefore = lake.changesCursor(java.nio.file.Paths.get(s"$root/$src"))
-    lake.compact("bronze", src, 1) // OPTIMIZE: a dataChange=false commit
-    val ticked = Silver.dimDateFeedTick(lake, root)
-    assert(!ticked, "a pure-maintenance range counted as a dim_date tick")
-    // the cursor DID advance past the maintenance commit…
-    assert(lake.changesCursor(java.nio.file.Paths.get(s"$root/$src")) > curBefore,
-      "maintenance range did not advance the cursor")
-    // …and Job's assembly gate therefore leaves the calendar dim untouched
-    if (ticked || !lake.exists("silver", "dim_date")) Silver.assembleDimDate(lake)
-    assert(lake.tableVersion("silver", "dim_date") == v0,
-      "OPTIMIZE-only commits re-materialized dim_date on an unchanged lake")
-  }
-
-  test("identity-change resets survive a crash between the level-1 re-stamp and the gold stage") {
-    // the evidence-erasure window: the level-1 channel-fact drain re-stamps
-    // the standing fact to the new id, so a run that fails AFTER it (here:
-    // a sabotaged dim_date tick) leaves nothing for the next run to detect.
-    // The resets happen at detection time — before the re-stamp can erase
-    // them — so day 3 still converges to the full recompute.
-    val cdfLake = new Lakehouse(spark, Files.createTempDirectory("graft-job-chcrash").toString)
-    val fullLake = new Lakehouse(spark, Files.createTempDirectory("graft-job-chcrashf").toString)
-    Seq(cdfLake, fullLake).foreach { lake =>
-      val r1 = Job.run(lake, DataClient, AnalyticsClient,
-        startDate = "2025-05-30", endDate = "2025-06-01",
-        cdfRefresh = lake eq cdfLake,
-        now = Timestamp.valueOf("2025-06-02 09:00:00"), runId = "day1")
-      assert(r1.status == "success", r1.toString)
+    // register the silver feed consumers: each drain leaves a durable
+    // cursor that holds log + vacuum retention on its bronze source
+    Silver.latestWinsSpecs.keys.foreach { m =>
+      while (Silver.refreshFromChangeFeed(lake, m, Job.feedCursorDir(lake, m)).isDefined) ()
     }
-    // sabotage: a regular FILE where the dim_date cursor tree goes — the
-    // level-2 dim_date tick throws after level 1 already re-stamped
-    val dimDateCur = java.nio.file.Paths.get(Job.feedCursorDir(cdfLake, "dim_date"))
-    cdfLake.deleteRecursively(dimDateCur)
-    java.nio.file.Files.write(dimDateCur, Array[Byte](1))
-    val r2 = Job.run(cdfLake, NewChannelClient, AnalyticsClient,
-      startDate = "2025-05-31", endDate = "2025-06-02", cdfRefresh = true,
-      now = Timestamp.valueOf("2025-06-03 09:00:00"), runId = "day2")
-    assert(r2.status == "failed", s"sabotaged dim_date tick should fail the run: $r2")
-    // the re-stamp DID land before the crash — day 3 cannot re-detect
-    val ids = cdfLake.table("silver", "fact_channel_daily_metrics")
-      .select(col("channel_id")).distinct().collect().map(_.getString(0)).toSeq
-    assert(ids == Seq("UC_NEW"), s"expected the failed run to have re-stamped: $ids")
-    java.nio.file.Files.delete(dimDateCur)
-    val r3 = Job.run(cdfLake, NewChannelClient, AnalyticsClient,
-      startDate = "2025-06-01", endDate = "2025-06-03", cdfRefresh = true,
-      now = Timestamp.valueOf("2025-06-04 09:00:00"), runId = "day3")
-    assert(r3.status == "success", r3.toString)
-    // full-mode twin over the same day-2/day-3 ingests
+    val channelFact = "fact_channel_daily_metrics"
+    while (Silver.refreshChannelFactFromChangeFeed(lake,
+        Job.feedCursorDir(lake, channelFact)).isDefined) ()
+    // and one gold feed consumer, behind the channel fact's frontier
+    val goldMart = "gold_channel_daily_summary"
+    val q = Gold.refreshStream(lake, goldMart)
+      .option("checkpointLocation", Files.createTempDirectory("graft-job-goldckpt").toString)
+      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
+    assert(q.awaitTermination(120000), "gold stream did not drain")
+    val goldCursors = java.nio.file.Paths.get(Gold.feedCursorRoot(lake, goldMart))
+    assert(Files.exists(goldCursors), "gold stream left no cursor tree")
+    val src = "videos_raw"
+    val head1 = lake.committedBronzeVersion(src)
+    // the cursors linger at head1 while new bronze versions land past them
     Seq(("day2", "2025-05-31", "2025-06-02", "2025-06-03"),
         ("day3", "2025-06-01", "2025-06-03", "2025-06-04")).foreach {
       case (id, s, e, nowDay) =>
-        val r = Job.run(fullLake, NewChannelClient, AnalyticsClient,
-          startDate = s, endDate = e,
+        val r = Job.run(lake, DataClient, AnalyticsClient, startDate = s, endDate = e,
           now = Timestamp.valueOf(s"$nowDay 09:00:00"), runId = id)
         assert(r.status == "success", r.toString)
-    }
-    (Silver.models.map(_.name) ++ Gold.models.map(_.name)).foreach { m =>
-      val layer = if (m.startsWith("gold_")) "gold" else "silver"
-      def rows(lake: Lakehouse) = lake.table(layer, m)
-        .drop("request_id").collect().map(_.toString).sorted.toSeq
-      assert(rows(cdfLake) == rows(fullLake),
-        s"$m diverged after the crashed identity-change run")
-    }
-  }
-
-  test("abandoned cdfRefresh: lingering cursors pin vacuum retention, warn loudly, release on decommission") {
-    val lake = new Lakehouse(spark, Files.createTempDirectory("graft-job-abandon").toString)
-    val r1 = Job.run(lake, DataClient, AnalyticsClient,
-      startDate = "2025-05-30", endDate = "2025-06-01", cdfRefresh = true,
-      now = Timestamp.valueOf("2025-06-02 09:00:00"), runId = "cdf1")
-    assert(r1.status == "success", r1.toString)
-    assert(r1.warnings.isEmpty, r1.warnings.toString)
-    val src = "videos_raw"
-    val head1 = lake.committedBronzeVersion(src)
-    // ABANDONMENT: snapshot-mode runs from here on; the feed cursors linger
-    // at head1 while new bronze versions land past them
-    val r2 = Job.run(lake, DataClient, AnalyticsClient,
-      startDate = "2025-05-31", endDate = "2025-06-02",
-      now = Timestamp.valueOf("2025-06-03 09:00:00"), runId = "snap1")
-    val r3 = Job.run(lake, DataClient, AnalyticsClient,
-      startDate = "2025-06-01", endDate = "2025-06-03",
-      now = Timestamp.valueOf("2025-06-04 09:00:00"), runId = "snap2")
-    assert(r2.status == "success" && r3.status == "success")
-    // the documented failure mode is now LOUD: both snapshot runs warn
-    Seq(r2, r3).foreach { r =>
-      assert(r.warnings.exists(_.contains("live feed cursor")),
-        s"snapshot run against live cursors did not warn: ${r.warnings}")
     }
     // a CoW delete rewrites files, so pre-delete versions reference files
     // the head no longer does — the reclaimable debt vacuum acts on (on a
     // purely append-only history every old version shares the head's files
     // and there is nothing to physically drop)
     val held = lake.committedBronzeVersion(src) // pre-rewrite head
-    assert(held >= head1 + 1, s"need post-abandonment commits, got $head1 -> $held")
-    lake.deleteBronzeWhere(src, col("run_id") === "cdf1")
+    assert(held >= head1 + 1, s"need post-registration commits, got $head1 -> $held")
+    lake.deleteBronzeWhere(src, col("run_id") === "day1")
     // vacuum DEBT: an aggressive vacuum must keep the held version readable
     lake.vacuumBronze(src, keepVersions = 1, retainMillis = 0L)
     assert(lake.tableAt("bronze", src, held).count() >= 0,
       "cursor-held version was vacuumed while the cursor lingered")
     // decommission releases the hold; the same vacuum now drops it
     Job.decommissionFeedCursors(lake)
+    assert(!Files.exists(goldCursors), "decommission left the gold cursor tree")
     lake.vacuumBronze(src, keepVersions = 1, retainMillis = 0L)
     val releasedGone =
       try { lake.tableAt("bronze", src, held).count(); false }
       catch { case _: Throwable => true }
     assert(releasedGone, s"version $held still resolvable after decommission + vacuum")
-    // and a post-decommission snapshot run no longer warns
-    val r4 = Job.run(lake, DataClient, AnalyticsClient,
-      startDate = "2025-06-02", endDate = "2025-06-04",
-      now = Timestamp.valueOf("2025-06-05 09:00:00"), runId = "snap3")
-    assert(r4.status == "success" && r4.warnings.isEmpty, r4.toString)
   }
 
   test("incremental merge does not skip bronze landed by a FAILED run") {
     // day 1 success; day 2 lands Data-API bronze then fails in analytics
-    // (silver never drained); day 3 must still fold day 2's landed rows —
-    // the silver cursors advance only when a drain commits
+    // (silver never refreshed); day 3 must still fold day 2's landed rows
     object FailingAnalytics extends AnalyticsIngest.AnalyticsApiClient {
       def queryReports(params: Map[String, String]): Either[JVal, JObj] =
         throw new RuntimeException("analytics outage")
     }
     val lake = new Lakehouse(spark, Files.createTempDirectory("graft-job-failcdf").toString)
     val r1 = Job.run(lake, DataClient, AnalyticsClient,
-      startDate = "2025-05-30", endDate = "2025-06-01", cdfRefresh = true,
+      startDate = "2025-05-30", endDate = "2025-06-01",
       now = Timestamp.valueOf("2025-06-02 09:00:00"), runId = "ok1")
     assert(r1.status == "success", r1.toString)
     val r2 = Job.run(lake, DataClient, FailingAnalytics,
-      startDate = "2025-05-30", endDate = "2025-06-02", cdfRefresh = true,
+      startDate = "2025-05-30", endDate = "2025-06-02",
       now = Timestamp.valueOf("2025-06-03 09:00:00"), runId = "boom")
     assert(r2.status == "failed")
     val r3 = Job.run(lake, DataClient, AnalyticsClient,
-      startDate = "2025-05-30", endDate = "2025-06-03", cdfRefresh = true,
+      startDate = "2025-05-30", endDate = "2025-06-03",
       now = Timestamp.valueOf("2025-06-04 09:00:00"), runId = "ok2")
     assert(r3.status == "success", r3.toString)
     // the failed run's video stats observation (snapshot 2025-06-03) made it

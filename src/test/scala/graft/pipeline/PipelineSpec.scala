@@ -345,17 +345,16 @@ class PipelineSpec extends SparkSpec {
     }
   }
 
-  /** One daily run over every feed-consumed source: the channel, V1 (title
-    * varies) + a stable V2, both daily reports and one row per observed dim. */
+  /** One daily run over every feed-consumed source: the channel, V1 + a
+    * stable V2, both daily reports and one row per observed dim. */
   private def landFeedRun(l: Lakehouse, run: String, snap: String, views: Long,
-      chTitle: String, title: String = "T", source: String = "yt_search",
-      country: String = "us", device: String = "MOBILE"): Unit = {
+      chTitle: String): Unit = {
     val ctx = Bronze.RunContext(run, s"req-$run", d(snap), ts(s"$snap 10:00:00"))
     Bronze.logRunStart(l, ctx, """{"mode":"auto"}""")
     Bronze.ingest(l, ctx, _ => Map(
       "channels_raw" -> Seq(channelPayload("UC_1", chTitle, views * 10, 10)),
       "videos_raw" -> Seq(videosPayload(
-        videoItem("V1", "UC_1", title, views),
+        videoItem("V1", "UC_1", "T", views),
         videoItem("V2", "UC_1", "Stable", views))),
       "analytics_channel_daily_raw" -> Seq(report(chHeaders, Seq(
         Seq(snap, views.toString, "2", "1", "7", "3", "1"),
@@ -365,13 +364,13 @@ class PipelineSpec extends SparkSpec {
         Seq("V1", "2025-05-31", (views + 1).toString, "1", "0", "3", "42.0")))),
       "analytics_video_traffic_source_daily_raw" -> Seq(report(
         Seq(dim("video"), dim("day"), dim("insightTrafficSourceType"), met("views")),
-        Seq(Seq("V1", snap, source, views.toString)))),
+        Seq(Seq("V1", snap, "yt_search", views.toString)))),
       "analytics_video_country_daily_raw" -> Seq(report(
         Seq(dim("video"), dim("day"), dim("country"), met("views")),
-        Seq(Seq("V1", snap, country, views.toString)))),
+        Seq(Seq("V1", snap, "us", views.toString)))),
       "analytics_video_device_daily_raw" -> Seq(report(
         Seq(dim("video"), dim("day"), dim("deviceType"), met("views")),
-        Seq(Seq("V1", snap, device, views.toString))))))
+        Seq(Seq("V1", snap, "MOBILE", views.toString))))))
     Bronze.finalizeRun(l, run, "success", ts(s"$snap 10:05:00"))
   }
 
@@ -490,46 +489,6 @@ class PipelineSpec extends SparkSpec {
       .filter(col("video_id") === "V1" && col("is_current")).head()
       .getAs[String]("video_meta_sk")
     assert(v1.getAs[String]("current_video_meta_sk") == curSk)
-  }
-
-  test("dims incremental merge equals full recompute (new values and dates)") {
-    val l = new Lakehouse(spark, Files.createTempDirectory("graft-diminc").toString)
-    val feedRoot = Files.createTempDirectory("graft-diminc-feeds").toString
-    val dims = Seq("dim_traffic_source", "dim_device", "dim_country", "dim_date")
-    def drainDims(): Unit = {
-      Seq("dim_traffic_source", "dim_device", "dim_country").foreach { n =>
-        while (Silver.refreshDimFromChangeFeed(l, n, s"$feedRoot/$n").isDefined) ()
-      }
-      if (Silver.dimDateFeedTick(l, s"$feedRoot/dim_date")) Silver.assembleDimDate(l)
-    }
-    landFeedRun(l, "run1", "2025-06-01", 10, "Chan A")
-    landFeedRun(l, "run2", "2025-06-02", 20, "Chan A")
-    Silver.refresh(l)
-    // fresh cursors snapshot-bootstrap over the full refresh
-    drainDims()
-    // run 3 lands one new value per observed dim and one new calendar date
-    landFeedRun(l, "run3", "2025-06-03", 30, "Chan A",
-      source = "ext_url", country = "de", device = "tablet")
-    // silver_channels first (Job order: the channel-daily date source
-    // cross-joins the current channel id)
-    Silver.refresh(l, Some(Set("silver_channels")))
-    drainDims()
-    val inc = dims.map(t => t -> silverRows(l, t)).toMap
-    // merged-in values are present, enriched, and unique at the dim grain
-    assert(l.table("silver", "dim_traffic_source")
-      .filter(col("source_id") === "EXT_URL").count() == 1)
-    assert(l.table("silver", "dim_device")
-      .filter(col("device_type") === "TABLET").count() == 1)
-    val de = l.table("silver", "dim_country")
-      .filter(col("country_code") === "DE").collect()
-    assert(de.length == 1 && de.head.getAs[String]("country_name") == "Germany",
-      s"expected enriched DE row, got ${de.toSeq}")
-    assert(l.table("silver", "dim_date")
-      .filter(col("date") === lit(d("2025-06-03"))).count() == 1)
-    // identical to a full recompute over all bronze history
-    Silver.refresh(l)
-    assert(inc == dims.map(t => t -> silverRows(l, t)).toMap,
-      "dims incremental != full recompute")
   }
 
   test("fresh-cursor bootstrap works on a MATURE lake whose early manifests are pruned") {

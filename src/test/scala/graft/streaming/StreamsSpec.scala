@@ -817,7 +817,13 @@ class StreamsSpec extends SparkSpec {
     val lake = new Lakehouse(spark, Files.createTempDirectory("graft-silvergold").toString)
     val vidHeaders = Seq(dim("video"), dim("day"), met("views"), met("likes"),
       met("comments"), met("estimatedMinutesWatched"), ("averageViewDuration", "METRIC", "FLOAT"))
-    def land(run: String, snap: String, channel: String, views: Long): Unit =
+    def dimReport(dimName: String, value: String, snap: String, views: Long) =
+      report(Seq(dim("video"), dim("day"), dim(dimName), met("views"),
+          met("estimatedMinutesWatched")),
+        Seq(Seq("V1", snap, value, views.toString, "2"),
+          Seq("V2", "2025-05-31", value, (views + 1).toString, "1")))
+    def land(run: String, snap: String, channel: String, views: Long,
+        source: String, country: String, device: String): Unit =
       Bronze.ingest(lake, Bronze.RunContext(run, s"req-$run", d(snap),
           graft.pipeline.Fixtures.ts(s"$snap 10:00:00")),
         _ => Map(
@@ -827,39 +833,60 @@ class StreamsSpec extends SparkSpec {
           "analytics_video_daily_raw" -> Seq(report(vidHeaders, Seq(
             Seq("V1", snap, views.toString, "1", "0", "3", "41.5"),
             Seq("V2", snap, (views + 2).toString, "1", "0", "3", "40.0"),
-            Seq("V1", "2025-05-31", (views + 1).toString, "1", "0", "3", "42.0"))))))
-    val silverFacts = Files.createTempDirectory("graft-silvergold-f").toString
-    val silverVideos = Files.createTempDirectory("graft-silvergold-v").toString
-    val goldCkpt = Files.createTempDirectory("graft-silvergold-g").toString
+            Seq("V1", "2025-05-31", (views + 1).toString, "1", "0", "3", "42.0")))),
+          "analytics_video_traffic_source_daily_raw" -> Seq(
+            dimReport("insightTrafficSourceType", source, snap, views)),
+          "analytics_video_country_daily_raw" -> Seq(
+            dimReport("country", country, snap, views)),
+          "analytics_video_device_daily_raw" -> Seq(
+            dimReport("deviceType", device, snap, views))))
+    val silverFacts = Seq("fact_video_daily_metrics", "fact_video_traffic_source_metrics",
+      "fact_video_country_metrics", "fact_video_device_metrics")
+    val dims = Set("dim_country_reference", "dim_traffic_source", "dim_country", "dim_device")
+    val marts = Seq(Gold.videoDailySummary, Gold.videoTrafficSourceDailySummary,
+      Gold.videoCountryDailySummary, Gold.videoDeviceDailySummary)
+    val ckpts = ((silverFacts :+ "silver_videos") ++ marts.map(_.name))
+      .map(n => n -> Files.createTempDirectory(s"graft-silvergold-$n").toString).toMap
     def drainAll(): Unit = {
-      drainOnce(Streams.silverRefreshStream(lake, "fact_video_daily_metrics"), silverFacts)
-      drainOnce(Streams.silverRefreshStream(lake, "silver_videos"), silverVideos)
-      drainOnce(Gold.refreshStream(lake, "gold_video_daily_summary"), goldCkpt)
+      (silverFacts :+ "silver_videos").foreach(m =>
+        drainOnce(Streams.silverRefreshStream(lake, m), ckpts(m)))
+      // the dims have no stream face: the dimensional marts read them as
+      // standing silver tables, so they are refreshed BEFORE the gold
+      // ticks fold the new fact ranges (a grain folded against a stale dim
+      // would keep a null dim name)
+      Silver.refresh(lake, Some(dims))
+      marts.foreach(m => drainOnce(Gold.refreshStream(lake, m.name), ckpts(m.name)))
     }
     def rows(layer: String, t: String) =
       lake.table(layer, t).collect().map(_.toString).sorted.toSeq
     def check(label: String): Unit = {
-      Seq(Silver.factVideoDailyMetrics, Silver.silverVideoMetadataScd2, Silver.silverVideos)
-        .foreach { m =>
+      (silverFacts.map(f => Silver.models.find(_.name == f).get) ++
+        Seq(Silver.silverVideoMetadataScd2, Silver.silverVideos)).foreach { m =>
           assert(rows("silver", m.name) == m.build(lake).collect().map(_.toString).sorted.toSeq,
             s"${m.name} $label streamed != recompute")
         }
-      assert(rows("gold", "gold_video_daily_summary") ==
-        Gold.videoDailySummary.build(lake).collect().map(_.toString).sorted.toSeq,
-        s"$label streamed mart != Gold.refresh's mart")
+      marts.foreach { m =>
+        assert(rows("gold", m.name) == m.build(lake).collect().map(_.toString).sorted.toSeq,
+          s"${m.name} $label streamed mart != Gold.refresh's mart")
+      }
     }
-    land("r1", "2025-06-01", "UC_1", 10)
+    land("r1", "2025-06-01", "UC_1", 10, "yt_search", "us", "MOBILE")
     drainAll()
     check("bootstrap")
     // new bronze lands while the streams are down: a re-reported date, a
-    // new date, and V1 moving channel (a lookup-side change for the mart)
-    land("r2", "2025-06-02", "UC_2", 20)
+    // new date, new dim values, and V1 moving channel (a lookup-side
+    // change for every mart)
+    land("r2", "2025-06-02", "UC_2", 20, "ext_url", "de", "tablet")
     drainAll()
     check("catch-up")
     val v1 = lake.table("gold", "gold_video_daily_summary")
       .filter(org.apache.spark.sql.functions.col("video_id") === "V1").collect()
     assert(v1.length == 3 && v1.forall(_.getAs[String]("channel_id") == "UC_2"),
       s"mart did not follow the new bronze: ${v1.toSeq}")
+    val de = lake.table("gold", "gold_video_country_daily_summary")
+      .filter(org.apache.spark.sql.functions.col("country_code") === "DE").collect()
+    assert(de.nonEmpty && de.forall(_.getAs[String]("country_name") == "Germany"),
+      s"country mart did not pick up the new dim value: ${de.toSeq}")
   }
 
   test("compactBatches folds only the contiguous prefix around a hole, and folds from the lowest id of an above-zero dir") {
@@ -1043,30 +1070,46 @@ class StreamsSpec extends SparkSpec {
       s"retraction did not resurrect k=1's older observation: ${k1.toSeq}")
   }
 
+  private val chHeaders = {
+    import graft.pipeline.Fixtures.{dim, met}
+    Seq(dim("day"), met("views"), met("likes"), met("comments"),
+      met("estimatedMinutesWatched"), met("subscribersGained"), met("subscribersLost"))
+  }
+
+  /** One day of the channel and its daily report, for the channel-mart
+    * stream specs. */
+  private def landChannelDay(lake: graft.pipeline.Lakehouse, run: String, snap: String,
+      channel: String, views: Long): Unit = {
+    import graft.pipeline.Bronze
+    import graft.pipeline.Fixtures.{channelPayload, d, report}
+    Bronze.ingest(lake, Bronze.RunContext(run, s"req-$run", d(snap),
+        graft.pipeline.Fixtures.ts(s"$snap 10:00:00")),
+      _ => Map(
+        "channels_raw" -> Seq(channelPayload(channel, "Chan", views * 10, 10)),
+        "analytics_channel_daily_raw" -> Seq(report(chHeaders, Seq(
+          Seq(snap, views.toString, "2", "1", "7", "3", "1"),
+          Seq("2025-05-31", (views + 1).toString, "2", "1", "8", "2", "0"))))))
+  }
+
+  /** Drains the channel fact through its silver stream (behind the
+    * silver_channels stream it cross-joins), with checkpoints under `ckpt`. */
+  private def drainChannelSilver(lake: graft.pipeline.Lakehouse, ckpt: String): Unit =
+    Seq("silver_channels", "fact_channel_daily_metrics").foreach(m =>
+      drainOnce(Streams.silverRefreshStream(lake, m), s"$ckpt/$m"))
+
   test("Gold.refreshStream: the streamed channel mart equals the batch mart " +
       "with frontier caps honored") {
     import java.nio.file.Files
-    import graft.pipeline.{Bronze, Gold, Job, Lakehouse, Silver}
-    import graft.pipeline.Fixtures.{channelPayload, d, dim, met, report}
+    import graft.pipeline.{Gold, Lakehouse}
+    import graft.pipeline.Fixtures.d
     import org.apache.spark.sql.functions.col
     val lake = new Lakehouse(spark, Files.createTempDirectory("graft-goldstream2").toString)
-    val chHeaders = Seq(dim("day"), met("views"), met("likes"), met("comments"),
-      met("estimatedMinutesWatched"), met("subscribersGained"), met("subscribersLost"))
     def land(run: String, snap: String, views: Long): Unit =
-      Bronze.ingest(lake, Bronze.RunContext(run, s"req-$run", d(snap),
-          graft.pipeline.Fixtures.ts(s"$snap 10:00:00")),
-        _ => Map(
-          "channels_raw" -> Seq(channelPayload("UC_1", "Chan", views * 10, 10)),
-          "analytics_channel_daily_raw" -> Seq(report(chHeaders, Seq(
-            Seq(snap, views.toString, "2", "1", "7", "3", "1"),
-            Seq("2025-05-31", (views + 1).toString, "2", "1", "8", "2", "0"))))))
-    // silver side maintained through the SAME cursor layout Job uses, so
-    // the stream's per-batch frontier caps read real silver frontiers
-    def silverSide(): Unit = {
-      Silver.refresh(lake, Some(Set("silver_channels")))
-      while (Silver.refreshChannelFactFromChangeFeed(lake,
-        Job.feedCursorDir(lake, "fact_channel_daily_metrics")).isDefined) ()
-    }
+      landChannelDay(lake, run, snap, "UC_1", views)
+    // silver side maintained by its streams, so the gold stream's
+    // per-batch frontier caps read real silver frontiers
+    val silverCkpt = Files.createTempDirectory("graft-goldstream2-s").toString
+    def silverSide(): Unit = drainChannelSilver(lake, silverCkpt)
     val ckpt = Files.createTempDirectory("graft-goldstream2-ckpt").toString
     def drainStream(): Unit =
       drainOnce(Gold.refreshStream(lake, "gold_channel_daily_summary"), ckpt)
@@ -1094,5 +1137,28 @@ class StreamsSpec extends SparkSpec {
     // once silver catches up, the next drain folds it
     silverSide(); drainStream()
     assert(actual == expected, "post-catch-up streamed mart != batch build")
+  }
+
+  test("Gold.refreshStream: a channel-identity change leaves no dead channel_id " +
+      "in the streamed channel mart") {
+    import java.nio.file.Files
+    import graft.pipeline.{Gold, Lakehouse}
+    val lake = new Lakehouse(spark, Files.createTempDirectory("graft-goldchid").toString)
+    val silverCkpt = Files.createTempDirectory("graft-goldchid-s").toString
+    val ckpt = Files.createTempDirectory("graft-goldchid-ckpt").toString
+    def drainStream(): Unit =
+      drainOnce(Gold.refreshStream(lake, "gold_channel_daily_summary"), ckpt)
+    def mart = lake.table("gold", "gold_channel_daily_summary")
+    landChannelDay(lake, "r1", "2025-06-01", "UC_1", 100)
+    drainChannelSilver(lake, silverCkpt); drainStream()
+    // the account's channel id changes: silver re-stamps the whole fact
+    // under the new id, and the mart must follow it wholesale
+    landChannelDay(lake, "r2", "2025-06-02", "UC_NEW", 150)
+    drainChannelSilver(lake, silverCkpt); drainStream()
+    val ids = mart.select("channel_id").distinct().collect().map(_.getString(0)).toSeq
+    assert(ids == Seq("UC_NEW"), s"dead channel ids survived in the mart: $ids")
+    assert(mart.collect().map(_.toString).sorted.toSeq ==
+      Gold.channelDailySummary.build(lake).collect().map(_.toString).sorted.toSeq,
+      "streamed channel mart != batch build after the identity change")
   }
 }
