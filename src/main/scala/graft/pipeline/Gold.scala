@@ -11,7 +11,8 @@ import org.apache.spark.sql.functions._
   */
 object Gold {
 
-  final case class Model(name: String, deps: Seq[String], build: Lakehouse => DataFrame)
+  type Model = Silver.Model
+  private val Model = Silver.Model
 
   /** reference `dbt/models/gold_channel_daily_summary.sql`:
     * net_subscribers = gained − lost. */

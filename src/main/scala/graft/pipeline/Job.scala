@@ -2,13 +2,17 @@ package graft.pipeline
 
 import java.sql.{Date, Timestamp}
 import java.util.UUID
+import java.util.concurrent.Executors
+
+import scala.concurrent.{Await, ExecutionContext, Future}
+import scala.concurrent.duration.Duration
 
 /** The orchestrated run — Scala counterpart of the reference's job task DAG
   * (`databricks.yml:34-155`, SURVEY §3.1):
   *
   * ```
   * init_run_context → ingest_data_api → ingest_analytics_api
-  *   → silver refresh → gold → checks → finalize_run_log (run_if: ALL_DONE)
+  *   → silver + gold model graph → checks → finalize_run_log (run_if: ALL_DONE)
   * ```
   *
   * Semantics preserved from the reference:
@@ -32,8 +36,8 @@ object Job {
 
   /** Execute one full run. `now` is injectable for deterministic tests.
     *
-    * Silver recomputes every model from bronze ([[Silver.refreshParallel]])
-    * and gold rebuilds every mart from silver ([[Gold.refresh]]) — the
+    * Silver recomputes every model from bronze and gold rebuilds every
+    * mart from silver, as one dependency graph ([[refreshGraph]]) — the
     * reference's `CREATE OR REFRESH MATERIALIZED VIEW`, one path per layer.
     * The change-feed ticks are the continuous faces only
     * ([[graft.streaming.Streams.silverRefreshStream]],
@@ -75,11 +79,10 @@ object Job {
         new AnalyticsIngest.AnalyticsPayloadSource(
           analyticsClient, start, end, mode, lookbackDays, videoIds))
 
-      // stage: silver MV refresh (level-order parallel — the reference runs
-      // dbt with 4 threads; identity with sequential refresh is spec-pinned)
-      // then gold marts
-      Silver.refreshParallel(lake)
-      Gold.refresh(lake)
+      // stage: silver MVs and gold marts as one dependency graph (the
+      // reference runs dbt with 4 threads; identity with the sequential
+      // refresh is spec-pinned)
+      refreshGraph(lake)
 
       // stage: the full check suite; any error-severity offender fails the run
       val results = Checks.run(lake, snapshot)
@@ -104,6 +107,40 @@ object Job {
         Some(Maintenance.run(lake, gates = gates))
       else None
     RunReport(runId, status, checkFailures, failure, maint)
+  }
+
+  /** Materialize the silver models and gold marts as one dependency graph:
+    * each starts once every table its `deps` name has committed. Equal to
+    * [[Silver.refresh]] then [[Gold.refresh]], since a model reads only its
+    * `deps` (spec-pinned). A failed model's dependents are never built; the
+    * rest settle, then its own exception is thrown. */
+  private[pipeline] def refreshGraph(lake: Lakehouse): Unit = {
+    val models = Silver.models ++ Gold.models
+    val byName = models.map(m => m.name -> m).toMap
+    val layer = Silver.models.map(_.name -> "silver").toMap ++ Gold.models.map(_.name -> "gold")
+    concurrently { implicit ec =>
+      val started = scala.collection.mutable.Map.empty[String, Future[Unit]]
+      def start(m: Silver.Model): Future[Unit] = started.getOrElse(m.name, {
+        val f = Future.sequence(m.deps.flatMap(byName.get).map(start))
+          .map(_ => lake.materialize(layer(m.name), m.name, m.build(lake)))
+        started(m.name) = f
+        f
+      })
+      models.map(start)
+    }
+  }
+
+  /** Settle the futures `tasks` starts on a per-call pool of one thread per
+    * core; their values in order, or the first failure in order. The
+    * threads descend from the caller's, so their Spark jobs carry its local
+    * properties (the global pool's would not). Chain tasks, never block. */
+  private[pipeline] def concurrently[A](tasks: ExecutionContext => Seq[Future[A]]): Seq[A] = {
+    val pool = Executors.newFixedThreadPool(Runtime.getRuntime.availableProcessors())
+    try {
+      val fs = tasks(ExecutionContext.fromExecutorService(pool))
+      fs.foreach(Await.ready(_, Duration.Inf))
+      fs.map(_.value.get.get)
+    } finally pool.shutdown()
   }
 
   /** The durable cursor dir the silver stream of `model` uses

@@ -3,7 +3,6 @@ package graft.pipeline
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
 
 /** The silver layer: a declarative model registry + topo-sorted refresh —
   * our replacement for the reference's Lakeflow materialized-view pipeline
@@ -23,9 +22,10 @@ import org.apache.spark.sql.types.StructType
   *     guarded for absent columns (reference `:543-555`).
   *
   * Scale posture: every model is one linear scan + at most one window
-  * shuffle on its dedup grain; payload JSON is parsed once per reader with
-  * an explicit schema (never inferred — schema inference is a second full
-  * scan); the one cross join broadcasts a single row; dims join broadcast.
+  * shuffle on its dedup grain; payload JSON is parsed once per payload row
+  * in each reader, with an explicit schema (never inferred — schema
+  * inference is a second full scan); the one cross join broadcasts a single
+  * row; dims join broadcast.
   */
 object Silver {
 
@@ -54,13 +54,16 @@ object Silver {
         Window.partitionBy(grain.map(col): _*).orderBy(order: _*)))
       .filter(col("rn") === 1).drop("rn")
 
-  /** Analytics report matrix → (header_names, row_values) long form. */
+  /** Analytics report matrix → (header_names, row_values) long form. The
+    * parse sits below the explode: in one select the optimizer re-inlines
+    * `from_json(payload)` above it, a whole-report parse per exploded row. */
   def parseReport(raw: DataFrame): DataFrame = {
     val parsed = from_json(col("payload"), org.apache.spark.sql.types.DataType.fromDDL(Schemas.analyticsReportDdl),
       Map("primitivesAsString" -> "true"))
-    raw.select(
-      transform(parsed.getField("columnHeaders"), x => x.getField("name")).as("header_names") +:
-        explode_outer(parsed.getField("rows")).as("row_values") +:
+    raw.select(parsed.as("report") +: envelopeCols.map(col): _*)
+      .select(transform(col("report.columnHeaders"), x => x.getField("name")).as("header_names") +:
+        col("report.rows").as("rows") +: envelopeCols.map(col): _*)
+      .select(col("header_names") +: explode_outer(col("rows")).as("row_values") +:
         envelopeCols.map(col): _*)
   }
 
@@ -866,31 +869,6 @@ object Silver {
     val order = topoSort(wanted)
     order.foreach(m => lake.materialize("silver", m.name, m.build(lake)))
     order.map(_.name)
-  }
-
-  /** Refresh with LEVEL-ORDER PARALLELISM: models are grouped by
-    * topological depth and each level's independent models materialize
-    * concurrently (the reference runs dbt with `threads: 4` —
-    * `dbt/profiles.yml:27`). Spark's scheduler interleaves the concurrent
-    * jobs across executors, so independent MVs stop serializing behind one
-    * another's stragglers; results are identical to [[refresh]] because
-    * models only ever read tables their *earlier level* wrote. */
-  def refreshParallel(lake: Lakehouse): Seq[Seq[String]] = {
-    import scala.concurrent.{Await, ExecutionContext, Future}
-    import scala.concurrent.duration.Duration
-    implicit val ec: ExecutionContext = ExecutionContext.global
-    val byName = models.map(m => m.name -> m).toMap
-    // depth = longest chain of silver dependencies (bronze deps don't count)
-    val depth = scala.collection.mutable.Map.empty[String, Int]
-    def depthOf(m: Model): Int = depth.getOrElseUpdate(m.name,
-      m.deps.flatMap(byName.get).map(depthOf).foldLeft(-1)(math.max) + 1)
-    val levels = topoSort(models).groupBy(depthOf).toSeq.sortBy(_._1).map(_._2)
-    levels.map { level =>
-      Await.result(
-        Future.sequence(level.map(m => Future {
-          lake.materialize("silver", m.name, m.build(lake)); m.name
-        })), Duration.Inf)
-    }
   }
 
   private def topoSort(ms: Seq[Model]): Seq[Model] = {

@@ -220,6 +220,10 @@ class PipelineSpec extends SparkSpec {
   test("full check suite: all error checks clean; warn fires on IMMERSIVE_LIVE") {
     refreshed
     val results = Checks.run(lake, d("2025-06-03"))
+    // concurrent evaluation keeps the suite's order and the sequential counts
+    val suite = Checks.all(d("2025-06-03"))
+    assert(results.map(_._1) == suite.map(_.name))
+    assert(results.map(_._3) == suite.map(_.run(lake).count()))
     val failures = results.filter { case (_, sev, n) => sev == "error" && n > 0 }
     assert(failures.isEmpty, s"failing checks: $failures")
     val warn = results.find(_._1 == "warn_new_traffic_source_ids").get
@@ -272,20 +276,91 @@ class PipelineSpec extends SparkSpec {
     assert(viaSkip.nonEmpty && viaSkip == viaFull)
   }
 
-  test("parallel level-order refresh materializes the same silver as sequential") {
+  private val allTables: Seq[(String, String)] =
+    Silver.models.map(m => "silver" -> m.name) ++ Gold.models.map(m => "gold" -> m.name)
+
+  private def tableRows(l: Lakehouse, layer: String, name: String): Seq[String] =
+    l.table(layer, name).collect().map(_.toString).sorted.toSeq
+
+  test("graph refresh builds the same 19 silver and gold tables as sequential") {
     refreshed
     // re-baseline sequentially first: earlier tests appended bronze data
     // (run4) without refreshing every downstream model
     Silver.refresh(lake)
-    val before = Silver.models.map(m =>
-      m.name -> lake.table("silver", m.name).collect().map(_.toString).sorted.toSeq).toMap
-    val levels = Silver.refreshParallel(lake)
-    assert(levels.flatten.toSet == Silver.models.map(_.name).toSet)
-    assert(levels.size > 1 && levels.head.size > 1) // real parallelism in level 0
-    Silver.models.foreach { m =>
-      val now = lake.table("silver", m.name).collect().map(_.toString).sorted.toSeq
-      assert(now == before(m.name), s"${m.name} differs after parallel refresh")
+    Gold.refresh(lake)
+    assert(allTables.size == 19)
+    val before = allTables.map { case (l, t) => t -> tableRows(lake, l, t) }.toMap
+    val versions = allTables.map { case (l, t) => t -> lake.tableVersion(l, t) }.toMap
+    Job.refreshGraph(lake)
+    allTables.foreach { case (l, t) =>
+      assert(lake.tableVersion(l, t) == versions(t) + 1, s"$t was not re-materialized")
+      assert(tableRows(lake, l, t) == before(t), s"$t differs after the graph refresh")
     }
+  }
+
+  test("graph refresh: a missing bronze source fails with its own error; nothing downstream is built") {
+    refreshed
+    // a copy of the fixture lake without the video daily report
+    val src = java.nio.file.Paths.get(lake.root)
+    val dst = Files.createTempDirectory("graft-graph-fail")
+    val walk = Files.walk(src)
+    try walk.forEach(p => if (p != src) Files.copy(p, dst.resolve(src.relativize(p))))
+    finally walk.close()
+    val l = new Lakehouse(spark, dst.toString)
+    l.deleteRecursively(l.tableDir("bronze", "analytics_video_daily_raw"))
+    val layerOf = allTables.map(_.swap).toMap
+    def version(t: String) = l.tableVersion(layerOf(t), t)
+    val before = layerOf.keys.map(t => t -> version(t)).toMap
+    val err = intercept[IllegalArgumentException](Job.refreshGraph(l))
+    assert(err.getMessage.contains("bronze.analytics_video_daily_raw"), err.getMessage)
+    // the failed model and everything downstream of it keep their version
+    Seq("fact_video_daily_metrics", "dim_date", "gold_video_daily_summary").foreach(t =>
+      assert(version(t) == before(t), s"$t was rebuilt past a failed dep"))
+    // models that do not depend on it still settle before the call throws
+    Seq("silver_videos", "dim_country", "gold_channel_daily_summary",
+      "gold_video_country_daily_summary").foreach(t =>
+      assert(version(t) == before(t) + 1, s"$t was not built"))
+  }
+
+  test("deps completeness: every silver or gold table a model reads is named in its deps") {
+    refreshed
+    val root = java.nio.file.Paths.get(lake.root).toAbsolutePath.normalize
+    (Silver.models ++ Gold.models).foreach { m =>
+      val reads = m.build(lake).inputFiles.toSeq.map { f =>
+        val p = java.nio.file.Paths.get(new java.net.URI(f)).normalize
+        assert(p.startsWith(root), s"${m.name} reads $f outside the lake")
+        val rel = root.relativize(p)
+        rel.getName(0).toString -> rel.getName(1).toString
+      }.distinct
+      val undeclared = reads.collect {
+        case (layer, t) if layer != "bronze" && !m.deps.contains(t) => s"$layer.$t"
+      }
+      assert(undeclared.isEmpty, s"${m.name} reads ${undeclared.mkString(", ")} not in its deps")
+    }
+  }
+
+  test("plan invariant: no executed-plan node above a Generate parses report JSON") {
+    refreshed
+    import org.apache.spark.sql.catalyst.expressions.JsonToStructs
+    import org.apache.spark.sql.execution.{GenerateExec, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    object plans extends AdaptiveSparkPlanHelper
+    val generating = Silver.models.count { m =>
+      val df = m.build(lake)
+      df.collect() // AQE fixes its final plan on execution
+      val plan = df.queryExecution.executedPlan
+      val offenders = plans.collect(plan) {
+        case n: SparkPlan
+            if n.expressions.exists(_.exists(_.isInstanceOf[JsonToStructs])) &&
+              plans.find(n)(c => (c ne n) && c.isInstanceOf[GenerateExec]).isDefined =>
+          n.nodeName
+      }
+      assert(offenders.isEmpty,
+        s"${m.name}: ${offenders.mkString(", ")} parse JSON above a Generate (once per exploded row)")
+      plans.find(plan)(_.isInstanceOf[GenerateExec]).isDefined
+    }
+    // the eight report readers and the four item readers explode a payload
+    assert(generating >= 12, s"only $generating silver plans hold a Generate")
   }
 
   test("run_context_log: finalize updates the run row in place") {
