@@ -9,7 +9,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * enables AQE for runtime re-planning (skew joins, shuffle coalescing), and
   * keeps `spark.sql.shuffle.partitions` sized to the local core count — on a
   * real cluster this would be set to ~2-3x total executor cores or left to AQE
-  * via `spark.sql.adaptive.coalescePartitions`.
+  * via `spark.sql.adaptive.coalescePartitions`. The generated-code cache is
+  * sized above the working set a daily `Job.run` or a bench roster pass
+  * cycles through, so a later run reuses the Java an earlier one compiled
+  * instead of recompiling it with Janino: an LRU cache smaller than a cyclic
+  * working set misses on every access.
   */
 object Graft {
 
@@ -40,6 +44,14 @@ object Graft {
       .config("spark.sql.files.openCostInBytes",
         sys.env.getOrElse("SPARK_GRAFT_OPEN_COST_BYTES", "131072"))
       .config("spark.ui.enabled", "false")
+      // Static conf, so only the builder can set it. The generated-code
+      // cache is an LRU, and an LRU smaller than a cyclic working set misses
+      // on every access: at the default 100 entries each daily Job.run
+      // (~230 entries) and each roster pass (~160; ~670 for all 32 queries)
+      // recompiled all its Java. Entries are ~2x the distinct code bodies:
+      // the key holds the class loader, and local mode compiles each body
+      // for the driver's loader and again for the executor's.
+      .config("spark.sql.codegen.cache.maxEntries", "1000")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark

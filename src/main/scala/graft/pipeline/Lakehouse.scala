@@ -1254,9 +1254,14 @@ final class Lakehouse(val spark: SparkSession, val root: String,
     }).mkString("\n").getBytes(java.nio.charset.StandardCharsets.UTF_8)
     val tmp = base.resolve(s".manifest_${version}_${java.util.UUID.randomUUID.toString.take(8)}.tmp")
     Files.write(tmp, body)
-    val won =
-      try { Files.createLink(base.resolve(s"_files_v$version"), tmp); true }
-      catch { case _: java.nio.file.FileAlreadyExistsException => false }
+    // put-if-absent alone is no CAS here: retention deletes old records, so
+    // a writer whose snapshot fell behind the floor finds its target slot
+    // free again and would "win" a version below the head — its commit never
+    // read, an identity range it reserved issued twice. A target at or below
+    // a listed record has lost.
+    val won = !bronzeVersions(base).exists(_ >= version) &&
+      (try { Files.createLink(base.resolve(s"_files_v$version"), tmp); true }
+      catch { case _: java.nio.file.FileAlreadyExistsException => false })
     Files.delete(tmp)
     if (won) {
       // retention floor: the predecessor stays readable, so keep every

@@ -91,6 +91,45 @@ class JobSpec extends SparkSpec {
     }
   }
 
+  /** Janino compiles so far in this JVM: every whole-stage and expression
+    * codegen compile, whichever suite ran it (suites run one at a time). */
+  private def codegenCompiles: Long =
+    org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+
+  /** Empties Spark's JVM-wide generated-code cache, so the next plan compiles
+    * cold whatever earlier suites left cached. The cache is private to
+    * `CodeGenerator`; its `invalidateAll` is public. */
+  private def clearCodegenCache(): Unit = {
+    import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
+    val accessor = CodeGenerator.getClass.getDeclaredMethod("cache")
+    accessor.setAccessible(true)
+    val cache = accessor.invoke(CodeGenerator)
+    cache.getClass.getMethod("invalidateAll").invoke(cache)
+  }
+
+  test("a later daily `Job.run` reuses the compiled code of the first") {
+    // a daily run cycles through ~230 codegen cache entries; a cache smaller
+    // than that (Spark's default is 100) recompiles all of them every run
+    val lake = new Lakehouse(spark, Files.createTempDirectory("graft-job-codegen").toString)
+    val day1 = java.time.LocalDate.parse("2025-06-01")
+    def day(i: Int): Long = {
+      val end = day1.plusDays(i - 1)
+      val before = codegenCompiles
+      val r = Job.run(lake, DataClient, AnalyticsClient,
+        startDate = end.minusDays(2).toString, endDate = end.toString,
+        now = Timestamp.valueOf(end.plusDays(1).atTime(9, 0)), runId = s"codegen$i")
+      assert(r.status == "success", r.toString)
+      codegenCompiles - before
+    }
+    clearCodegenCache()
+    val first = day(1)
+    day(2)
+    val third = day(3)
+    info(s"Janino compiles: run 1 $first, run 3 $third")
+    // what still compiles is code with the run's date literals inlined
+    assert(third <= first / 5, s"run 3 compiled $third times, run 1 $first")
+  }
+
   /** Day-2 Data API persona: the account's channel id CHANGED. */
   private object NewChannelClient extends DataApiIngest.DataApiClient {
     def getJson(path: String, params: Map[String, String]): Json.JObj = path match {
