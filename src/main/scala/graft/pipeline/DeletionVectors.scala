@@ -34,8 +34,8 @@ object DeletionVectors {
   private val Magic = 0x47445631 // "GDV1"
 
   /** Directory prefix DV files live under (`_dv{version}_{uid}/`), chosen
-    * to NOT match the `_a*` append-dir glob: streaming file sources over
-    * [[Lakehouse.streamSourcePath]] must never list a vector as data. */
+    * to NOT match the `_a*` append-dir glob: a streaming file source over
+    * a table's append dirs must never list a vector as data. */
   val DirPrefix = "_dv"
 
   /** Deterministic dv-file name for a data file's relPath — md5-derived so

@@ -38,10 +38,7 @@ object Job {
     *
     * Silver recomputes every model from bronze and gold rebuilds every
     * mart from silver, as one dependency graph ([[refreshGraph]]) — the
-    * reference's `CREATE OR REFRESH MATERIALIZED VIEW`, one path per layer.
-    * The change-feed ticks are the continuous faces only
-    * ([[graft.streaming.Streams.silverRefreshStream]],
-    * [[Gold.refreshStream]]). */
+    * reference's `CREATE OR REFRESH MATERIALIZED VIEW`, one path per layer. */
   def run(
       lake: Lakehouse,
       dataClient: DataApiIngest.DataApiClient,
@@ -141,39 +138,5 @@ object Job {
       fs.foreach(Await.ready(_, Duration.Inf))
       fs.map(_.value.get.get)
     } finally pool.shutdown()
-  }
-
-  /** The durable cursor dir the silver stream of `model` uses
-    * ([[graft.streaming.Streams.silverRefreshStream]]). */
-  def feedCursorDir(lake: Lakehouse, model: String): String =
-    s"${lake.root}/_silver_cursors/$model"
-
-  /** The version the SILVER feed consumer of `source` has folded through —
-    * the frontier cap for gold deps on the same source (a gold tick must
-    * never outrun silver). 0 (missing cursor) caps gold at nothing read,
-    * which is exactly right before silver's first drain. */
-  private[pipeline] def silverFeedFrontier(lake: Lakehouse, source: String): Option[Int] = {
-    val consumerOf: Map[String, String] = Map(
-      "videos_raw" -> "video_models",
-      "analytics_channel_daily_raw" -> "fact_channel_daily_metrics") ++
-      Silver.latestWinsSpecs.collect {
-        case (m, s) if s.bronzeTable != "videos_raw" => s.bronzeTable -> m
-      }
-    consumerOf.get(source).map(m =>
-      lake.changesCursor(java.nio.file.Paths.get(feedCursorDir(lake, m))))
-  }
-
-  /** DECOMMISSION the silver and gold stream consumers: deletes the WHOLE
-    * `_silver_cursors` tree (not just the current latestWinsSpecs names —
-    * a cursor left by a model since removed or renamed would otherwise
-    * keep its frontier pinned forever) and the gold cursor tree,
-    * releasing the log + vacuum retention held on the bronze sources
-    * (registry markers pointing at the vanished dirs are ignored from then
-    * on). Call when a deployment stops running the streams for good.
-    * Restarting them later is safe: fresh cursors snapshot-bootstrap. */
-  def decommissionFeedCursors(lake: Lakehouse): Unit = {
-    val root = java.nio.file.Paths.get(s"${lake.root}/_silver_cursors")
-    if (java.nio.file.Files.exists(root)) lake.deleteRecursively(root)
-    Gold.decommissionFeedCursors(lake)
   }
 }

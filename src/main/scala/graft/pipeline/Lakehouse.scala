@@ -930,8 +930,8 @@ final class Lakehouse(val spark: SparkSession, val root: String,
     acc.toSet
   }
 
-  /** PUBLIC face of [[nodataDirNames]] — the set a STREAMING consumer of
-    * [[streamSourcePath]] must skip: files under these dirs are committed
+  /** PUBLIC face of [[nodataDirNames]] — the set a file-stream consumer of
+    * the table's `_a*` append dirs must skip: files under these dirs are committed
     * but carry no new rows (an OPTIMIZE repack of rows the stream already
     * delivered). Delta's streaming source skips `dataChange = false` adds
     * for exactly this reason; without the skip every maintenance pass
@@ -1748,22 +1748,6 @@ final class Lakehouse(val spark: SparkSession, val root: String,
         .map(_ - ManifestStats.dvRef(e).map(_._2).getOrElse(0L)))
       if (per.forall(_.isDefined)) Some(per.flatten.sum) else None
     }
-
-  /** Streaming-read support for a bronze table under its CURRENT column
-    * mapping: (scan schema to pin on the file source, logical-view
-    * projector to apply per micro-batch). Without a mapping this is the
-    * plain log schema and identity. A rename AFTER the stream pinned its
-    * schema invalidates the pin: restart the stream to re-pin. */
-  def streamReadSupport(name: String)
-      : (org.apache.spark.sql.types.StructType, DataFrame => DataFrame) = {
-    val base = dir("bronze", name)
-    readFilesManifest(base).flatMap(_.schema) match {
-      case Some(s) =>
-        val m = colMapOf(base)
-        (readSchemaFor(s, m), (df: DataFrame) => renameView(df, s, m))
-      case None => (table("bronze", name).schema, identity[DataFrame] _)
-    }
-  }
 
   /** Live manifest entries carrying a DELETION VECTOR (a raw parquet
     * read would deliver vector-deleted ghost rows; OPTIMIZE purges
@@ -2885,7 +2869,7 @@ final class Lakehouse(val spark: SparkSession, val root: String,
     * any prior vectors of the affected files.
     *
     * STREAMING NOTE: like CoW deletes, vector deletes do NOT propagate to
-    * file streams over [[streamSourcePath]] — the deleted rows were
+    * file streams over the `_a*` append dirs — the deleted rows were
     * already delivered when their file was appended (Delta's streaming
     * source has the same contract: deletes require CDF, not the add-files
     * stream). */
@@ -3301,9 +3285,8 @@ final class Lakehouse(val spark: SparkSession, val root: String,
     * and [[vacuumBronze]] of the clone itself only ever considers files
     * under the clone's directory, never the source's.
     *
-    * Streaming caveat: [[streamSourcePath]] globs the table's OWN `_a*`
-    * dirs, so a file stream over a clone delivers only rows appended to
-    * the clone AFTER the clone — pre-clone history is batch-readable
+    * Streaming caveat: a file stream over the clone's OWN `_a*` dirs
+    * delivers only rows appended to the clone AFTER the clone — pre-clone history is batch-readable
     * ([[table]]), not stream-replayable (same contract as Delta's
     * shallow clone + `readStream` without `startingVersion`). */
   def cloneBronze(src: String, dst: String, version: Option[Int] = None): Unit = {
@@ -3547,23 +3530,6 @@ final class Lakehouse(val spark: SparkSession, val root: String,
     }
     readPrunedWithDv(base, light, pruned, colMapOf(base))
   }
-
-  /** Path a STREAMING source should monitor for this table: the `_a*`
-    * append-dir glob (appends land as new matched dirs).
-    *
-    * VISIBILITY CAVEAT: append dirs are written BEFORE the manifest CAS,
-    * so a raw file stream over this glob sees at-least-once, possibly
-    * UNCOMMITTED files (a writer that crashed before winning its commit).
-    * A consumer of the rows must filter each micro-batch against
-    * [[committedBronzeRelPaths]], or pair the raw glob with an idempotent
-    * sink AND accept crash debris. It must ALSO skip files under
-    * [[nodataDirs]]: OPTIMIZE repacks land as new `_a*` dirs the glob
-    * matches, but their rows were already delivered (Delta streams skip
-    * dataChange=false adds the same way). The feed streams
-    * ([[graft.streaming.Streams.feedRefreshStream]]) use the glob only as
-    * a wake-up signal and read committed changes from the log, so neither
-    * caveat applies to them. */
-  def streamSourcePath(layer: String, name: String): String = s"${dir(layer, name)}/_a*"
 
   /** Materialize one silver/gold model (MV refresh = full recompute):
     * `df` lands in a fresh append dir, its footer stats (`__size`,

@@ -86,130 +86,6 @@ object Silver {
       coalesce(to_date(bind("day")), col("snapshot_date")))
       .otherwise(col("snapshot_date")).as("date")
 
-  /** A latest-wins model factored as (bronze table, typed projection, grain):
-    * the shape the change-feed fold ([[latestWinsFeedTick]]) maintains,
-    * because latest-wins is an idempotent, commutative merge on its grain —
-    * `latestWins(existing ∪ typed(changedRows))` equals a full recompute
-    * (each key's global max survives any grouping of the inputs). */
-  final case class LatestWinsSpec(
-      bronzeTable: String,
-      grain: Seq[String],
-      typed: DataFrame => DataFrame,
-      order: Seq[Column] = recencyOrder)
-
-  private def channelsTyped(raw: DataFrame): DataFrame =
-    parseItems(raw, Schemas.channelsPayloadDdl)
-      .select(
-        col("item.id").as("channel_id"),
-        col("item.snippet.title").as("channel_title"),
-        col("item.snippet.description").as("channel_description"),
-        col("item.snippet.customUrl").as("custom_url"),
-        col("item.snippet.country").as("channel_country_code"),
-        to_timestamp(col("item.snippet.publishedAt")).as("channel_published_at_utc"),
-        col("item.statistics.viewCount").cast("bigint").as("channel_view_count"),
-        col("item.statistics.subscriberCount").cast("bigint").as("channel_subscriber_count"),
-        col("item.statistics.hiddenSubscriberCount").as("hidden_subscriber_count"),
-        col("item.statistics.videoCount").cast("bigint").as("channel_video_count"),
-        col("snapshot_date"), col("ingest_ts_utc"), col("request_id"), col("run_id"),
-        col("schema_version"))
-      .filter(col("channel_id").isNotNull)
-
-  private def videoStatsTyped(raw: DataFrame): DataFrame =
-    parseItems(raw, Schemas.videoStatsPayloadDdl)
-      .select(
-        col("item.id").as("video_id"),
-        col("item.snippet.channelId").as("channel_id"),
-        col("ingest_ts_utc").as("fetched_at_utc"),
-        col("snapshot_date"),
-        col("item.statistics.viewCount").cast("bigint").as("view_count"),
-        col("item.statistics.likeCount").cast("bigint").as("like_count"),
-        col("item.statistics.favoriteCount").cast("bigint").as("favorite_count"),
-        col("item.statistics.commentCount").cast("bigint").as("comment_count"),
-        col("ingest_ts_utc"), col("request_id"), col("run_id"), col("schema_version"))
-      .filter(col("video_id").isNotNull)
-
-  private def videoDailyTyped(raw: DataFrame): DataFrame =
-    parseReport(raw)
-      .select(
-        bind("video").as("video_id"), strictDate,
-        bind("views").cast("bigint").as("views"),
-        bind("likes").cast("bigint").as("likes"),
-        bind("comments").cast("bigint").as("comments"),
-        bind("estimatedMinutesWatched").cast("bigint").as("estimated_minutes_watched"),
-        bind("averageViewDuration").cast("double").as("average_view_duration_seconds"),
-        col("snapshot_date"), col("ingest_ts_utc"), col("request_id"), col("run_id"),
-        col("schema_version"))
-      .filter(col("video_id").isNotNull && col("date").isNotNull)
-
-  private def dimensionalTyped(headerName: String, dimCol: String)(raw: DataFrame): DataFrame =
-    parseReport(raw)
-      .select(
-        bind("video").as("video_id"), boundDate,
-        upper(bind(headerName)).as(dimCol),
-        bind("views").cast("bigint").as("views"),
-        bind("estimatedMinutesWatched").cast("bigint").as("estimated_minutes_watched"),
-        col("snapshot_date"), col("ingest_ts_utc"), col("request_id"), col("run_id"),
-        col("schema_version"))
-      .filter(col("video_id").isNotNull && col("date").isNotNull
-        && col(dimCol).isNotNull && col(dimCol) =!= "")
-
-  /** The models [[refreshFromChangeFeed]] folds directly (their rows
-    * depend only on their own bronze table — no cross-table "current"
-    * state like the channel fact's top-1 cross join, and no cross-row
-    * history like SCD2). */
-  val latestWinsSpecs: Map[String, LatestWinsSpec] = Map(
-    "silver_channels" -> LatestWinsSpec(
-      "channels_raw", Seq("channel_id"), channelsTyped),
-    "silver_video_stats_snapshot" -> LatestWinsSpec(
-      "videos_raw", Seq("video_id", "fetched_at_utc"), videoStatsTyped,
-      Seq(col("request_id").desc)),
-    "fact_video_daily_metrics" -> LatestWinsSpec(
-      "analytics_video_daily_raw", Seq("video_id", "date"), videoDailyTyped),
-    "fact_video_traffic_source_metrics" -> LatestWinsSpec(
-      "analytics_video_traffic_source_daily_raw", Seq("video_id", "date", "source_id"),
-      dimensionalTyped("insightTrafficSourceType", "source_id")),
-    "fact_video_country_metrics" -> LatestWinsSpec(
-      "analytics_video_country_daily_raw", Seq("video_id", "date", "country_code"),
-      dimensionalTyped("country", "country_code")),
-    "fact_video_device_metrics" -> LatestWinsSpec(
-      "analytics_video_device_daily_raw", Seq("video_id", "date", "device_type"),
-      dimensionalTyped("deviceType", "device_type")))
-
-  /** CDF-DRIVEN incremental refresh of a latest-wins MV (the Lakeflow
-    * "Enzyme" analog): one tick drains the bronze source's change feed
-    * since a durable cursor and folds it into the standing silver table,
-    * so refresh cost tracks CHANGED ROWS, never table history. Covers
-    * every [[latestWinsSpecs]] model; returns the `(from, to]` range
-    * folded, or None when caught up.
-    *
-    * Deletes fold as retractions: a `delete`/`update_preimage` row names a
-    * grain whose standing winner may have been retracted — the tick
-    * re-derives those grains from the source's visible rows AS OF the
-    * tick's end version (the correct new winner can be an OLDER source row
-    * absent from the tick), a key-restricted scan. After any tick the MV is exactly
-    * latest-wins(source@frontier) — a consistent view of one source
-    * version, even under capped drains or concurrent writers.
-    * Everything else is churn-sized: the merge windows only affected
-    * grains; existing rows elsewhere pass through an anti-join untouched.
-    *
-    * EXACTLY-ONCE by idempotency, not a txn ledger: a crash between the
-    * OCC merge and the cursor advance replays the tick, and latest-wins
-    * re-folding the same rows leaves every winner unchanged (contrast
-    * [[graft.streaming.Streams.cdfAggregateSink]], whose retraction
-    * arithmetic double-applies and therefore needs the writer-txn
-    * dedupe). A FRESH cursor bootstraps from the source SNAPSHOT (one
-    * visible-rows scan, valid on a mature lake whose early manifests are
-    * pruned) and jumps the cursor to the head; a caught-up cursor whose
-    * MV was deleted rebuilds it the same way. `maxVersions` bounds each
-    * incremental tick's catch-up exactly like the sinks in
-    * [[graft.streaming.Streams]]. */
-  def refreshFromChangeFeed(lake: Lakehouse, name: String, cursorDir: String,
-      maxVersions: Int = Int.MaxValue): Option[(Int, Int)] = {
-    val spec = latestWinsSpecs(name)
-    latestWinsFeedTick(lake, "silver", name, spec.bronzeTable, spec.grain,
-      spec.order, spec.typed, cursorDir, maxVersions)
-  }
-
   /** Null-safe key routing shared by every feed fold (`<=>`):
     * latest-wins's window groups NULL grain values as one real grain, so
     * the joins that route rows around it must pair NULLs too — a plain
@@ -241,28 +117,47 @@ object Silver {
         d.withColumn(f.name, lit(null).cast(f.dataType)))
   }
 
-  /** One change-feed tick of the generic latest-wins fold — the machinery
-    * under [[refreshFromChangeFeed]], table-agnostic so the storage suite
-    * can oracle-gate it over TPC-H samples (st15).
+  /** One change-feed tick of the generic latest-wins fold — table-agnostic
+    * so the storage suite can oracle-gate it over TPC-H samples (st15).
+    * `Job.run` refreshes silver by full recompute; this tick maintains any
+    * table of the form `latestWins(typed(source), grain, order)` from the
+    * source's change feed instead. It folds correctly because latest-wins
+    * is an idempotent, commutative merge on its grain:
+    * `latestWins(existing ∪ typed(changedRows))` equals a full recompute
+    * (each key's global max survives any grouping of the inputs).
     *
-    * `existingPrep` strips columns of the standing table that `typed` does
-    * not produce (derived attachments like silver_videos' SCD2 surrogate
-    * key) before the fold; `finish` re-derives them on the folded affected
-    * rows — untouched rows keep their standing values (valid exactly when
-    * the attachment can only change for ids the same tick touches, which
-    * holds when attachment state and fold drain the SAME source ranges —
-    * [[refreshVideoModelsFromChangeFeed]]'s single-cursor contract). */
+    * One tick drains the change feed since a durable cursor and folds it
+    * into the standing table, so its cost tracks CHANGED ROWS, never table
+    * history; it returns the `(from, to]` range folded, or None when
+    * caught up. Deletes fold as retractions: a `delete`/`update_preimage`
+    * row names a grain whose standing winner may have been retracted — the
+    * tick re-derives those grains from the source's visible rows AS OF the
+    * tick's end version (the correct new winner can be an OLDER source row
+    * absent from the tick), a key-restricted scan. After any tick the table
+    * is exactly latest-wins(source@frontier) — a consistent view of one
+    * source version, even under capped drains or concurrent writers.
+    * Everything else is churn-sized: the merge windows only affected
+    * grains; existing rows elsewhere pass through an anti-join untouched.
+    *
+    * EXACTLY-ONCE by idempotency, not a txn ledger: a crash between the
+    * OCC merge and the cursor advance replays the tick, and latest-wins
+    * re-folding the same rows leaves every winner unchanged (contrast
+    * [[graft.streaming.Streams.cdfAggregateSink]], whose retraction
+    * arithmetic double-applies and therefore needs the writer-txn
+    * dedupe). A FRESH cursor bootstraps from the source SNAPSHOT and jumps
+    * to the head; a caught-up cursor whose table was deleted rebuilds it
+    * the same way. `maxVersions` bounds each incremental tick's catch-up
+    * exactly like the sinks in [[graft.streaming.Streams]]. */
   def latestWinsFeedTick(lake: Lakehouse, layer: String, target: String,
       source: String, grain: Seq[String], order: Seq[Column],
       typed: DataFrame => DataFrame, cursorDir: String,
-      maxVersions: Int = Int.MaxValue,
-      existingPrep: DataFrame => DataFrame = identity,
-      finish: DataFrame => DataFrame = identity): Option[(Int, Int)] = {
+      maxVersions: Int = Int.MaxValue): Option[(Int, Int)] = {
     graft.streaming.Streams.registerCursor(lake.root, source, cursorDir)
     val cur = java.nio.file.Paths.get(cursorDir)
     val head = lake.committedBronzeVersion(source)
+    def snapshot(): DataFrame = latestWins(typed(lake.table("bronze", source)), grain, order)
     def snapshotRebuild(): Unit = {
-      val snap = finish(latestWins(typed(lake.table("bronze", source)), grain, order))
+      val snap = snapshot()
       if (!lake.exists(layer, target)) lake.materialize(layer, target, snap)
       else lake.transactMerge(layer, target)(_ => snap)
     }
@@ -282,39 +177,22 @@ object Silver {
     // head and cursor were read once above — reuse them for the cap
     // arithmetic instead of re-listing the log and cursor dirs
     val to = lake.cappedTo(head, from, maxVersions)
-    val tick =
-      if (to <= from) None else Some((lake.tableChanges(source, from, to), from, to))
-    if (tick.isEmpty && head > 0 && !lake.exists(layer, target)) {
-      // caught-up cursor but the MV is GONE (the delete-to-force-a-rebuild
-      // idiom): rebuild from the snapshot without disturbing the cursor —
-      // otherwise the model would silently never materialize again
-      snapshotRebuild()
+    if (to <= from) {
+      // caught-up cursor but the table is GONE (the delete-to-force-a-
+      // rebuild idiom): rebuild from the snapshot without disturbing the
+      // cursor — otherwise it would silently never materialize again
+      if (head > 0 && !lake.exists(layer, target)) snapshotRebuild()
       return None
     }
-    tick.map { case (changes0, from, to) =>
-      latestWinsApplyRange(lake, layer, target, source, grain, order, typed,
-        existingPrep, finish, changes0, to)
-      lake.commitChangesCursor(cur, to)
-      (from, to)
-    }
-  }
-
-  /** Apply ONE drained change range to a latest-wins MV — the
-    * cursor-agnostic fold under [[latestWinsFeedTick]], factored out so a
-    * composite consumer ([[refreshVideoModelsFromChangeFeed]]) can apply
-    * several folds to the SAME range under one cursor. Idempotent: a
-    * replay re-derives the same affected grains and winners (the rebuild
-    * scan is pinned to `to`), so a crash between the merge and the
-    * caller's cursor commit is safe. */
-  private def latestWinsApplyRange(lake: Lakehouse, layer: String,
-      target: String, source: String, grain: Seq[String], order: Seq[Column],
-      typed: DataFrame => DataFrame,
-      existingPrep: DataFrame => DataFrame, finish: DataFrame => DataFrame,
-      changes0: DataFrame, to: Int): Unit = {
+    val changes0 = lake.tableChanges(source, from, to)
     // a range of pure OPTIMIZE/VACUUM commits (dataChange=false) carries no
-    // rows: advance past it without rewriting the MV — an unchanged lake's
-    // refresh must cost cursor reads, not identical-content version bumps
-    if (lake.exists(layer, target) && changes0.isEmpty) return
+    // rows: advance past it without rewriting the table — an unchanged
+    // lake's refresh must cost cursor reads, not identical-content version
+    // bumps
+    if (lake.exists(layer, target) && changes0.isEmpty) {
+      lake.commitChangesCursor(cur, to)
+      return Some((from, to))
+    }
     val changes = fillHeadColumns(lake, source, changes0)
     val metaCols = Seq("_change_type", "_commit_version")
     val freshAll = typed(changes
@@ -330,8 +208,9 @@ object Silver {
     // tick's end version `to` (not the live head): under a capped drain
     // or a concurrent writer a head read would commit rows from versions
     // beyond the cursor frontier — convergent under latest-wins, but the
-    // MV between ticks would not be a consistent view of ANY source
-    // version. Pinned, every tick leaves the MV ≡ latest-wins(source@to).
+    // table between ticks would not be a consistent view of ANY source
+    // version. Pinned, every tick leaves it ≡ latest-wins(source@to), and a
+    // replay re-derives the same affected grains and winners.
     val fresh = keyMatch(freshAll, delKeys, grain, "left_anti")
     // tableAt returns version `to`'s OWN schema — a capped tick whose range
     // ends before a later ADD COLUMNS would make the typed projection throw
@@ -345,42 +224,30 @@ object Silver {
       // alone would materialize a PARTIAL table — rebuild from the
       // snapshot (covers this tick's range too; later re-folds of the
       // overlap are idempotent under latest-wins)
-      lake.materialize(layer, target,
-        finish(latestWins(typed(lake.table("bronze", source)), grain, order)))
+      lake.materialize(layer, target, snapshot())
     else lake.transactMerge(layer, target) { existing =>
       val freshKeys = fresh.select(grain.map(col): _*).distinct()
       val affected = freshKeys.union(delKeys).distinct()
       // standing winners at insert-only grains still compete; winners at
       // retraction-hit grains are replaced by the rebuild wholesale
-      val standing = keyMatch(existingPrep(existing), freshKeys, grain, "left_semi")
+      val standing = keyMatch(existing, freshKeys, grain, "left_semi")
       val untouched = keyMatch(existing, affected, grain, "left_anti")
-      untouched.unionByName(finish(latestWins(
-        standing.unionByName(fresh).unionByName(rebuilt), grain, order)))
+      untouched.unionByName(latestWins(
+        standing.unionByName(fresh).unionByName(rebuilt), grain, order))
         .select(existing.columns.map(col).toSeq: _*)
     }
-    ()
+    lake.commitChangesCursor(cur, to)
+    Some((from, to))
   }
 
-  /** Rebuild an SCD2 pair (observation log + segmented model) from the
-    * source SNAPSHOT — the bootstrap/recovery face shared by
-    * [[scd2FeedTick]] and [[refreshVideoModelsFromChangeFeed]]. One
-    * visible-rows scan; idempotent (re-running replaces both tables with
-    * the same content). */
-  private def scd2SnapshotRebuild(lake: Lakehouse, layer: String,
-      target: String, obsTable: String, source: String, obsKey: Seq[String],
-      typed: DataFrame => DataFrame, segment: DataFrame => DataFrame): Unit = {
-    val obs = typed(lake.table("bronze", source)).dropDuplicates(obsKey)
-    if (!lake.exists(layer, obsTable)) lake.materialize(layer, obsTable, obs)
-    else lake.transactMerge(layer, obsTable)(_ => obs)
-    val model = segment(lake.table(layer, obsTable))
-    if (!lake.exists(layer, target)) lake.materialize(layer, target, model)
-    else lake.transactMerge(layer, target)(_ => model)
-    ()
-  }
-
-  /** Apply ONE drained change range to an SCD2 pair — the cursor-agnostic
-    * fold under [[scd2FeedTick]]. Per-tick cost ∝ churn + the
-    * retraction-hit ids' source history + the affected ids' log slice:
+  /** CDF-driven incremental SCD2 refresh — generic machinery, oracle-gated
+    * over TPC-H samples (st16) exactly like [[latestWinsFeedTick]]/st15.
+    * One tick drains the source's change feed since a durable cursor and
+    * folds it into an observation log (`obsTable`: `typed(source)` unique
+    * on `obsKey`, so any id's FULL history re-reads as columnar data, never
+    * a re-parse of the source) and the segmented model. Per-tick cost ∝
+    * churn + the retraction-hit ids' source history + the affected ids'
+    * log slice:
     *
     *   1. the observation log folds the range — insert-side observations
     *      join, retraction-hit ids' slices are REPLACED wholesale from the
@@ -393,65 +260,13 @@ object Silver {
     *   3. every other id's version rows pass through an anti-join
     *      untouched.
     *
-    * Idempotent: a replay re-derives the same affected set (the feed is a
-    * pure function of the log), the log re-merge collapses on `obsKey`,
-    * and re-segmenting an id from its complete history is deterministic —
-    * so a crash between the merges and the caller's cursor commit is
-    * safe. */
-  private def scd2ApplyRange(lake: Lakehouse, layer: String, target: String,
-      obsTable: String, source: String, idCols: Seq[String],
-      obsKey: Seq[String], typed: DataFrame => DataFrame,
-      segment: DataFrame => DataFrame, changes0: DataFrame, to: Int): Unit = {
-    if (!lake.exists(layer, target) || !lake.exists(layer, obsTable)) {
-      // mid-stream missing piece (deleted between ticks): a delta-only
-      // fold would leave a PARTIAL table — rebuild both from the snapshot
-      // (covers this range too; replayed overlaps collapse on obsKey)
-      scd2SnapshotRebuild(lake, layer, target, obsTable, source, obsKey, typed, segment)
-      return
-    }
-    // pure-maintenance range (no data change): advance without rewriting
-    if (changes0.isEmpty) return
-    val changes = fillHeadColumns(lake, source, changes0)
-    val metaCols = Seq("_change_type", "_commit_version")
-    val freshObs = typed(changes
-      .filter(col("_change_type").isin("insert", "update_postimage"))
-      .drop(metaCols: _*))
-    val retractedIds = typed(changes
-      .filter(col("_change_type").isin("delete", "update_preimage"))
-      .drop(metaCols: _*))
-      .select(idCols.map(col): _*).distinct()
-    val freshIds = freshObs.select(idCols.map(col): _*).distinct()
-    val affected = freshIds.union(retractedIds).distinct()
-    // pinned at `to` for the same between-tick consistency contract as
-    // [[latestWinsApplyRange]]; head-schema NULL fill for the same
-    // capped-range-predates-ADD-COLUMNS livelock guard as the changes frame
-    val rebuiltObs = keyMatch(
-      typed(fillHeadColumns(lake, source, lake.tableAt("bronze", source, to))),
-      retractedIds, idCols, "left_semi")
-    lake.transactMerge(layer, obsTable) { base =>
-      keyMatch(base, retractedIds, idCols, "left_anti")
-        .unionByName(keyMatch(freshObs, retractedIds, idCols, "left_anti"))
-        .unionByName(rebuiltObs)
-        .dropDuplicates(obsKey)
-        .select(base.columns.map(col).toSeq: _*)
-    }
-    lake.transactMerge(layer, target) { existing =>
-      val slice = keyMatch(lake.table(layer, obsTable), affected, idCols, "left_semi")
-      keyMatch(existing, affected, idCols, "left_anti")
-        .unionByName(segment(slice))
-        .select(existing.columns.map(col).toSeq: _*)
-    }
-    ()
-  }
-
-  /** CDF-driven incremental SCD2 refresh — generic machinery, oracle-gated
-    * over TPC-H samples (st16) exactly like [[latestWinsFeedTick]]/st15.
-    * One tick drains the source's change feed since a durable cursor and
-    * folds it into the observation log + segmented model
-    * ([[scd2ApplyRange]]); a FRESH cursor bootstraps both from the source
-    * snapshot and jumps to the head ([[scd2SnapshotRebuild]] — never a
-    * version-0 history drain). Source DELETES fold as retractions: the
-    * affected ids re-segment from their post-retraction history. */
+    * A FRESH cursor bootstraps both tables from the source snapshot and
+    * jumps to the head — never a version-0 history drain; a caught-up
+    * cursor whose tables were deleted rebuilds them the same way. Idempotent:
+    * a replay re-derives the same affected set (the feed is a pure function
+    * of the log), the log re-merge collapses on `obsKey`, and re-segmenting
+    * an id from its complete history is deterministic — so a crash between
+    * the merges and the cursor commit is safe. */
   def scd2FeedTick(lake: Lakehouse, layer: String, target: String,
       obsTable: String, source: String, idCols: Seq[String],
       obsKey: Seq[String], typed: DataFrame => DataFrame,
@@ -460,9 +275,21 @@ object Silver {
     graft.streaming.Streams.registerCursor(lake.root, source, cursorDir)
     val cur = java.nio.file.Paths.get(cursorDir)
     val head = lake.committedBronzeVersion(source)
+    // one visible-rows scan; idempotent (re-running replaces both tables
+    // with the same content)
+    def snapshotRebuild(): Unit = {
+      val obs = typed(lake.table("bronze", source)).dropDuplicates(obsKey)
+      if (!lake.exists(layer, obsTable)) lake.materialize(layer, obsTable, obs)
+      else lake.transactMerge(layer, obsTable)(_ => obs)
+      val model = segment(lake.table(layer, obsTable))
+      if (!lake.exists(layer, target)) lake.materialize(layer, target, model)
+      else lake.transactMerge(layer, target)(_ => model)
+      ()
+    }
+    def bothExist: Boolean = lake.exists(layer, target) && lake.exists(layer, obsTable)
     val from = lake.changesCursor(cur)
     if (from == 0 && head > 0) {
-      scd2SnapshotRebuild(lake, layer, target, obsTable, source, obsKey, typed, segment)
+      snapshotRebuild()
       lake.commitChangesCursor(cur, head)
       return Some((0, head))
     }
@@ -470,82 +297,51 @@ object Silver {
     if (to <= from) {
       // caught up but a table is GONE (delete-to-force-a-rebuild): rebuild
       // from the snapshot without disturbing the cursor
-      if (head > 0 && !(lake.exists(layer, target) && lake.exists(layer, obsTable)))
-        scd2SnapshotRebuild(lake, layer, target, obsTable, source, obsKey, typed, segment)
+      if (head > 0 && !bothExist) snapshotRebuild()
       return None
     }
-    scd2ApplyRange(lake, layer, target, obsTable, source, idCols, obsKey,
-      typed, segment, lake.tableChanges(source, from, to), to)
+    val changes0 = lake.tableChanges(source, from, to)
+    if (!bothExist)
+      // mid-stream missing piece (deleted between ticks): a delta-only
+      // fold would leave a PARTIAL table — rebuild both from the snapshot
+      // (covers this range too; replayed overlaps collapse on obsKey)
+      snapshotRebuild()
+    // a pure-maintenance range (no data change) advances without rewriting
+    else if (!changes0.isEmpty) {
+      val changes = fillHeadColumns(lake, source, changes0)
+      val metaCols = Seq("_change_type", "_commit_version")
+      val freshObs = typed(changes
+        .filter(col("_change_type").isin("insert", "update_postimage"))
+        .drop(metaCols: _*))
+      val retractedIds = typed(changes
+        .filter(col("_change_type").isin("delete", "update_preimage"))
+        .drop(metaCols: _*))
+        .select(idCols.map(col): _*).distinct()
+      val freshIds = freshObs.select(idCols.map(col): _*).distinct()
+      val affected = freshIds.union(retractedIds).distinct()
+      // pinned at `to` for the same between-tick consistency contract as
+      // [[latestWinsFeedTick]]; head-schema NULL fill for the same
+      // capped-range-predates-ADD-COLUMNS livelock guard as the changes frame
+      val rebuiltObs = keyMatch(
+        typed(fillHeadColumns(lake, source, lake.tableAt("bronze", source, to))),
+        retractedIds, idCols, "left_semi")
+      lake.transactMerge(layer, obsTable) { base =>
+        keyMatch(base, retractedIds, idCols, "left_anti")
+          .unionByName(keyMatch(freshObs, retractedIds, idCols, "left_anti"))
+          .unionByName(rebuiltObs)
+          .dropDuplicates(obsKey)
+          .select(base.columns.map(col).toSeq: _*)
+      }
+      lake.transactMerge(layer, target) { existing =>
+        val slice = keyMatch(lake.table(layer, obsTable), affected, idCols, "left_semi")
+        keyMatch(existing, affected, idCols, "left_anti")
+          .unionByName(segment(slice))
+          .select(existing.columns.map(col).toSeq: _*)
+      }
+    }
     lake.commitChangesCursor(cur, to)
     Some((from, to))
   }
-
-  /** COMPOSITE videos_raw drain (the CDF face of the SCD2 model AND
-    * silver_videos): ONE durable cursor drives both folds over the same
-    * drained range — first the SCD2 pair ([[scd2ApplyRange]]), then the
-    * slim latest-wins with the current surrogate key re-attached to the
-    * affected ids ([[latestWinsApplyRange]] with finish = attach).
-    *
-    * The single-cursor contract is what keeps untouched silver_videos
-    * rows' SKs current: an id's `is_current` flag can change ONLY through
-    * a videos_raw change, and both folds consume identical ranges — so
-    * any id whose SK could have moved is in this tick's affected set and
-    * gets re-attached. Two independent cursors could diverge (one drain
-    * fails a run) and leave ids re-segmented by SCD2 but never
-    * re-attached. Crash-safe under the shared cursor because both folds
-    * are idempotent. */
-  def refreshVideoModelsFromChangeFeed(lake: Lakehouse, cursorDir: String,
-      maxVersions: Int = Int.MaxValue): Option[(Int, Int)] = {
-    val source = "videos_raw"
-    val obsKey = Seq("video_id", "observed_at_utc", "request_id")
-    graft.streaming.Streams.registerCursor(lake.root, source, cursorDir)
-    val cur = java.nio.file.Paths.get(cursorDir)
-    val head = lake.committedBronzeVersion(source)
-    def bootstrap(): Unit = {
-      scd2SnapshotRebuild(lake, "silver", "silver_video_metadata_scd2",
-        scd2ObsTable, source, obsKey, scd2Typed, scd2Segment)
-      val snap = videosAttachSk(
-        latestWins(videosSlimTyped(lake.table("bronze", source)), Seq("video_id")), lake)
-      if (!lake.exists("silver", "silver_videos"))
-        lake.materialize("silver", "silver_videos", snap)
-      else lake.transactMerge("silver", "silver_videos")(_ => snap)
-      ()
-    }
-    val from = lake.changesCursor(cur)
-    if (from == 0 && head > 0) {
-      bootstrap()
-      lake.commitChangesCursor(cur, head)
-      return Some((0, head))
-    }
-    val to = lake.cappedTo(head, from, maxVersions)
-    if (to <= from) {
-      if (head > 0 && !(lake.exists("silver", "silver_video_metadata_scd2")
-          && lake.exists("silver", scd2ObsTable)
-          && lake.exists("silver", "silver_videos"))) bootstrap()
-      return None
-    }
-    val changes = lake.tableChanges(source, from, to)
-    scd2ApplyRange(lake, "silver", "silver_video_metadata_scd2", scd2ObsTable,
-      source, Seq("video_id"), obsKey, scd2Typed, scd2Segment, changes, to)
-    latestWinsApplyRange(lake, "silver", "silver_videos", source,
-      Seq("video_id"), recencyOrder, videosSlimTyped,
-      existingPrep = _.drop("current_video_meta_sk"),
-      finish = df => videosAttachSk(df, lake), changes0 = changes, to = to)
-    lake.commitChangesCursor(cur, to)
-    Some((from, to))
-  }
-
-  /** The SCD2 observation log: every (video, ingest) observation with its
-    * metadata fields, change hash, and envelope — `scd2Typed(videos_raw)`
-    * materialized with `video_id`/`metadata_hash` as first-class parquet
-    * columns. It exists so the feed fold ([[scd2ApplyRange]]) can re-read
-    * any id's FULL observation history (late data can re-segment the
-    * middle of a version chain) without re-parsing bronze JSON: at scale
-    * the log is read with a video_id predicate over columnar data while
-    * bronze would need a full-history parse of every payload. Invariant:
-    * after a tick the log holds exactly the observations of the source
-    * version the tick's cursor names. */
-  val scd2ObsTable = "silver_video_metadata_obs"
 
   // ---------------------------------------------------------------- models
 
@@ -557,12 +353,40 @@ object Silver {
 
   /** reference `:8-71`. Grain: channel_id. */
   val silverChannels: Model = Model("silver_channels", Nil, lake =>
-    latestWins(channelsTyped(lake.table("bronze", "channels_raw")), Seq("channel_id")))
+    latestWins(
+      parseItems(lake.table("bronze", "channels_raw"), Schemas.channelsPayloadDdl)
+        .select(
+          col("item.id").as("channel_id"),
+          col("item.snippet.title").as("channel_title"),
+          col("item.snippet.description").as("channel_description"),
+          col("item.snippet.customUrl").as("custom_url"),
+          col("item.snippet.country").as("channel_country_code"),
+          to_timestamp(col("item.snippet.publishedAt")).as("channel_published_at_utc"),
+          col("item.statistics.viewCount").cast("bigint").as("channel_view_count"),
+          col("item.statistics.subscriberCount").cast("bigint").as("channel_subscriber_count"),
+          col("item.statistics.hiddenSubscriberCount").as("hidden_subscriber_count"),
+          col("item.statistics.videoCount").cast("bigint").as("channel_video_count"),
+          col("snapshot_date"), col("ingest_ts_utc"), col("request_id"), col("run_id"),
+          col("schema_version"))
+        .filter(col("channel_id").isNotNull),
+      Seq("channel_id")))
 
   /** reference `:73-130`. Grain: (video_id, fetched_at_utc); ties broken by
     * request_id only — preserved exactly (SURVEY §4 wart). */
   val silverVideoStatsSnapshot: Model = Model("silver_video_stats_snapshot", Nil, lake =>
-    latestWins(videoStatsTyped(lake.table("bronze", "videos_raw")),
+    latestWins(
+      parseItems(lake.table("bronze", "videos_raw"), Schemas.videoStatsPayloadDdl)
+        .select(
+          col("item.id").as("video_id"),
+          col("item.snippet.channelId").as("channel_id"),
+          col("ingest_ts_utc").as("fetched_at_utc"),
+          col("snapshot_date"),
+          col("item.statistics.viewCount").cast("bigint").as("view_count"),
+          col("item.statistics.likeCount").cast("bigint").as("like_count"),
+          col("item.statistics.favoriteCount").cast("bigint").as("favorite_count"),
+          col("item.statistics.commentCount").cast("bigint").as("comment_count"),
+          col("ingest_ts_utc"), col("request_id"), col("run_id"), col("schema_version"))
+        .filter(col("video_id").isNotNull),
       Seq("video_id", "fetched_at_utc"), Seq(col("request_id").desc)))
 
   /** The 19 metadata fields hashed for change detection, in the exact
@@ -579,12 +403,9 @@ object Silver {
     col("made_for_kids").cast("string"), col("self_declared_made_for_kids").cast("string"),
     col("topic_categories_csv"))
 
-  /** Typed + hashed SCD2 observations from a `videos_raw` slice: one row
-    * per (video, ingest) observation with the 19 metadata fields, the
-    * change-detection hash, and the envelope. This is the frame the
-    * OBSERVATION LOG (`silver_video_metadata_obs`) materializes — the
-    * compact per-id history that lets [[scd2ApplyRange]] re-segment only
-    * affected ids without ever re-parsing bronze JSON. */
+  /** Typed + hashed SCD2 observations from `videos_raw`: one row per
+    * (video, ingest) observation with the 19 metadata fields, the
+    * change-detection hash, and the envelope. */
   private def scd2Typed(raw: DataFrame): DataFrame = {
     val typed = parseItems(raw, Schemas.videoMetadataPayloadDdl)
       .select(
@@ -619,9 +440,7 @@ object Silver {
   /** SCD2 segmentation over hashed observations: version starts where the
     * hash changes vs the per-id predecessor (lag), validity windows via
     * lead (next − 1µs, open-ended sentinel), surrogate key
-    * sha2(video_id||valid_from). Pure function of the observation set —
-    * full refresh runs it over all of bronze, the feed fold over the
-    * affected ids' observation-log slice; both segment identically. */
+    * sha2(video_id||valid_from). Pure function of the observation set. */
   private def scd2Segment(hashed: DataFrame): DataFrame = {
     // version starts: first observation or hash change vs the predecessor
     // (an A→B→A reversion correctly yields three versions)
@@ -656,32 +475,21 @@ object Silver {
   val silverVideoMetadataScd2: Model = Model("silver_video_metadata_scd2", Nil, lake =>
     scd2Segment(scd2Typed(lake.table("bronze", "videos_raw"))))
 
-  private def videosSlimTyped(raw: DataFrame): DataFrame =
-    parseItems(raw, Schemas.videosSlimPayloadDdl)
-      .select(
-        col("item.id").as("video_id"),
-        col("item.snippet.channelId").as("channel_id"),
-        col("item.snippet.title").as("latest_video_title"),
-        to_timestamp(col("item.snippet.publishedAt")).as("video_published_at_utc"),
-        col("item.status.privacyStatus").as("latest_privacy_status"),
-        col("item.status.uploadStatus").as("latest_upload_status"),
-        col("snapshot_date"), col("ingest_ts_utc"), col("request_id"), col("run_id"),
-        col("schema_version"))
-      .filter(col("video_id").isNotNull)
-
-  /** Key-frame projections for the gold feed dependencies ([[Gold]]):
-    * change rows → the keys a mart rebuild routes on, using the SAME typed
-    * parses as the silver models so the affected sets line up exactly. */
-  private[pipeline] def videosSlimKeyFrame(raw: DataFrame): DataFrame =
-    videosSlimTyped(raw).select(col("video_id"))
-
-  private[pipeline] def channelDailyKeyFrame(lake: Lakehouse, raw: DataFrame): DataFrame =
-    channelDailyTyped(raw, currentChannelFrame(lake))
-      .select(col("channel_id"), col("date"))
-
-  /** Join the per-video latest snapshot to the current SCD2 surrogate key
-    * and project the silver_videos column order. */
-  private def videosAttachSk(latest: DataFrame, lake: Lakehouse): DataFrame = {
+  /** reference `:299-364`: latest video snapshot + current SCD2 FK. */
+  val silverVideos: Model = Model("silver_videos", Seq("silver_video_metadata_scd2"), lake => {
+    val latest = latestWins(
+      parseItems(lake.table("bronze", "videos_raw"), Schemas.videosSlimPayloadDdl)
+        .select(
+          col("item.id").as("video_id"),
+          col("item.snippet.channelId").as("channel_id"),
+          col("item.snippet.title").as("latest_video_title"),
+          to_timestamp(col("item.snippet.publishedAt")).as("video_published_at_utc"),
+          col("item.status.privacyStatus").as("latest_privacy_status"),
+          col("item.status.uploadStatus").as("latest_upload_status"),
+          col("snapshot_date"), col("ingest_ts_utc"), col("request_id"), col("run_id"),
+          col("schema_version"))
+        .filter(col("video_id").isNotNull),
+      Seq("video_id"))
     val current = lake.table("silver", "silver_video_metadata_scd2")
       .filter(col("is_current"))
       .select(col("video_id"), col("video_meta_sk").as("current_video_meta_sk"))
@@ -691,115 +499,75 @@ object Silver {
         (Seq("video_id", "channel_id", "current_video_meta_sk", "latest_video_title",
           "video_published_at_utc", "latest_privacy_status", "latest_upload_status") ++
           envelopeCols).map(col): _*)
-  }
-
-  /** reference `:299-364`: latest video snapshot + current SCD2 FK. */
-  val silverVideos: Model = Model("silver_videos", Seq("silver_video_metadata_scd2"), lake =>
-    videosAttachSk(
-      latestWins(videosSlimTyped(lake.table("bronze", "videos_raw")), Seq("video_id")), lake))
-
-  /** The single current silver channel id (top-1, deterministic ties). */
-  private def currentChannelFrame(lake: Lakehouse): DataFrame =
-    lake.table("silver", "silver_channels")
-      .orderBy(col("ingest_ts_utc").desc, col("request_id").desc)
-      .limit(1).select(col("channel_id"))
-
-  /** Typed channel-daily rows: report matrix → name-bound metrics with the
-    * current channel id cross-joined onto every row. */
-  private def channelDailyTyped(raw: DataFrame, currentChannel: DataFrame): DataFrame =
-    parseReport(raw)
-      .crossJoin(broadcast(currentChannel))
-      .select(
-        col("channel_id"), strictDate,
-        bind("views").cast("bigint").as("views"),
-        bind("likes").cast("bigint").as("likes"),
-        bind("comments").cast("bigint").as("comments"),
-        bind("estimatedMinutesWatched").cast("bigint").as("estimated_minutes_watched"),
-        bind("subscribersGained").cast("bigint").as("subscribers_gained"),
-        bind("subscribersLost").cast("bigint").as("subscribers_lost"),
-        col("snapshot_date"), col("ingest_ts_utc"), col("request_id"), col("run_id"),
-        col("schema_version"))
-      .filter(col("channel_id").isNotNull && col("date").isNotNull)
+  })
 
   /** reference `:366-443`: channel daily metrics — the single silver channel
     * id (top-1, deterministic ties) cross-joined onto every report row, then
     * name-bound metrics and latest-wins on (channel_id, date). */
   val factChannelDailyMetrics: Model =
-    Model("fact_channel_daily_metrics", Seq("silver_channels"), lake =>
+    Model("fact_channel_daily_metrics", Seq("silver_channels"), lake => {
+      val currentChannel = lake.table("silver", "silver_channels")
+        .orderBy(col("ingest_ts_utc").desc, col("request_id").desc)
+        .limit(1).select(col("channel_id"))
       latestWins(
-        channelDailyTyped(
-          lake.table("bronze", "analytics_channel_daily_raw"), currentChannelFrame(lake)),
-        Seq("channel_id", "date")))
-
-  /** Whether the CURRENT silver channel id no longer matches the standing
-    * channel-fact rows — the single-channel identity changed, so the
-    * channel fact was computed under the OLD id's cross-join and must
-    * rebuild, not merge. Read BEFORE any feed refresh fixes the fact (the
-    * evidence is the stale fact itself). */
-  def channelIdentityChanged(lake: Lakehouse): Boolean = {
-    if (!lake.exists("silver", "fact_channel_daily_metrics")
-        || !lake.exists("silver", "silver_channels")) return false
-    val currentId = currentChannelFrame(lake).collect().headOption.map(_.getString(0))
-    val standing = lake.table("silver", "fact_channel_daily_metrics")
-      .select(col("channel_id")).distinct()
-      .collect().map(_.getString(0)).toSeq // 1 row in practice — single-channel grain
-    standing.nonEmpty && !standing.forall(currentId.contains)
-  }
-
-  /** CDF-driven channel-fact refresh: the latest-wins feed fold with the
-    * current channel id cross-joined by `typed` — at new-data cost while
-    * the channel is stable (the overwhelmingly common case; the API serves
-    * one `mine=true` channel). On an identity CHANGE the standing rows
-    * carry a dead channel_id at their grain and a grain-level merge could
-    * never retract them — recompute wholesale, pinned at the source head,
-    * and jump the cursor past everything the recompute covered. Refresh
-    * silver_channels first (its stream, or [[refresh]] on it). */
-  def refreshChannelFactFromChangeFeed(lake: Lakehouse, cursorDir: String,
-      maxVersions: Int = Int.MaxValue): Option[(Int, Int)] = {
-    val source = "analytics_channel_daily_raw"
-    val target = "fact_channel_daily_metrics"
-    val current = currentChannelFrame(lake)
-    val head = lake.committedBronzeVersion(source)
-    if (channelIdentityChanged(lake) && head > 0) {
-      graft.streaming.Streams.registerCursor(lake.root, source, cursorDir)
-      val cur = java.nio.file.Paths.get(cursorDir)
-      val snap = latestWins(
-        channelDailyTyped(lake.tableAt("bronze", source, head), current),
+        parseReport(lake.table("bronze", "analytics_channel_daily_raw"))
+          .crossJoin(broadcast(currentChannel))
+          .select(
+            col("channel_id"), strictDate,
+            bind("views").cast("bigint").as("views"),
+            bind("likes").cast("bigint").as("likes"),
+            bind("comments").cast("bigint").as("comments"),
+            bind("estimatedMinutesWatched").cast("bigint").as("estimated_minutes_watched"),
+            bind("subscribersGained").cast("bigint").as("subscribers_gained"),
+            bind("subscribersLost").cast("bigint").as("subscribers_lost"),
+            col("snapshot_date"), col("ingest_ts_utc"), col("request_id"), col("run_id"),
+            col("schema_version"))
+          .filter(col("channel_id").isNotNull && col("date").isNotNull),
         Seq("channel_id", "date"))
-      if (!lake.exists("silver", target)) lake.materialize("silver", target, snap)
-      else lake.transactMerge("silver", target)(_ => snap)
-      val from = lake.changesCursor(cur)
-      if (head > from) { lake.commitChangesCursor(cur, head); Some((from, head)) }
-      else None
-    } else
-      latestWinsFeedTick(lake, "silver", target, source,
-        Seq("channel_id", "date"), recencyOrder,
-        raw => channelDailyTyped(raw, current), cursorDir, maxVersions)
-  }
+    })
 
   /** reference `:445-512`. Grain: (video_id, date). */
   val factVideoDailyMetrics: Model = Model("fact_video_daily_metrics", Nil, lake =>
-    latestWins(videoDailyTyped(lake.table("bronze", "analytics_video_daily_raw")),
+    latestWins(
+      parseReport(lake.table("bronze", "analytics_video_daily_raw"))
+        .select(
+          bind("video").as("video_id"), strictDate,
+          bind("views").cast("bigint").as("views"),
+          bind("likes").cast("bigint").as("likes"),
+          bind("comments").cast("bigint").as("comments"),
+          bind("estimatedMinutesWatched").cast("bigint").as("estimated_minutes_watched"),
+          bind("averageViewDuration").cast("double").as("average_view_duration_seconds"),
+          col("snapshot_date"), col("ingest_ts_utc"), col("request_id"), col("run_id"),
+          col("schema_version"))
+        .filter(col("video_id").isNotNull && col("date").isNotNull),
       Seq("video_id", "date")))
 
   /** Shared shape of the three per-dimension video facts
     * (reference `:514-603,605-694,696-785`): bind video/day/dim/metrics,
     * uppercase the dim, drop null/empty dims, latest-wins on
     * (video_id, date, dim). */
-  private def dimensionalFact(name: String): Lakehouse => DataFrame =
-    lake => {
-      val spec = latestWinsSpecs(name)
-      latestWins(spec.typed(lake.table("bronze", spec.bronzeTable)), spec.grain, spec.order)
-    }
+  private def dimensionalFact(rawTable: String, headerName: String, dimCol: String): Lakehouse => DataFrame =
+    lake => latestWins(
+      parseReport(lake.table("bronze", rawTable))
+        .select(
+          bind("video").as("video_id"), boundDate,
+          upper(bind(headerName)).as(dimCol),
+          bind("views").cast("bigint").as("views"),
+          bind("estimatedMinutesWatched").cast("bigint").as("estimated_minutes_watched"),
+          col("snapshot_date"), col("ingest_ts_utc"), col("request_id"), col("run_id"),
+          col("schema_version"))
+        .filter(col("video_id").isNotNull && col("date").isNotNull
+          && col(dimCol).isNotNull && col(dimCol) =!= ""),
+      Seq("video_id", "date", dimCol))
 
   val factVideoTrafficSourceMetrics: Model = Model("fact_video_traffic_source_metrics", Nil,
-    dimensionalFact("fact_video_traffic_source_metrics"))
+    dimensionalFact("analytics_video_traffic_source_daily_raw", "insightTrafficSourceType", "source_id"))
 
   val factVideoCountryMetrics: Model = Model("fact_video_country_metrics", Nil,
-    dimensionalFact("fact_video_country_metrics"))
+    dimensionalFact("analytics_video_country_daily_raw", "country", "country_code"))
 
   val factVideoDeviceMetrics: Model = Model("fact_video_device_metrics", Nil,
-    dimensionalFact("fact_video_device_metrics"))
+    dimensionalFact("analytics_video_device_daily_raw", "deviceType", "device_type"))
 
   /** Shared shape of the observed-value dims (reference `:787-841,903-957`):
     * distinct uppercased dim values, latest-wins per value. */
@@ -863,10 +631,9 @@ object Silver {
     factVideoDailyMetrics, factVideoTrafficSourceMetrics, factVideoCountryMetrics,
     factVideoDeviceMetrics, dimTrafficSource, dimCountry, dimDevice, dimDate)
 
-  /** Refresh all (or a subset of) models in dependency order. */
-  def refresh(lake: Lakehouse, subset: Option[Set[String]] = None): Seq[String] = {
-    val wanted = models.filter(m => subset.forall(_.contains(m.name)))
-    val order = topoSort(wanted)
+  /** Refresh all models in dependency order. */
+  def refresh(lake: Lakehouse): Seq[String] = {
+    val order = topoSort(models)
     order.foreach(m => lake.materialize("silver", m.name, m.build(lake)))
     order.map(_.name)
   }

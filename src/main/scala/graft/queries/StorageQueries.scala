@@ -635,8 +635,7 @@ object StorageQueries {
       ORDER BY o_orderkey"""))
 
   /** CDF-driven latest-wins MV refresh ([[graft.pipeline.Silver
-    * .latestWinsFeedTick]] — the machinery under
-    * `Silver.refreshFromChangeFeed`, the Lakeflow-"Enzyme" analog): four
+    * .latestWinsFeedTick]], the Lakeflow-"Enzyme" analog): four
     * bronze versions land observations of the orders sample (re-observed
     * rows carry a higher obs_seq and a shifted price), including a DV
     * delete that RETRACTS some grains' standing obs_seq=2 winners — the
@@ -711,8 +710,7 @@ object StorageQueries {
       ORDER BY o_orderkey"""))
 
   /** CDF-driven incremental SCD2 refresh ([[graft.pipeline.Silver
-    * .scd2FeedTick]] — the machinery under
-    * `Silver.refreshVideoModelsFromChangeFeed`): five bronze versions land
+    * .scd2FeedTick]]): five bronze versions land
     * price OBSERVATIONS of the orders sample (obs_seq is the observation
     * clock), including an A→B→A price reversion (three versions must
     * segment), a hash-stable re-observation (must NOT open a version), and
@@ -818,16 +816,17 @@ object StorageQueries {
       FROM seg
       ORDER BY o_orderkey, valid_from_seq"""))
 
-  /** CDF-driven star-mart refresh ([[graft.pipeline.Gold.starFeedTick]] —
-    * the machinery under `Gold.refreshStream`): a latest-wins
+  /** CDF-driven star-mart refresh ([[graft.pipeline.Gold.starFeedTick]]):
+    * a latest-wins
     * fact MV (orders observations) and a latest-wins lookup MV (customer
     * observations) are maintained from their bronze feeds, and the MART —
     * fact LEFT JOIN lookup + a derived column — is maintained from the
     * SAME feeds by grain-routed rebuild: fact changes (including a DV
     * retraction that resurrects older winners) name grains directly,
     * lookup changes (re-observed customers with renamed names, zero fact
-    * churn) translate to grains via a semi-join on the current fact. Gold
-    * ticks are CAPPED at the silver cursors' frontiers. The multi-tick
+    * churn) translate to grains via a semi-join on the current fact. Each
+    * gold drain runs after the silver drain has converged, so gold never
+    * outruns silver. The multi-tick
     * mart must equal DuckDB's from-scratch star over the visible
     * observations. */
   val st17CdfStarMart = GraftQuery(
@@ -860,15 +859,12 @@ object StorageQueries {
         }
       }
       def goldDrain(): Unit = {
-        // gold deps are CAPPED at the silver cursors' frontiers — the mart
-        // must never rebuild grains from a silver state behind the range
-        // it marks consumed
-        def cap(c: String) =
-          Some(lake.changesCursor(java.nio.file.Paths.get(c)))
-        val factDep = graft.pipeline.Gold.FeedDep("fct", Seq("o_orderkey"),
-          identity, cap(factCur))
+        // runs only after silverDrain() has converged: the mart must never
+        // rebuild grains from a silver state behind the range it marks
+        // consumed
+        val factDep = graft.pipeline.Gold.FeedDep("fct", Seq("o_orderkey"), identity)
         val dimDep = graft.pipeline.Gold.FeedDep("cust", Seq("o_custkey"),
-          d => d.select(col("c_custkey").as("o_custkey")), cap(dimCur))
+          d => d.select(col("c_custkey").as("o_custkey")))
         val build = (l: Lakehouse, f: org.apache.spark.sql.DataFrame) => {
           val d = l.table("silver", "sdim")
             .select(col("c_custkey").as("o_custkey"), col("c_name").as("customer_name"))

@@ -710,23 +710,6 @@ object Streams {
     spark.read.parquet(dirs: _*)
   }
 
-  /** EXACTLY-ONCE materialization of a bronze table's change data feed: one
-    * tick drains every version committed since the cursor
-    * ([[graft.pipeline.Lakehouse.changesCursor]]) into per-version `b{V}`
-    * batch dirs under `outDir`, then advances the cursor. Returns the
-    * `(from, to]` range drained, or None when caught up.
-    *
-    * Exactly-once by construction, not by luck: each version's changes
-    * land in a dir KEYED ON THAT VERSION, and
-    * [[graft.pipeline.Lakehouse.tableChanges]] is a pure function of the
-    * log — so a crash anywhere (mid-write, between writes, before the
-    * cursor commit) makes the next tick re-derive byte-identical batches
-    * into the same dirs (an atomic overwrite, [[writeBatchDir]]) and the
-    * end state converges. The feed reads back as a table via
-    * [[batchedTable]] and compacts via [[compactBatches]] like any other
-    * batch-dir stream. The cursor must stay inside the table's vacuum
-    * retention window — see the contract note at
-    * [[graft.pipeline.Lakehouse.tableChangesSince]]. */
   /** INCREMENTAL AGGREGATE MV WITH RETRACTIONS, maintained from the change
     * data feed: the target bronze table holds `keys ++ (cnt, sum_<c>…)`
     * for the source's visible rows, and one tick folds every change since
@@ -834,6 +817,23 @@ object Streams {
     lake.table("bronze", target)
       .filter(org.apache.spark.sql.functions.col("cnt") > 0)
 
+  /** EXACTLY-ONCE materialization of a bronze table's change data feed: one
+    * tick drains every version committed since the cursor
+    * ([[graft.pipeline.Lakehouse.changesCursor]]) into per-version `b{V}`
+    * batch dirs under `outDir`, then advances the cursor. Returns the
+    * `(from, to]` range drained, or None when caught up.
+    *
+    * Exactly-once by construction, not by luck: each version's changes
+    * land in a dir KEYED ON THAT VERSION, and
+    * [[graft.pipeline.Lakehouse.tableChanges]] is a pure function of the
+    * log — so a crash anywhere (mid-write, between writes, before the
+    * cursor commit) makes the next tick re-derive byte-identical batches
+    * into the same dirs (an atomic overwrite, [[writeBatchDir]]) and the
+    * end state converges. The feed reads back as a table via
+    * [[batchedTable]] and compacts via [[compactBatches]] like any other
+    * batch-dir stream. The cursor must stay inside the table's vacuum
+    * retention window — see the contract note at
+    * [[graft.pipeline.Lakehouse.tableChangesSince]]. */
   def changesSink(lake: graft.pipeline.Lakehouse, name: String,
       cursorDir: String, outDir: String,
       maxVersions: Int = Int.MaxValue): Option[(Int, Int)] = {
@@ -930,87 +930,6 @@ object Streams {
     * reader should open. */
   def latestReportIndexVersion(indexDir: String): Option[Long] =
     completeReportIndexVersions(indexDir).lastOption
-
-  /** CONTINUOUS silver maintenance — the Lakeflow streaming-MV refresh
-    * shape, built on the change-feed ticks, each on its cursor dir
-    * (`Job.feedCursorDir`):
-    *   - a latest-wins spec model → `Silver.refreshFromChangeFeed`;
-    *   - `silver_video_metadata_scd2` or `silver_videos` →
-    *     `Silver.refreshVideoModelsFromChangeFeed` on the `video_models`
-    *     cursor (one composite cursor maintains both, so stream one of
-    *     the two names, not both);
-    *   - `fact_channel_daily_metrics` →
-    *     `Silver.refreshChannelFactFromChangeFeed` (it cross-joins the
-    *     current silver channel, so stream `silver_channels` first).
-    * The file stream over the source's `_a*` dirs is only the wake-up
-    * signal ([[feedRefreshStream]]). Each micro-batch, plus one drain at
-    * construction, runs the tick until it converges. Visibility therefore
-    * comes from the log: uncommitted crash debris never reaches silver,
-    * OPTIMIZE repacks fold nothing, and bronze deletes fold as
-    * retractions. A fresh cursor bootstraps from the source snapshot, so
-    * no prior full refresh is needed.
-    *
-    * ONE driver per cursor tree. Silver cursors are the frontier caps of
-    * `Gold.refreshStream`, so running both streams keeps the marts
-    * current. Returns the writer; caller starts it with a checkpoint dir
-    * (AvailableNow for drain-and-stop catch-up runs). */
-  def silverRefreshStream(lake: graft.pipeline.Lakehouse, model: String)
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
-    import graft.pipeline.{Job, Silver}
-    val (source, tick) = model match {
-      case "silver_video_metadata_scd2" | "silver_videos" =>
-        ("videos_raw", () => Silver.refreshVideoModelsFromChangeFeed(
-          lake, Job.feedCursorDir(lake, "video_models")))
-      case "fact_channel_daily_metrics" =>
-        ("analytics_channel_daily_raw", () => Silver.refreshChannelFactFromChangeFeed(
-          lake, Job.feedCursorDir(lake, model)))
-      case m =>
-        val spec = Silver.latestWinsSpecs.getOrElse(m,
-          throw new IllegalArgumentException(s"$m has no change-feed tick to stream"))
-        (spec.bronzeTable,
-          () => Silver.refreshFromChangeFeed(lake, m, Job.feedCursorDir(lake, m)))
-    }
-    feedRefreshStream(lake, model, source, tick)
-  }
-
-  /** Continuous face of a cursor-driven feed tick (a silver model's
-    * [[silverRefreshStream]], a gold mart's `Gold.refreshStream`): a
-    * Structured Streaming wrapper that drives `tick` to convergence per
-    * micro-batch.
-    *
-    * The file stream over `triggerSource`'s append dirs is only the
-    * WAKE-UP signal (its rows are discarded): the tick reads the change
-    * feed through its durable cursors, so DV deletes and re-ingest
-    * retractions fold exactly like the batch tick, and exactly-once comes
-    * from the cursor/txn machinery, not the stream checkpoint (a
-    * foreachBatch replay re-drives an idempotent, already-caught-up
-    * tick). `tick` is a thunk so per-batch state (gold's silver frontier
-    * caps) re-reads every batch.
-    *
-    * The tick also runs once at CONSTRUCTION: the file source marks
-    * trigger files seen even when the tick folded nothing (a frontier-
-    * capped gold tick, a crashed append adopted later), so a catch-up run
-    * may deliver NO new files — without the construction drain it would
-    * never fold the now-visible range. */
-  def feedRefreshStream(lake: graft.pipeline.Lakehouse, consumer: String,
-      triggerSource: String, tick: () => Option[(Int, Int)])
-      : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
-    def drain(): Unit = {
-      var guard = 0
-      while (tick().isDefined) {
-        guard += 1
-        require(guard <= 100000,
-          s"feed stream drain failed to converge on $consumer")
-      }
-    }
-    drain() // catch-up: consumed triggers don't re-fire
-    val dir = lake.streamSourcePath("bronze", triggerSource)
-    val (pinned, _) = lake.streamReadSupport(triggerSource)
-    lake.spark.readStream.schema(pinned).parquet(dir)
-      .writeStream.outputMode(OutputMode.Update).foreachBatch {
-        (_: Dataset[org.apache.spark.sql.Row], _: Long) => drain()
-      }
-  }
 
   /** Write-tmp-then-ATOMIC_MOVE replace: the ONE copy of the
     * last-writer-wins marker write (compaction watermarks).

@@ -206,59 +206,6 @@ class JobSpec extends SparkSpec {
     assert(actual == expected, "post-adoption incremental tick diverged")
   }
 
-  test("feed cursors pin vacuum retention until decommissioned") {
-    val lake = new Lakehouse(spark, Files.createTempDirectory("graft-job-abandon").toString)
-    val r1 = Job.run(lake, DataClient, AnalyticsClient,
-      startDate = "2025-05-30", endDate = "2025-06-01",
-      now = Timestamp.valueOf("2025-06-02 09:00:00"), runId = "day1")
-    assert(r1.status == "success", r1.toString)
-    // register the silver feed consumers: each drain leaves a durable
-    // cursor that holds log + vacuum retention on its bronze source
-    Silver.latestWinsSpecs.keys.foreach { m =>
-      while (Silver.refreshFromChangeFeed(lake, m, Job.feedCursorDir(lake, m)).isDefined) ()
-    }
-    val channelFact = "fact_channel_daily_metrics"
-    while (Silver.refreshChannelFactFromChangeFeed(lake,
-        Job.feedCursorDir(lake, channelFact)).isDefined) ()
-    // and one gold feed consumer, behind the channel fact's frontier
-    val goldMart = "gold_channel_daily_summary"
-    val q = Gold.refreshStream(lake, goldMart)
-      .option("checkpointLocation", Files.createTempDirectory("graft-job-goldckpt").toString)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
-    assert(q.awaitTermination(120000), "gold stream did not drain")
-    val goldCursors = java.nio.file.Paths.get(Gold.feedCursorRoot(lake, goldMart))
-    assert(Files.exists(goldCursors), "gold stream left no cursor tree")
-    val src = "videos_raw"
-    val head1 = lake.committedBronzeVersion(src)
-    // the cursors linger at head1 while new bronze versions land past them
-    Seq(("day2", "2025-05-31", "2025-06-02", "2025-06-03"),
-        ("day3", "2025-06-01", "2025-06-03", "2025-06-04")).foreach {
-      case (id, s, e, nowDay) =>
-        val r = Job.run(lake, DataClient, AnalyticsClient, startDate = s, endDate = e,
-          now = Timestamp.valueOf(s"$nowDay 09:00:00"), runId = id)
-        assert(r.status == "success", r.toString)
-    }
-    // a CoW delete rewrites files, so pre-delete versions reference files
-    // the head no longer does — the reclaimable debt vacuum acts on (on a
-    // purely append-only history every old version shares the head's files
-    // and there is nothing to physically drop)
-    val held = lake.committedBronzeVersion(src) // pre-rewrite head
-    assert(held >= head1 + 1, s"need post-registration commits, got $head1 -> $held")
-    lake.deleteBronzeWhere(src, col("run_id") === "day1")
-    // vacuum DEBT: an aggressive vacuum must keep the held version readable
-    lake.vacuumBronze(src, keepVersions = 1, retainMillis = 0L)
-    assert(lake.tableAt("bronze", src, held).count() >= 0,
-      "cursor-held version was vacuumed while the cursor lingered")
-    // decommission releases the hold; the same vacuum now drops it
-    Job.decommissionFeedCursors(lake)
-    assert(!Files.exists(goldCursors), "decommission left the gold cursor tree")
-    lake.vacuumBronze(src, keepVersions = 1, retainMillis = 0L)
-    val releasedGone =
-      try { lake.tableAt("bronze", src, held).count(); false }
-      catch { case _: Throwable => true }
-    assert(releasedGone, s"version $held still resolvable after decommission + vacuum")
-  }
-
   test("incremental merge does not skip bronze landed by a FAILED run") {
     // day 1 success; day 2 lands Data-API bronze then fails in analytics
     // (silver never refreshed); day 3 must still fold day 2's landed rows

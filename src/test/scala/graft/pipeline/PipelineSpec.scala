@@ -245,7 +245,7 @@ class PipelineSpec extends SparkSpec {
     Bronze.ingest(lake, ctx2, _ => Map(
       "channels_raw" -> Seq(channelPayload("UC_1", "Chan A2", 150, 12))))
     assert(lake.table("bronze", "channels_raw").count() == beforeBronze)
-    Silver.refresh(lake, Some(Set("silver_channels")))
+    lake.materialize("silver", "silver_channels", Silver.silverChannels.build(lake))
     val after = lake.table("silver", "silver_channels").collect().toSeq
     assert(after == before)
   }
@@ -420,150 +420,52 @@ class PipelineSpec extends SparkSpec {
     }
   }
 
-  /** One daily run over every feed-consumed source: the channel, V1 + a
-    * stable V2, both daily reports and one row per observed dim. */
-  private def landFeedRun(l: Lakehouse, run: String, snap: String, views: Long,
-      chTitle: String): Unit = {
-    val ctx = Bronze.RunContext(run, s"req-$run", d(snap), ts(s"$snap 10:00:00"))
-    Bronze.logRunStart(l, ctx, """{"mode":"auto"}""")
-    Bronze.ingest(l, ctx, _ => Map(
-      "channels_raw" -> Seq(channelPayload("UC_1", chTitle, views * 10, 10)),
-      "videos_raw" -> Seq(videosPayload(
-        videoItem("V1", "UC_1", "T", views),
-        videoItem("V2", "UC_1", "Stable", views))),
-      "analytics_channel_daily_raw" -> Seq(report(chHeaders, Seq(
-        Seq(snap, views.toString, "2", "1", "7", "3", "1"),
-        Seq("2025-05-31", (views + 1).toString, "2", "1", "8", "2", "0")))),
-      "analytics_video_daily_raw" -> Seq(report(vidHeaders, Seq(
-        Seq("V1", snap, views.toString, "1", "0", "3", "41.5"),
-        Seq("V1", "2025-05-31", (views + 1).toString, "1", "0", "3", "42.0")))),
-      "analytics_video_traffic_source_daily_raw" -> Seq(report(
-        Seq(dim("video"), dim("day"), dim("insightTrafficSourceType"), met("views")),
-        Seq(Seq("V1", snap, "yt_search", views.toString)))),
-      "analytics_video_country_daily_raw" -> Seq(report(
-        Seq(dim("video"), dim("day"), dim("country"), met("views")),
-        Seq(Seq("V1", snap, "us", views.toString)))),
-      "analytics_video_device_daily_raw" -> Seq(report(
-        Seq(dim("video"), dim("day"), dim("deviceType"), met("views")),
-        Seq(Seq("V1", snap, "MOBILE", views.toString))))))
-    Bronze.finalizeRun(l, run, "success", ts(s"$snap 10:05:00"))
-  }
-
-  private def silverRows(l: Lakehouse, t: String): Seq[String] =
-    l.table("silver", t).collect().map(_.toString).sorted.toSeq
-
-  test("CDF-driven feed refresh equals full recompute for every latest-wins model " +
-      "(bounded ticks, re-observations, winner retraction)") {
-    val l = new Lakehouse(spark, Files.createTempDirectory("graft-cdfmv").toString)
-    val models = Silver.latestWinsSpecs.keys.toSeq.sorted
-    val cursors = models.map(n =>
-      n -> Files.createTempDirectory(s"graft-cdfmv-$n").toString).toMap
-    // one-version ticks: convergence must be bounded and multi-tick
-    def drain(n: String): Int = {
-      var t = 0
-      while (Silver.refreshFromChangeFeed(l, n, cursors(n), maxVersions = 1).isDefined) {
-        t += 1; require(t <= 12, s"$n capped feed drain failed to converge")
+  test("SCD2 feed tick: an A→B→A reversion and a late arrival segment like a full recompute") {
+    import spark.implicits._
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.expressions.Window
+    val l = new Lakehouse(spark, Files.createTempDirectory("graft-scd2feed").toString)
+    val cursor = Files.createTempDirectory("graft-scd2feed-cur").toString
+    // observations (id, seq, v) with seq the observation clock: a version
+    // starts where v differs from the id's previous observation
+    val segment: DataFrame => DataFrame = df => {
+      val w = Window.partitionBy("id").orderBy("seq")
+      df.withColumn("prev_v", lag("v", 1).over(w))
+        .filter(col("prev_v").isNull || col("prev_v") =!= col("v"))
+        .withColumn("next_seq", lead("seq", 1).over(w))
+        .select("id", "seq", "v", "next_seq")
+    }
+    def land(run: String, recs: (Long, Long, String)*): Unit =
+      l.appendBronze("src", recs.map { case (id, seq, v) => (id, seq, v, run) }
+        .toDF("id", "seq", "v", "run_id").repartition(1))
+    // one-version ticks: every later landing folds incrementally
+    def drain(): Unit = {
+      var guard = 0
+      while (Silver.scd2FeedTick(l, "silver", "scd2", "obs_log", "src", Seq("id"),
+          Seq("id", "seq"), identity, segment, cursor, maxVersions = 1).isDefined) {
+        guard += 1; require(guard <= 8, "scd2 feed drain failed to converge")
       }
-      t
     }
-    def expected(n: String): Seq[String] = {
-      val spec = Silver.latestWinsSpecs(n)
-      Silver.latestWins(spec.typed(l.table("bronze", spec.bronzeTable)),
-        spec.grain, spec.order).collect().map(_.toString).sorted.toSeq
-    }
-    def actual(n: String): Seq[String] = silverRows(l, n)
+    def versions(id: Long): Seq[String] = l.table("silver", "scd2")
+      .filter(col("id") === id).orderBy("seq").collect().map(_.getAs[String]("v")).toSeq
+    def expected: Seq[String] = segment(l.table("bronze", "src").dropDuplicates(Seq("id", "seq")))
+      .collect().map(_.toString).sorted.toSeq
+    def actual: Seq[String] = l.table("silver", "scd2").collect().map(_.toString).sorted.toSeq
 
-    landFeedRun(l, "runA", "2025-06-01", 10, "Chan A")
-    landFeedRun(l, "runB", "2025-06-02", 20, "Chan B") // re-observations: latest wins
-    models.foreach { n =>
-      // a fresh cursor bootstraps from the SNAPSHOT in one tick (never a
-      // version-0 feed drain — pruned early manifests would brick it)
-      assert(drain(n) == 1, s"$n expected one snapshot-bootstrap tick")
-      assert(actual(n) == expected(n), s"$n bootstrap feed != recompute")
-    }
-    // a caught-up consumer is a no-op tick
-    models.foreach(n => assert(
-      Silver.refreshFromChangeFeed(l, n, cursors(n)).isEmpty, s"$n not caught up"))
-
-    // new observations fold incrementally
-    landFeedRun(l, "runC", "2025-06-03", 30, "Chan C")
-    models.foreach { n =>
-      drain(n)
-      assert(actual(n) == expected(n), s"$n post-runC feed != recompute")
-    }
-    // WINNER RETRACTION: delete the current channel winner's bronze rows —
-    // the fold must re-derive the grain from the source and fall back to
-    // runB's row, which snapshot-driven refresh cannot express
-    l.deleteBronzeWhereDv("channels_raw", col("run_id") === "runC", Nil)
-    assert(drain("silver_channels") == 1)
-    assert(actual("silver_channels") == expected("silver_channels"),
-      "retraction fold != recompute")
-    val ch = l.table("silver", "silver_channels").collect()
-    assert(ch.length == 1 && ch.head.getAs[String]("run_id") == "runB" &&
-      ch.head.getAs[String]("channel_title") == "Chan B",
-      s"winner did not fall back to runB: ${ch.toSeq}")
-  }
-
-  test("SCD2 + silver_videos incremental merge equals full recompute (A→B→A, late arrivals, full-refresh interleave)") {
-    val l = new Lakehouse(spark, Files.createTempDirectory("graft-scd2inc").toString)
-    val cursor = Files.createTempDirectory("graft-scd2inc-cursor").toString
-    def land(run: String, snap: String, at: String, title: String, views: Long): Unit = {
-      val ctx = Bronze.RunContext(run, s"req-$run", d(snap), ts(at))
-      Bronze.ingest(l, ctx, _ => Map(
-        "videos_raw" -> Seq(videosPayload(
-          videoItem("V1", "UC_1", title, views),
-          videoItem("V2", "UC_1", "Stable", views)))))
-    }
-    val tables = Seq("silver_video_metadata_scd2", "silver_videos")
-    def capture(): Map[String, Seq[String]] = tables.map(t => t -> silverRows(l, t)).toMap
-    def mergeThenCompare(label: String): Unit = {
-      // one-version ticks of the composite videos_raw drain (SCD2 pair +
-      // silver_videos on one cursor): bounded, multi-tick convergence
-      var t = 0
-      while (Silver.refreshVideoModelsFromChangeFeed(l, cursor, maxVersions = 1).isDefined) {
-        t += 1; require(t <= 12, "video models capped feed drain failed to converge")
-      }
-      val inc = capture()
-      Silver.refresh(l, Some(tables.toSet))
-      assert(inc == capture(), s"feed merge ($label) != full recompute")
-      // leave the tables as the full recompute wrote them (identical
-      // content) — the next feed tick folds onto a full-refresh result
-    }
-
-    land("r1", "2025-06-01", "2025-06-01 10:00:00", "Title A", 10)
-    land("r2", "2025-06-02", "2025-06-02 10:00:00", "Title B", 20)
-    Silver.refresh(l, Some(tables.toSet))
-    // the fresh cursor bootstraps the observation log from the snapshot
-    mergeThenCompare("bootstrap")
-    assert(l.exists("silver", Silver.scd2ObsTable))
-
-    // A→B→A reversion folded incrementally
-    land("r3", "2025-06-03", "2025-06-03 10:00:00", "Title A", 30)
-    mergeThenCompare("A→B→A")
-    val titles = l.table("silver", "silver_video_metadata_scd2")
-      .filter(col("video_id") === "V1").orderBy("valid_from_utc")
-      .collect().map(_.getAs[String]("video_title")).toSeq
-    assert(titles == Seq("Title A", "Title B", "Title A"))
-    assert(l.table("silver", "silver_video_metadata_scd2")
-      .filter(col("video_id") === "V2").count() == 1)
-
-    // late arrival: lands in snapshot 06-04 but OBSERVED between r1 and r2 —
-    // re-segments the middle of V1's existing version chain, folded onto
-    // the tables the preceding full recompute wrote
-    land("r4", "2025-06-04", "2025-06-01 18:00:00", "Title C", 15)
-    mergeThenCompare("late arrival")
-    val after = l.table("silver", "silver_video_metadata_scd2")
-      .filter(col("video_id") === "V1").orderBy("valid_from_utc")
-      .collect().map(_.getAs[String]("video_title")).toSeq
-    assert(after == Seq("Title A", "Title C", "Title B", "Title A"))
-    // silver_videos: latest-wins is snapshot-first, so r4 (newest snapshot)
-    // wins despite its older ingest ts, and the FK tracks the current version
-    val v1 = l.table("silver", "silver_videos").filter(col("video_id") === "V1").head()
-    assert(v1.getAs[String]("latest_video_title") == "Title C")
-    val curSk = l.table("silver", "silver_video_metadata_scd2")
-      .filter(col("video_id") === "V1" && col("is_current")).head()
-      .getAs[String]("video_meta_sk")
-    assert(v1.getAs[String]("current_video_meta_sk") == curSk)
+    land("r1", (1L, 10L, "A"), (2L, 10L, "S"))
+    drain() // snapshot bootstrap
+    land("r2", (1L, 20L, "B"), (2L, 20L, "S"))
+    land("r3", (1L, 30L, "A"), (2L, 30L, "S"))
+    drain()
+    assert(versions(1L) == Seq("A", "B", "A"), s"A→B→A reversion missegmented: ${versions(1L)}")
+    assert(versions(2L) == Seq("S"), "an unchanged id must stay at one version")
+    assert(actual == expected, "A→B→A feed fold != full recompute")
+    // LATE ARRIVAL: lands last but was observed between seq 10 and 20 —
+    // the fold must re-segment the MIDDLE of id 1's version chain
+    land("r4", (1L, 15L, "C"))
+    drain()
+    assert(versions(1L) == Seq("A", "C", "B", "A"), s"late arrival missegmented: ${versions(1L)}")
+    assert(actual == expected, "late-arrival feed fold != full recompute")
   }
 
   test("fresh-cursor bootstrap works on a MATURE lake whose early manifests are pruned") {

@@ -171,6 +171,14 @@ class CdfAggregateSpec extends SparkSpec {
     val drained = lake.tableChangesSince("src", cursor)
     assert(drained.isDefined && drained.get._1.count() >= 2,
       "first drain lost changes to vacuum")
+    // decommission (delete the cursor dir) releases the hold: the same
+    // vacuum now drops the version the cursor was holding
+    lake.deleteRecursively(cursor)
+    lake.vacuumBronze("src", keepVersions = 1, retainMillis = 0L)
+    val released =
+      try { lake.tableAt("bronze", "src", preV).count(); false }
+      catch { case _: Throwable => true }
+    assert(released, s"version $preV still resolvable after decommission + vacuum")
   }
 
   test("bounded catch-up: capped ticks converge to the uncapped result") {

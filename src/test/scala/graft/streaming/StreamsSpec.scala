@@ -569,92 +569,73 @@ class StreamsSpec extends SparkSpec {
     } finally q.stop()
   }
 
-  /** Start `writer` with AvailableNow on `ckpt` and wait for it to stop. */
-  private def drainOnce(writer: org.apache.spark.sql.streaming.DataStreamWriter[
-      org.apache.spark.sql.Row], ckpt: String): Unit = {
-    val q = writer.option("checkpointLocation", ckpt)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
-    q.awaitTermination(120000)
-    ()
+  /** The channel rows the `latestWinsFeedTick` cases fold: id and title
+    * out of the fixture payload, plus the columns latest-wins orders by. */
+  private def channelRows(raw: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
+    import org.apache.spark.sql.functions.{col, get_json_object}
+    raw.select(
+      get_json_object(col("payload"), "$.items[0].id").as("channel_id"),
+      get_json_object(col("payload"), "$.items[0].snippet.title").as("channel_title"),
+      col("snapshot_date"), col("ingest_ts_utc"), col("request_id"), col("run_id"))
   }
 
-  test("silverRefreshStream: continuous latest-wins maintenance equals full recompute") {
-    import java.nio.file.Files
-    import graft.pipeline.{Bronze, Lakehouse, Silver}
-    import graft.pipeline.Fixtures.{channelPayload, d}
+  /** Tick `channels_raw` into `silver.channels` on `cursor` until caught up. */
+  private def drainChannels(lake: graft.pipeline.Lakehouse, cursor: String): Unit = {
     import org.apache.spark.sql.functions.col
-    val lake = new Lakehouse(spark, Files.createTempDirectory("graft-streamlake").toString)
-    def land(run: String, snap: String, at: String, title: String, views: Long): Unit =
-      Bronze.ingest(lake, Bronze.RunContext(run, s"req-$run", d(snap), graft.pipeline.Fixtures.ts(at)), _ => Map(
-        "channels_raw" -> Seq(channelPayload("UC_1", title, views, 10))))
-    land("r1", "2025-06-01", "2025-06-01 10:00:00", "Chan A", 100)
-    val ckpt = Files.createTempDirectory("graft-stream-ckpt").toString
-    def drain(): Unit = drainOnce(Streams.silverRefreshStream(lake, "silver_channels"), ckpt)
-    // catch-up 1: no prior full refresh — the construction drain
-    // bootstraps silver from the bronze snapshot
-    drain()
-    val afterBootstrap = lake.table("silver", "silver_channels")
-      .collect().map(_.toString).sorted.toSeq
-    assert(afterBootstrap.size == 1)
-    // two updates land while the stream is down; catch-up 2 folds both
-    land("r2", "2025-06-02", "2025-06-02 10:00:00", "Chan B", 150)
-    land("r3", "2025-06-03", "2025-06-03 10:00:00", "Chan C", 160)
-    drain()
-    val streamed = lake.table("silver", "silver_channels")
-      .collect().map(_.toString).sorted.toSeq
-    assert(streamed != afterBootstrap, "the fold must pick up the new bronze commits")
-    // equals a full recompute over all bronze history
-    Silver.refresh(lake, Some(Set("silver_channels")))
-    val full = lake.table("silver", "silver_channels")
-      .collect().map(_.toString).sorted.toSeq
-    assert(streamed == full, "streamed maintenance != full recompute")
-    assert(lake.table("silver", "silver_channels")
-      .filter(col("channel_title") === "Chan C").count() == 1)
+    var guard = 0
+    while (graft.pipeline.Silver.latestWinsFeedTick(lake, "silver", "channels",
+        "channels_raw", Seq("channel_id"),
+        Seq(col("snapshot_date").desc, col("ingest_ts_utc").desc, col("request_id").desc),
+        channelRows, cursor).isDefined) {
+      guard += 1
+      require(guard <= 10, "channel feed drain failed to converge")
+    }
   }
 
-  test("silverRefreshStream folds a deletion-vector delete of a delivered run as a retraction") {
+  private def foldedChannels(lake: graft.pipeline.Lakehouse): Seq[String] =
+    lake.table("silver", "channels").collect().map(_.toString).sorted.toSeq
+
+  /** Latest-wins over the visible bronze rows: what the folded table must equal. */
+  private def recomputedChannels(lake: graft.pipeline.Lakehouse): Seq[String] =
+    graft.pipeline.Silver.latestWins(channelRows(lake.table("bronze", "channels_raw")),
+      Seq("channel_id")).collect().map(_.toString).sorted.toSeq
+
+  test("latestWinsFeedTick folds a deletion-vector delete of a delivered run as a retraction") {
     import java.nio.file.Files
-    import graft.pipeline.{Bronze, Lakehouse, Silver}
+    import graft.pipeline.{Bronze, Lakehouse}
     import graft.pipeline.Fixtures.{channelPayload, d}
     import org.apache.spark.sql.functions.col
-    val lake = new Lakehouse(spark, Files.createTempDirectory("graft-streamdel").toString)
+    val lake = new Lakehouse(spark, Files.createTempDirectory("graft-feeddel").toString)
     def land(run: String, snap: String, at: String, title: String, views: Long): Unit =
       Bronze.ingest(lake, Bronze.RunContext(run, s"req-$run", d(snap),
         graft.pipeline.Fixtures.ts(at)), _ => Map(
         "channels_raw" -> Seq(channelPayload("UC_1", title, views, 10))))
-    val ckpt = Files.createTempDirectory("graft-streamdel-ckpt").toString
-    def drain(): Unit = drainOnce(Streams.silverRefreshStream(lake, "silver_channels"), ckpt)
-    def rows() = lake.table("silver", "silver_channels").collect().map(_.toString).sorted.toSeq
-    def recomputed() = {
-      Silver.refresh(lake, Some(Set("silver_channels")))
-      rows()
-    }
+    val cursor = Files.createTempDirectory("graft-feeddel-cur").toString
     land("r1", "2025-06-01", "2025-06-01 10:00:00", "Chan A", 100)
     land("r2", "2025-06-02", "2025-06-02 10:00:00", "Chan B", 150)
-    drain()
-    assert(lake.table("silver", "silver_channels")
+    drainChannels(lake, cursor)
+    assert(lake.table("silver", "channels")
       .filter(col("channel_title") === "Chan B").count() == 1)
     // a run-aligned re-ingest (delete + re-append of r1) converges
     land("r1", "2025-06-01", "2025-06-01 11:00:00", "Chan A2", 110)
-    drain()
-    assert(rows() == recomputed(), "re-ingest fold != recompute")
+    drainChannels(lake, cursor)
+    assert(foldedChannels(lake) == recomputedChannels(lake), "re-ingest fold != recompute")
     // a PLAIN vector delete of the delivered winner: the tick reads it from
     // the change feed and the grain falls back to the older r1 row
     lake.deleteBronzeWhereDv("channels_raw", col("run_id") === "r2")
-    drain()
-    val streamed = rows()
-    val ch = lake.table("silver", "silver_channels").collect()
+    drainChannels(lake, cursor)
+    val ch = lake.table("silver", "channels").collect()
     assert(ch.length == 1 && ch.head.getAs[String]("channel_title") == "Chan A2",
       s"winner did not fall back to r1: ${ch.toSeq}")
-    assert(streamed == recomputed(), "retraction fold != recompute")
+    assert(foldedChannels(lake) == recomputedChannels(lake), "retraction fold != recompute")
   }
 
-  test("silverRefreshStream starts fresh over a table with live deletion vectors") {
+  test("latestWinsFeedTick starts fresh over a table with live deletion vectors") {
     import java.nio.file.Files
-    import graft.pipeline.{Bronze, Lakehouse, Silver}
+    import graft.pipeline.{Bronze, Lakehouse}
     import graft.pipeline.Fixtures.{channelPayload, d}
     import org.apache.spark.sql.functions.col
-    val lake = new Lakehouse(spark, Files.createTempDirectory("graft-streamdv").toString)
+    val lake = new Lakehouse(spark, Files.createTempDirectory("graft-feeddv").toString)
     // both rows in ONE file, so a one-row delete writes a real vector
     lake.appendBronze("channels_raw", Bronze.envelopeDf(spark, Seq(
       Bronze.Envelope(d("2025-06-01"), graft.pipeline.Fixtures.ts("2025-06-01 10:00:00"),
@@ -666,82 +647,27 @@ class StreamsSpec extends SparkSpec {
       org.apache.spark.sql.functions.get_json_object(
         col("payload"), "$.items[0].id") === "UC_A")
     assert(lake.deletionVectorCount("channels_raw") > 0, "expected a live vector")
-    val ckpt = Files.createTempDirectory("graft-streamdv-ckpt").toString
-    // the file stream delivers the vector-deleted row as a raw parquet row,
-    // but it is only the wake-up: silver bootstraps from the visible rows
-    drainOnce(Streams.silverRefreshStream(lake, "silver_channels"), ckpt)
-    val streamed = lake.table("silver", "silver_channels").collect().map(_.toString).sorted.toSeq
-    assert(lake.table("silver", "silver_channels")
+    // a fresh cursor bootstraps from the visible rows: the vector-deleted
+    // row is still in the parquet file but must not reach silver
+    drainChannels(lake, Files.createTempDirectory("graft-feeddv-cur").toString)
+    assert(lake.table("silver", "channels")
       .select("channel_id").collect().map(_.getString(0)).toSeq == Seq("UC_B"),
       "a vector-deleted row reached silver")
-    Silver.refresh(lake, Some(Set("silver_channels")))
-    assert(streamed == lake.table("silver", "silver_channels")
-      .collect().map(_.toString).sorted.toSeq, "streamed silver != Silver.refresh")
+    assert(foldedChannels(lake) == recomputedChannels(lake), "bootstrap != recompute")
   }
 
-  test("silverRefreshStream maintains SCD2: streamed == batch recompute across A→B→A and late-arrival micro-batch orderings") {
+  test("latestWinsFeedTick is committed-only: crash debris never reaches silver; a late commit still folds in") {
     import java.nio.file.Files
-    import graft.pipeline.{Bronze, Lakehouse, Silver}
-    import graft.pipeline.Fixtures.{d, videoItem, videosPayload}
-    import org.apache.spark.sql.functions.col
-    val lake = new Lakehouse(spark, Files.createTempDirectory("graft-scd2stream").toString)
-    def land(run: String, snap: String, at: String, title: String, views: Long): Unit =
-      Bronze.ingest(lake, Bronze.RunContext(run, s"req-$run", d(snap),
-        graft.pipeline.Fixtures.ts(at)), _ => Map(
-        "videos_raw" -> Seq(videosPayload(
-          videoItem("V1", "UC_1", title, views),
-          videoItem("V2", "UC_1", "Stable", views)))))
-    land("r1", "2025-06-01", "2025-06-01 10:00:00", "Title A", 10)
-    val ckpt = Files.createTempDirectory("graft-scd2stream-ckpt").toString
-    def drain(): Unit =
-      drainOnce(Streams.silverRefreshStream(lake, "silver_video_metadata_scd2"), ckpt)
-    val models = Set("silver_video_metadata_scd2", "silver_videos")
-    def rows() = models.toSeq.sorted.map(m =>
-      lake.table("silver", m).collect().map(_.toString).sorted.toSeq)
-    def v1Titles() = lake.table("silver", "silver_video_metadata_scd2")
-      .filter(col("video_id") === "V1").orderBy("valid_from_utc")
-      .collect().map(_.getAs[String]("video_title")).toSeq
-    drain() // bootstraps the SCD2 pair and silver_videos from the snapshot
-    // an A→B→A reversion lands across micro-batches while the stream is down
-    land("r2", "2025-06-02", "2025-06-02 10:00:00", "Title B", 20)
-    land("r3", "2025-06-03", "2025-06-03 10:00:00", "Title A", 30)
-    drain()
-    assert(v1Titles() == Seq("Title A", "Title B", "Title A"),
-      s"A→B→A reversion missegmented: ${v1Titles()}")
-    assert(lake.table("silver", "silver_video_metadata_scd2")
-      .filter(col("video_id") === "V2").count() == 1, "unchanged video must stay at 1 version")
-    val streamed = rows()
-    Silver.refresh(lake, Some(models))
-    assert(streamed == rows(), "streamed SCD2 pair != full recompute")
-    // LATE ARRIVAL: lands in snapshot 06-04 but observed between r1 and r2 —
-    // the streamed fold must re-segment the MIDDLE of V1's version chain
-    land("r4", "2025-06-04", "2025-06-01 18:00:00", "Title C", 15)
-    drain()
-    assert(v1Titles() == Seq("Title A", "Title C", "Title B", "Title A"),
-      s"late arrival missegmented: ${v1Titles()}")
-    val streamed2 = rows()
-    Silver.refresh(lake, Some(models))
-    assert(streamed2 == rows(), "streamed SCD2 pair after late arrival != full recompute")
-  }
-
-  test("silverRefreshStream is committed-only: crash debris never reaches silver; a late commit still folds in") {
-    import java.nio.file.Files
-    import graft.pipeline.{Bronze, Lakehouse, Silver}
+    import graft.pipeline.{Bronze, Lakehouse}
     import graft.pipeline.Fixtures.{channelPayload, d}
     import org.apache.spark.sql.functions.lit
     val lake = new Lakehouse(spark, Files.createTempDirectory("graft-committed-only").toString)
     Bronze.ingest(lake, Bronze.RunContext("r1", "req-r1", d("2025-06-01"),
       graft.pipeline.Fixtures.ts("2025-06-01 10:00:00")), _ => Map(
       "channels_raw" -> Seq(channelPayload("UC_1", "Chan A", 100, 10))))
-    val ckpt = Files.createTempDirectory("graft-co-ckpt").toString
-    def drain(): Unit = drainOnce(Streams.silverRefreshStream(lake, "silver_channels"), ckpt)
-    drain() // bootstrap from the initial commit
-    def silverRows() = lake.table("silver", "silver_channels")
-      .collect().map(_.toString).sorted.toSeq
-    def recomputed() = {
-      Silver.refresh(lake, Some(Set("silver_channels")))
-      silverRows()
-    }
+    val cursor = Files.createTempDirectory("graft-co-cur").toString
+    drainChannels(lake, cursor) // bootstrap from the initial commit
+    val v0 = lake.tableVersion("silver", "channels")
     // two CRASHED writers: append dirs fully written, manifest CAS never won
     // — exactly the debris vacuumBronze deletes
     val base = lake.tableDir("bronze", "channels_raw")
@@ -753,140 +679,57 @@ class StreamsSpec extends SparkSpec {
         .write.parquet(base.resolve(dirName).toString)
     plantDebris("_a8_gone", "Chan GONE", "2025-06-08")
     plantDebris("_a9_late", "Chan LATE", "2025-06-09")
-    drain()
-    // neither uncommitted file's rows may reach silver: streamed state must
-    // equal a recompute from committed bronze
-    val streamed = silverRows()
-    assert(!streamed.exists(_.contains("Chan GONE")), "uncommitted rows reached silver")
-    assert(!streamed.exists(_.contains("Chan LATE")), "uncommitted rows reached silver")
-    assert(streamed == recomputed(), "streamed silver != recompute from committed bronze")
+    drainChannels(lake, cursor)
+    // no commit landed, so the tick commits no silver version and neither
+    // uncommitted file's rows reach silver
+    assert(lake.tableVersion("silver", "channels") == v0,
+      "uncommitted debris made the tick commit a silver version")
+    val folded = foldedChannels(lake)
+    assert(!folded.exists(_.contains("Chan GONE")), "uncommitted rows reached silver")
+    assert(!folded.exists(_.contains("Chan LATE")), "uncommitted rows reached silver")
+    assert(folded == recomputedChannels(lake), "folded silver != recompute from committed bronze")
     // one crashed append is ADOPTED (its commit finally lands); the other is
     // vacuumed away (committed files survive vacuum, debris does not)
     lake.adoptAppendDir("channels_raw", "_a9_late")
     lake.vacuumBronze("channels_raw", retainMillis = 0L)
     assert(!Files.exists(base.resolve("_a8_gone")), "vacuum left uncommitted debris")
     assert(Files.exists(base.resolve("_a9_late")), "vacuum deleted committed files")
-    // the stream already consumed both paths, so no new file wakes it —
-    // the construction drain folds the adoption commit from the log
-    drain()
-    val after = silverRows()
-    assert(after.exists(_.contains("Chan LATE")),
-      "late-committed file never reached silver (lost by the seen-files filter)")
+    // the adoption commit is in the log, so the next tick folds it
+    drainChannels(lake, cursor)
+    val after = foldedChannels(lake)
+    assert(after.exists(_.contains("Chan LATE")), "late-committed file never reached silver")
     assert(!after.exists(_.contains("Chan GONE")))
-    assert(after == recomputed(), "final silver != recompute from committed bronze")
+    assert(after == recomputedChannels(lake), "final silver != recompute from committed bronze")
   }
 
-  test("silverRefreshStream skips OPTIMIZE repacks: dataChange=false files are neither merged nor parked") {
+  test("latestWinsFeedTick skips OPTIMIZE repacks: a dataChange=false range commits no silver version") {
     import java.nio.file.Files
-    import graft.pipeline.{Bronze, Lakehouse, Silver}
+    import graft.pipeline.{Bronze, Lakehouse}
     import graft.pipeline.Fixtures.{channelPayload, d}
-    val lake = new Lakehouse(spark, Files.createTempDirectory("graft-nodata-stream").toString)
+    val lake = new Lakehouse(spark, Files.createTempDirectory("graft-nodata-feed").toString)
     def land(run: String, snap: String, title: String): Unit =
       Bronze.ingest(lake, Bronze.RunContext(run, s"req-$run", d(snap),
         graft.pipeline.Fixtures.ts(s"$snap 10:00:00")), _ => Map(
         "channels_raw" -> Seq(channelPayload("UC_1", title, 100, 10))))
     (1 to 5).foreach(i => land(s"r$i", f"2025-06-${i}%02d", s"Chan v$i"))
-    val ckpt = Files.createTempDirectory("graft-nodata-ckpt").toString
-    def drain(): Unit = drainOnce(Streams.silverRefreshStream(lake, "silver_channels"), ckpt)
-    drain() // bootstrap from the initial committed files
-    val rows0 = lake.table("silver", "silver_channels").collect().map(_.toString).sorted.toSeq
-    val v0 = lake.tableVersion("silver", "silver_channels")
-    // maintenance packs the 5 small ingest files into one new _a* dir — the
-    // file stream's glob matches it, but the commit is dataChange=false
+    val cursor = Files.createTempDirectory("graft-nodata-cur").toString
+    drainChannels(lake, cursor) // bootstrap from the initial committed files
+    val rows0 = foldedChannels(lake)
+    val v0 = lake.tableVersion("silver", "channels")
+    // maintenance packs the 5 small ingest files into one new _a* dir in a
+    // dataChange=false commit: the feed range carries no rows
     assert(lake.compactSmall("bronze", "channels_raw",
       targetBytes = 1L << 20, minSmallFiles = 4))
-    drain()
-    assert(lake.tableVersion("silver", "silver_channels") == v0,
-      "a repack-only catch-up run must not commit a silver merge at all")
-    assert(lake.table("silver", "silver_channels")
-      .collect().map(_.toString).sorted.toSeq == rows0)
-    // the stream still works: a genuine append after the OPTIMIZE folds
+    drainChannels(lake, cursor)
+    assert(lake.tableVersion("silver", "channels") == v0,
+      "a repack-only range must not commit a silver merge at all")
+    assert(foldedChannels(lake) == rows0)
+    // the consumer still works: a genuine append after the OPTIMIZE folds
     land("r6", "2025-06-09", "Chan v6")
-    drain()
-    val streamed = lake.table("silver", "silver_channels").collect().map(_.toString).sorted.toSeq
-    assert(streamed != rows0, "a real append after the OPTIMIZE must still fold")
-    Silver.refresh(lake, Some(Set("silver_channels")))
-    assert(lake.table("silver", "silver_channels")
-      .collect().map(_.toString).sorted.toSeq == streamed)
-  }
-
-  test("silver and gold streams compose: the streamed video mart equals Gold.refresh's mart") {
-    import java.nio.file.Files
-    import graft.pipeline.{Bronze, Gold, Lakehouse, Silver}
-    import graft.pipeline.Fixtures.{d, dim, met, report, videoItem, videosPayload}
-    val lake = new Lakehouse(spark, Files.createTempDirectory("graft-silvergold").toString)
-    val vidHeaders = Seq(dim("video"), dim("day"), met("views"), met("likes"),
-      met("comments"), met("estimatedMinutesWatched"), ("averageViewDuration", "METRIC", "FLOAT"))
-    def dimReport(dimName: String, value: String, snap: String, views: Long) =
-      report(Seq(dim("video"), dim("day"), dim(dimName), met("views"),
-          met("estimatedMinutesWatched")),
-        Seq(Seq("V1", snap, value, views.toString, "2"),
-          Seq("V2", "2025-05-31", value, (views + 1).toString, "1")))
-    def land(run: String, snap: String, channel: String, views: Long,
-        source: String, country: String, device: String): Unit =
-      Bronze.ingest(lake, Bronze.RunContext(run, s"req-$run", d(snap),
-          graft.pipeline.Fixtures.ts(s"$snap 10:00:00")),
-        _ => Map(
-          "videos_raw" -> Seq(videosPayload(
-            videoItem("V1", channel, s"T$views", views),
-            videoItem("V2", "UC_1", "Stable", views))),
-          "analytics_video_daily_raw" -> Seq(report(vidHeaders, Seq(
-            Seq("V1", snap, views.toString, "1", "0", "3", "41.5"),
-            Seq("V2", snap, (views + 2).toString, "1", "0", "3", "40.0"),
-            Seq("V1", "2025-05-31", (views + 1).toString, "1", "0", "3", "42.0")))),
-          "analytics_video_traffic_source_daily_raw" -> Seq(
-            dimReport("insightTrafficSourceType", source, snap, views)),
-          "analytics_video_country_daily_raw" -> Seq(
-            dimReport("country", country, snap, views)),
-          "analytics_video_device_daily_raw" -> Seq(
-            dimReport("deviceType", device, snap, views))))
-    val silverFacts = Seq("fact_video_daily_metrics", "fact_video_traffic_source_metrics",
-      "fact_video_country_metrics", "fact_video_device_metrics")
-    val dims = Set("dim_country_reference", "dim_traffic_source", "dim_country", "dim_device")
-    val marts = Seq(Gold.videoDailySummary, Gold.videoTrafficSourceDailySummary,
-      Gold.videoCountryDailySummary, Gold.videoDeviceDailySummary)
-    val ckpts = ((silverFacts :+ "silver_videos") ++ marts.map(_.name))
-      .map(n => n -> Files.createTempDirectory(s"graft-silvergold-$n").toString).toMap
-    def drainAll(): Unit = {
-      (silverFacts :+ "silver_videos").foreach(m =>
-        drainOnce(Streams.silverRefreshStream(lake, m), ckpts(m)))
-      // the dims have no stream face: the dimensional marts read them as
-      // standing silver tables, so they are refreshed BEFORE the gold
-      // ticks fold the new fact ranges (a grain folded against a stale dim
-      // would keep a null dim name)
-      Silver.refresh(lake, Some(dims))
-      marts.foreach(m => drainOnce(Gold.refreshStream(lake, m.name), ckpts(m.name)))
-    }
-    def rows(layer: String, t: String) =
-      lake.table(layer, t).collect().map(_.toString).sorted.toSeq
-    def check(label: String): Unit = {
-      (silverFacts.map(f => Silver.models.find(_.name == f).get) ++
-        Seq(Silver.silverVideoMetadataScd2, Silver.silverVideos)).foreach { m =>
-          assert(rows("silver", m.name) == m.build(lake).collect().map(_.toString).sorted.toSeq,
-            s"${m.name} $label streamed != recompute")
-        }
-      marts.foreach { m =>
-        assert(rows("gold", m.name) == m.build(lake).collect().map(_.toString).sorted.toSeq,
-          s"${m.name} $label streamed mart != Gold.refresh's mart")
-      }
-    }
-    land("r1", "2025-06-01", "UC_1", 10, "yt_search", "us", "MOBILE")
-    drainAll()
-    check("bootstrap")
-    // new bronze lands while the streams are down: a re-reported date, a
-    // new date, new dim values, and V1 moving channel (a lookup-side
-    // change for every mart)
-    land("r2", "2025-06-02", "UC_2", 20, "ext_url", "de", "tablet")
-    drainAll()
-    check("catch-up")
-    val v1 = lake.table("gold", "gold_video_daily_summary")
-      .filter(org.apache.spark.sql.functions.col("video_id") === "V1").collect()
-    assert(v1.length == 3 && v1.forall(_.getAs[String]("channel_id") == "UC_2"),
-      s"mart did not follow the new bronze: ${v1.toSeq}")
-    val de = lake.table("gold", "gold_video_country_daily_summary")
-      .filter(org.apache.spark.sql.functions.col("country_code") === "DE").collect()
-    assert(de.nonEmpty && de.forall(_.getAs[String]("country_name") == "Germany"),
-      s"country mart did not pick up the new dim value: ${de.toSeq}")
+    drainChannels(lake, cursor)
+    val folded = foldedChannels(lake)
+    assert(folded != rows0, "a real append after the OPTIMIZE must still fold")
+    assert(folded == recomputedChannels(lake), "post-OPTIMIZE fold != recompute")
   }
 
   test("compactBatches folds only the contiguous prefix around a hole, and folds from the lowest id of an above-zero dir") {
@@ -1026,139 +869,51 @@ class StreamsSpec extends SparkSpec {
     assert(latest() == clean, "replay over an incomplete version diverged")
   }
 
-  test("feedRefreshStream: cursor-driven mart fold under churn and retraction " +
+  test("starFeedTick: cursor-driven mart fold under churn and retraction " +
       "equals the batch rebuild") {
     import java.nio.file.Files
     import graft.pipeline.{Gold, Lakehouse, Silver}
     import org.apache.spark.sql.functions.col
     import spark.implicits._
-    val lake = new Lakehouse(spark, Files.createTempDirectory("graft-goldstream").toString)
-    val silverCur = Files.createTempDirectory("graft-goldstream-scur").toString
+    val lake = new Lakehouse(spark, Files.createTempDirectory("graft-goldfeed").toString)
+    val silverCur = Files.createTempDirectory("graft-goldfeed-scur").toString
     def silverTick(): Unit =
       while (Silver.latestWinsFeedTick(lake, "silver", "sfact", "fct",
         Seq("k"), Seq(col("seq").desc), identity, silverCur).isDefined) ()
-    val goldCur = Files.createTempDirectory("graft-goldstream-gcur").toString
+    val goldCur = Files.createTempDirectory("graft-goldfeed-gcur").toString
     val factDep = Gold.FeedDep("fct", Seq("k"), identity)
     val build = (_: Lakehouse, f: org.apache.spark.sql.DataFrame) =>
       f.select(col("k"), (col("v") * 2).as("v2"), col("seq"))
-    val ckpt = Files.createTempDirectory("graft-goldstream-ckpt").toString
-    // the stream is only the WAKE-UP: its rows are discarded and the tick
-    // reads the change feed through the durable gold cursor — which is why
-    // DV retractions fold here
-    def drainStream(): Unit = drainOnce(Streams.feedRefreshStream(lake, "mart", "fct",
-      () => Gold.starFeedTick(lake, "mart", Seq("k"), factDep, Seq.empty,
-        "sfact", build, goldCur)), ckpt)
+    // the gold tick reads the change feed through its durable cursor,
+    // behind a silver drain that has already converged — which is why DV
+    // retractions fold here
+    def goldTick(): Unit = {
+      var guard = 0
+      while (Gold.starFeedTick(lake, "mart", Seq("k"), factDep, Seq.empty,
+          "sfact", build, goldCur).isDefined) {
+        guard += 1
+        require(guard <= 10, "gold feed drain failed to converge")
+      }
+    }
     def expected = build(lake, lake.table("silver", "sfact"))
       .collect().map(_.toString).sorted.toSeq
     def actual = lake.table("gold", "mart").collect().map(_.toString).sorted.toSeq
 
     lake.appendBronze("fct",
       Seq((1L, 10L, 1L), (2L, 20L, 1L)).toDF("k", "v", "seq").repartition(1))
-    silverTick(); drainStream()
-    assert(actual == expected, "bootstrap streamed mart != batch rebuild")
-    // churn while the stream is down: a re-observation, a new key, then a
-    // DV RETRACTION of the re-observation — the catch-up drain must fold
-    // all three
+    silverTick(); goldTick()
+    assert(actual == expected, "bootstrap mart != batch rebuild")
+    // churn between drains: a re-observation, a new key, then a DV
+    // RETRACTION of the re-observation — the catch-up drain must fold all
+    // three
     lake.appendBronze("fct",
       Seq((1L, 11L, 2L), (3L, 30L, 1L)).toDF("k", "v", "seq").repartition(1))
     lake.deleteBronzeWhereDv("fct", col("k") === 1L && col("seq") === 2L, Nil)
-    silverTick(); drainStream()
-    assert(actual == expected, "churned streamed mart != batch rebuild")
+    silverTick(); goldTick()
+    assert(actual == expected, "churned mart != batch rebuild")
     // the retraction resurrected the OLDER observation in the mart
     val k1 = lake.table("gold", "mart").filter(col("k") === 1L).collect()
     assert(k1.length == 1 && k1.head.getAs[Long]("v2") == 20L,
       s"retraction did not resurrect k=1's older observation: ${k1.toSeq}")
-  }
-
-  private val chHeaders = {
-    import graft.pipeline.Fixtures.{dim, met}
-    Seq(dim("day"), met("views"), met("likes"), met("comments"),
-      met("estimatedMinutesWatched"), met("subscribersGained"), met("subscribersLost"))
-  }
-
-  /** One day of the channel and its daily report, for the channel-mart
-    * stream specs. */
-  private def landChannelDay(lake: graft.pipeline.Lakehouse, run: String, snap: String,
-      channel: String, views: Long): Unit = {
-    import graft.pipeline.Bronze
-    import graft.pipeline.Fixtures.{channelPayload, d, report}
-    Bronze.ingest(lake, Bronze.RunContext(run, s"req-$run", d(snap),
-        graft.pipeline.Fixtures.ts(s"$snap 10:00:00")),
-      _ => Map(
-        "channels_raw" -> Seq(channelPayload(channel, "Chan", views * 10, 10)),
-        "analytics_channel_daily_raw" -> Seq(report(chHeaders, Seq(
-          Seq(snap, views.toString, "2", "1", "7", "3", "1"),
-          Seq("2025-05-31", (views + 1).toString, "2", "1", "8", "2", "0"))))))
-  }
-
-  /** Drains the channel fact through its silver stream (behind the
-    * silver_channels stream it cross-joins), with checkpoints under `ckpt`. */
-  private def drainChannelSilver(lake: graft.pipeline.Lakehouse, ckpt: String): Unit =
-    Seq("silver_channels", "fact_channel_daily_metrics").foreach(m =>
-      drainOnce(Streams.silverRefreshStream(lake, m), s"$ckpt/$m"))
-
-  test("Gold.refreshStream: the streamed channel mart equals the batch mart " +
-      "with frontier caps honored") {
-    import java.nio.file.Files
-    import graft.pipeline.{Gold, Lakehouse}
-    import graft.pipeline.Fixtures.d
-    import org.apache.spark.sql.functions.col
-    val lake = new Lakehouse(spark, Files.createTempDirectory("graft-goldstream2").toString)
-    def land(run: String, snap: String, views: Long): Unit =
-      landChannelDay(lake, run, snap, "UC_1", views)
-    // silver side maintained by its streams, so the gold stream's
-    // per-batch frontier caps read real silver frontiers
-    val silverCkpt = Files.createTempDirectory("graft-goldstream2-s").toString
-    def silverSide(): Unit = drainChannelSilver(lake, silverCkpt)
-    val ckpt = Files.createTempDirectory("graft-goldstream2-ckpt").toString
-    def drainStream(): Unit =
-      drainOnce(Gold.refreshStream(lake, "gold_channel_daily_summary"), ckpt)
-    def expected = Gold.channelDailySummary.build(lake)
-      .collect().map(_.toString).sorted.toSeq
-    def actual = lake.table("gold", "gold_channel_daily_summary")
-      .collect().map(_.toString).sorted.toSeq
-    land("r1", "2025-06-01", 100)
-    silverSide(); drainStream()
-    assert(actual == expected, "bootstrap streamed channel mart != batch build")
-    // day 2 re-observes both dates; catch-up drain folds the changed grains
-    land("r2", "2025-06-02", 150)
-    silverSide(); drainStream()
-    assert(actual == expected, "day-2 streamed channel mart != batch build")
-    assert(lake.table("gold", "gold_channel_daily_summary")
-      .filter(col("date") === org.apache.spark.sql.functions.lit(d("2025-06-02"))).count() == 1)
-    // frontier discipline: bronze ahead of silver (no silver drain) — the
-    // stream's tick is CAPPED at the standing silver frontier and must not
-    // fold the new range yet (gold never outruns silver)
-    val before = actual
-    land("r3", "2025-06-03", 175)
-    drainStream()
-    assert(actual == before,
-      "gold stream outran the silver frontier (uncapped drain)")
-    // once silver catches up, the next drain folds it
-    silverSide(); drainStream()
-    assert(actual == expected, "post-catch-up streamed mart != batch build")
-  }
-
-  test("Gold.refreshStream: a channel-identity change leaves no dead channel_id " +
-      "in the streamed channel mart") {
-    import java.nio.file.Files
-    import graft.pipeline.{Gold, Lakehouse}
-    val lake = new Lakehouse(spark, Files.createTempDirectory("graft-goldchid").toString)
-    val silverCkpt = Files.createTempDirectory("graft-goldchid-s").toString
-    val ckpt = Files.createTempDirectory("graft-goldchid-ckpt").toString
-    def drainStream(): Unit =
-      drainOnce(Gold.refreshStream(lake, "gold_channel_daily_summary"), ckpt)
-    def mart = lake.table("gold", "gold_channel_daily_summary")
-    landChannelDay(lake, "r1", "2025-06-01", "UC_1", 100)
-    drainChannelSilver(lake, silverCkpt); drainStream()
-    // the account's channel id changes: silver re-stamps the whole fact
-    // under the new id, and the mart must follow it wholesale
-    landChannelDay(lake, "r2", "2025-06-02", "UC_NEW", 150)
-    drainChannelSilver(lake, silverCkpt); drainStream()
-    val ids = mart.select("channel_id").distinct().collect().map(_.getString(0)).toSeq
-    assert(ids == Seq("UC_NEW"), s"dead channel ids survived in the mart: $ids")
-    assert(mart.collect().map(_.toString).sorted.toSeq ==
-      Gold.channelDailySummary.build(lake).collect().map(_.toString).sorted.toSeq,
-      "streamed channel mart != batch build after the identity change")
   }
 }
