@@ -102,8 +102,8 @@ object Graft {
   def eventsTable(spark: SparkSession, sfDir: String): DataFrame =
     normalizeEventTs(readParquet(spark, s"$sfDir/events.parquet"))
 
-  /** Schema-adaptive `ts` normalization shared by the batch and streaming
-    * events readers (see [[eventsTable]] for the encoding history). */
+  /** Schema-adaptive `ts` normalization of the events reader (see
+    * [[eventsTable]] for the encoding history). */
   def normalizeEventTs(df: DataFrame): DataFrame = {
     import org.apache.spark.sql.functions._
     import org.apache.spark.sql.types._

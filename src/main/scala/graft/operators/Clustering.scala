@@ -47,10 +47,6 @@ object Clustering {
     * cell count against cell size (both ~√n), the standard IVF sizing. */
   def cellCount(n: Long): Long = math.ceil(math.sqrt(n.toDouble)).toLong
 
-  /** Seed-selection stride: keep a vector as a seed when its 32-bit md5
-    * draw ≡ 0 (mod stride), giving ~n/stride ≈ ⌈√n⌉ expected seeds. */
-  def seedStride(n: Long): Long = math.max(1L, n / math.max(1L, cellCount(n)))
-
   /** Deterministic seed vectors: corpus rows whose md5-hash draw lands on
     * the stride. The stride is computed from a 1-row count aggregate and
     * broadcast into the filter (no driver action, no global window — the

@@ -8,14 +8,10 @@ import org.apache.spark.sql.functions._
   * exact (fingerprint group-by), MinHash+LSH (shingle → minhash → band →
   * bucket-join), SimHash, and n-gram Jaccard verification.
   *
-  * Two hash families coexist deliberately:
-  *   - `polyHash` — a portable polynomial rolling hash (fold over char codes,
-  *     mod 1e9+7) that any SQL engine with list lambdas can recompute, so the
-  *     DuckDB oracle can hash-match full MinHash/SimHash/LSH outputs.
-  *   - `fastShingleHashes` — `xxhash64` on sliding substrings, the 100 TB hot
-  *     path (codegen'd native hash, no per-char array work).
-  * Both produce the same *shape* of signature; queries pin the portable one
-  * for verifiability, bench can swap in the fast one.
+  * Shingles hash with `polyHash` — a portable polynomial rolling hash (fold
+  * over char codes, mod 1e9+7) that any SQL engine with list lambdas can
+  * recompute, so the DuckDB oracle can hash-match full MinHash/SimHash/LSH
+  * outputs.
   *
   * Scale notes: MinHash-LSH replaces the O(n²) pair join with a shuffle on
   * (band_id, band_key) — only same-bucket pairs are generated, so the plan is
@@ -55,11 +51,6 @@ object Dedup {
 
   def polyHashStr(s: Column): Column = polyHash(charCodes(s))
 
-  /** Character 5-gram shingles as strings (whole string when len < 5). */
-  def charShingles(s: Column, n: Int = 5): Column =
-    transform(sequence(lit(1), greatest(length(s) - (n - 1), lit(1))),
-      i => s.substr(i, lit(n)))
-
   /** Portable-hashed shingles: one polyHash per sliding n-gram window,
     * computed by the native codegen'd expression [[graft.sql.ShingleHashes]]
     * (one compiled pass per row). Values are identical to
@@ -78,13 +69,6 @@ object Dedup {
   def shingleHashesPortableHof(s: Column, n: Int = 5): Column =
     transform(sequence(lit(1), greatest(length(s) - (n - 1), lit(1))),
       i => polyHash(charCodes(s.substr(i, lit(n)))))
-
-  /** 100 TB fast path: xxhash64 over sliding substrings (codegen'd, no char
-    * arrays). Not oracle-reproducible — signatures differ from `shingleHashes`
-    * but dedup semantics are identical. */
-  def fastShingleHashes(s: Column, n: Int = 5): Column =
-    transform(sequence(lit(1), greatest(length(s) - (n - 1), lit(1))),
-      i => xxhash64(s.substr(i, lit(n))))
 
   /** MinHash signature: array of k minima of affine-permuted shingle hashes,
     * fused into one compiled pass ([[graft.sql.MinHashSignature]]). */

@@ -47,7 +47,6 @@ object CurationJob {
       classifierMinScoreMilli: Option[Long] = None,
       dsirTarget: Option[(org.apache.spark.sql.Column, Int)] = None,
       optimize: Boolean = true,
-      gates: Seq[Maintenance.GateDirs] = Seq.empty,
       now: Timestamp = new Timestamp(System.currentTimeMillis()),
       runId: String = UUID.randomUUID().toString): CurationReport = {
 
@@ -125,13 +124,10 @@ object CurationJob {
     Bronze.finalizeRun(lake, runId, status, new Timestamp(System.currentTimeMillis()))
 
     // OPTIMIZE pass, every run (reference optimize_tables.py:116-132):
-    // bronze fragments one append per run log write; registered near-dup
-    // gates fold their b{N} tails to the committed frontier. AFTER
+    // bronze fragments one append per run log write. AFTER
     // finalize (a fatal error here must not leave the run log dangling);
     // non-strict — failures land in the report, not the run status.
-    val maint = if (optimize)
-        Some(Maintenance.run(lake, gates = gates))
-      else None
+    val maint = if (optimize) Some(Maintenance.run(lake)) else None
     CurationReport(runId, status, funnel, failure, maint)
   }
 
@@ -167,7 +163,6 @@ object CurationJob {
       packShards: Int = 8,
       classifierMinScoreMilli: Option[Long] = None,
       optimize: Boolean = true,
-      gates: Seq[Maintenance.GateDirs] = Seq.empty,
       now: Timestamp = new Timestamp(System.currentTimeMillis()),
       runId: String = UUID.randomUUID().toString): CurationReport = {
     import graft.operators.Dedup
@@ -290,9 +285,7 @@ object CurationJob {
     }
 
     Bronze.finalizeRun(lake, runId, status, new Timestamp(System.currentTimeMillis()))
-    val maint = if (optimize)
-        Some(Maintenance.run(lake, gates = gates))
-      else None
+    val maint = if (optimize) Some(Maintenance.run(lake)) else None
     CurationReport(runId, status, funnel, failure, maint)
   }
 }

@@ -129,7 +129,7 @@ object Gold {
     if (!lake.exists("silver", factTable)) return None
     val deps = factDep +: lookupDeps
     val ticks = deps.map { d =>
-      graft.streaming.Streams.registerCursor(lake.root, d.source, s"$cursorRoot/${d.source}")
+      lake.registerCursor(d.source, s"$cursorRoot/${d.source}")
       val cur = java.nio.file.Paths.get(s"$cursorRoot/${d.source}")
       val from = lake.changesCursor(cur)
       val head = lake.committedBronzeVersion(d.source)
@@ -160,7 +160,7 @@ object Gold {
     }
     val metaCols = Seq("_change_type", "_commit_version")
     val keyFrames = live.map { case (d, _, from, to) =>
-      val changes = Silver.fillHeadColumns(lake, d.source,
+      val changes = lake.fillHeadColumns(d.source,
         lake.tableChanges(d.source, from, to))
       val keys = d.typedKeys(changes.drop(metaCols: _*))
         .select(d.keyCols.map(col): _*).distinct()

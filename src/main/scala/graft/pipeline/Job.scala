@@ -47,7 +47,6 @@ object Job {
       endDate: String = "auto",
       lookbackDays: Int = 7,
       optimize: Boolean = true,
-      gates: Seq[Maintenance.GateDirs] = Seq.empty,
       now: Timestamp = new Timestamp(System.currentTimeMillis()),
       runId: String = UUID.randomUUID().toString): RunReport = {
 
@@ -100,9 +99,7 @@ object Job {
     // fatal error here can never leave the run log dangling; non-strict
     // like the reference's default — per-table failures land in the
     // report, never change the run's recorded outcome.
-    val maint = if (optimize)
-        Some(Maintenance.run(lake, gates = gates))
-      else None
+    val maint = if (optimize) Some(Maintenance.run(lake)) else None
     RunReport(runId, status, checkFailures, failure, maint)
   }
 

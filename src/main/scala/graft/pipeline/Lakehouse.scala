@@ -516,19 +516,36 @@ final class Lakehouse(val spark: SparkSession, val root: String,
     }
   }
 
+  /** Fill the head-schema columns a change frame lacks with typed NULLs —
+    * exactly what a from-scratch read of the older files would see. A
+    * CAPPED range's frames are self-consistent at the RANGE's head, so a
+    * range ending before an ADD COLUMNS lacks the added column, and a
+    * consumer referencing it would throw on every retry of the same
+    * capped range — a livelock. Every change-feed tick and sink fills
+    * through here. Only source columns are fillable; typed projections
+    * may reference derived names, which pass through. */
+  private[graft] def fillHeadColumns(source: String, changes: DataFrame): DataFrame = {
+    import org.apache.spark.sql.functions.lit
+    table("bronze", source).schema.fields
+      .filterNot(f => changes.columns.contains(f.name))
+      .foldLeft(changes)((d, f) => d.withColumn(f.name, lit(null).cast(f.dataType)))
+  }
+
   // ───── incremental CDF consumption (durable cursor) ────────────────────
   //
   // A change-feed CONSUMER keeps a cursor — the version it has consumed
   // through — as `_cursor_v{N}` marker files in its own directory (one
   // per advance, put-if-absent like the log itself, older markers pruned).
-  // The loop is: [[tableChangesSince]] → process the batch keyed on its
-  // `toVersion` → [[commitChangesCursor]]. A crash between processing and
-  // the cursor commit redelivers the SAME (from, to] range, so a consumer
-  // whose effects are keyed on `toVersion` (e.g. the b{N} batch-dir
-  // discipline in [[graft.streaming.Streams.changesSink]]) is exactly-once
-  // end to end. The cursor must stay within the table's vacuum retention
-  // window — a cursor older than the earliest retained version fails fast
-  // in [[tableChanges]] rather than silently skipping history.
+  // The loop is: [[tableChangesSince]] → process the batch, committing its
+  // effect under a writer txn keyed on the versions it covers →
+  // [[commitChangesCursor]]. A crash between processing and the cursor
+  // commit redelivers the SAME (from, to] range, and the replayed commits
+  // are txn no-ops (e.g. [[graft.streaming.Streams.changesSink]]'s
+  // per-version appends), so the consumer is exactly-once end to end. The
+  // cursor must stay within the table's vacuum retention window — a
+  // cursor older than the earliest retained version fails fast in
+  // [[tableChanges]] rather than silently skipping history; a
+  // [[registerCursor]]ed cursor holds that window open.
 
   /** The version a change-feed cursor has consumed through (0 = nothing
     * consumed yet). */
@@ -574,32 +591,64 @@ final class Lakehouse(val spark: SparkSession, val root: String,
   /** The newest committed version of a bronze table (0 = no commit yet). */
   def committedBronzeVersion(name: String): Int = tableVersion("bronze", name)
 
-  /** Frontiers of REGISTERED change-feed cursors on a bronze table: the
-    * `cursor\t<table>\t<dir>` markers under `<root>/_stream_state`
-    * (written by [[graft.streaming.Streams.registerCursor]]; the same
-    * registry the maintenance pass auto-discovers gates from). Markers
-    * whose cursor dir vanished are ignored — a deleted consumer holds
+  // ───── cursor registry ─────────────────────────────────────────────────
+  //
+  // One marker file per registered cursor under `<root>/_stream_state/`:
+  // a `cursor\t<table>\t<dir>` line (URL-encoded fields), named by the md5
+  // of its content so re-registration is idempotent. Commits and vacuum
+  // read the frontiers back ([[registeredCursorFrontiers]]), and a marker
+  // whose cursor dir has vanished is dropped there.
+
+  private def cursorRegistry: Path = Paths.get(root, "_stream_state")
+
+  /** Register a change-feed CURSOR on a bronze table. A registered
+    * cursor's frontier HOLDS VACUUM RETENTION on that table (every
+    * version at-or-after the slowest frontier keeps its read set —
+    * [[vacuumBronze]]), so maintenance can never strand a live consumer
+    * into a full re-sync. Every change-feed tick and sink calls this
+    * first; delete the cursor dir to release the hold when a consumer is
+    * decommissioned. Idempotent. */
+  def registerCursor(table: String, cursorDir: String): Unit = {
+    // the registration must HOLD retention from the moment the consumer
+    // exists, not from its first cursor commit: create the (empty) cursor
+    // dir NOW — an empty dir reads as frontier 0 (everything retained) and
+    // keeps the marker alive through the vanished-dir sweep. Without this,
+    // a vacuum during a consumer's FIRST (longest) drain would both
+    // unregister it and vacuum the very versions it is reading.
+    Files.createDirectories(Paths.get(cursorDir))
+    def enc(x: String) = java.net.URLEncoder.encode(x, java.nio.charset.StandardCharsets.UTF_8)
+    val line = s"cursor\t${enc(table)}\t${enc(cursorDir)}"
+    Files.createDirectories(cursorRegistry)
+    val name = java.security.MessageDigest.getInstance("MD5")
+      .digest(line.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(16)
+    val p = cursorRegistry.resolve(s"$name.state")
+    if (!Files.exists(p))
+      Files.write(p, line.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+  }
+
+  /** Frontiers of REGISTERED change-feed cursors on a bronze table
+    * ([[registerCursor]]). A marker whose cursor dir vanished, or that is
+    * not a cursor line, is deleted — a decommissioned consumer holds
     * nothing. */
   private def registeredCursorFrontiers(base: Path): Seq[Int] = {
-    val dirP = java.nio.file.Paths.get(root, "_stream_state")
-    if (!isBronze(base) || !Files.isDirectory(dirP)) return Seq.empty
+    if (!isBronze(base) || !Files.isDirectory(cursorRegistry)) return Seq.empty
     val name = base.getFileName.toString
-    val s = Files.list(dirP)
-    val lines = try {
+    val s = Files.list(cursorRegistry)
+    val markers = try {
       import scala.jdk.CollectionConverters._
-      s.iterator().asScala.filter(_.getFileName.toString.endsWith(".state"))
-        .map(p => new String(Files.readAllBytes(p),
-          java.nio.charset.StandardCharsets.UTF_8))
-        .toSeq
+      s.iterator().asScala.filter(_.getFileName.toString.endsWith(".state")).toSeq
     } finally s.close()
     def dec(x: String) =
       java.net.URLDecoder.decode(x, java.nio.charset.StandardCharsets.UTF_8)
-    lines.flatMap { l =>
-      l.split('\t') match {
-        case Array("cursor", t, d) if dec(t) == name =>
-          val p = java.nio.file.Paths.get(dec(d))
-          if (Files.isDirectory(p)) Some(changesCursor(p)) else None
-        case _ => None
+    markers.flatMap { m =>
+      val line = try new String(Files.readAllBytes(m), java.nio.charset.StandardCharsets.UTF_8)
+        catch { case _: java.nio.file.NoSuchFileException => "" } // swept concurrently
+      line.trim.split('\t').map(dec) match {
+        case Array("cursor", t, d) if Files.isDirectory(Paths.get(d)) =>
+          if (t == name) Some(changesCursor(Paths.get(d))) else None
+        case _ =>
+          Files.deleteIfExists(m) // vanished cursor dir or malformed
+          None
       }
     }
   }
@@ -3474,8 +3523,14 @@ final class Lakehouse(val spark: SparkSession, val root: String,
     schemaOpt.fold(raw)(renameView(raw, _, colMap))
   }
 
-  /** [[tableAtWhere]] plus the driver-materialized entry count (the AS-OF
-    * twin of [[prunedFilePathsMetered]], for the scaling spec). */
+  /** Time-travel scan WITH file skipping — [[tableWhere]] AS OF `version`:
+    * only files of that version whose stats admit `preds` are read, and
+    * the resolve goes through the checkpoint parquet twin exactly like the
+    * latest-version path, so a selective AS-OF probe costs the driver
+    * O(matching + delta tail), never O(live files at that version). The
+    * caller still applies its exact row filter (skipping is a superset
+    * guarantee). Also returns the driver-materialized entry count (the
+    * AS-OF twin of [[prunedFilePathsMetered]], for the scaling spec). */
   private[pipeline] def tableAtWhereMetered(layer: String, name: String,
       version: Int, preds: Seq[ManifestStats.StatPred]): (DataFrame, Int) = {
     val avail = tableVersions(layer, name)
@@ -3500,17 +3555,6 @@ final class Lakehouse(val spark: SparkSession, val root: String,
     }
     (readPrunedWithDv(base, schema, paths, colMapAsOf(base, version)), held)
   }
-
-  /** Time-travel scan WITH file skipping — [[tableWhere]] AS OF `version`:
-    * only files of that version whose stats admit `preds` are read, and
-    * the resolve goes through the checkpoint parquet twin exactly like the
-    * latest-version path, so a selective AS-OF probe costs the driver
-    * O(matching + delta tail), never O(live files at that version). The
-    * caller still applies its exact row filter (skipping is a superset
-    * guarantee). */
-  def tableAtWhere(layer: String, name: String, version: Int,
-      preds: Seq[ManifestStats.StatPred]): DataFrame =
-    tableAtWhereMetered(layer, name, version, preds)._1
 
   /** Scan with file skipping: only files whose stats admit `preds` are
     * read. The caller still applies its exact row filter — skipping is a
@@ -3790,8 +3834,7 @@ final class Lakehouse(val spark: SparkSession, val root: String,
 
   private[graft] def deleteRecursively(p: Path): Unit =
     if (Files.exists(p)) {
-      // close the walk stream (it holds an fd) — same discipline as
-      // Streams.deleteRecursively and listDir
+      // close the walk stream (it holds an fd) — same discipline as listDir
       val s = Files.walk(p)
       try s.sorted(Comparator.reverseOrder[Path]()).forEach(f => Files.delete(f))
       finally s.close()

@@ -103,20 +103,6 @@ object Silver {
         .reduce(_ && _), how)
   }
 
-  /** Fill columns a capped range predates (the range's frames are
-    * self-consistent at ITS head; an ADD COLUMNS landing after it would
-    * otherwise make the typed projection throw on every retry of the same
-    * capped range — a livelock). Only source columns are fillable; typed
-    * projections may reference derived names, which pass through. */
-  private[pipeline] def fillHeadColumns(lake: Lakehouse, source: String,
-      changes0: DataFrame): DataFrame = {
-    lazy val headSchema = lake.table("bronze", source).schema
-    headSchema.fields
-      .filterNot(f => changes0.columns.contains(f.name))
-      .foldLeft(changes0)((d, f) =>
-        d.withColumn(f.name, lit(null).cast(f.dataType)))
-  }
-
   /** One change-feed tick of the generic latest-wins fold — table-agnostic
     * so the storage suite can oracle-gate it over TPC-H samples (st15).
     * `Job.run` refreshes silver by full recompute; this tick maintains any
@@ -152,7 +138,7 @@ object Silver {
       source: String, grain: Seq[String], order: Seq[Column],
       typed: DataFrame => DataFrame, cursorDir: String,
       maxVersions: Int = Int.MaxValue): Option[(Int, Int)] = {
-    graft.streaming.Streams.registerCursor(lake.root, source, cursorDir)
+    lake.registerCursor(source, cursorDir)
     val cur = java.nio.file.Paths.get(cursorDir)
     val head = lake.committedBronzeVersion(source)
     def snapshot(): DataFrame = latestWins(typed(lake.table("bronze", source)), grain, order)
@@ -193,7 +179,7 @@ object Silver {
       lake.commitChangesCursor(cur, to)
       return Some((from, to))
     }
-    val changes = fillHeadColumns(lake, source, changes0)
+    val changes = lake.fillHeadColumns(source, changes0)
     val metaCols = Seq("_change_type", "_commit_version")
     val freshAll = typed(changes
       .filter(col("_change_type").isin("insert", "update_postimage"))
@@ -217,7 +203,7 @@ object Silver {
     // on every retry of the same range (the livelock fillHeadColumns guards
     // on the changes frame), so the pinned rebuild gets the same NULL fill
     val rebuilt = keyMatch(
-      typed(fillHeadColumns(lake, source, lake.tableAt("bronze", source, to))),
+      typed(lake.fillHeadColumns(source, lake.tableAt("bronze", source, to))),
       delKeys, grain, "left_semi")
     if (!lake.exists(layer, target))
       // mid-stream missing target (deleted between ticks): the delta
@@ -272,7 +258,7 @@ object Silver {
       obsKey: Seq[String], typed: DataFrame => DataFrame,
       segment: DataFrame => DataFrame, cursorDir: String,
       maxVersions: Int = Int.MaxValue): Option[(Int, Int)] = {
-    graft.streaming.Streams.registerCursor(lake.root, source, cursorDir)
+    lake.registerCursor(source, cursorDir)
     val cur = java.nio.file.Paths.get(cursorDir)
     val head = lake.committedBronzeVersion(source)
     // one visible-rows scan; idempotent (re-running replaces both tables
@@ -308,7 +294,7 @@ object Silver {
       snapshotRebuild()
     // a pure-maintenance range (no data change) advances without rewriting
     else if (!changes0.isEmpty) {
-      val changes = fillHeadColumns(lake, source, changes0)
+      val changes = lake.fillHeadColumns(source, changes0)
       val metaCols = Seq("_change_type", "_commit_version")
       val freshObs = typed(changes
         .filter(col("_change_type").isin("insert", "update_postimage"))
@@ -323,7 +309,7 @@ object Silver {
       // [[latestWinsFeedTick]]; head-schema NULL fill for the same
       // capped-range-predates-ADD-COLUMNS livelock guard as the changes frame
       val rebuiltObs = keyMatch(
-        typed(fillHeadColumns(lake, source, lake.tableAt("bronze", source, to))),
+        typed(lake.fillHeadColumns(source, lake.tableAt("bronze", source, to))),
         retractedIds, idCols, "left_semi")
       lake.transactMerge(layer, obsTable) { base =>
         keyMatch(base, retractedIds, idCols, "left_anti")

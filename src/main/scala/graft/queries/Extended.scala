@@ -533,8 +533,7 @@ object Extended {
 
   /** Hopping (sliding) event-time windows — `window(ts, 10m, 5m)`: every
     * event lands in len/slide = 2 overlapping windows (the streaming
-    * dashboard grain, §2.5's batch counterpart of
-    * `Streams.windowedEventCounts`). Value sums go through round-6 +
+    * dashboard grain, computed in batch, §2.5). Value sums go through round-6 +
     * DECIMAL(18,6) so overlapping-window re-aggregation stays exact and
     * order-independent; the oracle restates Spark's epoch-aligned window
     * assignment with integer epoch arithmetic. */

@@ -220,34 +220,33 @@ object StorageQueries {
       ORDER BY o_orderkey"""))
 
   /** Durable change-feed cursor ([[graft.streaming.Streams.changesSink]]):
-    * the feed drains in TWO ticks (after v1; after v2+v3), then a crash is
-    * simulated by rewinding the cursor to the first tick's frontier and
-    * re-draining — the re-derived per-version batches overwrite
-    * byte-identically, so the materialized feed read back equals the full
-    * CDF exactly once. DuckDB replays the three versions' change rows as
-    * literal-tagged unions (same shape as st03). */
+    * the feed drains into a bronze table in TWO ticks (after v1; after
+    * v2+v3), then a crash is simulated by rewinding the cursor to the
+    * first tick's frontier and re-draining — each re-derived per-version
+    * append is a txn no-op, so the materialized feed read back equals the
+    * full CDF exactly once. DuckDB replays the three versions' change rows
+    * as literal-tagged unions (same shape as st03). */
   val st06CdfCursor = GraftQuery(
     "st06_cdf_cursor",
     (s, dir) => {
       val scratch = Files.createTempDirectory("graft-st06")
       val lake = new Lakehouse(s, scratch.toString)
       val cursor = scratch.resolve("cursor")
-      val feed = scratch.resolve("feed").toString
       val base = table(s, dir, "orders")
         .filter(col("o_custkey") % 25 === 7)
         .select(col("o_orderkey"), col("o_orderstatus"),
           col("o_totalprice").cast(money).as("price"))
       lake.appendBronze("ord", base.filter(col("o_orderkey") % 2 === 0).repartition(2)) // v1
-      graft.streaming.Streams.changesSink(lake, "ord", cursor.toString, feed) // tick 1: (0,1]
+      graft.streaming.Streams.changesSink(lake, "ord", cursor.toString, "feed") // tick 1: (0,1]
       lake.appendBronze("ord", base.filter(col("o_orderkey") % 2 =!= 0).repartition(2)) // v2
       lake.deleteBronzeWhereDv("ord", col("o_orderkey") % 5 === 0) // v3
-      graft.streaming.Streams.changesSink(lake, "ord", cursor.toString, feed) // tick 2: (1,3]
+      graft.streaming.Streams.changesSink(lake, "ord", cursor.toString, "feed") // tick 2: (1,3]
       // crash replay: the cursor never made it past tick 1 — re-drain
       val ms = Files.list(cursor)
       try ms.forEach(p => Files.deleteIfExists(p)) finally ms.close()
       lake.commitChangesCursor(cursor, 1)
-      graft.streaming.Streams.changesSink(lake, "ord", cursor.toString, feed)
-      val res = graft.streaming.Streams.batchedTable(s, feed)
+      graft.streaming.Streams.changesSink(lake, "ord", cursor.toString, "feed")
+      val res = lake.table("bronze", "feed")
         .select(col("o_orderkey"), col("o_orderstatus"),
           col("price").cast("double").as("price"),
           col("_change_type").as("change_type"),

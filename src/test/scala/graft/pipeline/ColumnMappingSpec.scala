@@ -175,7 +175,7 @@ class ColumnMappingSpec extends SparkSpec {
     // a registered cursor (the consumer the bug bricks) holds history
     // retention from frontier 0, so the whole range stays readable
     val cursor = Files.createTempDirectory("graft-cmmkdrop-cur").toString
-    graft.streaming.Streams.registerCursor(lake.root, "t", cursor)
+    lake.registerCursor("t", cursor)
     lake.appendBronze("t", rows("r1", Seq(1L, 2L)))
     // a MERGE commit records its key columns (#mkeys) for CDF pairing
     lake.mergeBronze("t", rows("r2", Seq(2L, 3L)), Seq("id"))

@@ -142,7 +142,7 @@ class ConcurrencySpec extends SparkSpec {
     // 0) must hold retention through the whole drain
     val curs = (1 to 2).map(c =>
       Files.createTempDirectory(s"graft-ccdf-cur$c").toString)
-    curs.foreach(Streams.registerCursor(lake.root, "src", _))
+    curs.foreach(lake.registerCursor("src", _))
     val writersF = Future.sequence((1 to 3).map { w =>
       Future {
         (1 to 5).foreach { r =>
@@ -158,7 +158,7 @@ class ConcurrencySpec extends SparkSpec {
     // draining until the writers are done AND it reads three quiet ticks
     val consumersF = Future.sequence(curs.zipWithIndex.map { case (cur, c) =>
       Future {
-        val out = Files.createTempDirectory(s"graft-ccdf-out$c").toString
+        val out = s"out$c"
         var quiet = 0
         var ticks = 0
         while (quiet < 3) {
@@ -199,13 +199,13 @@ class ConcurrencySpec extends SparkSpec {
     Await.result(writersF, 300.seconds)
     val outs = Await.result(consumersF, 300.seconds)
     Await.result(vacuumF, 300.seconds)
-    // append-only source: each consumer's batch-dir union must equal the
-    // table EXACTLY — a version delivered twice duplicates ids, a vacuumed
+    // append-only source: each consumer's target table must equal the
+    // source EXACTLY — a version delivered twice duplicates ids, a vacuumed
     // version skipped mid-drain loses them
     val expect = lake.table("bronze", "src").select("id").as[Long].collect().sorted.toSeq
     assert(expect.length == 1 + 3 * 5 * 4)
     outs.foreach { out =>
-      val got = Streams.batchedTable(spark, out)
+      val got = lake.table("bronze", out)
         .filter(col("_change_type") === "insert")
         .select("id").as[Long].collect().sorted.toSeq
       assert(got == expect,

@@ -3,7 +3,6 @@ package graft.pipeline
 import java.nio.file.Files
 
 import graft.SparkSpec
-import graft.streaming.Streams
 
 class MaintenanceSpec extends SparkSpec {
 
@@ -156,73 +155,5 @@ class MaintenanceSpec extends SparkSpec {
     assert(r2.status == "ok", r2.toString)
     assert(!Files.exists(base.resolve("_a9_crashed")), "expired debris survived")
     assert(lake.table("bronze", "t").count() == 1, "vacuum touched live data")
-  }
-
-  test("auto-discovery: a gate registered at stream definition folds with NO gates wiring; vanished state self-cleans") {
-    val lake = new Lakehouse(spark, Files.createTempDirectory("graft-autog").toString)
-    val idx = Files.createTempDirectory("graft-autog-idx").toString
-    val out = Files.createTempDirectory("graft-autog-out").resolve("survivors").toString
-    // what the lake-aware nearDupGate overload does at stream definition
-    Streams.registerGate(lake.root, idx, out)
-    (0 to 3).foreach { i =>
-      Streams.gateBatch(Seq((i * 10L, s"wholly distinct auto batch number $i content " * 8))
-        .toDF("doc_id", "text"), i.toLong, idx, out, 0.5)
-    }
-    // a standalone batch-versioned dir, registered the indexMaintenance way
-    val assignDir = Files.createTempDirectory("graft-autog-asg").resolve("assign").toString
-    Streams.registerBatchDir(lake.root, assignDir)
-    (0 to 2).foreach { i =>
-      Seq((i.toLong, i * 2L)).toDF("vec_id", "cell_id").write.parquet(s"$assignDir/b$i")
-    }
-    // NO gates/batchDirs params: discovery alone must fold everything
-    val report = Maintenance.run(lake)
-    assert(report.status == "ok", report.toString)
-    assert(report.gatesCompacted.map(_.survivorsDir) == Seq(out), report.toString)
-    assert(report.batchDirsCompacted == Seq(assignDir), report.toString)
-    def dirNames(d: String) = Option(new java.io.File(d).listFiles())
-      .getOrElse(Array.empty).filter(_.isDirectory).map(_.getName).sorted.toSeq
-    assert(dirNames(out) == Seq("c3"), s"got ${dirNames(out)}")
-    assert(Streams.compactedWatermark(assignDir) == 2L)
-    // re-registration is idempotent (one marker, not one per stream start)
-    Streams.registerGate(lake.root, idx, out)
-    assert(Maintenance.run(lake).gatesCompacted.size == 1)
-    // state deleted out-of-band: the next pass drops the marker silently
-    Seq(idx, out, assignDir).foreach(d =>
-      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(d)))
-    val r3 = Maintenance.run(lake)
-    assert(r3.status == "ok", r3.toString)
-    assert(r3.gatesCompacted.isEmpty && r3.batchDirsCompacted.isEmpty, r3.toString)
-    val (g, d) = Streams.registeredState(lake.root)
-    assert(g.isEmpty && d.isEmpty, "vanished state must drop its markers")
-  }
-
-  test("registered gates fold to their committed frontier; gate output unchanged") {
-    val lake = new Lakehouse(spark, Files.createTempDirectory("graft-maintg").toString)
-    val idx = Files.createTempDirectory("graft-maintg-idx").toString
-    val out = Files.createTempDirectory("graft-maintg-out").resolve("survivors").toString
-    (0 to 3).foreach { i =>
-      Streams.gateBatch(Seq((i * 10L, s"wholly distinct batch number $i content " * 8))
-        .toDF("doc_id", "text"), i.toLong, idx, out, 0.5)
-    }
-    val before = Streams.batchedTable(spark, out)
-      .select("doc_id").as[Long].collect().sorted.toSeq
-    val report = Maintenance.run(lake, gates = Seq(Maintenance.GateDirs(idx, out)),
-      targetFiles = 1)
-    assert(report.status == "ok", report.toString)
-    assert(report.gatesCompacted.size == 1)
-    // O(1) + tail: everything committed folded into ONE segment per dir
-    def dirNames(d: String) = Option(new java.io.File(d).listFiles())
-      .getOrElse(Array.empty).filter(_.isDirectory).map(_.getName).sorted.toSeq
-    assert(dirNames(out) == Seq("c3"), s"got ${dirNames(out)}")
-    assert(dirNames(s"$idx/postings") == Seq("c3"), s"got ${dirNames(s"$idx/postings")}")
-    assert(Streams.batchedTable(spark, out)
-      .select("doc_id").as[Long].collect().sorted.toSeq == before,
-      "maintenance changed the gate's visible output")
-    // the stream continues against the consolidated index
-    Streams.gateBatch(Seq((100L, "wholly distinct batch number 2 content " * 8))
-      .toDF("doc_id", "text"), 4L, idx, out, 0.5)
-    assert(Streams.batchedTable(spark, out)
-      .select("doc_id").as[Long].collect().sorted.toSeq == before,
-      "a near-dup of a consolidated doc slipped past the gate")
   }
 }

@@ -184,7 +184,7 @@ class TxnProtocolSpec extends SparkSpec {
     lake.appendBronze("t", rows("r1", Seq(1L, 2L)))
     lake.appendBronze("t", rows("r2", Seq(3L)))
     val cursor = Files.createTempDirectory("graft-cdfcur-cursor")
-    val out = Files.createTempDirectory("graft-cdfcur-out").toString
+    val out = "feed"
 
     assert(lake.changesCursor(cursor) == 0)
     val Some((from1, to1)) =
@@ -203,13 +203,13 @@ class TxnProtocolSpec extends SparkSpec {
     // the materialized feed equals the full CDF read, exactly once
     val full = lake.tableChanges("t", 0, to2)
       .select("id", "run_id", "_change_type", "_commit_version")
-    val drained = graft.streaming.Streams.batchedTable(spark, out)
+    val drained = lake.table("bronze", out)
       .select("id", "run_id", "_change_type", "_commit_version")
     assert(drained.exceptAll(full).isEmpty && full.exceptAll(drained).isEmpty)
 
-    // CRASH SIMULATION: batches written but the cursor never advanced —
+    // CRASH SIMULATION: appends committed but the cursor never advanced —
     // wipe the cursor markers back to to1 and re-drain; the re-derived
-    // batches overwrite byte-identically, end state unchanged
+    // appends are txn no-ops, end state unchanged
     val s = Files.list(cursor)
     try {
       import scala.jdk.CollectionConverters._
@@ -219,7 +219,7 @@ class TxnProtocolSpec extends SparkSpec {
     val Some((_, to3)) =
       graft.streaming.Streams.changesSink(lake, "t", cursor.toString, out)
     assert(to3 == to2)
-    val redrained = graft.streaming.Streams.batchedTable(spark, out)
+    val redrained = lake.table("bronze", out)
       .select("id", "run_id", "_change_type", "_commit_version")
     assert(redrained.exceptAll(full).isEmpty && full.exceptAll(redrained).isEmpty)
 
@@ -228,10 +228,37 @@ class TxnProtocolSpec extends SparkSpec {
     assert(err.getMessage.contains("re-deliver"))
   }
 
+  test("change-feed cursor: a replay over a longer range appends each source version exactly once") {
+    val lake = mkLake("cdfonce")
+    val cursor = Files.createTempDirectory("graft-cdfonce-cursor")
+    def sink() = graft.streaming.Streams.changesSink(lake, "t", cursor.toString, "feed")
+    lake.appendBronze("t", rows("r1", Seq(1L, 2L)))  // v1
+    lake.deleteBronzeWhereDv("t", col("id") === 1L, Nil) // v2
+    assert(sink() == Some((0, 2)))
+    val feedV = lake.tableVersion("bronze", "feed")
+    // CRASH SIMULATION: the target appends of (0, 2] committed, the cursor
+    // commit did not; then v3 lands before the consumer restarts
+    val s = Files.list(cursor)
+    try {
+      import scala.jdk.CollectionConverters._
+      s.iterator().asScala.toSeq.foreach(Files.deleteIfExists(_))
+    } finally s.close()
+    assert(lake.changesCursor(cursor) == 0)
+    lake.appendBronze("t", rows("r2", Seq(3L)))       // v3
+    assert(sink() == Some((0, 3)))
+    // v1 and v2 replay as txn no-ops: only v3's append commits
+    assert(lake.tableVersion("bronze", "feed") == feedV + 1)
+    val cols = Seq("id", "run_id", "_change_type", "_commit_version")
+    val drained = lake.table("bronze", "feed").select(cols.map(col): _*)
+    val full = lake.tableChanges("t", 0, 3).select(cols.map(col): _*)
+    assert(drained.count() == full.count())
+    assert(drained.exceptAll(full).isEmpty && full.exceptAll(drained).isEmpty)
+  }
+
   test("vacuum holds the read set for a lagging registered cursor, reclaims once it catches up") {
     val lake = mkLake("curvac")
     val cursor = Files.createTempDirectory("graft-curvac-cursor")
-    val out = Files.createTempDirectory("graft-curvac-out").toString
+    val out = "feed"
     lake.appendBronze("t", rows("r1", Seq(1L, 2L, 3L))) // v1
     // one drain registers the cursor and lands its frontier at v1
     assert(graft.streaming.Streams.changesSink(lake, "t", cursor.toString, out).isDefined)
@@ -247,7 +274,7 @@ class TxnProtocolSpec extends SparkSpec {
     // the CoW rewrite reads as remove-file + re-add: deletes {1,2,3} from
     // the VACUUM-HELD removed file, inserts {1,3} from its replacement —
     // net effect: row 2 gone (the log-walk property pins this algebra)
-    val drained = graft.streaming.Streams.batchedTable(spark, out)
+    val drained = lake.table("bronze", out)
     def ids(tpe: String) = drained
       .filter(col("_change_type") === tpe && col("_commit_version") === 2)
       .select("id").as[Long].collect().toSet

@@ -161,7 +161,7 @@ class CdfAggregateSpec extends SparkSpec {
     // consumer registers (changesSink/cdfAggregateSink do this first) but
     // has NOT committed a cursor yet — mid-first-drain state
     val cursor = Files.createTempDirectory("graft-curhold").resolve("cur")
-    Streams.registerCursor(lake.root, "src", cursor.toString)
+    lake.registerCursor("src", cursor.toString)
     // a CoW delete rewrites files, then an aggressive vacuum runs: the
     // registration alone must hold every version from frontier 0 on
     lake.deleteBronzeWhere("src", col("id") === 1L)
@@ -179,6 +179,10 @@ class CdfAggregateSpec extends SparkSpec {
       try { lake.tableAt("bronze", "src", preV).count(); false }
       catch { case _: Throwable => true }
     assert(released, s"version $preV still resolvable after decommission + vacuum")
+    // the vanished cursor dir's registry marker is swept
+    val markers = Option(new java.io.File(lake.root, "_stream_state").listFiles())
+      .getOrElse(Array.empty).filter(_.getName.endsWith(".state"))
+    assert(markers.isEmpty, s"decommissioned cursor left its marker: ${markers.toSeq}")
   }
 
   test("bounded catch-up: capped ticks converge to the uncapped result") {
