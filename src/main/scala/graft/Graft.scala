@@ -40,7 +40,9 @@ object Graft {
       // artifacts, compacted lakehouse tables) into 1-2 scan partitions,
       // serializing CPU-heavy probe scans. 128 KB keeps small files
       // splittable locally; a cluster on object storage would raise it
-      // back toward the default (env-overridable).
+      // back toward the default (env-overridable). `Lakehouse.table` reads
+      // a whole table below this cost as one partition (never worth a
+      // split); the small files of a larger table still split.
       .config("spark.sql.files.openCostInBytes",
         sys.env.getOrElse("SPARK_GRAFT_OPEN_COST_BYTES", "131072"))
       .config("spark.ui.enabled", "false")

@@ -53,21 +53,33 @@ object Bronze {
   }
 
   /** Land one run's payloads: per table, delete any prior rows of this
-    * run_id (idempotent re-run), then append one envelope row per payload. */
-  def ingest(lake: Lakehouse, ctx: RunContext, source: PayloadSource): Unit =
-    source.payloads(ctx).foreach { case (tableName, payloads) =>
+    * run_id (idempotent re-run), then append one envelope row per payload.
+    * The tables land concurrently (each on its own log, so they never
+    * contend); within a table the delete still commits before the append.
+    * A table that fails does not stop the others: every table settles,
+    * then the first failure in the source's table order is thrown — a
+    * re-run with the same run_id converges, since each table's delete
+    * drops whatever the failed run landed. */
+  def ingest(lake: Lakehouse, ctx: RunContext, source: PayloadSource): Unit = {
+    val byTable = source.payloads(ctx).toSeq
+    byTable.foreach { case (tableName, _) =>
       require(Schemas.bronzeTables.contains(tableName), s"unknown bronze table $tableName")
-      lake.deleteByRunId(tableName, ctx.runId)
-      val rows = payloads.map(p => Envelope(
-        ctx.snapshotDate, ctx.ingestTsUtc, ctx.sourceSystem, ctx.requestId,
-        ctx.schemaVersion, ctx.runId, p))
-      if (rows.nonEmpty) lake.appendBronze(tableName, envelopeDf(lake.spark, rows))
     }
+    Job.concurrently(implicit ec => byTable.map { case (tableName, payloads) =>
+      scala.concurrent.Future {
+        lake.deleteByRunId(tableName, ctx.runId)
+        val rows = payloads.map(p => Envelope(
+          ctx.snapshotDate, ctx.ingestTsUtc, ctx.sourceSystem, ctx.requestId,
+          ctx.schemaVersion, ctx.runId, p))
+        if (rows.nonEmpty) lake.appendBronze(tableName, envelopeDf(lake.spark, rows))
+      }
+    })
+  }
 
   /** Append the run-context log row (reference `init_run_context.py:143-158`);
-    * finalize (status update) is a delete+append of the same run_id row —
-    * the parquet emulation of the reference's `UPDATE ... WHERE run_id`
-    * (`finalize_run_log.py:191-202`). */
+    * finalize (status update) replaces the run_id's rows with one MERGE
+    * on `run_id` — the parquet emulation of the reference's
+    * `UPDATE ... WHERE run_id` (`finalize_run_log.py:191-202`). */
   def logRunStart(lake: Lakehouse, ctx: RunContext, contextJson: String): Unit = {
     import lake.spark.implicits._
     val df = Seq(
@@ -79,30 +91,28 @@ object Bronze {
     lake.appendBronze("run_context_log", df)
   }
 
+  /** Record the run's terminal status. The superseding row is built on the
+    * driver from the run's rows (tiny: one per run), so the run's status
+    * and timestamp are values, not literals of a plan — Spark inlines a
+    * timestamp literal into generated code, which would compile again on
+    * every run. One `mergeBronze` on `run_id` then swaps it in for every
+    * row of the run in a single commit: readers see the old row or the
+    * new one, never neither, and a run left with two rows by an
+    * interrupted finalize converges to one. */
   def finalizeRun(lake: Lakehouse, runId: String, status: String, finalizedTs: Timestamp): Unit = {
     require(Set("success", "failed", "cancelled", "unknown").contains(status))
-    import org.apache.spark.sql.functions._
-    val updated = lake.table("bronze", "run_context_log")
-      .filter(col("run_id") === runId)
-      .withColumn("run_status", lit(status))
-      .withColumn("finalized_ts_utc", lit(finalizedTs))
-      // a run recovering from an interrupted finalize has 2 rows; they
-      // differ only in the columns just overwritten, so this collapses them
-      .dropDuplicates()
-    val updatedRows = updated.collect() // tiny: one row per run
-    if (updatedRows.nonEmpty) {
-      // Append the superseding row BEFORE dropping the stale one: a crash
-      // mid-finalize then leaves a recoverable duplicate (readers take the
-      // row latest by finalize-else-ingest time — Checks.latestRunSuccess),
-      // never a vanished run record. The delete keeps exactly the rows at
-      // this finalize's timestamp, so re-finalizing converges to one row.
-      lake.appendBronze("run_context_log",
-        lake.spark.createDataFrame(
-          lake.spark.sparkContext.parallelize(updatedRows.toSeq, 1), updated.schema))
-      lake.deleteBronzeWhere("run_context_log",
-        col("run_id") === runId &&
-          (col("finalized_ts_utc").isNull || col("finalized_ts_utc") =!= lit(finalizedTs)),
-        Seq(ManifestStats.StatEq("run_id", runId)))
-    }
+    import org.apache.spark.sql.functions.col
+    val log = lake.table("bronze", "run_context_log")
+    val statusAt = log.schema.fieldIndex("run_status")
+    val tsAt = log.schema.fieldIndex("finalized_ts_utc")
+    // the rows differ only in the columns overwritten here, so an
+    // interrupted earlier finalize's two rows collapse into one
+    val updated = log.filter(col("run_id") === runId).collect().toSeq
+      .map(r => Row.fromSeq(r.toSeq.updated(statusAt, status).updated(tsAt, finalizedTs)))
+      .distinct
+    if (updated.nonEmpty)
+      lake.mergeBronze("run_context_log",
+        lake.spark.createDataFrame(lake.spark.sparkContext.parallelize(updated, 1), log.schema),
+        Seq("run_id"))
   }
 }

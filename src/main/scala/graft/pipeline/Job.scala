@@ -12,7 +12,7 @@ import scala.concurrent.duration.Duration
   *
   * ```
   * init_run_context → ingest_data_api → ingest_analytics_api
-  *   → silver + gold model graph → checks → finalize_run_log (run_if: ALL_DONE)
+  *   → silver + gold + checks model graph → finalize_run_log (run_if: ALL_DONE)
   * ```
   *
   * Semantics preserved from the reference:
@@ -36,9 +36,12 @@ object Job {
 
   /** Execute one full run. `now` is injectable for deterministic tests.
     *
-    * Silver recomputes every model from bronze and gold rebuilds every
-    * mart from silver, as one dependency graph ([[refreshGraph]]) — the
-    * reference's `CREATE OR REFRESH MATERIALIZED VIEW`, one path per layer. */
+    * Each ingest stage lands its bronze tables concurrently
+    * ([[Bronze.ingest]]). Silver recomputes every model from bronze and
+    * gold rebuilds every mart from silver, as one dependency graph
+    * ([[refreshGraph]]) — the reference's `CREATE OR REFRESH MATERIALIZED
+    * VIEW`, one path per layer. The check suite runs inside the same
+    * graph, as one fused scan per gold mart ([[Checks.MartScan]]). */
   def run(
       lake: Lakehouse,
       dataClient: DataApiIngest.DataApiClient,
@@ -75,13 +78,11 @@ object Job {
         new AnalyticsIngest.AnalyticsPayloadSource(
           analyticsClient, start, end, mode, lookbackDays, videoIds))
 
-      // stage: silver MVs and gold marts as one dependency graph (the
-      // reference runs dbt with 4 threads; identity with the sequential
-      // refresh is spec-pinned)
-      refreshGraph(lake)
-
-      // stage: the full check suite; any error-severity offender fails the run
-      val results = Checks.run(lake, snapshot)
+      // stage: silver MVs, gold marts and the full check suite as one
+      // dependency graph (the reference runs dbt with 4 threads; identity
+      // with the sequential refresh is spec-pinned); any error-severity
+      // offender fails the run
+      val results = refreshGraph(lake, Checks.all(snapshot))
       checkFailures = results.filter { case (_, sev, n) => sev == "error" && n > 0 }
       if (checkFailures.nonEmpty) status = "failed"
     } catch {
@@ -103,25 +104,34 @@ object Job {
     RunReport(runId, status, checkFailures, failure, maint)
   }
 
-  /** Materialize the silver models and gold marts as one dependency graph:
-    * each starts once every table its `deps` name has committed. Equal to
-    * [[Silver.refresh]] then [[Gold.refresh]], since a model reads only its
-    * `deps` (spec-pinned). A failed model's dependents are never built; the
-    * rest settle, then its own exception is thrown. */
-  private[pipeline] def refreshGraph(lake: Lakehouse): Unit = {
+  /** Materialize the silver models and gold marts as one dependency graph,
+    * with each gold mart's fused check scan ([[Checks.MartScan]]) as a node
+    * of it: a model starts once every table its `deps` name has committed,
+    * and a scan once its mart and the dims it references have. The checks
+    * thus overlap the marts still building instead of waiting at a
+    * barrier. Equal to [[Silver.refresh]], [[Gold.refresh]], then
+    * [[Checks.run]] over `checks`, since a model reads only its `deps`
+    * (spec-pinned). A failed model's dependents are never built; the rest
+    * settle, then its own exception is thrown. Returns `checks`'
+    * (name, severity, offending count), in order. */
+  private[pipeline] def refreshGraph(lake: Lakehouse,
+      checks: Seq[Checks.Check] = Seq.empty): Seq[(String, String, Long)] = {
     val models = Silver.models ++ Gold.models
     val byName = models.map(m => m.name -> m).toMap
     val layer = Silver.models.map(_.name -> "silver").toMap ++ Gold.models.map(_.name -> "gold")
-    concurrently { implicit ec =>
+    val scanned = concurrently { implicit ec =>
       val started = scala.collection.mutable.Map.empty[String, Future[Unit]]
       def start(m: Silver.Model): Future[Unit] = started.getOrElse(m.name, {
-        val f = Future.sequence(m.deps.flatMap(byName.get).map(start))
-          .map(_ => lake.materialize(layer(m.name), m.name, m.build(lake)))
+        val f = after(m.deps)(lake.materialize(layer(m.name), m.name, m.build(lake)))
         started(m.name) = f
         f
       })
-      models.map(start)
+      def after[A](deps: Seq[String])(task: => A): Future[A] =
+        Future.sequence(deps.flatMap(byName.get).map(start)).map(_ => task)
+      models.map(start(_).map(_ => Seq.empty[(Int, Long)])) ++
+        Checks.martScans(checks).map(s => after(s.reads)(s.counts(lake)))
     }
+    Checks.tally(lake, checks, scanned.flatten)
   }
 
   /** Settle the futures `tasks` starts on a per-call pool of one thread per

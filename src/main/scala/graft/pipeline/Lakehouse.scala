@@ -102,11 +102,33 @@ final class Lakehouse(val spark: SparkSession, val root: String,
 
   /** The table AS OF its newest version, read under the LOG's schema
     * (older files yield null for later-added columns; renamed columns
-    * coalesce through their chain — see colMapOf). */
+    * coalesce through their chain — see colMapOf).
+    *
+    * A SMALL table reads as one partition: when every live entry records
+    * its `__size` and the sizes sum to at most the session's
+    * `spark.sql.files.openCostInBytes`, the read is `coalesce(1)`. Spark's
+    * split planner charges each file that many bytes to open, so a whole
+    * table below one open cost is never worth splitting — and with a
+    * single-partition child, `EnsureRequirements` plans no Exchange under a
+    * window, a grouped aggregate or a distinct over it: a model over small
+    * tables runs as its write job alone. A larger table keeps Spark's
+    * split. */
   def table(layer: String, name: String): DataFrame = {
     val base = dir(layer, name)
     val snap = headSnapshot(layer, name)
-    readEntriesWithDv(base, snap.schema, snap.entries, colMapOf(base))
+    onePartitionIfSmall(readEntriesWithDv(base, snap.schema, snap.entries, colMapOf(base)),
+      snap.entries)
+  }
+
+  /** `df`, a read of `entries`, as ONE partition when every entry records
+    * its `__size` and they sum to at most the session's open cost — the
+    * rule of [[table]]. */
+  private def onePartitionIfSmall(df: DataFrame,
+      entries: Seq[ManifestStats.FileEntry]): DataFrame = {
+    val sizes = entries.map(ManifestStats.sizeOf)
+    if (sizes.forall(_.isDefined) &&
+        sizes.flatten.sum <= spark.sessionState.conf.filesOpenCostInBytes) df.coalesce(1)
+    else df
   }
 
   /** Read a set of live entries applying DELETION VECTORS (merge-on-read —
@@ -3085,7 +3107,10 @@ final class Lakehouse(val spark: SparkSession, val root: String,
     guardIdentityCount(name, dataDir, staged, idRows)
     var validated = enforceConstraints(base, name, dataDir, staged)
     var gensAgainst = enforceGenerated(base, name, dataDir, source.columns.toSet)
-    val stagedDf = spark.read.parquet(dataDir.toString)
+    // the staged files by their entry paths: Spark warns "All paths were
+    // ignored" for a root path named `_…` (then reads it all the same)
+    val stagedDf = onePartitionIfSmall(spark.read.schema(filled.schema)
+      .parquet(staged.map(e => base.resolve(e.relPath).toString): _*), staged)
     // the source's per-key bounds prune the delete's candidate scan
     val keyBounds: Seq[ManifestStats.StatPred] = {
       val aggs = keys.flatMap(k => Seq(
@@ -3150,10 +3175,10 @@ final class Lakehouse(val spark: SparkSession, val root: String,
           case Some(s) => renameViewCols(scan, s, cmap)
           case None => scan.columns.toSeq.map(scan.col)
         }
-        val scanKeyed = scan
+        val scanKeyed = onePartitionIfSmall(scan
           .select(col("_metadata.file_path").as("__f") +:
             col("_metadata.row_index").as("__ridx") +: dataCols: _*)
-          .select(col("__f") +: col("__ridx") +: keys.map(col): _*)
+          .select(col("__f") +: col("__ridx") +: keys.map(col): _*), candidates)
         // null-safe mode (`<=>`, still a hash-joinable equality): a NULL
         // source key REPLACES the target's NULL-key row instead of
         // stranding it — the contract [[graft.streaming.Streams

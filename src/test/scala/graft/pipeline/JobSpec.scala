@@ -126,8 +126,39 @@ class JobSpec extends SparkSpec {
     day(2)
     val third = day(3)
     info(s"Janino compiles: run 1 $first, run 3 $third")
-    // what still compiles is code with the run's date literals inlined
-    assert(third <= first / 5, s"run 3 compiled $third times, run 1 $first")
+    // no run-dependent date or timestamp is a literal of any plan (Spark
+    // inlines those into generated code), so a later run compiles nothing
+    assert(third == 0, s"run 3 compiled $third times, run 1 $first")
+  }
+
+  test("concurrent landing: a table that fails fails the run with its own error, after the others land") {
+    val root = Files.createTempDirectory("graft-job-land")
+    val lake = new Lakehouse(spark, root.toString)
+    // a plain file where playlist_items_raw's directory goes: that table's
+    // delete-then-append fails, its sibling Data API tables are unaffected
+    val blocker = root.resolve("bronze").resolve("playlist_items_raw")
+    Files.createDirectories(blocker.getParent)
+    Files.write(blocker, Array[Byte](1))
+    def run() = Job.run(lake, DataClient, AnalyticsClient,
+      startDate = "2025-05-30", endDate = "2025-06-01",
+      now = Timestamp.valueOf("2025-06-02 09:00:00"), runId = "land1")
+    def landed(t: String) = lake.table("bronze", t).filter(col("run_id") === "land1")
+    def statuses = landed("run_context_log").collect().map(_.getAs[String]("run_status")).toSeq
+    val failed = run()
+    assert(failed.status == "failed")
+    assert(failed.error.exists(_.getMessage.contains("playlist_items_raw")), failed.error.toString)
+    assert(landed("channels_raw").count() == 1 && landed("videos_raw").count() == 1)
+    assert(statuses == Seq("failed"))
+    // the re-run under the same run_id lands one copy of each payload
+    Files.delete(blocker)
+    val rerun = run()
+    assert(rerun.status == "success", rerun.toString)
+    Schemas.bronzeTables.filterNot(_ == "run_context_log").foreach { t =>
+      val n = landed(t).count()
+      assert(n > 0 && n == landed(t).select("payload").distinct().count(),
+        s"$t holds $n rows of the re-run")
+    }
+    assert(statuses.nonEmpty && statuses.forall(_ == "success"), statuses.toString)
   }
 
   /** Day-2 Data API persona: the account's channel id CHANGED. */

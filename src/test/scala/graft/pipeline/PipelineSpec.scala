@@ -236,6 +236,102 @@ class PipelineSpec extends SparkSpec {
     assert(stale.count() == 2) // both monitored models lag
   }
 
+  /** Gold marts and the silver dims they reference, with no bronze table:
+    * `dirty` marts fail every in-pipeline check but non-emptiness; otherwise
+    * the channel and video marts are empty, which fails it. */
+  private def checkFixture(dirty: Boolean): Lakehouse = {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    val l = new Lakehouse(spark, Files.createTempDirectory("graft-checks").toString)
+    def table(layer: String, name: String, cols: Seq[String], rows: Seq[Any]*): Unit = {
+      val schema = StructType(cols.map(c => StructField(c, c match {
+        case "date" => DateType
+        case "views" | "comments" | "estimated_minutes_watched" => LongType
+        case _ => StringType
+      })))
+      l.materialize(layer, name, spark.createDataFrame(
+        spark.sparkContext.parallelize(rows.map(Row.fromSeq), 1), schema))
+    }
+    table("silver", "silver_videos", Seq("video_id"), Seq("V1"))
+    table("silver", "dim_country", Seq("country_code"), Seq("US"))
+    table("silver", "dim_device", Seq("device_type"), Seq("MOBILE"))
+    table("silver", "dim_traffic_source", Seq("source_id"), Seq("YT_SEARCH"))
+    val (d1, d2) = (d("2025-06-01"), d("2025-06-02"))
+    // each mart: a duplicated grain, a negative metric, a null required
+    // column and, where it has one, a key outside its dim
+    val channel = Seq(Seq("UC_1", d1, 5L, 1L, 2L), Seq("UC_1", d1, 6L, -1L, 2L),
+      Seq(null, d2, 1L, 0L, 1L))
+    val video = Seq(Seq("V1", d1, "UC_1", 5L, 0L, 1L), Seq("V1", d1, "UC_1", 5L, 0L, -1L),
+      Seq("V9", d2, null, 1L, 0L, 1L))
+    table("gold", "gold_channel_daily_summary",
+      Seq("channel_id", "date", "views", "comments", "estimated_minutes_watched"),
+      (if (dirty) channel else Nil): _*)
+    table("gold", "gold_video_daily_summary",
+      Seq("video_id", "date", "channel_id", "views", "comments", "estimated_minutes_watched"),
+      (if (dirty) video else Nil): _*)
+    def keyed(key: String) =
+      Seq("video_id", "date", "channel_id", key, "views", "estimated_minutes_watched")
+    table("gold", "gold_video_country_daily_summary", keyed("country_code"),
+      Seq("V1", d1, "UC_1", "US", 1L, 0L), Seq("V1", d1, "UC_1", "US", 1L, 0L),
+      Seq("V1", d2, "UC_1", "ZZ", null, 0L), Seq("V1", d2, "UC_1", "US", -3L, 0L))
+    table("gold", "gold_video_device_daily_summary", keyed("device_type"),
+      Seq("V1", d1, "UC_1", "MOBILE", 1L, 0L), Seq("V1", d1, "UC_1", "MOBILE", 1L, 0L),
+      Seq("V1", null, "UC_1", "TOASTER", 1L, -2L))
+    // two spellings of one new id, a second new id and a blank one
+    table("gold", "gold_video_traffic_source_daily_summary", keyed("source_id"),
+      Seq("V1", d1, "UC_1", "YT_SEARCH", 1L, 0L), Seq("V1", d1, "UC_1", "YT_SEARCH", 1L, 0L),
+      Seq("V1", d2, "UC_1", "new_src", 1L, 0L), Seq("V1", d2, "UC_1", "NEW_SRC", -1L, 0L),
+      Seq("V1", d1, "UC_1", "OTHER_SRC", 1L, 0L), Seq(null, d2, "UC_1", "", 1L, 0L))
+    l
+  }
+
+  test("fused check scans count exactly each check's offending rows, on marts failing every check") {
+    val asOf = d("2025-07-01")
+    val suite = Checks.all(asOf)
+    val counts = Seq(true, false).map { dirty =>
+      val l = checkFixture(dirty)
+      val fused = Checks.run(l, asOf)
+      assert(fused.map(_._1) == suite.map(_.name))
+      assert(fused.map(_._2) == suite.map(_.severity))
+      suite.zip(fused).foreach { case (c, (_, _, n)) =>
+        assert(n == c.run(l).count(), s"${c.name}: the fused scan counts $n")
+      }
+      fused.map(_._3)
+    }
+    suite.zip(counts.transpose).foreach { case (c, ns) =>
+      assert(ns.exists(_ > 0), s"${c.name} offends on neither fixture")
+    }
+    assert(counts.head(suite.indexWhere(_.name == "warn_new_traffic_source_ids")) == 2)
+  }
+
+  test("a table below the open cost reads as one partition: no shuffle under a model or a check scan") {
+    refreshed
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
+    object plans extends AdaptiveSparkPlanHelper
+    def shuffles(df: DataFrame): Int = {
+      df.collect() // AQE fixes its final plan on execution
+      plans.collect(df.queryExecution.executedPlan) { case e: ShuffleExchangeLike => e }.size
+    }
+    val report = lake.table("bronze", "analytics_channel_daily_raw")
+    assert(lake.liveFileCount("bronze", "analytics_channel_daily_raw") > 1)
+    assert(report.rdd.getNumPartitions == 1)
+    // a latest-wins window, grouped aggregates and distincts plan no Exchange
+    Silver.models.foreach(m => assert(shuffles(m.build(lake)) == 0, s"${m.name} shuffles"))
+    Checks.martScans(Checks.all(d("2025-06-03"))).foreach(s =>
+      assert(shuffles(s.aggregate(lake)) == 0, s"the check scan of ${s.mart} shuffles"))
+    // with the open cost below the table's size, the same read keeps
+    // Spark's split, and the window over it shuffles again
+    val openCost = "spark.sql.files.openCostInBytes"
+    val prior = spark.conf.get(openCost)
+    spark.conf.set(openCost, "1")
+    try {
+      assert(lake.table("bronze", "analytics_channel_daily_raw").rdd.getNumPartitions > 1)
+      assert(shuffles(Silver.factChannelDailyMetrics.build(lake)) > 0)
+    } finally spark.conf.set(openCost, prior)
+  }
+
   test("idempotent re-ingest: same run_id lands delete+append, results unchanged") {
     refreshed
     val before = lake.table("silver", "silver_channels").collect().toSeq
@@ -345,8 +441,11 @@ class PipelineSpec extends SparkSpec {
     import org.apache.spark.sql.execution.{GenerateExec, SparkPlan}
     import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
     object plans extends AdaptiveSparkPlanHelper
-    val generating = Silver.models.count { m =>
-      val df = m.build(lake)
+    // every plan a daily run executes over the lake: the models, the marts
+    // and the marts' fused check scans
+    val planned = (Silver.models ++ Gold.models).map(m => m.name -> m.build(lake)) ++
+      Checks.martScans(Checks.all(d("2025-06-03"))).map(s => s"checks of ${s.mart}" -> s.aggregate(lake))
+    val generating = planned.count { case (name, df) =>
       df.collect() // AQE fixes its final plan on execution
       val plan = df.queryExecution.executedPlan
       val offenders = plans.collect(plan) {
@@ -356,7 +455,7 @@ class PipelineSpec extends SparkSpec {
           n.nodeName
       }
       assert(offenders.isEmpty,
-        s"${m.name}: ${offenders.mkString(", ")} parse JSON above a Generate (once per exploded row)")
+        s"$name: ${offenders.mkString(", ")} parse JSON above a Generate (once per exploded row)")
       plans.find(plan)(_.isInstanceOf[GenerateExec]).isDefined
     }
     // the eight report readers and the four item readers explode a payload
