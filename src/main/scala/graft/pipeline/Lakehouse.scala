@@ -57,11 +57,23 @@ final class Lakehouse(val spark: SparkSession, val root: String,
     * overridden via constructor or `GRAFT_SCHEMA_*` env vars). */
   def physicalSchema(layer: String): String = schemaOverrides.getOrElse(layer, layer)
 
+  /** Log I/O done by this instance: directory listings ([[listDir]]),
+    * record-header peeks ([[readRecordHeader]]) and full record reads
+    * ([[readRecord]]). A test seam: specs pin what a read and an append
+    * cost. */
+  private[pipeline] object logIo {
+    val listings = new java.util.concurrent.atomic.AtomicLong
+    val headerReads = new java.util.concurrent.atomic.AtomicLong
+    val recordReads = new java.util.concurrent.atomic.AtomicLong
+    def counts: (Long, Long, Long) = (listings.get, headerReads.get, recordReads.get)
+  }
+
   /** Children of `p`, with the directory stream CLOSED before returning —
     * `Files.list` holds an open fd until closed, and per-batch/per-commit
     * callers (streaming refresh, CAS retry loops) would otherwise leak one
     * descriptor per call for the life of the JVM. */
   private def listDir(p: Path): Array[Path] = {
+    logIo.listings.incrementAndGet()
     val s = Files.list(p)
     try s.toArray.map(_.asInstanceOf[Path]) finally s.close()
   }
@@ -101,8 +113,7 @@ final class Lakehouse(val spark: SparkSession, val root: String,
       s"table $layer.$name has no committed version (no log record under ${dir(layer, name)})")
 
   /** The table AS OF its newest version, read under the LOG's schema
-    * (older files yield null for later-added columns; renamed columns
-    * coalesce through their chain — see colMapOf).
+    * (older files yield null for later-added columns).
     *
     * A SMALL table reads as one partition: when every live entry records
     * its `__size` and the sizes sum to at most the session's
@@ -116,8 +127,7 @@ final class Lakehouse(val spark: SparkSession, val root: String,
   def table(layer: String, name: String): DataFrame = {
     val base = dir(layer, name)
     val snap = headSnapshot(layer, name)
-    onePartitionIfSmall(readEntriesWithDv(base, snap.schema, snap.entries, colMapOf(base)),
-      snap.entries)
+    onePartitionIfSmall(readEntriesWithDv(base, snap.schema, snap.entries), snap.entries)
   }
 
   /** `df`, a read of `entries`, as ONE partition when every entry records
@@ -140,32 +150,28 @@ final class Lakehouse(val spark: SparkSession, val root: String,
     * files — bounded by one OPTIMIZE interval of deletes — pay anything. */
   private def readEntriesWithDv(base: Path,
       schemaOpt: Option[org.apache.spark.sql.types.StructType],
-      entries: Seq[ManifestStats.FileEntry],
-      colMap: Map[String, Seq[String]] = Map.empty): DataFrame = {
-    def rd = schemaOpt.fold(spark.read)(s => spark.read.schema(readSchemaFor(s, colMap)))
+      entries: Seq[ManifestStats.FileEntry]): DataFrame = {
+    def rd = schemaOpt.fold(spark.read)(spark.read.schema)
     val (dvd, plain) = entries.partition(e => ManifestStats.dvRef(e).isDefined)
-    val raw =
-      if (dvd.isEmpty)
-        rd.parquet(entries.map(e => base.resolve(e.relPath).toString): _*)
-      else {
-        val masked = readDvFiltered(base, rd,
-          dvd.map(e => base.resolve(e.relPath).toString),
-          dvRefPairs(dvd))
-        if (plain.isEmpty) masked
-        else masked.unionByName(
-          rd.parquet(plain.map(e => base.resolve(e.relPath).toString): _*))
-      }
-    schemaOpt.fold(raw)(renameView(raw, _, colMap))
+    if (dvd.isEmpty)
+      rd.parquet(entries.map(e => base.resolve(e.relPath).toString): _*)
+    else {
+      val masked = readDvFiltered(base, rd,
+        dvd.map(e => base.resolve(e.relPath).toString),
+        dvRefPairs(dvd))
+      if (plain.isEmpty) masked
+      else masked.unionByName(
+        rd.parquet(plain.map(e => base.resolve(e.relPath).toString): _*))
+    }
   }
 
   /** (data file KEY, dv relPath) pairs for vector-carrying entries. The
     * key is [[graft.sql.DvRowDeleted.relPathKey]] (last two path
-    * segments) — NOT the raw relPath — because the scan side derives its
-    * lookup key from `_metadata.file_path`, which normalizes away the
-    * `../src/` prefix a [[cloneBronze]] entry carries. Append-dir names
-    * are UUID-unique, so the two-segment key never collides across
-    * tables. Callers needing resolvable paths use `_._2` (dv rel, always
-    * relative to THIS table's dir) or the entry's own relPath. */
+    * segments) — the form the scan side derives from the absolute
+    * `_metadata.file_path`. Append-dir names are UUID-unique, so the
+    * two-segment key never collides. Callers needing resolvable paths use
+    * `_._2` (dv rel, relative to the table's dir) or the entry's own
+    * relPath. */
   private def dvRefPairs(entries: Seq[ManifestStats.FileEntry]): Seq[(String, String)] =
     entries.flatMap(e => ManifestStats.dvRef(e).map { case (p, _) =>
       graft.sql.DvRowDeleted.relPathKey(e.relPath) -> p })
@@ -267,9 +273,7 @@ final class Lakehouse(val spark: SparkSession, val root: String,
     *   - `num_deletion_vectors` / `dv_cardinality`: merge-on-read debt the
     *     next OPTIMIZE purges;
     *   - `num_nodata_dirs`: append dirs from dataChange=false rewrites
-    *     (what streaming readers skip);
-    *   - `num_check_constraints`: active CHECK constraints
-    *     ([[checkConstraints]] lists them).
+    *     (what streaming readers skip).
     * A table with no committed version fails fast, naming the table. */
   def describeDetail(layer: String, name: String): DataFrame = {
     import org.apache.spark.sql.Row
@@ -288,8 +292,6 @@ final class Lakehouse(val spark: SparkSession, val root: String,
       dvs.size.toLong: java.lang.Long,
       dvs.map(_._2).sum: java.lang.Long,
       nodataDirs(layer, name).size.toLong: java.lang.Long,
-      constraintsOf(base).size.toLong: java.lang.Long,
-      liveChains(colMapOf(base)).size.toLong: java.lang.Long,
       idcolsOf(base).size.toLong: java.lang.Long,
       defaultsOf(base).size.toLong: java.lang.Long,
       gencolsOf(base).size.toLong: java.lang.Long,
@@ -308,8 +310,6 @@ final class Lakehouse(val spark: SparkSession, val root: String,
       StructField("num_deletion_vectors", LongType, nullable = true),
       StructField("dv_cardinality", LongType, nullable = true),
       StructField("num_nodata_dirs", LongType, nullable = true),
-      StructField("num_check_constraints", LongType, nullable = true),
-      StructField("num_renamed_columns", LongType, nullable = true),
       StructField("num_identity_columns", LongType, nullable = true),
       StructField("num_column_defaults", LongType, nullable = true),
       StructField("num_generated_columns", LongType, nullable = true),
@@ -342,47 +342,8 @@ final class Lakehouse(val spark: SparkSession, val root: String,
         s"bronzeCheckpointInterval ($bronzeCheckpointInterval) — or rely on its " +
         "wall-clock floor (retainMillis, default 168h: versions committed inside " +
         "the window keep their files) — for full time travel")
-    // that version's OWN column mapping: AS-OF reads see the names the
-    // version had, including pre-rename ones
-    readEntriesWithDv(base, snap.schema, snap.entries, colMapAsOf(base, version))
+    readEntriesWithDv(base, snap.schema, snap.entries)
   }
-
-  /** Resolve a wall-clock instant to a committed version — Delta's
-    * `TIMESTAMP AS OF` rule: the LATEST version whose commit time is at or
-    * before `ts`. Commit time is the record's IN-COMMIT timestamp (`#cts`,
-    * monotonic by construction, immune to mtime rewrites from copies or
-    * backup restores — Delta's inCommitTimestamps feature), falling back
-    * to the manifest mtime for pre-feature records; the same clock
-    * [[history]] reports and [[vacuumBronze]]'s wall-clock floor uses.
-    * Fails fast, with the usable bound in the message, when
-    * `ts` predates the earliest retained version (that history is pruned —
-    * resolving to it would silently read a LATER state than asked for) or
-    * postdates the newest commit (Delta errors here too: "as of tomorrow"
-    * answered with today's state would change meaning as commits land).
-    * One header-less directory listing + one mtime per retained version —
-    * never a data scan. */
-  def versionAtTimestamp(layer: String, name: String, ts: java.sql.Timestamp): Int = {
-    val base = dir(layer, name)
-    val stamped = tableVersions(layer, name).map(v => v -> commitTimeMillis(base, v))
-    require(stamped.nonEmpty, s"$layer.$name has no committed versions")
-    val t = ts.getTime
-    val (v0, t0) = stamped.head
-    require(t >= t0,
-      s"timestamp $ts predates the earliest retained version of $layer.$name " +
-        s"(version $v0, committed ${new java.sql.Timestamp(t0)}) — earlier history is pruned")
-    val (vn, tn) = stamped.last
-    require(t <= tn,
-      s"timestamp $ts postdates the newest commit of $layer.$name " +
-        s"(version $vn, committed ${new java.sql.Timestamp(tn)}); reading 'as of' an " +
-        "instant no commit has reached is not reproducible — use table() for the " +
-        "current state or pass a timestamp at or before the newest commit")
-    stamped.takeWhile(_._2 <= t).last._1
-  }
-
-  /** Time-travel read AS OF a wall-clock instant: [[tableAt]] at
-    * [[versionAtTimestamp]]'s resolution. */
-  def tableAtTimestamp(layer: String, name: String, ts: java.sql.Timestamp): DataFrame =
-    tableAt(layer, name, versionAtTimestamp(layer, name, ts))
 
   /** CHANGE DATA FEED read over the log (Delta's `table_changes`): the
     * row-level changes committed after `fromVersion` (exclusive) up to
@@ -469,41 +430,22 @@ final class Lakehouse(val spark: SparkSession, val root: String,
         def pathsOf(keys: Set[String]) = cur.entries
           .filter(e => keys(graft.sql.DvRowDeleted.relPathKey(e.relPath)))
           .map(e => base.resolve(e.relPath).toString)
-        // every read uses toVersion's column mapping: its rename chains
-        // cover the ancestor names of every file in the range, so older
-        // files coalesce into the feed's (head-logical) column names
-        val mapHead = colMapAsOf(base, toVersion)
-        def rdv = headSchema
-          .fold(spark.read)(s => spark.read.schema(readSchemaFor(s, mapHead)))
-        def viewed(df: DataFrame) = headSchema.fold(df)(renameView(df, _, mapHead))
+        def rdv = headSchema.fold(spark.read)(spark.read.schema)
         val inserts = Seq(
-          Option.when(added.nonEmpty)(
-            readEntriesWithDv(base, headSchema, added, mapHead)),
+          Option.when(added.nonEmpty)(readEntriesWithDv(base, headSchema, added)),
           Option.when(insSel.nonEmpty)(
-            viewed(readDvSelected(rdv, pathsOf(insSel.keySet), insSel)))).flatten
+            readDvSelected(rdv, pathsOf(insSel.keySet), insSel))).flatten
         val deletes = Seq(
-          Option.when(removed.nonEmpty)(
-            readEntriesWithDv(base, headSchema, removed, mapHead)),
+          Option.when(removed.nonEmpty)(readEntriesWithDv(base, headSchema, removed)),
           Option.when(delSel.nonEmpty)(
-            viewed(readDvSelected(rdv, pathsOf(delSel.keySet), delSel)))).flatten
-        // the recorded key columns are the names AT MERGE TIME; a rename
-        // landing after the merge means the feed's head-logical frames
-        // carry the NEW name — translate each key through the head
-        // mapping's chains (a key not found anywhere degrades to itself,
-        // failing analysis loudly rather than pairing wrongly)
-        val headChains = liveChains(mapHead)
-        val mkeys = header.flatMap(_.mergeKeys).getOrElse(Seq.empty)
-          .map { k =>
-            if (headChains.isEmpty || headChains.contains(k)) k
-            else headChains.find { case (_, anc) => anc.contains(k) }
-              .map(_._1).getOrElse(k)
-          }
-        // a merge key later DROPPED (tombstoned, not renamed) translates to
-        // a name absent from the head schema — pairing would throw
+            readDvSelected(rdv, pathsOf(delSel.keySet), delSel))).flatten
+        // a merge key absent from toVersion's schema (a RESTORE to a version
+        // before the key column's ADD COLUMNS) — pairing would throw
         // AnalysisException on EVERY read of a range spanning this MERGE,
         // bricking cursor consumers until the version ages out. Delete +
         // insert is a valid decomposition of an update pair (Delta reads
         // degrade the same way), so fall back to plain tagging instead.
+        val mkeys = header.flatMap(_.mergeKeys).getOrElse(Seq.empty)
         val mkeysResolvable = mkeys.nonEmpty &&
           (deletes ++ inserts).forall(f => mkeys.forall(f.columns.contains))
         if (op == "MERGE" && mkeysResolvable && deletes.nonEmpty && inserts.nonEmpty) {
@@ -775,7 +717,6 @@ final class Lakehouse(val spark: SparkSession, val root: String,
   private val NoDataDirsLine = "#nddirs\t(.*)".r
   private val OpLine = "#op\t(.*)".r
   private val ConstraintsLine = "#constraints\t(.*)".r
-  private val ColMapLine = "#colmap\t(.*)".r
   private val TxnLine = "#txn\t(.*)".r
   private val FeaturesLine = "#features\t(.*)".r
   private val CommitTsLine = "#cts\t(\\d+)".r
@@ -821,13 +762,6 @@ final class Lakehouse(val spark: SparkSession, val root: String,
       ckptDir: Option[String], schema: Option[org.apache.spark.sql.types.StructType],
       addDirs: Seq[String] = Seq.empty, op: Option[String] = None,
       noDataDirs: Seq[String] = Seq.empty,
-      // None = record carries no #constraints line; Some(Nil) = the
-      // explicit drop-to-zero marker (distinct so resolution can stop)
-      constraints: Option[Seq[(String, String)]] = None,
-      // column-mapping rename chains: key → PRIOR physical names, newest
-      // first (see [[renameBronzeColumn]]); keys starting with '!' are
-      // drop tombstones reserving their names. None = no line.
-      colMap: Option[Map[String, Seq[String]]] = None,
       // idempotent-writer transactions: appId → newest applied version
       // (Delta's SetTransaction action). None = no line.
       txns: Option[Map[String, Long]] = None,
@@ -837,7 +771,7 @@ final class Lakehouse(val spark: SparkSession, val root: String,
       features: Seq[String] = Seq.empty,
       // IN-COMMIT timestamp (Delta's inCommitTimestamps writer feature):
       // the commit instant recorded INSIDE the record, monotonic across
-      // versions — survives file copies/clones where mtimes do not.
+      // versions — survives file copies where mtimes do not.
       // None = pre-feature record (readers fall back to the mtime).
       commitTs: Option[Long] = None,
       // generated columns: column → generation expression SQL (Delta's
@@ -846,8 +780,8 @@ final class Lakehouse(val spark: SparkSession, val root: String,
       genCols: Option[Seq[(String, String)]] = None,
       // identity columns (Delta GENERATED ALWAYS AS IDENTITY): declaration
       // + allocation high watermark. None = no line; Some(Nil) = explicit
-      // drop-to-zero marker (the constraints discipline — RESTORE to a
-      // pre-identity version must override lower re-emitted lines).
+      // drop-to-zero marker (RESTORE to a pre-identity version must
+      // override lower re-emitted lines).
       idCols: Option[Seq[Lakehouse.IdentityCol]] = None,
       // column DEFAULT values: column → default expression SQL (column-free,
       // filled when a writer omits the column). Same marker discipline.
@@ -864,6 +798,7 @@ final class Lakehouse(val spark: SparkSession, val root: String,
   private def readRecordHeader(m: Path): Option[RecordHeader] =
     if (!Files.exists(m)) None
     else {
+      logIo.headerReads.incrementAndGet()
       val in = Files.newBufferedReader(m, java.nio.charset.StandardCharsets.UTF_8)
       try {
         val version = in.readLine().trim.toInt
@@ -873,8 +808,6 @@ final class Lakehouse(val spark: SparkSession, val root: String,
         var addDirs: Seq[String] = Seq.empty
         var op: Option[String] = None
         var noDataDirs: Seq[String] = Seq.empty
-        var constraints: Option[Seq[(String, String)]] = None
-        var colMap: Option[Map[String, Seq[String]]] = None
         var txns: Option[Map[String, Long]] = None
         var features: Seq[String] = Seq.empty
         var commitTs: Option[Long] = None
@@ -897,19 +830,7 @@ final class Lakehouse(val spark: SparkSession, val root: String,
               .map(java.net.URLDecoder.decode(_, java.nio.charset.StandardCharsets.UTF_8))
             case OpLine(enc) => op = Some(
               java.net.URLDecoder.decode(enc, java.nio.charset.StandardCharsets.UTF_8))
-            case ConstraintsLine(enc) => constraints = Some(
-              enc.split(',').toSeq.filter(_.nonEmpty).map { pair =>
-                val Array(n, e) = pair.split(":", 2)
-                (java.net.URLDecoder.decode(n, java.nio.charset.StandardCharsets.UTF_8),
-                  java.net.URLDecoder.decode(e, java.nio.charset.StandardCharsets.UTF_8))
-              })
-            case ColMapLine(enc) => colMap = Some(
-              enc.split(',').toSeq.filter(_.nonEmpty).map { pair =>
-                val Array(n, chain) = pair.split(":", 2)
-                java.net.URLDecoder.decode(n, java.nio.charset.StandardCharsets.UTF_8) ->
-                  chain.split('|').toSeq.filter(_.nonEmpty)
-                    .map(java.net.URLDecoder.decode(_, java.nio.charset.StandardCharsets.UTF_8))
-              }.toMap)
+            case ConstraintsLine(enc) => requireNoConstraints(m.getFileName.toString, enc)
             case TxnLine(enc) => txns = Some(
               enc.split(',').toSeq.filter(_.nonEmpty).map { pair =>
                 val Array(a, v) = pair.split(":", 2)
@@ -949,24 +870,20 @@ final class Lakehouse(val spark: SparkSession, val root: String,
           line = in.readLine()
         }
         Some(RecordHeader(version, isDelta, ckpt, schema, addDirs, op, noDataDirs,
-          constraints, colMap, txns, features, commitTs, genCols, idCols, defaults,
-          rowIdWm, mergeKeys))
+          txns, features, commitTs, genCols, idCols, defaults, rowIdWm, mergeKeys))
       } finally in.close()
     }
 
   /** Every append-dir name EVER committed, as far as the retained log
-    * records — the set [[adoptAppendDir]] checks to distinguish "never
-    * committed" from "committed, then its rows deleted" (the live relPath
-    * set alone cannot; an adopter trusting it would re-commit a dir whose
-    * rows a later DELETE removed, resurrecting them). Resolved like a
-    * snapshot: union the `#dirs` header of records newest→oldest until a
-    * checkpoint, whose `#dirs` line is CUMULATIVE (deltas carry only their
-    * own new dirs, keeping delta commits O(new files)). Checkpoints prune
-    * the cumulative set to dirs still on disk — a physically-vacuumed dir
-    * can never be adopted (adopt requires the dir to exist), so its name
-    * needs no further tracking and the set stays bounded by dirs-on-disk.
-    * Pre-`#dirs` records contribute nothing: old logs keep the previous
-    * (live-relPath-only) behavior until their next checkpoint. */
+    * records — live, or committed and its rows deleted since (the live
+    * relPath set alone cannot tell the two apart). [[dropUnreferencedDirs]]
+    * reads its retention candidates here, and [[deleteStagedIfUncommitted]]
+    * never removes a dir in it. Resolved like a snapshot: union the
+    * `#dirs` header of records newest→oldest until a checkpoint, whose
+    * `#dirs` line is CUMULATIVE (deltas carry only their own new dirs,
+    * keeping delta commits O(new files)). Checkpoints prune the cumulative
+    * set to dirs still on disk, so the set stays bounded by dirs-on-disk.
+    * Pre-`#dirs` records contribute nothing. */
   private def committedDirNames(base: Path): Set[String] = {
     val acc = scala.collection.mutable.Set.empty[String]
     val it = bronzeVersions(base).reverseIterator
@@ -1025,6 +942,7 @@ final class Lakehouse(val spark: SparkSession, val root: String,
   private def readRecord(m: Path): Option[LogRecord] =
     if (!Files.exists(m)) None
     else {
+      logIo.recordReads.incrementAndGet()
       val lines = new String(Files.readAllBytes(m), java.nio.charset.StandardCharsets.UTF_8)
         .linesIterator.toSeq
       // protocol gate (Delta readerFeatures): refuse to interpret a record
@@ -1035,6 +953,7 @@ final class Lakehouse(val spark: SparkSession, val root: String,
         case FeaturesLine(enc) =>
           requireFeatureSupport(m.getFileName.toString,
             enc.split(',').toSeq.filter(_.nonEmpty))
+        case ConstraintsLine(enc) => requireNoConstraints(m.getFileName.toString, enc)
         case _ =>
       }
       val schema = lines.tail.collectFirst { case SchemaLine(text) => parseSchema(text) }
@@ -1157,8 +1076,6 @@ final class Lakehouse(val spark: SparkSession, val root: String,
       prev: Option[Seq[ManifestStats.FileEntry]] = None,
       op: String = "WRITE",
       dataChange: Boolean = true,
-      constraints: Option[Seq[(String, String)]] = None,
-      colMap: Option[Map[String, Seq[String]]] = None,
       txns: Option[Map[String, Long]] = None,
       genCols: Option[Seq[(String, String)]] = None,
       idCols: Option[Seq[Lakehouse.IdentityCol]] = None,
@@ -1167,27 +1084,13 @@ final class Lakehouse(val spark: SparkSession, val root: String,
       mergeKeys: Option[Seq[String]] = None): Boolean = {
     def enc(s: String) =
       java.net.URLEncoder.encode(s, java.nio.charset.StandardCharsets.UTF_8)
-    // CHECK constraints persist like schema: every commit RE-EMITS the
-    // current set while one exists (so the newest retained record always
-    // carries the truth and log pruning can never lose it); a
-    // drop-to-zero override writes the explicit empty marker so stale
-    // non-empty lines below it can never win resolution
-    val effConstraints = constraints
-      .orElse(Some(constraintsOf(base)).filter(_.nonEmpty))
-    val constraintsLine = effConstraints.toSeq.map(cs =>
-      "#constraints\t" + cs.map { case (n, e) => enc(n) + ":" + enc(e) }.mkString(","))
-    // column-mapping rename chains re-emit the same way (resolution reads
-    // the NEWEST record only, so every commit must carry the truth)
-    val effColMap = colMap.orElse(Some(colMapOf(base)).filter(_.nonEmpty))
-    val colMapLine = effColMap.filter(_.nonEmpty).toSeq.map(m =>
-      "#colmap\t" + m.toSeq.sortBy(_._1).map { case (n, chain) =>
-        enc(n) + ":" + chain.map(enc).mkString("|") }.mkString(","))
-    // ONE header peek at the newest retained record serves both the txn
-    // re-emit fallback and the in-commit-timestamp monotonicity clamp
+    // ONE header peek at the newest retained record serves every re-emit
+    // fallback below and the in-commit-timestamp monotonicity clamp
     val newestHeader = bronzeVersions(base).filter(_ < version).lastOption
       .flatMap(v => readRecordHeader(base.resolve(s"_files_v$v")).map(v -> _))
-    // idempotent-writer txns re-emit like constraints/colmap: the newest
-    // retained record always carries the full appId→version map
+    // idempotent-writer txns persist like schema: every commit RE-EMITS
+    // the current map while one exists, so the newest retained record
+    // always carries the truth and log pruning can never lose it
     val effTxns = txns.orElse(newestHeader.flatMap(_._2.txns).filter(_.nonEmpty))
     val txnLine = effTxns.filter(_.nonEmpty).toSeq.map(m =>
       "#txn\t" + m.toSeq.sortBy(_._1).map { case (a, v) =>
@@ -1196,9 +1099,9 @@ final class Lakehouse(val spark: SparkSession, val root: String,
     val effGen = genCols.orElse(newestHeader.flatMap(_._2.genCols).filter(_.nonEmpty))
     val genLine = effGen.filter(_.nonEmpty).toSeq.map(gs =>
       "#gencols\t" + gs.map { case (n, e) => enc(n) + ":" + enc(e) }.mkString(","))
-    // identity columns and column defaults re-emit with the CONSTRAINTS
-    // discipline (an explicit Some(Nil) marker is written so a RESTORE to
-    // a pre-declaration version overrides re-emitted lines below it)
+    // identity columns and column defaults re-emit the same way; an
+    // explicit Some(Nil) marker is written so a RESTORE to a
+    // pre-declaration version overrides re-emitted lines below it
     val effId = idCols.orElse(newestHeader.flatMap(_._2.idCols).filter(_.nonEmpty))
     val idLine = effId.toSeq.map(ids =>
       "#idcols\t" + ids.map(ic => enc(ic.col) + ":" + ic.start + ":" + ic.step +
@@ -1238,20 +1141,17 @@ final class Lakehouse(val spark: SparkSession, val root: String,
       "#mkeys\t" + ks.map(enc).mkString(","))
     // reader-feature gate (Delta readerFeatures): declare the features a
     // reader MUST understand to interpret this record's state correctly —
-    // deletion vectors (an entry with a dv ref is NOT "all its rows") and
-    // column mapping (raw file columns are not the logical columns). A
+    // deletion vectors (an entry with a dv ref is NOT "all its rows"). A
     // reader that does not know a declared feature fails fast instead of
     // silently misreading ([[requireReaderFeatures]]).
-    val reqFeatures =
-      (if (entriesB.exists(e => ManifestStats.dvRef(e).isDefined)) Seq("dv") else Seq.empty) ++
-        (if (effColMap.exists(_.nonEmpty)) Seq("colmap") else Seq.empty)
     val featuresLine =
-      if (reqFeatures.isEmpty) Seq.empty else Seq("#features\t" + reqFeatures.mkString(","))
+      if (entriesB.exists(e => ManifestStats.dvRef(e).isDefined)) Seq("#features\tdv")
+      else Seq.empty
     // in-commit timestamp (Delta inCommitTimestamps): the commit instant
     // rides the record itself, clamped STRICTLY ABOVE the predecessor's so
-    // the sequence is monotonic even under clock skew — TIMESTAMP AS OF,
-    // history and the vacuum floor read this instead of the mtime, which a
-    // copy/clone/restore-from-backup would silently rewrite
+    // the sequence is monotonic even under clock skew — history, detail
+    // and the vacuum floor read this instead of the mtime, which a copy or
+    // restore-from-backup would silently rewrite
     val ctsLine = Seq("#cts\t" + (newestHeader match {
       case Some((pv, h)) => math.max(System.currentTimeMillis(),
         h.commitTs.getOrElse(
@@ -1260,7 +1160,7 @@ final class Lakehouse(val spark: SparkSession, val root: String,
     }))
     val schemaLine = (("#op\t" + enc(op)) +:
       schema.toSeq.map(st => "#schema\t" + schemaText(st))) ++
-      constraintsLine ++ colMapLine ++ txnLine ++ genLine ++ idLine ++
+      txnLine ++ genLine ++ idLine ++
       defaultsLine ++ rowWmLine ++ mkeysLine ++ featuresLine ++ ctsLine
     val delta = prev.map { p =>
       // diff on the full RENDERED entry, not the relPath alone: a commit
@@ -1444,24 +1344,10 @@ final class Lakehouse(val spark: SparkSession, val root: String,
     * landed. */
   def vacuum(layer: String, name: String, keepVersions: Int = 2,
       retainMillis: Long = Lakehouse.DefaultVacuumRetainMillis,
-      now: Long = System.currentTimeMillis()): Int =
-    vacuumCore(layer, name, keepVersions, retainMillis, now, dryRun = false)._1
-
-  /** `VACUUM ... DRY RUN` parity: the table-relative paths a real vacuum
-    * with the same parameters WOULD delete — computed with the identical
-    * retained-set/floor logic, touching nothing. Append/vector dirs that
-    * would empty out are listed by their dir name. */
-  def vacuumBronzeDryRun(name: String, keepVersions: Int = 2,
-      retainMillis: Long = Lakehouse.DefaultVacuumRetainMillis,
-      now: Long = System.currentTimeMillis()): Seq[String] =
-    vacuumCore("bronze", name, keepVersions, retainMillis, now, dryRun = true)._2
-
-  private def vacuumCore(layer: String, name: String, keepVersions: Int,
-      retainMillis: Long, now: Long, dryRun: Boolean): (Int, Seq[String]) = {
+      now: Long = System.currentTimeMillis()): Int = {
     require(retainMillis >= 0, s"retainMillis must be >= 0, got $retainMillis")
     val base = dir(layer, name)
-    if (!Files.exists(base)) return (0, Seq.empty)
-    val would = Seq.newBuilder[String]
+    if (!Files.exists(base)) return 0
     var floorRetained = 0 // unreferenced files kept ONLY by the wall-clock floor
     val allVersions = bronzeVersions(base)
     val youngEnough = allVersions.filter { v =>
@@ -1480,7 +1366,7 @@ final class Lakehouse(val spark: SparkSession, val root: String,
     val cursorHeld = cursorFrontier.toSeq.flatMap(c => allVersions.filter(_ >= c))
     val cursorExtra =
       cursorHeld.toSet -- allVersions.takeRight(math.max(1, keepVersions)) -- youngEnough
-    if (cursorExtra.nonEmpty && !dryRun)
+    if (cursorExtra.nonEmpty)
       System.err.println(s"[vacuum] $layer.$name: ${cursorExtra.size} version(s) " +
         s"retained beyond the keepVersions/wall-clock floors for a registered " +
         s"change-feed cursor (slowest frontier ${cursorFrontier.get})")
@@ -1511,62 +1397,45 @@ final class Lakehouse(val spark: SparkSession, val root: String,
         case n if appendDir.pattern.matcher(n).matches() && Files.isDirectory(p) =>
           // captured BEFORE the child deletions below bump the dir's mtime
           val dirExpired = expired(p)
-          val removedHere = scala.collection.mutable.Set.empty[String]
           listDir(p).foreach { f =>
             val fn = f.getFileName.toString
             if (fn.endsWith(".parquet") && !keep.contains(s"$n/$fn")) {
               if (expired(f)) {
-                if (dryRun) { would += s"$n/$fn"; removedHere += fn }
-                else {
-                  Files.delete(f)
-                  val crc = f.resolveSibling(s".$fn.crc")
-                  if (Files.exists(crc)) Files.delete(crc)
-                }
+                Files.delete(f)
+                val crc = f.resolveSibling(s".$fn.crc")
+                if (Files.exists(crc)) Files.delete(crc)
               } else floorRetained += 1
             }
           }
           // the emptied-dir sweep honors the floor too: a fresh dir with
-          // no parquet yet is an in-flight writer's, not debris (dry runs
-          // subtract their would-deletes instead of looking at disk)
-          if (dirExpired && !listDir(p).exists(f =>
-              f.getFileName.toString.endsWith(".parquet") &&
-                !removedHere(f.getFileName.toString))) {
-            if (dryRun) would += n else deleteRecursively(p)
-          }
+          // no parquet yet is an in-flight writer's, not debris
+          if (dirExpired && !listDir(p).exists(_.getFileName.toString.endsWith(".parquet")))
+            deleteRecursively(p)
         case n if n.startsWith(DeletionVectors.DirPrefix) && Files.isDirectory(p) =>
           // superseded deletion vectors (a later delete re-merged them, or
           // OPTIMIZE purged the file) are debris like any unreferenced
           // file; referenced or young vectors stay
           val dirExpired = expired(p)
-          val removedHere = scala.collection.mutable.Set.empty[String]
           listDir(p).foreach { f =>
             val fn = f.getFileName.toString
             if (fn.endsWith(".dv") && !keep.contains(s"$n/$fn")) {
-              if (expired(f)) {
-                if (dryRun) { would += s"$n/$fn"; removedHere += fn }
-                else Files.delete(f)
-              } else floorRetained += 1
+              if (expired(f)) Files.delete(f) else floorRetained += 1
             }
           }
-          if (dirExpired && !listDir(p).exists(f =>
-              f.getFileName.toString.endsWith(".dv") &&
-                !removedHere(f.getFileName.toString))) {
-            if (dryRun) would += n else deleteRecursively(p)
-          }
+          if (dirExpired && !listDir(p).exists(_.getFileName.toString.endsWith(".dv")))
+            deleteRecursively(p)
         case n if n.startsWith("_ckpt_v") && !liveTwins.contains(n) =>
-          if (expired(p)) { if (dryRun) would += n else deleteRecursively(p) }
-          else floorRetained += 1
+          if (expired(p)) deleteRecursively(p) else floorRetained += 1
         case n if n.startsWith(".manifest_") =>
-          if (expired(p)) { if (dryRun) would += n else Files.deleteIfExists(p) }
-          else floorRetained += 1
+          if (expired(p)) Files.deleteIfExists(p) else floorRetained += 1
         case _ =>
       }
     }
-    if (floorRetained > 0 && !dryRun)
+    if (floorRetained > 0)
       System.err.println(f"[vacuum] $layer.$name retained $floorRetained " +
         f"unreferenced file(s) younger than the ${retainMillis / 3600000.0}%.1f h " +
         "wall-clock window (pass retainMillis=0 to reclaim immediately)")
-    (floorRetained, would.result().sorted)
+    floorRetained
   }
 
   /** Append rows (bronze ingest) as a logged transaction: new files land
@@ -1617,17 +1486,12 @@ final class Lakehouse(val spark: SparkSession, val root: String,
       ManifestStats.bloomStats(spark, dataDir.toString, bloomCols,
         dataDir.getFileName.toString))
     guardIdentityCount(name, dataDir, mine, idRows)
-    // CHECK constraints gate the commit: stats collected above prove the
-    // simple ones without a scan (constrain a statsCols column to get the
-    // metadata-only fast path); the rest validate in one staged-file scan
-    val validated = enforceConstraints(base, name, dataDir, mine)
     // provided generated columns validate against their expressions in one
-    // staged-dir scan; the re-check rides the commit loop like constraints
+    // staged-dir scan; the re-check rides the commit loop
     val gensValidated = enforceGenerated(base, name, dataDir, df.columns.toSet)
     val committed = commitAppendEntries(base, name, staged.schema, mine, dataDir,
-      validated, txn, gensValidated, df.columns.toSet)
-    // lost the txn race: the staged files are debris — unless adoptAppendDir
-    // raced us and the manifest already owns the dir
+      txn, gensValidated, df.columns.toSet)
+    // lost the txn race: the staged files are debris
     if (!committed) deleteStagedIfUncommitted(base, dataDir)
     committed
   }
@@ -1637,44 +1501,18 @@ final class Lakehouse(val spark: SparkSession, val root: String,
     * version (blind appends never conflict). Schema evolution is
     * ADD COLUMNS (the reference's ALTER TABLE ADD COLUMNS,
     * finalize_run_log.py:82-93): a wider append widens the log schema.
-    *
-    * Every attempt re-checks the winner's LIVE relPath set AND the
-    * ever-committed dir set ([[committedDirNames]]) and drops entries
-    * already committed — without the relPath check, [[adoptAppendDir]]
-    * racing the presumed-crashed original writer (whose commit lands
-    * between the adopt's liveness probe and its CAS) would commit the same
-    * files twice; without the dir check, the same race PLUS a
-    * [[deleteBronzeWhere]] covering those files inside the retry window
-    * would re-commit files a delete already removed, resurrecting deleted
-    * rows (live relPaths alone cannot tell "never committed" from
-    * "committed then deleted").
-    *
-    * CONSTRAINT TOCTOU GUARD: the caller validated the staged batch
-    * against the constraint set as of `validated`; a concurrent
-    * `addCheckConstraint` landing between that validation and our CAS win
-    * would otherwise let a violating batch slip in under the recorded
-    * constraint. Each attempt therefore re-reads the set from the log and
-    * RE-VALIDATES the staged dir when it differs (the mirror guard lives
-    * in [[addCheckConstraint]]: a lost CAS re-validates existing rows at
-    * the winner's version — between the two, whichever commit serializes
-    * second has seen the other). */
+    * The staged files sit in this writer's own fresh append dir, so no
+    * other commit can hold them: every attempt commits all of them. */
   private def commitAppendEntries(base: Path, name: String,
       incoming: org.apache.spark.sql.types.StructType,
       mine: Seq[ManifestStats.FileEntry],
       dataDir: Path,
-      validated: Seq[(String, String)],
-      txn: Option[(String, Long)] = None,
-      gensValidated: Seq[(String, String)] = Seq.empty,
-      providedCols: Set[String] = Set.empty): Boolean = {
+      txn: Option[(String, Long)],
+      gensValidated: Seq[(String, String)],
+      providedCols: Set[String]): Boolean = {
     var attempts = 0
     var committed = false
-    var checkedAgainst = validated
     var gensAgainst = gensValidated
-    // set once fresh.isEmpty is observed: our staged files ARE committed
-    // (adopt raced us). From then on every early exit must report the batch
-    // as IN (true) — returning false would make appendBronze delete a
-    // dataDir whose files are live in the manifest
-    var filesLive = false
     while (!committed) {
       attempts += 1
       require(attempts <= 1000, s"bronze append to $name lost 1000 consecutive CAS races")
@@ -1684,13 +1522,10 @@ final class Lakehouse(val spark: SparkSession, val root: String,
       // that wins the race is seen on our retry — at most one of the two
       // appends lands, no double-apply window
       if (txn.exists { case (app, v) => txnsOf(base).get(app).exists(_ >= v) })
-        return filesLive
-      val curConstraints = constraintsOf(base)
-      if (curConstraints != checkedAgainst)
-        checkedAgainst = enforceConstraints(base, name, dataDir, mine)
-      // same TOCTOU discipline for generated columns: a set that changed
-      // under us re-validates the staged dir (a column declared after
-      // staging fails there with the retry remedy)
+        return false
+      // a generated-column set that changed under us re-validates the
+      // staged dir (a column declared after staging fails there with the
+      // retry remedy)
       if (gencolsOf(base) != gensAgainst)
         gensAgainst = enforceGenerated(base, name, dataDir, providedCols)
       // an identity column declared AFTER this batch staged cannot be
@@ -1709,70 +1544,13 @@ final class Lakehouse(val spark: SparkSession, val root: String,
             "batch staged — retry the append (the writer fills defaults " +
             "before staging)")
       }
-      val v = snap.map(_.version).getOrElse(0)
       val entries = snap.map(_.entries).getOrElse(Seq.empty)
-      val live = entries.map(_.relPath).toSet
-      val everCommitted = committedDirNames(base)
-      val fresh = mine.filterNot(e => live(e.relPath) ||
-        everCommitted(e.relPath.takeWhile(_ != '/')))
-      if (fresh.isEmpty) {
-        // all files already committed (adopt raced the writer). The BATCH
-        // landed exactly once, but the adopting commit could not know this
-        // writer's txn — record it now as a metadata-only commit, or a
-        // future replay of the txn would stage a FRESH dir and double-apply
-        filesLive = true
-        txn match {
-          case Some((app, tv)) if !txnsOf(base).get(app).exists(_ >= tv) =>
-            committed = commitFilesManifest(base, v + 1, snap.flatMap(_.schema),
-              entries, prev = Some(entries), op = "TXN", dataChange = false,
-              txns = Some(txnsOf(base) + (app -> tv)))
-          case _ => return true
-        }
-      } else {
-        val schema = mergedSchema(snap.flatMap(_.schema).getOrElse(incoming), incoming)
-        guardReservedColumns(base, name,
-          snap.flatMap(_.schema).map(_.fieldNames.toSet).getOrElse(Set.empty),
-          schema, dataDir)
-        committed = commitFilesManifest(base, v + 1, Some(schema), entries ++ fresh,
-          prev = snap.map(_.entries), op = "APPEND",
-          txns = txn.map { case (app, tv) => txnsOf(base) + (app -> tv) })
-      }
+      val schema = mergedSchema(snap.flatMap(_.schema).getOrElse(incoming), incoming)
+      committed = commitFilesManifest(base, snap.map(_.version).getOrElse(0) + 1,
+        Some(schema), entries ++ mine, prev = snap.map(_.entries), op = "APPEND",
+        txns = txn.map { case (app, tv) => txnsOf(base) + (app -> tv) })
     }
     true
-  }
-
-  /** Crash recovery: ADOPT an already-written append directory whose commit
-    * never landed (a writer that crashed between writing its `_a*` dir and
-    * winning the manifest CAS). The dir's files re-enter the log as a
-    * normal append — stats recollected, schema merged, CAS-committed.
-    * No-op if any of the dir's files are already live (it did commit), or
-    * if the dir name is in the log's ever-committed set (it committed and
-    * its rows were DELETED since — re-adding them would resurrect them).
-    *
-    * TXN CAVEAT: adopt cannot know the crashed writer's (appId, version),
-    * so an adopted batch enters the log WITHOUT its idempotency record —
-    * if that writer restarts and replays the same txn, the replay stages a
-    * fresh dir and the rows land twice. For txn-writers prefer letting the
-    * writer itself replay (its commit loop records the txn and also covers
-    * the adopt-raced-a-live-writer case by committing a metadata-only TXN
-    * record); reserve adopt for writers that are known dead AND known
-    * txn-less. */
-  def adoptAppendDir(name: String, dirName: String,
-      statsCols: Seq[String] = Lakehouse.BronzeStatsCols): Unit = {
-    val base = dir("bronze", name)
-    val dataDir = base.resolve(dirName)
-    require(Files.isDirectory(dataDir), s"no append dir $dirName under bronze.$name")
-    if (committedDirNames(base).contains(dirName)) return // committed (rows possibly deleted since)
-    val df = spark.read.parquet(dataDir.toString)
-    val mine = ManifestStats.collectStats(spark, dataDir.toString, statsCols, dirName)
-    val live = committedBronzeRelPaths(name).getOrElse(Set.empty)
-    if (mine.exists(e => live(e.relPath))) return
-    // an adopted dir enters the log like any append: the crashed writer
-    // may have died BEFORE its own constraint/generated validation ran
-    val validated = enforceConstraints(base, name, dataDir, mine)
-    val gensV = enforceGenerated(base, name, dataDir, df.columns.toSet)
-    commitAppendEntries(base, name, df.schema, mine, dataDir, validated,
-      gensValidated = gensV, providedCols = df.columns.toSet)
   }
 
   /** Filesystem directory of a table (the log/aux root for log-managed
@@ -1827,34 +1605,11 @@ final class Lakehouse(val spark: SparkSession, val root: String,
     readFilesManifest(dir("bronze", name))
       .map(_.entries.count(e => ManifestStats.dvRef(e).isDefined)).getOrElse(0)
 
-  // ───── CHECK constraints (Delta `ALTER TABLE ADD CONSTRAINT` parity) ──
-
-  /** The table's current CHECK constraints, `(name, sql-expression)` in
-    * add order — resolved from the newest retained log record carrying a
-    * `#constraints` line (commits re-emit the set, so that is normally
-    * the committed head). Empty for unconstrained or non-log tables. */
-  def checkConstraints(name: String): Seq[(String, String)] =
-    constraintsOf(dir("bronze", name))
-
-  private def constraintsOf(base: Path): Seq[(String, String)] =
-    constraintsAsOf(base, Int.MaxValue)
-
-  /** Constraint set AS OF a retained `version` — newest retained record
-    * at-or-below it carrying a `#constraints` line (commits re-emit the
-    * set while one exists, so the target's own record normally carries
-    * the truth; the walk covers pre-constraints-era records). RESTORE
-    * resolves the target's set through this so it restores table
-    * METADATA along with the file set, Delta's RESTORE contract. */
-  private def constraintsAsOf(base: Path, version: Int): Seq[(String, String)] =
-    bronzeVersions(base).filter(_ <= version).reverseIterator
-      .flatMap(v => readRecordHeader(base.resolve(s"_files_v$v")).flatMap(_.constraints))
-      .nextOption().getOrElse(Seq.empty)
-
   // ───── idempotent writer transactions (Delta SetTransaction parity) ───
 
   /** AppId → newest applied transaction version. Resolution reads the
     * NEWEST record only (one header peek): every commit re-emits the map
-    * while one exists — the colMapOf discipline — so absence of the line
+    * while one exists, so absence of the line
     * in the newest record IS the empty map (including every pre-txn-era
     * log, whose records never carry it). */
   private def txnsOf(base: Path): Map[String, Long] =
@@ -1881,7 +1636,7 @@ final class Lakehouse(val spark: SparkSession, val root: String,
   // expression is rejected before its commit, Delta's writer contract.
   // The set rides the log (`#gencols`, newest-record resolution) so
   // enforcement binds ANY writer; RESTORE restores the target version's
-  // set with the file set, like constraints and the column mapping.
+  // set with the file set.
 
   /** Generated columns of a bronze table: (column, generation expression
     * SQL), in declaration order. */
@@ -1899,8 +1654,8 @@ final class Lakehouse(val spark: SparkSession, val root: String,
     * already exist, and every existing visible row must satisfy the
     * expression (one scan, Delta's add-time validation); from this commit
     * on every append/merge computes the column when absent and validates
-    * it when provided. The same TOCTOU guard as [[addCheckConstraint]]:
-    * a lost CAS re-validates at the winner's version. */
+    * it when provided. TOCTOU guard: a lost CAS re-validates at the
+    * winner's version. */
   def addGeneratedColumn(name: String, colName: String, exprSql: String,
       maxAttempts: Int = 5): Unit = {
     val base = dir("bronze", name)
@@ -1937,25 +1692,6 @@ final class Lakehouse(val spark: SparkSession, val root: String,
     }
     throw new IllegalStateException(
       s"addGeneratedColumn($name, $colName) lost $maxAttempts consecutive CAS races")
-  }
-
-  /** Remove a generated-column binding (the column and its data stay;
-    * writers stop computing/validating it). */
-  def dropGeneratedColumn(name: String, colName: String, maxAttempts: Int = 5): Unit = {
-    val base = dir("bronze", name)
-    require(gencolsOf(base).exists(_._1 == colName),
-      s"column $colName of bronze.$name is not generated")
-    var attempt = 0
-    while (attempt < maxAttempts) {
-      attempt += 1
-      val cur = readFilesManifest(base).getOrElse(throw new IllegalStateException(
-        s"bronze.$name lost its committed version"))
-      if (commitFilesManifest(base, cur.version + 1, cur.schema, cur.entries,
-          prev = Some(cur.entries), op = "DROP GENERATED",
-          genCols = Some(gencolsOf(base).filterNot(_._1 == colName)))) return
-    }
-    throw new IllegalStateException(
-      s"dropGeneratedColumn($name, $colName) lost $maxAttempts consecutive CAS races")
   }
 
   /** Compute MISSING generated columns on an incoming frame (writer-side
@@ -2003,14 +1739,10 @@ final class Lakehouse(val spark: SparkSession, val root: String,
 
   /** Staged-dir hygiene that cannot destroy live data — EVERY cleanup of a
     * staged append/merge dir goes through here: validation failures
-    * ([[enforceGenerated]], [[enforceConstraints]], guardReservedColumns,
-    * guardIdentityCount) and lost-txn-race cleanups all run where
-    * [[adoptAppendDir]] may have raced the presumed-crashed writer and
-    * committed this very dir's files — an unconditional delete would then
-    * remove files LIVE in the manifest. Skip the delete whenever the dir
-    * name is in the log's ever-committed set (live, or deleted-since —
-    * either way the manifest owns it now; leftover physical debris is
-    * vacuum's job, not ours). */
+    * ([[enforceGenerated]], guardIdentityCount) and lost-txn-race
+    * cleanups. Skip the delete whenever the dir name is in the log's
+    * ever-committed set (live, or deleted-since — either way the manifest
+    * owns it; leftover physical debris is vacuum's job, not ours). */
   private[pipeline] def deleteStagedIfUncommitted(base: Path, dataDir: Path): Unit =
     if (!committedDirNames(base).contains(dataDir.getFileName.toString))
       deleteRecursively(dataDir)
@@ -2265,19 +1997,18 @@ final class Lakehouse(val spark: SparkSession, val root: String,
       else d.withColumn(c, org.apache.spark.sql.functions.expr(e))
     }
 
-  /** Refuse a schema change on an identity or defaulted column — the
-    * engine-owned binding keys on the logical name. Mirror of
+  /** Refuse a widening of an identity or defaulted column — the
+    * engine-owned binding keys on the column's type. Mirror of
     * [[guardGeneratedRefs]]. */
-  private def guardIdentityDefaultRefs(base: Path, name: String, colName: String,
-      action: String): Unit = {
+  private def guardIdentityDefaultRefs(base: Path, name: String, colName: String): Unit = {
     idcolsOf(base).find(_.col == colName).foreach(ic =>
       throw new IllegalArgumentException(
         s"column $colName of bronze.$name is GENERATED ALWAYS AS IDENTITY " +
-          s"(start ${ic.start} step ${ic.step}): identity columns cannot be ${action}d"))
+          s"(start ${ic.start} step ${ic.step}): identity columns cannot be widened"))
     defaultsOf(base).find(_._1 == colName).foreach { case (_, e) =>
       throw new IllegalArgumentException(
         s"column $colName of bronze.$name carries DEFAULT ($e): drop the " +
-          s"default, $action, re-declare")
+          "default, widen, re-declare")
     }
   }
 
@@ -2344,18 +2075,17 @@ final class Lakehouse(val spark: SparkSession, val root: String,
       s"bronze.$name is not log-managed"))
     require(rowIdWmOf(base).isDefined,
       s"row tracking is not enabled on bronze.$name (enableRowTracking first)")
-    readEntriesRowIds(base, snap.schema, snap.entries, colMapOf(base))
+    readEntriesRowIds(base, snap.schema, snap.entries)
       .withColumnRenamed(Lakehouse.PhysRowIdCol, "_row_id")
   }
 
-  /** Read live entries with their row ids as a `__row_id` column (logical
-    * view columns first — the rewrite paths write this frame back out, so
-    * the id column keeps its PHYSICAL name here). Deletion vectors are
+  /** Read live entries with their row ids as a `__row_id` column (table
+    * columns first — the rewrite paths write this frame back out, so the
+    * id column keeps its PHYSICAL name here). Deletion vectors are
     * applied; both file species union after their per-branch filter. */
   private def readEntriesRowIds(base: Path,
       schemaOpt: Option[org.apache.spark.sql.types.StructType],
-      entries: Seq[ManifestStats.FileEntry],
-      cmap: Map[String, Seq[String]]): DataFrame = {
+      entries: Seq[ManifestStats.FileEntry]): DataFrame = {
     import org.apache.spark.sql.graft.ColumnShim
     import org.apache.spark.sql.types.{LongType, StructField, StructType}
     val schema = schemaOpt.getOrElse(throw new IllegalStateException(
@@ -2376,48 +2106,24 @@ final class Lakehouse(val spark: SparkSession, val root: String,
           "enableRowTracking? (enable backfills every live file)"))
     val parts = Seq.newBuilder[DataFrame]
     if (based.nonEmpty) {
-      val df = spark.read.schema(readSchemaFor(schema, cmap))
+      val df = spark.read.schema(schema)
         .parquet(based.map(e => base.resolve(e.relPath).toString): _*)
       val bases = based.map(e =>
         graft.sql.DvRowDeleted.relPathKey(e.relPath) -> ManifestStats.rowBase(e).get).toMap
       val id = (ColumnShim.column(graft.sql.FileBaseRowId(
         ColumnShim.expression(df.col("_metadata.file_path")), bases)) +
         df.col("_metadata.row_index")).as(Lakehouse.PhysRowIdCol)
-      parts += dvFiltered(df, based).select(renameViewCols(df, schema, cmap) :+ id: _*)
+      parts += dvFiltered(df, based).select(schema.fieldNames.map(df.col) :+ id: _*)
     }
     if (phys.nonEmpty) {
-      val df = spark.read
-        .schema(readSchemaFor(schema, cmap).add(Lakehouse.PhysRowIdCol, LongType))
+      val df = spark.read.schema(schema.add(Lakehouse.PhysRowIdCol, LongType))
         .parquet(phys.map(e => base.resolve(e.relPath).toString): _*)
       parts += dvFiltered(df, phys).select(
-        renameViewCols(df, schema, cmap) :+ df.col(Lakehouse.PhysRowIdCol): _*)
+        schema.fieldNames.map(df.col) :+ df.col(Lakehouse.PhysRowIdCol): _*)
     }
     parts.result().reduceOption(_.unionByName(_)).getOrElse(
       spark.createDataFrame(new java.util.ArrayList[org.apache.spark.sql.Row](),
         StructType(schema.fields :+ StructField(Lakehouse.PhysRowIdCol, LongType))))
-  }
-
-  /** [[tableWithRowIds]] AS OF `version`: that version's files, schema,
-    * column mapping AND row ids (ids are per-entry metadata or physical
-    * columns, so they travel with the snapshot for free — a row keeps ONE
-    * id across its whole retained history). Requires a version at-or-after
-    * `enableRowTracking` (earlier entries carry no base). */
-  def tableAtWithRowIds(name: String, version: Int): DataFrame = {
-    val base = dir("bronze", name)
-    val avail = tableVersions("bronze", name)
-    require(avail.contains(version),
-      s"version $version of bronze.$name is not on disk (available: ${avail.mkString(",")})")
-    require(rowIdWmAsOf(base, version).isDefined,
-      s"version $version of bronze.$name predates enableRowTracking")
-    val snap = resolveSnapshot(base, version).getOrElse(throw new IllegalStateException(
-      s"version $version of bronze.$name did not resolve — log chain broken"))
-    val missing = (snap.entries.map(_.relPath) ++ dvRefPairs(snap.entries).map(_._2))
-      .filterNot(r => Files.exists(base.resolve(r)))
-    require(missing.isEmpty,
-      s"version $version of bronze.$name references ${missing.size} vacuumed file(s) " +
-        s"(e.g. ${missing.headOption.getOrElse("")})")
-    readEntriesRowIds(base, snap.schema, snap.entries, colMapAsOf(base, version))
-      .withColumnRenamed(Lakehouse.PhysRowIdCol, "_row_id")
   }
 
   /** Refuse writer-provided row-id columns on a row-tracked table — the
@@ -2432,11 +2138,12 @@ final class Lakehouse(val spark: SparkSession, val root: String,
   // ───── reader-feature protocol gate (Delta readerFeatures parity) ─────
 
   /** Features this build understands. A log record declaring anything
-    * beyond these was written by a NEWER writer whose state this reader
-    * cannot interpret — reads fail fast ([[requireReaderFeatures]])
+    * beyond these was written by a writer whose state this reader cannot
+    * interpret (a newer one, or column mapping's `colmap`, which this
+    * build no longer reads) — reads fail fast ([[requireReaderFeatures]])
     * instead of silently returning wrong rows (ghost deleted rows, raw
     * physical columns). */
-  private[pipeline] val SupportedReaderFeatures: Set[String] = Set("dv", "colmap")
+  private[pipeline] val SupportedReaderFeatures: Set[String] = Set("dv")
 
   /** Commit instant of a retained version: the record's in-commit
     * timestamp (`#cts`, r13+ commits) when present, else the manifest
@@ -2463,204 +2170,26 @@ final class Lakehouse(val spark: SparkSession, val root: String,
         "would silently return wrong rows")
   }
 
-  // ───── column mapping (rename/drop without rewrites) ──────────────────
-  //
-  // A RENAME is a metadata-only commit: files keep the names they were
-  // written with, and the log records per-column RENAME CHAINS — logical
-  // name → its prior physical names, newest first. Reads scan under a
-  // WIDENED schema (logical + ancestor fields, ancestors nullable) and
-  // project `coalesce(logical, ancestors…)` per renamed column: a file
-  // written before the rename lacks the new name entirely (parquet
-  // null-fills it), so the coalesce falls through to the name it WAS
-  // written with — never to a value, because no file carries two names of
-  // the same chain (appends and rewrites always write the
-  // CURRENT logical names, so OPTIMIZE naturally migrates files off old
-  // names). DROP keeps a '!'-prefixed tombstone chain reserving the
-  // dropped names; re-ADDING any chain member is refused (the old files'
-  // data would silently resurrect under the new column) — Delta solves
-  // the same hazard with permanent column ids.
-  //
-  // Stats/bloom entries in old files stay keyed by their write-time
-  // names: a probe on the new name finds no stats there and KEEPS the
-  // file ("never skip on a guess") — pruning weakens on renamed columns
-  // until files are rewritten, correctness never does.
-  //
-  // Resolution reads the NEWEST (retained, ≤ version) record only: every
-  // commit re-emits the chains while any exist, so absence of the line IS
-  // the empty mapping — which also makes RESTORE's explicit as-of
-  // mapping land naturally.
+  /** A record carrying CHECK constraints (a non-empty `#constraints`
+    * line, written by builds that enforced them) fails fast: this build
+    * neither enforces nor re-emits them, so its next commit would drop the
+    * table's constraints without a word. The empty drop-to-zero marker
+    * holds no constraint and passes. */
+  private def requireNoConstraints(label: String, enc: String): Unit =
+    require(enc.isEmpty,
+      s"log record $label carries CHECK constraints (#constraints), a table " +
+        "feature this build does not support; a commit from it would drop " +
+        "them silently — read the table with a build that enforces them")
 
-  private def colMapOf(base: Path): Map[String, Seq[String]] =
-    bronzeVersions(base).lastOption.map(colMapAsOf(base, _)).getOrElse(Map.empty)
-
-  private def colMapAsOf(base: Path, version: Int): Map[String, Seq[String]] =
-    readRecordHeader(base.resolve(s"_files_v$version")).flatMap(_.colMap)
-      .getOrElse(Map.empty)
-
-  /** Rename chains restricted to live (non-tombstone) logical columns. */
-  private def liveChains(m: Map[String, Seq[String]]): Map[String, Seq[String]] =
-    m.filterNot(_._1.startsWith("!"))
-
-  /** Every name RESERVED by the mapping: ancestors of live columns plus
-    * tombstoned drop chains — a new column may not take any of them. */
-  private def reservedNames(m: Map[String, Seq[String]]): Set[String] =
-    m.values.flatten.toSet
-
-  /** Scan schema for a logical schema under rename chains: each renamed
-    * column also reads its ancestor fields (nullable — old files carry
-    * one of them, new files none). Identity when no chains. */
-  private def readSchemaFor(logical: org.apache.spark.sql.types.StructType,
-      m: Map[String, Seq[String]]): org.apache.spark.sql.types.StructType = {
-    val chains = liveChains(m)
-    if (chains.isEmpty) logical
-    else org.apache.spark.sql.types.StructType(logical.fields.flatMap { f =>
-      f +: chains.getOrElse(f.name, Seq.empty)
-        .map(a => org.apache.spark.sql.types.StructField(a, f.dataType, nullable = true))
-    })
-  }
-
-  /** Project the logical view of a frame scanned under [[readSchemaFor]]:
-    * renamed columns coalesce through their ancestor names. */
-  private def renameView(df: DataFrame,
-      logical: org.apache.spark.sql.types.StructType,
-      m: Map[String, Seq[String]]): DataFrame =
-    if (liveChains(m).isEmpty) df
-    else df.select(renameViewCols(df, logical, m): _*)
-
-  /** The coalesce projections of [[renameView]] as named columns over an
-    * existing frame (for scans that must keep `_metadata` alongside). */
-  private def renameViewCols(df: DataFrame,
-      logical: org.apache.spark.sql.types.StructType,
-      m: Map[String, Seq[String]]): Seq[org.apache.spark.sql.Column] = {
-    val chains = liveChains(m)
-    logical.fieldNames.toSeq.map { n =>
-      chains.get(n) match {
-        case Some(anc) if anc.nonEmpty =>
-          org.apache.spark.sql.functions.coalesce(
-            (n +: anc).map(df.col): _*).as(n)
-        case _ => df.col(n)
-      }
-    }
-  }
-
-  /** `ALTER TABLE ADD CONSTRAINT <cname> CHECK (<exprSql>)`: validates
-    * EXISTING visible rows first (Delta semantics — one scan, pruned to
-    * nothing when the table is empty), then commits the constraint as a
-    * metadata-only log record. From that commit on, every [[appendBronze]]
-    * batch is validated against the set before its commit (SQL CHECK
-    * semantics: NULL passes, only FALSE rejects) — on any writer, since
-    * the set rides the log, not this instance. */
-  def addCheckConstraint(name: String, cname: String, exprSql: String,
-      maxAttempts: Int = 5): Unit = {
-    require(cname.matches("[A-Za-z][A-Za-z0-9_]*"), s"bad constraint name: $cname")
-    val base = dir("bronze", name)
-    require(readFilesManifest(base).isDefined,
-      s"bronze.$name is not log-managed (append first, then constrain)")
-    require(!constraintsOf(base).exists(_._1 == cname),
-      s"constraint $cname already exists on bronze.$name")
-    def validateExisting(): Int = {
-      val at = readFilesManifest(base).get.version
-      val violating = table("bronze", name)
-        .filter(s"NOT coalesce(($exprSql), true)").limit(1).count()
-      require(violating == 0,
-        s"cannot add CHECK constraint $cname: existing rows of bronze.$name violate ($exprSql)")
-      at
-    }
-    var validatedAt = validateExisting()
-    var attempt = 0
-    while (attempt < maxAttempts) {
-      attempt += 1
-      val cur = readFilesManifest(base).get
-      // TOCTOU guard (mirror of [[commitAppendEntries]]'s): a concurrent
-      // append landing between our existing-rows validation and this CAS
-      // could carry violating rows — re-validate at the winner's version
-      if (cur.version != validatedAt) validatedAt = validateExisting()
-      if (commitFilesManifest(base, cur.version + 1, cur.schema, cur.entries,
-          prev = Some(cur.entries), op = "ADD CONSTRAINT",
-          constraints = Some(constraintsOf(base) :+ (cname -> exprSql)))) return
-    }
-    throw new IllegalStateException(
-      s"addCheckConstraint($name, $cname) lost $maxAttempts consecutive CAS races")
-  }
-
-  /** `ALTER TABLE DROP CONSTRAINT` — metadata-only commit; dropping the
-    * last constraint writes the explicit empty marker so resolution can
-    * never fall through to a stale non-empty line. */
-  def dropCheckConstraint(name: String, cname: String, maxAttempts: Int = 5): Unit = {
-    val base = dir("bronze", name)
-    require(constraintsOf(base).exists(_._1 == cname),
-      s"no CHECK constraint $cname on bronze.$name")
-    var attempt = 0
-    while (attempt < maxAttempts) {
-      attempt += 1
-      val cur = readFilesManifest(base).getOrElse(throw new IllegalStateException(
-        s"bronze.$name lost its committed version mid-drop"))
-      if (commitFilesManifest(base, cur.version + 1, cur.schema, cur.entries,
-          prev = Some(cur.entries), op = "DROP CONSTRAINT",
-          constraints = Some(constraintsOf(base).filterNot(_._1 == cname)))) return
-    }
-    throw new IllegalStateException(
-      s"dropCheckConstraint($name, $cname) lost $maxAttempts consecutive CAS races")
-  }
-
-  /** `ALTER TABLE RENAME COLUMN from TO to` — METADATA-ONLY via column
-    * mapping: no file is rewritten; the log records the rename CHAIN and
-    * reads coalesce old-named files into the new name (see the column-
-    * mapping notes at [[colMapOf]]). Time travel keeps each version's own
-    * names (`tableAt` resolves the mapping AS OF the version). Renaming
-    * BACK to a chain ancestor is supported (the chain just reorders);
-    * taking a name reserved by ANOTHER column's chain or a drop tombstone
-    * is refused — old files' data would bleed into the new column.
-    * Refused while a CHECK constraint references the column (Delta's
-    * rule; drop and re-add the constraint around the rename). */
-  def renameBronzeColumn(name: String, from: String, to: String,
-      maxAttempts: Int = 5): Unit = {
-    require(from != to, "rename requires distinct names")
-    require(!to.startsWith("!"), "names starting with '!' are reserved for drop tombstones")
-    val base = dir("bronze", name)
-    var attempt = 0
-    while (attempt < maxAttempts) {
-      attempt += 1
-      val cur = readFilesManifest(base).getOrElse(throw new IllegalArgumentException(
-        s"bronze.$name is not log-managed (append first, then rename)"))
-      val schema = cur.schema.getOrElse(throw new IllegalStateException(
-        s"bronze.$name carries no log schema — cannot rename"))
-      require(schema.fieldNames.contains(from), s"no column $from on bronze.$name")
-      require(!schema.fieldNames.contains(to), s"column $to already exists on bronze.$name")
-      val ident = ("""\b""" + java.util.regex.Pattern.quote(from) + """\b""").r
-      constraintsOf(base).find(c => ident.findFirstIn(c._2).isDefined).foreach(c =>
-        throw new IllegalArgumentException(
-          s"CHECK constraint ${c._1} (${c._2}) references $from: drop it, rename, re-add"))
-      guardGeneratedRefs(base, name, from, "rename")
-      guardIdentityDefaultRefs(base, name, from, "rename")
-      val m = colMapOf(base)
-      require(!reservedNames(m - from).contains(to),
-        s"name $to is reserved by a rename/drop chain of bronze.$name — old files' " +
-          "data would resurrect under it; pick another name")
-      val newMap = (m - from) +
-        (to -> (from +: m.getOrElse(from, Seq.empty)).filterNot(_ == to).distinct)
-      val newSchema = org.apache.spark.sql.types.StructType(
-        schema.fields.map(f => if (f.name == from) f.copy(name = to) else f))
-      if (commitFilesManifest(base, cur.version + 1, Some(newSchema), cur.entries,
-          prev = Some(cur.entries), op = "RENAME COLUMN",
-          colMap = Some(newMap))) return
-    }
-    throw new IllegalStateException(
-      s"renameBronzeColumn($name, $from) lost $maxAttempts consecutive CAS races")
-  }
-
-  /** Refuse a schema change on a column that is a GENERATED column or is
+  /** Refuse a widening of a column that is a GENERATED column or is
     * referenced by one's expression — the binding would silently change
-    * meaning (a renamed reference stops resolving; a widened target can
-    * change the expression's result type). Mirror of the CHECK-constraint
-    * reference guard. */
-  private def guardGeneratedRefs(base: Path, name: String, colName: String,
-      action: String): Unit = {
+    * meaning (a widened target can change the expression's result type). */
+  private def guardGeneratedRefs(base: Path, name: String, colName: String): Unit = {
     val ident = ("""\b""" + java.util.regex.Pattern.quote(colName) + """\b""").r
     gencolsOf(base).find(g => g._1 == colName || ident.findFirstIn(g._2).isDefined)
       .foreach(g => throw new IllegalArgumentException(
         s"column $colName of bronze.$name is involved in generated column " +
-          s"${g._1} (${g._2}): drop the generated column, $action, re-declare"))
+          s"${g._1} (${g._2}): widening it would change what the binding computes"))
   }
 
   /** Widenings [[widenBronzeColumnType]] accepts: the value set of the old
@@ -2714,8 +2243,8 @@ final class Lakehouse(val spark: SparkSession, val root: String,
         s"cannot widen $colName: ${field.dataType.simpleString} → " +
           s"${newType.simpleString} is not a supported lossless widening " +
           "(integral up-casts, float→double, decimal precision growth)")
-      guardGeneratedRefs(base, name, colName, "widen")
-      guardIdentityDefaultRefs(base, name, colName, "widen")
+      guardGeneratedRefs(base, name, colName)
+      guardIdentityDefaultRefs(base, name, colName)
       val newSchema = org.apache.spark.sql.types.StructType(schema.fields.map(f =>
         if (f.name == colName) f.copy(dataType = newType) else f))
       if (commitFilesManifest(base, cur.version + 1, Some(newSchema), cur.entries,
@@ -2723,109 +2252,6 @@ final class Lakehouse(val spark: SparkSession, val root: String,
     }
     throw new IllegalStateException(
       s"widenBronzeColumnType($name, $colName) lost $maxAttempts consecutive CAS races")
-  }
-
-  /** `ALTER TABLE DROP COLUMN` — metadata-only: the column leaves the log
-    * schema (reads stop projecting it; the data stays in files until they
-    * are rewritten) and its name chain is kept as a '!'-prefixed TOMBSTONE
-    * so no later ADD COLUMNS can take any of its names and silently
-    * resurrect the old values — re-adding requires a fresh name (Delta
-    * avoids the same hazard with permanent column ids). Time travel to
-    * pre-drop versions still reads the column. */
-  def dropBronzeColumn(name: String, colName: String, maxAttempts: Int = 5): Unit = {
-    val base = dir("bronze", name)
-    var attempt = 0
-    while (attempt < maxAttempts) {
-      attempt += 1
-      val cur = readFilesManifest(base).getOrElse(throw new IllegalArgumentException(
-        s"bronze.$name is not log-managed"))
-      val schema = cur.schema.getOrElse(throw new IllegalStateException(
-        s"bronze.$name carries no log schema — cannot drop a column"))
-      require(schema.fieldNames.contains(colName), s"no column $colName on bronze.$name")
-      require(schema.fields.length > 1, s"cannot drop the last column of bronze.$name")
-      val ident = ("""\b""" + java.util.regex.Pattern.quote(colName) + """\b""").r
-      constraintsOf(base).find(c => ident.findFirstIn(c._2).isDefined).foreach(c =>
-        throw new IllegalArgumentException(
-          s"CHECK constraint ${c._1} (${c._2}) references $colName: drop it first"))
-      guardGeneratedRefs(base, name, colName, "drop")
-      guardIdentityDefaultRefs(base, name, colName, "drop")
-      val m = colMapOf(base)
-      val tomb = s"!$colName@${cur.version + 1}"
-      val newMap = (m - colName) +
-        (tomb -> (colName +: m.getOrElse(colName, Seq.empty)).distinct)
-      val newSchema = org.apache.spark.sql.types.StructType(
-        schema.fields.filterNot(_.name == colName))
-      if (commitFilesManifest(base, cur.version + 1, Some(newSchema), cur.entries,
-          prev = Some(cur.entries), op = "DROP COLUMN",
-          colMap = Some(newMap))) return
-    }
-    throw new IllegalStateException(
-      s"dropBronzeColumn($name, $colName) lost $maxAttempts consecutive CAS races")
-  }
-
-  /** Refuse a widening append/merge whose NEW columns take names reserved
-    * by rename chains or drop tombstones (old files' data would silently
-    * resurrect under them). Cleans the staged dir before throwing via
-    * [[deleteStagedIfUncommitted]] (an adopt may own it by now). */
-  private def guardReservedColumns(base: Path, name: String,
-      priorNames: Set[String],
-      merged: org.apache.spark.sql.types.StructType, dataDir: Path): Unit = {
-    val reserved = reservedNames(colMapOf(base))
-    if (reserved.isEmpty) return
-    val clash = merged.fieldNames.filterNot(priorNames).filter(reserved)
-    if (clash.nonEmpty) {
-      deleteStagedIfUncommitted(base, dataDir)
-      throw new IllegalArgumentException(
-        s"cannot add column(s) ${clash.mkString(", ")} to bronze.$name: the names " +
-          "are reserved by rename/drop chains (old files still carry data under " +
-          "them — it would resurrect); use different names")
-    }
-  }
-
-  /** Enforce the table's CHECK constraints over a STAGED append dir — at
-    * most one scan of the new files, never the table. Constraints of the
-    * shape `col <op> literal` are first checked against the batch's
-    * FOOTER STATS ([[ManifestStats.provesCheck]] — sound because NULLs
-    * pass CHECK and stats bound the non-null values): when every staged
-    * file's range proves every such constraint, validation is METADATA-
-    * ONLY and the append pays no second read — the common case for the
-    * sanity constraints (`id > 0`, `score >= 0`) a 100 TB ingest carries.
-    * Unproven constraints fall back to one scan of the staged files.
-    * Columns the batch lacks (narrow append under a widened log schema)
-    * evaluate as NULL exactly as readers null-fill them, so CHECK's
-    * NULL-passes rule applies. On violation the staged dir is deleted
-    * and the append aborts — nothing was committed. Returns the
-    * constraint set validated against, so [[commitAppendEntries]] can
-    * detect a set that changed under it and re-validate. */
-  private def enforceConstraints(base: Path, name: String, dataDir: Path,
-      stagedEntries: Seq[ManifestStats.FileEntry] = Seq.empty): Seq[(String, String)] = {
-    val all = constraintsOf(base)
-    if (all.isEmpty) return all
-    val cs =
-      if (stagedEntries.isEmpty) all
-      else all.filterNot { case (_, ex) => Lakehouse.simpleComparison(spark, ex)
-        .exists { case (c, op, v) =>
-          stagedEntries.forall(ManifestStats.provesCheck(_, c, op, v)) } }
-    if (cs.isEmpty) return all
-    val staged0 = spark.read.parquet(dataDir.toString)
-    val logSchema = readFilesManifest(base).flatMap(_.schema)
-    val staged = logSchema.map { ss =>
-      ss.fields.filterNot(f => staged0.columns.contains(f.name))
-        .foldLeft(staged0)((d, f) => d.withColumn(f.name,
-          org.apache.spark.sql.functions.lit(null).cast(f.dataType)))
-    }.getOrElse(staged0)
-    val anyViolation = cs.map { case (_, e) => s"NOT coalesce(($e), true)" }.mkString(" OR ")
-    if (staged.filter(anyViolation).limit(1).count() > 0) {
-      // one more pass only on the failure path, to NAME the constraint
-      val culprit = cs.find { case (_, e) =>
-        staged.filter(s"NOT coalesce(($e), true)").limit(1).count() > 0 }
-      deleteStagedIfUncommitted(base, dataDir)
-      throw new IllegalArgumentException(
-        s"CHECK constraint ${culprit.map(_._1).getOrElse(cs.head._1)} " +
-          s"(${culprit.map(_._2).getOrElse(cs.head._2)}) violated: append to " +
-          s"bronze.$name aborted, nothing committed")
-    }
-    all
   }
 
   /** Predicate delete — "DELETE WHERE <condition>" over a bronze table,
@@ -2868,24 +2294,20 @@ final class Lakehouse(val spark: SparkSession, val root: String,
           val matchCond = !org.apache.spark.sql.functions.coalesce(
             !condition, org.apache.spark.sql.functions.lit(false))
           // scans subtract any existing deletion vectors: an already
-          // vector-deleted row neither triggers a rewrite nor survives one.
-          // Reads go through the column-mapping view, so the predicate sees
-          // logical names and the rewrite below MIGRATES files onto them.
-          val cmap = colMapOf(base)
-          val affectedNames = readEntriesWithDv(base, schemaOpt, candidates, cmap)
+          // vector-deleted row neither triggers a rewrite nor survives one
+          val affectedNames = readEntriesWithDv(base, schemaOpt, candidates)
             .withColumn("__f", input_file_name()).filter(matchCond)
             .select("__f").distinct().collect()
             .map(_.getString(0).split('/').takeRight(2).mkString("/")).toSet
           if (affectedNames.isEmpty) return
-          // two-segment key match (not raw relPath): clone entries carry a
-          // ../src/ prefix the scan's file_path normalizes away
+          // two-segment key match: the scan's file_path is absolute
           val (affected, untouched) = entries.partition(e =>
             affectedNames.contains(graft.sql.DvRowDeleted.relPathKey(e.relPath)))
           // copy-on-write moves the surviving rows: on a row-tracked table
           // they carry their ids into the rewrite as a physical column
           val tracked = rowIdWmOf(base).isDefined
-          val retained = (if (tracked) readEntriesRowIds(base, schemaOpt, affected, cmap)
-            else readEntriesWithDv(base, schemaOpt, affected, cmap))
+          val retained = (if (tracked) readEntriesRowIds(base, schemaOpt, affected)
+            else readEntriesWithDv(base, schemaOpt, affected))
             .filter(!condition)
           val newEntries =
             if (retained.isEmpty && untouched.nonEmpty) Seq.empty
@@ -2959,26 +2381,16 @@ final class Lakehouse(val spark: SparkSession, val root: String,
         case Some(BronzeSnapshot(v, schemaOpt, entries)) =>
           val candidates = entries.filter(e => ManifestStats.mightMatch(e, statPreds))
           if (candidates.isEmpty) return
-          val cmap = colMapOf(base)
-          def rd = schemaOpt.fold(spark.read)(s =>
-            spark.read.schema(readSchemaFor(s, cmap)))
+          def rd = schemaOpt.fold(spark.read)(spark.read.schema)
           // null condition counts as a match (dropped) — the DML convention
           val matchCond = !coalesce(!condition, lit(false))
           val priorRefs = dvRefPairs(candidates).toMap
           val priorVecs = DeletionVectors.loadMap(base, priorRefs.toSeq)
           val scan = rd.parquet(candidates.map(e => base.resolve(e.relPath).toString): _*)
           // file identity + physical position + match flag; existing
-          // vectors applied so an already-deleted row is never re-counted.
-          // The predicate evaluates over the column-mapping VIEW (logical
-          // names coalesced through rename chains), alongside _metadata.
-          val dataCols = schemaOpt match {
-            case Some(s) => renameViewCols(scan, s, cmap)
-            case None => scan.columns.toSeq.map(scan.col)
-          }
-          val vscan = scan.select(
-            col("_metadata.file_path").as("__f") +:
-              col("_metadata.row_index").as("__ridx") +: dataCols: _*)
-          val flagged0 = vscan.select(col("__f"), col("__ridx"), matchCond.as("__m"))
+          // vectors applied so an already-deleted row is never re-counted
+          val flagged0 = scan.select(col("_metadata.file_path").as("__f"),
+            col("_metadata.row_index").as("__ridx"), matchCond.as("__m"))
           val flagged = if (priorVecs.isEmpty) flagged0
             else flagged0.filter(!ColumnShim.column(graft.sql.DvRowDeleted(
               ColumnShim.expression(col("__f")),
@@ -3061,7 +2473,7 @@ final class Lakehouse(val spark: SparkSession, val root: String,
     * source rows with new keys insert; duplicate keys WITHIN the source
     * all land (dedupe upstream for upsert-exactly-one). NULL key values
     * never match (SQL join semantics) — such source rows insert.
-    * Constraints are enforced on the staged batch exactly as in
+    * Generated columns are enforced on the staged batch exactly as in
     * [[appendBronze]], including the re-validate-on-change guard.
     * Concurrency: lost CAS restarts the delete computation from the
     * winner's manifest (the staged insert files are version-independent);
@@ -3105,7 +2517,6 @@ final class Lakehouse(val spark: SparkSession, val root: String,
     val staged = ManifestStats.collectStats(spark, dataDir.toString,
       Lakehouse.BronzeStatsCols, dataDir.getFileName.toString)
     guardIdentityCount(name, dataDir, staged, idRows)
-    var validated = enforceConstraints(base, name, dataDir, staged)
     var gensAgainst = enforceGenerated(base, name, dataDir, source.columns.toSet)
     // the staged files by their entry paths: Spark warns "All paths were
     // ignored" for a root path named `_…` (then reads it all the same)
@@ -3140,9 +2551,6 @@ final class Lakehouse(val spark: SparkSession, val root: String,
       val BronzeSnapshot(v, schemaOpt, entries) = readFilesManifest(base).getOrElse(
         throw new IllegalStateException(s"bronze.$name lost its committed version mid-merge"))
       if (txnApplied()) { deleteStagedIfUncommitted(base, dataDir); return false }
-      val curConstraints = constraintsOf(base)
-      if (curConstraints != validated)
-        validated = enforceConstraints(base, name, dataDir, staged)
       if (gencolsOf(base) != gensAgainst)
         gensAgainst = enforceGenerated(base, name, dataDir, source.columns.toSet)
       idcolsOf(base).foreach(ic => require(filled.schema.fieldNames.contains(ic.col),
@@ -3156,8 +2564,6 @@ final class Lakehouse(val spark: SparkSession, val root: String,
             "before staging)")
       }
       val mergedSch = mergedSchema(schemaOpt.getOrElse(filled.schema), filled.schema)
-      guardReservedColumns(base, name,
-        schemaOpt.map(_.fieldNames.toSet).getOrElse(Set.empty), mergedSch, dataDir)
       val candidates = entries.filter(e => ManifestStats.mightMatch(e, keyBounds))
       if (candidates.isEmpty) {
         // pure insert: no target row matches any source key range
@@ -3165,20 +2571,13 @@ final class Lakehouse(val spark: SparkSession, val root: String,
             prev = Some(entries), op = "MERGE", txns = commitTxns,
               mergeKeys = Some(keys))) return true
       } else {
-        val cmap = colMapOf(base)
-        def rd = schemaOpt.fold(spark.read)(s =>
-          spark.read.schema(readSchemaFor(s, cmap)))
+        def rd = schemaOpt.fold(spark.read)(spark.read.schema)
         val priorRefs = dvRefPairs(candidates).toMap
         val priorVecs = DeletionVectors.loadMap(base, priorRefs.toSeq)
         val scan = rd.parquet(candidates.map(e => base.resolve(e.relPath).toString): _*)
-        val dataCols = schemaOpt match {
-          case Some(s) => renameViewCols(scan, s, cmap)
-          case None => scan.columns.toSeq.map(scan.col)
-        }
         val scanKeyed = onePartitionIfSmall(scan
           .select(col("_metadata.file_path").as("__f") +:
-            col("_metadata.row_index").as("__ridx") +: dataCols: _*)
-          .select(col("__f") +: col("__ridx") +: keys.map(col): _*), candidates)
+            col("_metadata.row_index").as("__ridx") +: keys.map(col): _*), candidates)
         // null-safe mode (`<=>`, still a hash-joinable equality): a NULL
         // source key REPLACES the target's NULL-key row instead of
         // stranding it — the contract [[graft.streaming.Streams
@@ -3277,12 +2676,9 @@ final class Lakehouse(val spark: SparkSession, val root: String,
         s"bronze.$name has no committed version to restore on top of"))
       if (cur.version == version) return // already there
       // restore table METADATA with the file set: the target version's own
-      // constraint set and column mapping, not the current head's —
-      // Some(Nil) writes the explicit empty constraints marker when the
-      // target had none (the colmap line is simply absent then: resolution
-      // reads the newest record only)
-      // identity DEFINITIONS restore with the rest of the table metadata,
-      // but each high watermark stays at the FARTHEST point ever reached —
+      // generated columns, identity definitions and defaults, not the
+      // current head's. Each identity high watermark stays at the FARTHEST
+      // point ever reached —
       // re-issuing ids a restored-away version already allocated would
       // break the uniqueness contract (Delta's identity + RESTORE rule)
       val restoredIds = idcolsAsOf(base, version).map { ic =>
@@ -3301,109 +2697,12 @@ final class Lakehouse(val spark: SparkSession, val root: String,
           "version instead")
       if (commitFilesManifest(base, cur.version + 1, target.schema, target.entries,
           prev = Some(cur.entries), op = "RESTORE",
-          constraints = Some(constraintsAsOf(base, version)),
-          colMap = Some(colMapAsOf(base, version)),
           genCols = Some(gencolsAsOf(base, version)),
           idCols = Some(restoredIds),
           defaults = Some(defaultsAsOf(base, version)))) return
     }
     throw new IllegalStateException(
       s"restoreBronze($name) lost $maxAttempts consecutive CAS races")
-  }
-
-  /** `FSCK REPAIR TABLE` parity: drop live manifest entries whose DATA
-    * file no longer exists on disk (external deletion, partial backup
-    * restore) so reads fail-fast paths stop tripping mid-scan. An entry
-    * whose deletion VECTOR is missing is dropped too — keeping the data
-    * file without its vector would silently RESURRECT deleted rows,
-    * strictly worse than losing the file's surviving rows (Delta's FSCK
-    * makes the same call). Metadata-only commit (op `FSCK`); returns the
-    * dropped relPaths; `dryRun` reports without committing. Older
-    * retained versions still referencing the files keep failing fast in
-    * [[tableAt]] with the vacuum remedy message. */
-  def repairBronze(name: String, dryRun: Boolean = false,
-      maxAttempts: Int = 5): Seq[String] = {
-    val base = dir("bronze", name)
-    var attempt = 0
-    while (attempt < maxAttempts) {
-      attempt += 1
-      val cur = readFilesManifest(base).getOrElse(return Seq.empty)
-      val broken = cur.entries.filter { e =>
-        !Files.exists(base.resolve(e.relPath)) ||
-          ManifestStats.dvRef(e).exists { case (p, _) => !Files.exists(base.resolve(p)) }
-      }
-      if (broken.isEmpty) return Seq.empty
-      if (dryRun) return broken.map(_.relPath)
-      val brokenPaths = broken.map(_.relPath).toSet
-      if (commitFilesManifest(base, cur.version + 1, cur.schema,
-          cur.entries.filterNot(e => brokenPaths(e.relPath)),
-          prev = Some(cur.entries), op = "FSCK")) return broken.map(_.relPath)
-    }
-    throw new IllegalStateException(
-      s"repairBronze($name) lost $maxAttempts consecutive CAS races")
-  }
-
-  /** Delta `SHALLOW CLONE` parity: create `dst` as a ZERO-COPY clone of
-    * `src` at `version` (default: the committed head) — one metadata
-    * commit referencing the source's data files through rerooted
-    * relPaths (`../src/...`), copying nothing. File stats, blooms,
-    * deletion-vector references and CHECK constraints all carry over, so
-    * skipping and merge-on-read work identically on the clone.
-    *
-    * The clone is INDEPENDENT from its first commit on: deletes /
-    * appends / OPTIMIZE on either table never touch the other's log, and
-    * a rewrite on the clone lands in the clone's own dirs (an OPTIMIZE
-    * makes it fully self-contained). The one shared-fate caveat is
-    * Delta's own: a VACUUM of the SOURCE can reclaim files the clone
-    * still references — [[repairBronze]] on the clone then drops them,
-    * and [[vacuumBronze]] of the clone itself only ever considers files
-    * under the clone's directory, never the source's.
-    *
-    * Streaming caveat: a file stream over the clone's OWN `_a*` dirs
-    * delivers only rows appended to the clone AFTER the clone — pre-clone history is batch-readable
-    * ([[table]]), not stream-replayable (same contract as Delta's
-    * shallow clone + `readStream` without `startingVersion`). */
-  def cloneBronze(src: String, dst: String, version: Option[Int] = None): Unit = {
-    require(src != dst, "cannot clone a table onto itself")
-    val sbase = dir("bronze", src)
-    val dbase = dir("bronze", dst)
-    require(!exists("bronze", dst), s"bronze.$dst already exists")
-    val snap = version match {
-      case Some(v) =>
-        require(bronzeVersions(sbase).contains(v),
-          s"version $v of bronze.$src is not retained")
-        resolveSnapshot(sbase, v).getOrElse(throw new IllegalStateException(
-          s"version $v of bronze.$src did not resolve — log chain broken"))
-      case None => readFilesManifest(sbase).getOrElse(throw new IllegalArgumentException(
-        s"bronze.$src is not a log-managed table"))
-    }
-    Files.createDirectories(dbase)
-    val prefix = dbase.relativize(sbase).toString.replace('\\', '/')
-    def reroot(rel: String) = s"$prefix/$rel"
-    val entries = snap.entries.map { e =>
-      val moved = e.copy(relPath = reroot(e.relPath))
-      ManifestStats.dvRef(e) match {
-        case Some((p, c)) => ManifestStats.withDv(moved, reroot(p), c)
-        case None => moved
-      }
-    }
-    // the clone takes the CLONED VERSION's own table metadata (constraints,
-    // rename chains, generated columns) — an as-of clone must not inherit
-    // metadata added to the source after that version. Writer txns are
-    // deliberately NOT carried (a clone is a new table; the source writer's
-    // idempotency ledger must not suppress its first writes to the clone).
-    require(commitFilesManifest(dbase, 1, snap.schema, entries, op = "CLONE",
-        constraints = Some(constraintsAsOf(sbase, snap.version)).filter(_.nonEmpty),
-        colMap = Some(colMapAsOf(sbase, snap.version)).filter(_.nonEmpty),
-        genCols = Some(gencolsAsOf(sbase, snap.version)).filter(_.nonEmpty),
-        // the as-of watermark is the right one for a clone: every id in the
-        // cloned data is at-or-below it, and the clone allocates independently
-        idCols = Some(idcolsAsOf(sbase, snap.version)).filter(_.nonEmpty),
-        defaults = Some(defaultsAsOf(sbase, snap.version)).filter(_.nonEmpty),
-        // row tracking carries at the as-of watermark: every id in the
-        // cloned entries is below it, and the clone allocates independently
-        rowIdWm = rowIdWmAsOf(sbase, snap.version)),
-      s"cloneBronze($src, $dst) lost the v1 commit race — dst created concurrently")
   }
 
   /** One [[ManifestStats.StatPred]] as a Column over the parquet-twin
@@ -3533,19 +2832,16 @@ final class Lakehouse(val spark: SparkSession, val root: String,
     * vectors — the pruned-read twin of [[readEntriesWithDv]]. */
   private def readPrunedWithDv(base: Path,
       schemaOpt: Option[org.apache.spark.sql.types.StructType],
-      paths: Seq[(String, Option[String])],
-      colMap: Map[String, Seq[String]] = Map.empty): DataFrame = {
-    def rd = schemaOpt.fold(spark.read)(s => spark.read.schema(readSchemaFor(s, colMap)))
+      paths: Seq[(String, Option[String])]): DataFrame = {
+    def rd = schemaOpt.fold(spark.read)(spark.read.schema)
     val (dvd, plain) = paths.partition(_._2.isDefined)
-    val raw =
-      if (dvd.isEmpty) rd.parquet(paths.map(_._1): _*)
-      else {
-        val masked = readDvFiltered(base, rd, dvd.map(_._1),
-          dvd.map { case (p, dv) => graft.sql.DvRowDeleted.relPathKey(p) -> dv.get })
-        if (plain.isEmpty) masked
-        else masked.unionByName(rd.parquet(plain.map(_._1): _*))
-      }
-    schemaOpt.fold(raw)(renameView(raw, _, colMap))
+    if (dvd.isEmpty) rd.parquet(paths.map(_._1): _*)
+    else {
+      val masked = readDvFiltered(base, rd, dvd.map(_._1),
+        dvd.map { case (p, dv) => graft.sql.DvRowDeleted.relPathKey(p) -> dv.get })
+      if (plain.isEmpty) masked
+      else masked.unionByName(rd.parquet(plain.map(_._1): _*))
+    }
   }
 
   /** Time-travel scan WITH file skipping — [[tableWhere]] AS OF `version`:
@@ -3578,7 +2874,7 @@ final class Lakehouse(val spark: SparkSession, val root: String,
       return (spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], s), held)
     }
-    (readPrunedWithDv(base, schema, paths, colMapAsOf(base, version)), held)
+    (readPrunedWithDv(base, schema, paths), held)
   }
 
   /** Scan with file skipping: only files whose stats admit `preds` are
@@ -3597,7 +2893,7 @@ final class Lakehouse(val spark: SparkSession, val root: String,
       return spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
     }
-    readPrunedWithDv(base, light, pruned, colMapOf(base))
+    readPrunedWithDv(base, light, pruned)
   }
 
   /** Materialize one silver/gold model (MV refresh = full recompute):
@@ -3732,12 +3028,11 @@ final class Lakehouse(val spark: SparkSession, val root: String,
       val total = smalls.map(sizeOf).sum
       val outFiles = math.max(1, math.ceil(total.toDouble / targetBytes).toInt)
       val dataDir = newAppendDir(base, v + 1)
-      // the rewrite reads through the column-mapping view, so repacked
-      // files MIGRATE onto the current logical names; row-tracked tables
-      // read through the row-id face and materialize ids into the outputs
+      // row-tracked tables read through the row-id face and materialize
+      // ids into the outputs
       val tracked = rowIdWmOf(base).isDefined
-      (if (tracked) readEntriesRowIds(base, schemaOpt, smalls, colMapOf(base))
-       else readEntriesWithDv(base, schemaOpt, smalls, colMapOf(base)))
+      (if (tracked) readEntriesRowIds(base, schemaOpt, smalls)
+       else readEntriesWithDv(base, schemaOpt, smalls))
         .repartition(outFiles)
         .write.mode(SaveMode.Overwrite).parquet(dataDir.toString)
       // packed files MIX keys — exactly when membership pruning matters
@@ -3771,14 +3066,13 @@ final class Lakehouse(val spark: SparkSession, val root: String,
       attempt += 1
       val BronzeSnapshot(v, schemaOpt, entries) = readFilesManifest(base).getOrElse(return)
       // deletion vectors are applied and PURGED by any full rewrite: the
-      // output files carry only surviving rows and a clean entry (read
-      // through the column-mapping view — rewrites migrate names)
+      // output files carry only surviving rows and a clean entry;
       // row-tracked tables rewrite through the row-id read face: rows MOVE
       // here, so the ids materialize into the outputs' __row_id column and
       // the new entries carry the PhysicalRowIds marker instead of a base
       val tracked = rowIdWmOf(base).isDefined
-      val src = if (tracked) readEntriesRowIds(base, schemaOpt, entries, colMapOf(base))
-        else readEntriesWithDv(base, schemaOpt, entries, colMapOf(base))
+      val src = if (tracked) readEntriesRowIds(base, schemaOpt, entries)
+        else readEntriesWithDv(base, schemaOpt, entries)
       val df = transform(src)
       val dataDir = newAppendDir(base, v + 1)
       df.write.mode(SaveMode.Overwrite).parquet(dataDir.toString)
@@ -3889,39 +3183,6 @@ object Lakehouse {
     def maxWatermark(other: Option[Long]): Option[Long] = (highWatermark, other) match {
       case (Some(a), Some(b)) => Some(if (step > 0) math.max(a, b) else math.min(a, b))
       case (a, b) => a.orElse(b)
-    }
-  }
-
-  /** Parse a CHECK expression of the shape `col <op> literal` (either
-    * operand order) into (column, op, value) — the subset
-    * [[ManifestStats.provesCheck]] can prove from footer stats. Anything
-    * else (compound predicates, functions, col-to-col) returns None and
-    * validation falls back to the staged-file scan. */
-  private[pipeline] def simpleComparison(spark: SparkSession,
-      exprSql: String): Option[(String, String, Any)] = {
-    import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
-    import org.apache.spark.sql.catalyst.expressions._
-    def v(l: Literal): Option[Any] = Option(l.value).map {
-      case u: org.apache.spark.unsafe.types.UTF8String => u.toString
-      case x => x
-    }
-    val e =
-      try spark.sessionState.sqlParser.parseExpression(exprSql)
-      catch { case scala.util.control.NonFatal(_) => return None }
-    e match {
-      case GreaterThan(a: UnresolvedAttribute, l: Literal) => v(l).map((a.name, ">", _))
-      case GreaterThan(l: Literal, a: UnresolvedAttribute) => v(l).map((a.name, "<", _))
-      case GreaterThanOrEqual(a: UnresolvedAttribute, l: Literal) => v(l).map((a.name, ">=", _))
-      case GreaterThanOrEqual(l: Literal, a: UnresolvedAttribute) => v(l).map((a.name, "<=", _))
-      case LessThan(a: UnresolvedAttribute, l: Literal) => v(l).map((a.name, "<", _))
-      case LessThan(l: Literal, a: UnresolvedAttribute) => v(l).map((a.name, ">", _))
-      case LessThanOrEqual(a: UnresolvedAttribute, l: Literal) => v(l).map((a.name, "<=", _))
-      case LessThanOrEqual(l: Literal, a: UnresolvedAttribute) => v(l).map((a.name, ">=", _))
-      case EqualTo(a: UnresolvedAttribute, l: Literal) => v(l).map((a.name, "=", _))
-      case EqualTo(l: Literal, a: UnresolvedAttribute) => v(l).map((a.name, "=", _))
-      case Not(EqualTo(a: UnresolvedAttribute, l: Literal)) => v(l).map((a.name, "!=", _))
-      case Not(EqualTo(l: Literal, a: UnresolvedAttribute)) => v(l).map((a.name, "!=", _))
-      case _ => None
     }
   }
 

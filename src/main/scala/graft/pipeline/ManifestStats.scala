@@ -92,29 +92,6 @@ object ManifestStats {
       java.util.Arrays.compareUnsigned(a.getBytes(UTF_8), b.getBytes(UTF_8))
   }
 
-  /** The DUAL of [[mightMatch]], for CHECK-constraint validation: does the
-    * file's recorded range PROVE every row satisfies `col <op> value`?
-    * Sound under SQL CHECK semantics — min/max ignore NULLs and a NULL
-    * row PASSES a CHECK, so bounding the non-null values bounds every
-    * row that could violate. A file proven empty (`__rows` = 0) proves
-    * anything; missing stats / tag mismatch → NOT proven (caller scans —
-    * never skip a validation on a guess). */
-  def provesCheck(entry: FileEntry, column: String, op: String, value: Any): Boolean = {
-    if (rowsOf(entry).contains(0L)) return true
-    (entry.stats.get(column), encodeValue(value)) match {
-      case (Some(s), Some((tag, v))) if tag == s.tag => op match {
-        case ">" => cmp(tag, s.min, v) > 0
-        case ">=" => cmp(tag, s.min, v) >= 0
-        case "<" => cmp(tag, s.max, v) < 0
-        case "<=" => cmp(tag, s.max, v) <= 0
-        case "=" => cmp(tag, s.min, v) == 0 && cmp(tag, s.max, v) == 0
-        case "!=" => cmp(tag, s.min, v) > 0 || cmp(tag, s.max, v) < 0
-        case _ => false
-      }
-      case _ => false
-    }
-  }
-
   /** Conservative survival test: keep the file unless its recorded range
     * PROVES no row can match every predicate. Missing stats → keep. */
   def mightMatch(entry: FileEntry, preds: Seq[StatPred]): Boolean =

@@ -676,7 +676,7 @@ class PropertySpec extends SparkSpec {
     }
   }
 
-  test("bronze log invariants hold through a random append/DV-delete/CoW/merge/rename/compact walk") {
+  test("bronze log invariants hold through a random append/DV-delete/CoW/merge/add-columns/compact walk") {
     import graft.pipeline.{Lakehouse, ManifestStats}
     val rnd = new Random(7)
     val lake = new Lakehouse(spark,
@@ -685,25 +685,26 @@ class PropertySpec extends SparkSpec {
     val day = java.sql.Date.valueOf("2025-06-01")
     var model = Map.empty[Long, String] // id -> run, the in-memory truth
     var nextId = 0L
-    var idCol = "id" // renamed back and forth mid-walk (column mapping)
-    def appendRun(step: Int): Unit = {
+    // `extra` adds one nullable column to the batch: ADD COLUMNS, the
+    // reference's schema evolution (finalize_run_log.py:82-93)
+    def appendRun(step: Int, extra: Option[String] = None): Unit = {
       val run = s"run$step"
       val ids = (1 to 1 + rnd.nextInt(5)).map { _ => nextId += 1; nextId }
-      lake.appendBronze("t",
-        ids.map(i => (i, day, run)).toDF(idCol, "snapshot_date", "run_id")
-          .repartition(1 + rnd.nextInt(2)))
+      val batch = ids.map(i => (i, day, run)).toDF("id", "snapshot_date", "run_id")
+      lake.appendBronze("t", extra.fold(batch)(c => batch.withColumn(c, lit(run)))
+        .repartition(1 + rnd.nextInt(2)))
       model ++= ids.map(_ -> run)
     }
     def scanPairs(): Seq[(Long, String)] =
-      lake.table("bronze", "t").select(idCol, "run_id").collect()
+      lake.table("bronze", "t").select("id", "run_id").collect()
         .map(r => r.getLong(0) -> r.getString(1)).toSeq
     appendRun(0)
     // row tracking rides the whole walk: ids must stay unique, stable for
     // untouched rows, below a non-decreasing watermark — across DV deletes,
-    // CoW rewrites, merges, renames and compactions
+    // CoW rewrites, merges, added columns and compactions
     lake.enableRowTracking("t")
     def rowIds(): Map[Long, Long] =
-      lake.tableWithRowIds("t").select(idCol, "_row_id").collect()
+      lake.tableWithRowIds("t").select("id", "_row_id").collect()
         .map(r => r.getLong(0) -> r.getLong(1)).toMap
     var prevIds = rowIds()
     var prevWm = lake.rowIdWatermark("t").get
@@ -714,7 +715,7 @@ class PropertySpec extends SparkSpec {
         case 0 | 1 => appendRun(step)
         case 2 => // merge-on-read delete by id residue
           val p = rnd.nextInt(4)
-          lake.deleteBronzeWhereDv("t", pmod(col(idCol), lit(4)) === p)
+          lake.deleteBronzeWhereDv("t", pmod(col("id"), lit(4)) === p)
           model = model.filter { case (i, _) => i % 4 != p }
         case 3 if model.nonEmpty => // copy-on-write delete of one whole run
           val run = model.values.toSeq(rnd.nextInt(model.size))
@@ -726,13 +727,13 @@ class PropertySpec extends SparkSpec {
           val existing = rnd.shuffle(model.keys.toSeq).take(rnd.nextInt(3))
           val ids = existing :+ { nextId += 1; nextId }
           lake.mergeBronze("t",
-            ids.map(i => (i, day, run)).toDF(idCol, "snapshot_date", "run_id"),
-            Seq(idCol))
+            ids.map(i => (i, day, run)).toDF("id", "snapshot_date", "run_id"),
+            Seq("id"))
           model ++= ids.map(_ -> run)
-        case 5 => // metadata-only rename, back and forth
-          val next = if (idCol == "id") "doc_id" else "id"
-          lake.renameBronzeColumn("t", idCol, next)
-          idCol = next
+        case 5 => // ADD COLUMNS: an append carrying one extra nullable column
+          appendRun(step, extra = Some(s"x$step"))
+          assert(lake.table("bronze", "t").columns.contains(s"x$step"),
+            s"step $step: ADD COLUMNS did not widen the log schema")
         case _ => lake.compactSmall("bronze", "t", minSmallFiles = 2) // may no-op
       }
       // invariants after EVERY step: scan content == model, metadata
@@ -744,11 +745,11 @@ class PropertySpec extends SparkSpec {
       assert(lake.describeDetail("bronze", "t").head()
         .getAs[Long]("num_rows") == model.size.toLong, s"step $step: detail num_rows")
       // CDF apply-algebra: modelBefore + inserts − deletes == model, for
-      // every committed step (OPTIMIZE/rename steps emit an empty feed)
+      // every committed step (OPTIMIZE steps emit an empty feed)
       val vAfter = lake.tableVersions("bronze", "t").max
       if (vAfter > vBefore) {
         val feed = lake.tableChanges("t", vBefore, vAfter)
-          .select(col(idCol), col("run_id"), col("_change_type")).collect()
+          .select(col("id"), col("run_id"), col("_change_type")).collect()
           .map(r => (r.getLong(0) -> r.getString(1), r.getString(2)))
         val ins = feed.filter(t => t._2 == "insert" || t._2 == "update_postimage")
           .map(_._1).toSeq

@@ -108,29 +108,15 @@ class ConcurrencySpec extends SparkSpec {
     }
   }
 
-  test("time travel reads row ids as of a version") {
+  test("head row ids hold across an append and a vector delete") {
     val lake = mkLake("asofrid")
     lake.appendBronze("t", Seq((1L, "a"), (2L, "b")).toDF("k", "tag").coalesce(1))
     lake.enableRowTracking("t")
-    val v = lake.committedBronzeVersion("t")
     lake.appendBronze("t", Seq((3L, "c")).toDF("k", "tag").coalesce(1))
     lake.deleteBronzeWhereDv("t", col("k") === 1L)
-    val asOf = lake.tableAtWithRowIds("t", v).select("k", "_row_id")
-      .as[(Long, Long)].collect().toMap
-    assert(asOf == Map(1L -> 0L, 2L -> 1L), "AS-OF row ids diverged")
     val now = lake.tableWithRowIds("t").select("k", "_row_id")
       .as[(Long, Long)].collect().toMap
     assert(now == Map(2L -> 1L, 3L -> 2L))
-    // a retained PRE-enable version refuses (its entries carry no bases)
-    val lake2 = mkLake("asofrid2")
-    lake2.appendBronze("u", Seq((1L, "a")).toDF("k", "tag").coalesce(1))
-    lake2.appendBronze("u", Seq((2L, "b")).toDF("k", "tag").coalesce(1))
-    val preEnable = lake2.committedBronzeVersion("u")
-    lake2.enableRowTracking("u")
-    val err = intercept[IllegalArgumentException] {
-      lake2.tableAtWithRowIds("u", preEnable)
-    }
-    assert(err.getMessage.contains("predates enableRowTracking"))
   }
 
   test("racing writers x cursor consumers x mid-drain vacuum: exactly-once batches, retention held") {

@@ -58,16 +58,6 @@ class GeneratedColumnSpec extends SparkSpec {
     lake2.appendBronze("t", bare("r5", Seq(58L)))
     assert(lake2.table("bronze", "t").filter(col("id") === 58L)
       .select("bucket").as[Long].head() == 8L)
-
-    // dropping the binding stops computation: a bare batch now fails the
-    // strict schema... no — the column stays in the schema, so a bare
-    // batch simply lands with NULLs (no longer computed)
-    lake2.dropGeneratedColumn("t", "bucket")
-    lake2.appendBronze("t", bare("r6", Seq(99L)))
-    assert(lake2.table("bronze", "t").filter(col("id") === 99L)
-      .select("bucket").isEmpty == false)
-    assert(lake2.table("bronze", "t").filter(col("id") === 99L)
-      .filter(col("bucket").isNull).count() == 1)
   }
 
   test("merge computes omitted generated columns and validates provided ones") {
@@ -94,15 +84,6 @@ class GeneratedColumnSpec extends SparkSpec {
     val preDeclare = lake.committedBronzeVersion("t")
     lake.addGeneratedColumn("t", "bucket", "id % 10")
 
-    // rename/drop of the target or a referenced column: refused
-    for (c <- Seq("bucket", "id")) {
-      assert(intercept[IllegalArgumentException] {
-        lake.renameBronzeColumn("t", c, c + "2")
-      }.getMessage.contains("generated column"))
-      assert(intercept[IllegalArgumentException] {
-        lake.dropBronzeColumn("t", c)
-      }.getMessage.contains("generated column"))
-    }
     // widening an involved column: refused even when the widening itself
     // would be legal (INT → LONG) — the expression's result type would shift
     val lw = mkLake("genwiden")
@@ -121,32 +102,10 @@ class GeneratedColumnSpec extends SparkSpec {
       .filter(col("bucket").isNull).count() == 1)
   }
 
-  test("clone carries the cloned version's generated set; writer txns do not carry") {
-    val lake = mkLake("genclone")
-    lake.appendBronze("t", rows("r1", Seq((10L, 0L))), txn = Some(("app", 9L)))
-    lake.addGeneratedColumn("t", "bucket", "id % 10")
-    lake.cloneBronze("t", "t2")
-    // the binding carried: a bare append to the CLONE computes the column
-    assert(lake.generatedColumns("t2") == Seq("bucket" -> "id % 10"))
-    lake.appendBronze("t2", bare("c1", Seq(23L)))
-    assert(lake.table("bronze", "t2").filter(col("id") === 23L)
-      .select("bucket").as[Long].head() == 3L)
-    // the source's txn ledger did NOT carry — the same (app, 9) txn that
-    // already applied on the source applies FRESH on the clone
-    assert(lake.txnVersion("t2", "app").isEmpty)
-    assert(lake.appendBronze("t2", bare("c2", Seq(31L)), txn = Some(("app", 9L))))
-    // an as-of clone takes the PRE-declare version's metadata: no binding
-    val preDeclare = 1
-    lake.cloneBronze("t", "t3", version = Some(preDeclare))
-    assert(lake.generatedColumns("t3").isEmpty)
-  }
-
   test("validation-failure staged-dir hygiene never deletes a committed dir") {
-    // enforceGenerated/enforceConstraints re-run INSIDE the commit CAS
-    // retry loop, where adoptAppendDir may have raced this writer and
-    // committed its staged dir: the failure-path delete must skip any dir
-    // the manifest ever owned (live OR deleted-since), else it destroys
-    // live data
+    // the failure-path delete of a staged dir must skip any dir the
+    // manifest ever owned (live OR deleted-since), else it destroys live
+    // data
     val lake = mkLake("genstaged")
     lake.appendBronze("t", rows("r1", Seq((10L, 0L), (17L, 7L))))
     val base = java.nio.file.Paths.get(lake.root, "bronze", "t")

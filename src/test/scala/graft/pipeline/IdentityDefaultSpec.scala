@@ -80,19 +80,6 @@ class IdentityDefaultSpec extends SparkSpec {
     assert(ids == Set(1L, 2L, 3L, 6L, 7L), s"reissued restored-away ids: $ids")
   }
 
-  test("clone carries identity definitions and watermark; allocation stays disjoint") {
-    val lake = mkLake("idclone")
-    lake.addIdentityColumn("t", "rid")
-    lake.appendBronze("t", batch(Seq(1L, 2L)).orderBy("k"))
-    lake.cloneBronze("t", "t2")
-    assert(lake.identityColumns("t2").head.highWatermark.contains(2L))
-    lake.appendBronze("t2", batch(Seq(9L)).orderBy("k"))
-    assert(lake.table("bronze", "t2").filter(col("k") === 9L)
-      .select("rid").as[Long].head() == 3L)
-    // the clone's allocation is independent: the source is unaffected
-    assert(lake.identityColumns("t").head.highWatermark.contains(2L))
-  }
-
   test("defaults fill omitted columns after declaration only; provided values pass unvalidated") {
     val lake = mkLake("def")
     lake.appendBronze("t", batch(Seq(1L)))              // pre-declaration
@@ -129,20 +116,25 @@ class IdentityDefaultSpec extends SparkSpec {
       lake.addGeneratedColumn("t", "tier", "'x'")
     }
     assert(mx.getMessage.contains("mutually exclusive"))
-    // rename/drop of a defaulted column is refused until the default drops
-    val rn = intercept[IllegalArgumentException] {
-      lake.renameBronzeColumn("t", "tier", "grade")
+    // widening a defaulted column is refused until the default drops
+    lake.setColumnDefault("t", "score", "cast(7 as int)")
+    lake.appendBronze("t", batch(Seq(3L))) // lands score=7 as INT
+    val wd = intercept[IllegalArgumentException] {
+      lake.widenBronzeColumnType("t", "score", org.apache.spark.sql.types.LongType)
     }
-    assert(rn.getMessage.contains("DEFAULT"))
-    lake.dropColumnDefault("t", "tier")
-    // identity column schema changes are refused outright
+    assert(wd.getMessage.contains("DEFAULT"))
+    lake.dropColumnDefault("t", "score")
+    lake.widenBronzeColumnType("t", "score", org.apache.spark.sql.types.LongType)
+    assert(lake.table("bronze", "t").filter(col("k") === 3L)
+      .select("score").as[Long].head() == 7L)
+    // an identity column is LONG already: no widening applies to it
     val lake3 = mkLake("idguard")
     lake3.addIdentityColumn("u", "rid")
     lake3.appendBronze("u", batch(Seq(1L)))
     val ir = intercept[IllegalArgumentException] {
-      lake3.renameBronzeColumn("u", "rid", "rowid")
+      lake3.widenBronzeColumnType("u", "rid", org.apache.spark.sql.types.LongType)
     }
-    assert(ir.getMessage.contains("IDENTITY"))
+    assert(ir.getMessage.contains("cannot widen"))
   }
 
   test("RESTORE restores the default set of the target version") {

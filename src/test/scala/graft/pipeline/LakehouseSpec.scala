@@ -464,31 +464,6 @@ class LakehouseSpec extends SparkSpec {
     assert(lake.table("silver", "t").collect().map(_.getString(1)).toSeq == Seq("v3"))
   }
 
-  test("concurrent adopts of one crashed append dir commit its files exactly once") {
-    // the check-then-act race: adoptAppendDir probes the live set, then
-    // CAS-commits — if the presumed-crashed writer's (or a second recovery
-    // job's) commit lands in between, the retry loop must DROP the
-    // already-live relPaths instead of committing them twice
-    val lake = new Lakehouse(spark, Files.createTempDirectory("graft-adopt").toString)
-    val ctx = Bronze.RunContext("run1", "r1", d("2025-06-01"), ts("2025-06-01 10:00:00"))
-    Bronze.ingest(lake, ctx, _ => Map("channels_raw" -> Seq("""{"items": [1]}""")))
-    val base = Paths.get(lake.root, "bronze", "channels_raw")
-    lake.table("bronze", "channels_raw").limit(1)
-      .write.parquet(base.resolve("_a2_crashed").toString)
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration._
-    import scala.concurrent.ExecutionContext.Implicits.global
-    val adopters = (1 to 8).map(_ => Future {
-      lake.adoptAppendDir("channels_raw", "_a2_crashed")
-    })
-    adopters.foreach(Await.result(_, 5.minutes))
-    assert(lake.table("bronze", "channels_raw").count() == 2,
-      "racing adopters committed the same files more than once")
-    // a later sequential re-adopt is a clean no-op too
-    lake.adoptAppendDir("channels_raw", "_a2_crashed")
-    assert(lake.table("bronze", "channels_raw").count() == 2)
-  }
-
   test("vacuum wall-clock floor: versions inside the retention window keep their files") {
     // Delta's `VACUUM ... RETAIN n HOURS` contract, clock-injected: a
     // version committed within the window keeps its data files no matter
@@ -523,36 +498,6 @@ class LakehouseSpec extends SparkSpec {
     assert(e.getMessage.contains("vacuumed") && e.getMessage.contains("retainMillis"),
       s"expected the fail-fast to cite the wall-clock floor, got: ${e.getMessage}")
     assert(lake.table("bronze", "t").count() == 3, "vacuum touched live rows")
-  }
-
-  test("adopt of a committed-then-deleted append dir is a no-op (no row resurrection)") {
-    // live relPaths alone cannot tell "never committed" from "committed,
-    // then deleted": after deleteByRunId removes a dir's rows, none of its
-    // relPaths are live, so a recovery job mistaking it for a crashed
-    // writer would re-commit the files and resurrect the deleted rows.
-    // The log's #dirs ever-committed set must block that — including
-    // ACROSS a checkpoint written after the delete (cumulative carry).
-    val lake = new Lakehouse(spark, Files.createTempDirectory("graft-resur").toString,
-      bronzeCheckpointInterval = 3)
-    lake.appendBronze("t", Seq((1L, d("2025-06-01"), "run1"))
-      .toDF("id", "snapshot_date", "run_id").repartition(1))
-    lake.appendBronze("t", Seq((2L, d("2025-06-01"), "run2"))
-      .toDF("id", "snapshot_date", "run_id").repartition(1))
-    val base = Paths.get(lake.root, "bronze", "t")
-    val run1Dir = {
-      val s = Files.list(base)
-      try {
-        import scala.jdk.CollectionConverters._
-        s.iterator().asScala.map(_.getFileName.toString)
-          .find(_.startsWith("_a1_")).get
-      } finally s.close()
-    }
-    lake.deleteByRunId("t", "run1") // v3 = checkpoint (interval 3)
-    assert(lake.table("bronze", "t").where($"run_id" === "run1").count() == 0)
-    lake.adoptAppendDir("t", run1Dir)
-    assert(lake.table("bronze", "t").where($"run_id" === "run1").count() == 0,
-      "adoptAppendDir resurrected rows a DELETE had removed")
-    assert(lake.table("bronze", "t").count() == 1)
   }
 
   test("tableAt fails fast (with the remedy) when a retained version's files were vacuumed") {
@@ -750,15 +695,12 @@ class LakehouseSpec extends SparkSpec {
     assert(o.getAs[Long]("num_rows") == 3)
     assert(o.getAs[Long]("num_nodata_dirs") == 1)
     // the full log-feature surface: declare one of each, DESCRIBE reports it
-    lake.addCheckConstraint("t", "id_pos", "id > 0")
-    lake.renameBronzeColumn("t", "run_id", "run_tag")
-    lake.setColumnDefault("t", "run_tag", "'backfill'")
+    lake.setColumnDefault("t", "run_id", "'backfill'")
     lake.enableRowTracking("t")
     lake.appendBronze("t", Seq((100L, d("2025-06-02")))
       .toDF("id", "snapshot_date").repartition(1), txn = Some(("app-x", 1L)))
     val f = lake.describeDetail("bronze", "t").head()
-    assert(f.getAs[Long]("num_check_constraints") == 1)
-    assert(f.getAs[Long]("num_renamed_columns") == 1)
+    assert(!f.schema.fieldNames.exists(c => c.contains("constraint") || c.contains("renamed")))
     assert(f.getAs[Long]("num_column_defaults") == 1)
     assert(f.getAs[Long]("num_txn_app_ids") == 1)
     assert(!f.isNullAt(f.fieldIndex("row_id_watermark")) &&
@@ -781,50 +723,13 @@ class LakehouseSpec extends SparkSpec {
     assert(m.getAs[Long]("size_bytes") > 0)
     assert(m.getAs[Long]("num_rows") == 2, "materialized num_rows from the log")
     Seq("num_deletion_vectors", "dv_cardinality", "num_nodata_dirs",
-      "num_check_constraints", "num_renamed_columns", "num_identity_columns",
-      "num_column_defaults", "num_generated_columns", "num_txn_app_ids")
+      "num_identity_columns", "num_column_defaults", "num_generated_columns",
+      "num_txn_app_ids")
       .foreach(c => assert(m.getAs[Long](c) == 0L, s"$c should be a definitive 0"))
     assert(m.isNullAt(m.fieldIndex("row_id_watermark")))
     // a table that was never written fails fast, naming the table
     val e = intercept[IllegalArgumentException](lake.describeDetail("gold", "nope"))
     assert(e.getMessage.contains("gold.nope"), e.getMessage)
-  }
-
-  test("repairBronze drops entries for vanished files and missing vectors") {
-    val lake = new Lakehouse(spark, Files.createTempDirectory("graft-fsck").toString)
-    (1 to 3).foreach { i =>
-      lake.appendBronze("t", Seq((i.toLong, d("2025-06-01"), s"run$i"),
-          (i + 10L, d("2025-06-01"), s"run$i"))
-        .toDF("id", "snapshot_date", "run_id").repartition(1))
-    }
-    assert(lake.repairBronze("t", dryRun = true).isEmpty)
-    // externally delete one live data file
-    val victimAbs = lake.prunedFilePaths("bronze", "t",
-      Seq(ManifestStats.StatEq("run_id", "run2"))).head
-    val victim = lake.tableDir("bronze", "t").relativize(
-      java.nio.file.Paths.get(victimAbs)).toString
-    Files.delete(java.nio.file.Paths.get(victimAbs))
-    assert(lake.repairBronze("t", dryRun = true) == Seq(victim))
-    assert(lake.repairBronze("t") == Seq(victim))
-    assert(lake.table("bronze", "t").count() == 4)
-    assert(lake.repairBronze("t").isEmpty)
-    assert(lake.history("bronze", "t").orderBy(col("version").desc)
-      .head().getString(2) == "FSCK")
-    // a missing deletion vector drops its entry (never resurrects rows)
-    lake.deleteBronzeWhereDv("t", col("id") === 1L)
-    val dvRel = lake.prunedFilePathsMetered("bronze", "t", Nil)._1
-      .collectFirst { case (_, Some(_)) => () }
-    assert(dvRel.isDefined, "expected a vector-carrying entry")
-    val dvFile = {
-      import scala.jdk.CollectionConverters._
-      val s = Files.walk(lake.tableDir("bronze", "t"))
-      try s.iterator().asScala.filter(p => Files.isRegularFile(p) &&
-        p.getParent.getFileName.toString.startsWith(DeletionVectors.DirPrefix)).toSeq.head
-      finally s.close()
-    }
-    Files.delete(dvFile)
-    assert(lake.repairBronze("t").size == 1)
-    assert(lake.table("bronze", "t").count() == 2) // run1's whole file dropped
   }
 
   test("footer stats merge across multiple row groups, equal to the scan") {
@@ -880,17 +785,19 @@ class LakehouseSpec extends SparkSpec {
       Map("silver" -> "silver_ci", "gold" -> "gold_blue"))
     assert(Lakehouse.envSchemaOverrides(_ => None) == Map.empty)
   }
-  test("VACUUM DRY RUN lists exactly what a real vacuum deletes, touching nothing") {
-    val lake = new Lakehouse(spark, Files.createTempDirectory("graft-vacdry").toString)
+  test("VACUUM keeps every live file and vector and leaves only referenced parquet") {
+    val lake = new Lakehouse(spark, Files.createTempDirectory("graft-vacsafe").toString)
     def batch(run: String, ids: Seq[Long]) =
       ids.map(i => (i, d("2025-06-01"), run)).toDF("id", "snapshot_date", "run_id")
         .repartition(1)
     lake.appendBronze("t", batch("r1", Seq(1L, 2L, 3L)))
     lake.appendBronze("t", batch("r2", Seq(4L, 5L)))
-    lake.deleteBronzeWhereDv("t", col("id") === 2L) // leaves a vector
-    lake.compact("bronze", "t", numFiles = 1)       // purges it, strands old files
+    lake.compact("bronze", "t", numFiles = 1)       // strands r1's and r2's files
+    lake.appendBronze("t", batch("r3", Seq(6L, 7L, 8L)))
+    lake.deleteBronzeWhereDv("t", col("id") === 7L) // a vector on r3's file
+    lake.deleteBronzeWhereDv("t", col("id") === 8L) // a merged one supersedes it
+    val base = lake.tableDir("bronze", "t")
     def allFiles(): Set[String] = {
-      val base = lake.tableDir("bronze", "t")
       val w = Files.walk(base)
       try {
         import scala.jdk.CollectionConverters._
@@ -898,27 +805,50 @@ class LakehouseSpec extends SparkSpec {
           .map(p => base.relativize(p).toString.replace('\\', '/')).toSet
       } finally w.close()
     }
+    // the head's entries: (data file, deletion vector) as table-relative paths
+    def live(): Seq[(String, Option[String])] =
+      lake.prunedFilePathsMetered("bronze", "t", Nil)._1.map { case (abs, dv) =>
+        base.relativize(Paths.get(abs)).toString.replace('\\', '/') -> dv }
+    val rowsBefore = lake.table("bronze", "t").orderBy("id").collect().toSeq
+    val head = live()
+    assert(head.exists(_._2.isDefined), "fixture needs a live deletion vector")
     val before = allFiles()
-    val listed = lake.vacuumBronzeDryRun("t", keepVersions = 1, retainMillis = 0L)
-    assert(listed.nonEmpty, "compaction debris should be reclaimable")
-    assert(allFiles() == before, "DRY RUN touched the filesystem")
-    // a second dry run is stable (nothing moved)
-    assert(lake.vacuumBronzeDryRun("t", keepVersions = 1, retainMillis = 0L) == listed)
-    lake.vacuumBronze("t", keepVersions = 1, retainMillis = 0L)
+    assert(lake.vacuumBronze("t", keepVersions = 1, retainMillis = 0L) == 0)
     val after = allFiles()
-    // every listed FILE is gone; dirs listed by name are gone too
-    listed.foreach { rel =>
-      assert(!after.exists(f => f == rel || f.startsWith(rel + "/")),
-        s"dry run listed $rel but vacuum kept it")
+    head.foreach { case (f, dv) =>
+      assert(after.contains(f), s"vacuum deleted live file $f")
+      dv.foreach(v => assert(after.contains(v), s"vacuum deleted live vector $v"))
     }
-    // and nothing beyond the listing + emptied dirs' crc siblings vanished
-    val vanished = before -- after
-    vanished.foreach { f =>
-      val covered = listed.exists(rel => f == rel || f.startsWith(rel + "/")) ||
-        f.split('/').last.startsWith(".") // parquet .crc siblings
-      assert(covered, s"vacuum deleted $f that the dry run did not list")
-    }
-    assert(lake.table("bronze", "t").count() == 4) // content untouched
+    val referenced = head.map(_._1).toSet
+    val parquet = after.filter(f => f.startsWith("_a") && f.endsWith(".parquet"))
+    assert(parquet == referenced, s"unreferenced parquet kept: ${parquet -- referenced}")
+    // something was reclaimed: the stranded files and the superseded vector
+    val dvFiles = (fs: Set[String]) => fs.filter(_.endsWith(".dv"))
+    assert(dvFiles(before).size == 2 && dvFiles(after) == head.flatMap(_._2).toSet)
+    assert((before -- after).exists(_.endsWith(".parquet")))
+    assert(live() == head, "vacuum changed the head")
+    assert(lake.table("bronze", "t").orderBy("id").collect().toSeq == rowsBefore)
   }
 
+  test("log I/O of one table() read and one 1-row append is pinned") {
+    // a table with no metadata lines (no txn, generated, identity, default
+    // or row-tracking state) and a fixed short history: v1 a checkpoint,
+    // v2 and v3 deltas
+    val lake = new Lakehouse(spark, Files.createTempDirectory("graft-logio").toString)
+    def batch(run: String, i: Long) =
+      Seq((i, d("2025-06-01"), run)).toDF("id", "snapshot_date", "run_id").repartition(1)
+    (1 to 3).foreach(i => lake.appendBronze("t", batch(s"r$i", i.toLong)))
+    // (directory listings, record-header reads, full record reads)
+    def cost(f: => Any): (Long, Long, Long) = {
+      val (l0, h0, r0) = lake.logIo.counts
+      f
+      val (l1, h1, r1) = lake.logIo.counts
+      (l1 - l0, h1 - h0, r1 - r0)
+    }
+    val read = cost(lake.table("bronze", "t"))
+    val append = cost(lake.appendBronze("t", batch("r4", 4L)))
+    assert(read == ((1L, 0L, 3L)), s"table() read: $read")
+    assert(append == ((14L, 17L, 9L)), s"1-row append: $append")
+    assert(lake.table("bronze", "t").count() == 4)
+  }
 }

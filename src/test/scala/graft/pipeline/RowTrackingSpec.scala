@@ -101,21 +101,16 @@ class RowTrackingSpec extends SparkSpec {
     assert(idsOf(lake, "t") == before, "failed restore disturbed row ids")
   }
 
-  test("RESTORE never lowers the watermark; clone carries the as-of watermark") {
+  test("RESTORE never lowers the watermark") {
     val lake = mkLake("rtres")
     lake.appendBronze("t", batch(Seq(1L, 2L)).orderBy("k"))
     lake.enableRowTracking("t")
     val preV = lake.committedBronzeVersion("t")
     lake.appendBronze("t", batch(Seq(3L, 4L)).orderBy("k"))
-    lake.cloneBronze("t", "t2")
     lake.restoreBronze("t", preV)
     assert(lake.rowIdWatermark("t").contains(4L), "restore lowered the watermark")
     lake.appendBronze("t", batch(Seq(5L)).orderBy("k"))
     assert(idsOf(lake, "t") == Map(1L -> 0L, 2L -> 1L, 5L -> 4L),
       "restored-away ids were reissued")
-    // the clone reads its rows with their original ids and allocates on its own
-    assert(idsOf(lake, "t2") == Map(1L -> 0L, 2L -> 1L, 3L -> 2L, 4L -> 3L))
-    lake.appendBronze("t2", batch(Seq(9L)).orderBy("k"))
-    assert(idsOf(lake, "t2")(9L) == 4L)
   }
 }

@@ -9,8 +9,8 @@ import org.apache.spark.sql.functions._
 import Fixtures.d
 
 /** Round-13 third-wave storage parity: idempotent writer transactions
-  * (Delta's SetTransaction — `txnAppId`/`txnVersion`), `TIMESTAMP AS OF`
-  * time travel, the reader-feature protocol gate (Delta `readerFeatures`:
+  * (Delta's SetTransaction — `txnAppId`/`txnVersion`), in-commit
+  * timestamps, the reader-feature protocol gate (Delta `readerFeatures`:
   * fail fast instead of misreading a newer writer's state), and the
   * durable change-feed cursor behind
   * [[graft.streaming.Streams.changesSink]]. */
@@ -90,16 +90,16 @@ class TxnProtocolSpec extends SparkSpec {
     assert(lake.txnVersion("t", "sink").contains(7L))
   }
 
-  test("TIMESTAMP AS OF resolves to the latest commit at-or-before the instant") {
+  test("history reports the in-commit clock, not the record file's mtime") {
     val lake = mkLake("tsasof")
     lake.appendBronze("t", rows("r1", Seq(1L)))
     lake.appendBronze("t", rows("r2", Seq(2L)))
     lake.appendBronze("t", rows("r3", Seq(3L)))
     val base = Paths.get(lake.root, "bronze", "t")
     // pin deterministic, strictly-increasing IN-COMMIT timestamps by
-    // rewriting each record's #cts header (the resolution clock); scramble
-    // the mtimes to prove they are NOT consulted — a copied/restored table
-    // keeps its time-travel semantics
+    // rewriting each record's #cts header; scramble the mtimes to prove
+    // they are NOT consulted — a copied/restored table keeps its commit
+    // times
     val vs = lake.tableVersions("bronze", "t")
     val t0 = 1700000000000L
     vs.zipWithIndex.foreach { case (v, i) =>
@@ -111,25 +111,6 @@ class TxnProtocolSpec extends SparkSpec {
       Files.write(m, rewritten.getBytes)
       Files.setLastModifiedTime(m, FileTime.fromMillis(t0 + 999999999L)) // decoy
     }
-    def ts(ms: Long) = new java.sql.Timestamp(ms)
-    // exact boundary: the commit's own instant reads that commit
-    assert(lake.versionAtTimestamp("bronze", "t", ts(t0)) == vs.head)
-    // between commits: the EARLIER one (latest at-or-before)
-    assert(lake.versionAtTimestamp("bronze", "t", ts(t0 + 90000L)) == vs(1))
-    assert(lake.tableAtTimestamp("bronze", "t", ts(t0 + 90000L)).count() == 2)
-    // the newest commit's instant reads the full table
-    assert(lake.tableAtTimestamp("bronze", "t", ts(t0 + 120000L)).count() == 3)
-    // before the earliest retained version: pruned history, fail fast
-    val early = intercept[IllegalArgumentException] {
-      lake.versionAtTimestamp("bronze", "t", ts(t0 - 1L))
-    }
-    assert(early.getMessage.contains("predates"))
-    // after the newest commit: not reproducible, fail fast (Delta errors too)
-    val late = intercept[IllegalArgumentException] {
-      lake.versionAtTimestamp("bronze", "t", ts(t0 + 10 * 60000L))
-    }
-    assert(late.getMessage.contains("postdates"))
-    // history reports the same in-commit clock (not the decoy mtimes)
     val hist = lake.history("bronze", "t")
       .orderBy(col("version")).select("timestamp").collect()
       .map(_.getTimestamp(0).getTime)
@@ -165,18 +146,47 @@ class TxnProtocolSpec extends SparkSpec {
     // delete (the writer declares `dv`; this build supports it)
     lake.deleteBronzeWhereDv("t", col("id") === 2L, Nil)
     assert(lake.table("bronze", "t").count() == 1)
-    // simulate a FUTURE writer: splice an unknown required feature into the
-    // newest record's header
+    // simulate a writer this build cannot read: splice a required feature
+    // into the newest record's header — a FUTURE one, or column mapping's
+    // `colmap` (rename chains this build no longer resolves)
     val base = Paths.get(lake.root, "bronze", "t")
     val v = lake.committedBronzeVersion("t")
     val m = base.resolve(s"_files_v$v")
+    val original = Files.readAllBytes(m)
+    for (feature <- Seq("v9_row_lineage", "colmap")) {
+      val lines = new String(original).linesIterator.toSeq
+      val spliced = lines.head +: s"#features\t$feature" +: lines.tail
+      Files.write(m, spliced.mkString("\n").getBytes)
+      val lake2 = new Lakehouse(spark, lake.root)
+      val err = intercept[IllegalArgumentException] { lake2.table("bronze", "t").count() }
+      assert(err.getMessage.contains(feature), err.getMessage)
+      assert(err.getMessage.contains("requires reader feature(s)"), err.getMessage)
+      assert(err.getMessage.contains("does not support"), err.getMessage)
+    }
+  }
+
+  test("a record carrying CHECK constraints fails fast instead of losing them on the next commit") {
+    val lake = mkLake("consgate")
+    lake.appendBronze("t", rows("r1", Seq(1L, 2L)))
+    val base = Paths.get(lake.root, "bronze", "t")
+    val m = base.resolve(s"_files_v${lake.committedBronzeVersion("t")}")
     val lines = new String(Files.readAllBytes(m)).linesIterator.toSeq
-    val spliced = lines.head +: "#features\tv9_row_lineage" +: lines.tail
-    Files.write(m, spliced.mkString("\n").getBytes)
-    val lake2 = new Lakehouse(spark, lake.root)
-    val err = intercept[IllegalArgumentException] { lake2.table("bronze", "t").count() }
-    assert(err.getMessage.contains("v9_row_lineage"))
-    assert(err.getMessage.contains("does not support"))
+    def splice(line: String): Unit =
+      Files.write(m, (lines.head +: line +: lines.tail).mkString("\n").getBytes)
+    // the empty drop-to-zero marker holds no constraint: reads and commits go on
+    splice("#constraints\t")
+    assert(lake.table("bronze", "t").count() == 2)
+    // a live constraint: every read and every commit refuses the record
+    splice("#constraints\tid_pos:id+%3E+0")
+    val v = lake.committedBronzeVersion("t")
+    val read = intercept[IllegalArgumentException] { lake.table("bronze", "t").count() }
+    assert(read.getMessage.contains("CHECK constraints"), read.getMessage)
+    val write = intercept[IllegalArgumentException] {
+      lake.appendBronze("t", rows("r2", Seq(3L)))
+    }
+    assert(write.getMessage.contains("CHECK constraints"), write.getMessage)
+    assert(lake.committedBronzeVersion("t") == v, "a commit dropped the constraint line")
+    assert(new String(Files.readAllBytes(m)).contains("#constraints\tid_pos"))
   }
 
   test("change-feed cursor: drains once, survives a crash before the cursor commit, refuses rewind") {

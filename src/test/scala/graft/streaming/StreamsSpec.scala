@@ -166,13 +166,16 @@ class StreamsSpec extends SparkSpec {
     assert(!folded.exists(_.contains("Chan GONE")), "uncommitted rows reached silver")
     assert(!folded.exists(_.contains("Chan LATE")), "uncommitted rows reached silver")
     assert(folded == recomputedChannels(lake), "folded silver != recompute from committed bronze")
-    // one crashed append is ADOPTED (its commit finally lands); the other is
-    // vacuumed away (committed files survive vacuum, debris does not)
-    lake.adoptAppendDir("channels_raw", "_a9_late")
+    // one crashed writer's rows land after all, by a real append; vacuum
+    // then removes both debris dirs (committed files survive it)
+    lake.appendBronze("channels_raw", spark.read.parquet(base.resolve("_a9_late").toString))
     lake.vacuumBronze("channels_raw", retainMillis = 0L)
     assert(!Files.exists(base.resolve("_a8_gone")), "vacuum left uncommitted debris")
-    assert(Files.exists(base.resolve("_a9_late")), "vacuum deleted committed files")
-    // the adoption commit is in the log, so the next tick folds it
+    assert(!Files.exists(base.resolve("_a9_late")), "vacuum left uncommitted debris")
+    assert(lake.table("bronze", "channels_raw").filter(
+      org.apache.spark.sql.functions.col("run_id") === "crash-_a9_late").count() > 0,
+      "vacuum deleted committed files")
+    // the late commit is in the log, so the next tick folds it
     drainChannels(lake, cursor)
     val after = foldedChannels(lake)
     assert(after.exists(_.contains("Chan LATE")), "late-committed file never reached silver")
